@@ -4,9 +4,11 @@
       --input <documents parquet/Iceberg path> \\
       --output <warehouse dir> --run-id r1 --partitions 64
 
+(`tools/package.sh` builds the zip.)
+
 Stages (all resumable per logical partition via the metrics lineage table):
   documents → extract text (byte-identical) → tokenize → detect mentions →
-  extract triples → link to CUIs → canonicalize (connected components) →
+  extract triples → link to CUIs → canonicalize (same_as components) →
   materialize nodes/edges + metrics.
 
 With --synthesize N the job generates the deterministic clinical corpus

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from medacy_spark.corpus import lexicons as lex
+from medacy_spark.session import local_table
 
 KEYWORDS = ["join", "filter", "sort", "scan", "merge", "group", "window", "hash"]
 STOPSET = ["the", "a"]
@@ -709,8 +710,8 @@ GROUP BY category ORDER BY category
 """.format(vals=", ".join(f"('{k}', '{v}')" for k, v in _GAZ.items())))
 def q_gazetteer_match(spark, sf):
     t = tokens_df(spark, sf)
-    gaz = t.sparkSession.createDataFrame(
-        list(_GAZ.items()), "term string, category string"
+    gaz = local_table(
+        t.sparkSession, list(_GAZ.items()), "term string, category string"
     )
     return (
         t.join(F.broadcast(gaz), t.word == gaz.term)
@@ -1306,7 +1307,7 @@ def q_incremental_dedup(spark, sf):
         d.filter(F.col("doc_id") < 25)
         .select((F.col("doc_id") + 1000).alias("doc_id"), "text")
     )
-    empty = spark.createDataFrame([], "id long, band int, bucket string")
+    empty = local_table(spark, [], "id long, band int, bucket string")
     s1, st1 = dedup_batch_against_state(b1, empty, base_hash="md5")
     s2, _ = dedup_batch_against_state(b2, st1, base_hash="md5")
     return (
@@ -1725,8 +1726,8 @@ def q_gazetteer_phrase_match(spark, sf):
     from medacy_spark.operators.tokenize import tokenize_native
 
     toks = tokenize_native(_rx_docs(spark, sf))
-    gaz = spark.createDataFrame(
-        [("Drug", t) for t in lex.DRUGS + lex.PHRASE_DRUGS],
+    gaz = local_table(
+        spark, [("Drug", t) for t in lex.DRUGS + lex.PHRASE_DRUGS],
         "label string, term string",
     )
     m = gazetteer_mentions(toks, gaz, max_ngram=3)
@@ -1890,11 +1891,13 @@ def q_unit_token_flags(spark, sf):
 
 # ---- M5/M6: the materialized KG (the north-star node/edge tables).
 # The Spark side runs the REAL path — detect mentions, link to CUIs,
-# extract triples, canonicalize via connected components over same_as
-# edges, aggregate nodes/edges. The oracle recomputes the same tables in
-# closed form: every linked surface's component minimum is its 'c:<cui>'
-# node ('c:' < 't:' lexicographically and each surface maps to one CUI in
-# the synthetic dictionary), unlinked surfaces stay 't:<text>'.
+# extract triples, canonicalize over same_as edges, aggregate nodes/edges.
+# The oracle recomputes the same tables in closed form: every linked
+# surface's component minimum is its 'c:<cui>' node ('c:' < 't:'
+# lexicographically and each surface maps to one CUI in the synthetic
+# dictionary), unlinked surfaces stay 't:<text>'. graph.canonicalize_triples
+# checks that condition on the data and takes the same closed form
+# (connected components only when a surface links to two CUIs).
 
 
 def _kg_e_base() -> str:
@@ -3050,7 +3053,7 @@ def q_oov_tokens(spark, sf):
     from medacy_spark.operators.misc import oov_tokens
 
     t = tokens_df(spark, sf).filter(F.col("doc_id") < 100)
-    vocab = spark.createDataFrame([(k,) for k in KEYWORDS], "word string")
+    vocab = local_table(spark, [(k,) for k in KEYWORDS], "word string")
     return oov_tokens(t, vocab).orderBy("word")
 
 
@@ -3252,8 +3255,8 @@ def q_link_mentions_tiebreak(spark, sf):
     for i, k in enumerate(KEYWORDS):
         rows.append((k, f"C{2 * i:04d}", ["T1"]))
         rows.append((k, f"C{2 * i + 1:04d}", ["T2"]))
-    dictionary = spark.createDataFrame(
-        rows, "term string, cui string, sem_types array<string>"
+    dictionary = local_table(
+        spark, rows, "term string, cui string, sem_types array<string>"
     )
     out = link_mentions(g, dictionary)
     return out.select("doc_id", "tag", "start", "end", "cui").orderBy(
@@ -4564,7 +4567,7 @@ def q_host_ppr(spark, sf):
         F.col("dst_host").alias("dst"),
         F.col("n_links").cast("double").alias("weight"),
     )
-    seeds = spark.createDataFrame([(s,) for s in _PPR_SEEDS], ["node"])
+    seeds = local_table(spark, [(s,) for s in _PPR_SEEDS], "node string")
     pr = pagerank(
         ed, src="src", dst="dst", weight="weight",
         iterations=_PR_ITERS, damping=_PR_DAMPING, seeds=seeds,
@@ -4777,8 +4780,8 @@ def q_bpe_merges(spark, sf):
     from medacy_spark.operators.bpe import learn_bpe
 
     model = learn_bpe(_docs(spark, sf), n_merges=_BPE_MERGES)
-    return spark.createDataFrame(
-        model.merges, "merge_rank int, lsym string, rsym string, cnt long"
+    return local_table(
+        spark, model.merges, "merge_rank int, lsym string, rsym string, cnt long"
     ).orderBy("merge_rank")
 
 

@@ -36,6 +36,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from medacy_spark.session import local_table
+
 DIM = 50
 WINDOW = 5
 ALPHA = 0.75
@@ -526,8 +528,8 @@ def _twvd_inner(
         return [], np.zeros((0, dim))
     k = min(dim, v_n)
     qs = _qcols(k)
-    vdf = F.broadcast(spark.createDataFrame(
-        [(w, i) for i, w in enumerate(vocab)], "_w string, _i long"
+    vdf = F.broadcast(local_table(
+        spark, [(w, i) for i, w in enumerate(vocab)], "_w string, _i long"
     ))
 
     cooc = cooccurrence_pairs(

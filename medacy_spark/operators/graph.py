@@ -584,21 +584,42 @@ def canonicalize_triples(
     the corpus (typos, numerics, boilerplate variants), and a forced
     broadcast that outgrows executor memory kills the job. So the
     broadcast hint is applied only below ``broadcast_max_terms`` (counted
-    against the already-checkpointed component labels — a cheap scan);
-    above it the canonicalization joins stay shuffle equi-joins on
-    ``_norm``, which is the natural co-partitioned key for both sides.
+    by the same job that checks the closed form below); above it the
+    canonicalization joins stay shuffle equi-joins on ``_norm``, which is
+    the natural co-partitioned key for both sides.
     2M rows ≈ low-hundreds of MB broadcast — comfortably inside a
     production executor; the threshold is a parameter, not a constant,
     for clusters that differ.
+
+    Closed form: the same_as graph is bipartite between surfaces
+    ('t:<lower(text)>') and concepts ('c:<cui>'), and 'c:' sorts before
+    't:'. When no surface links to two distinct CUIs every component is a
+    star around one concept, so a surface's component minimum is its own
+    'c:<cui>'. One aggregation per surface (min/max of 'c:<cui>') detects
+    that case and IS term_canon then; its row count sets the broadcast
+    cut-off. Only when some surface bridges two concepts does the
+    iterative connected_components run (identical output by construction).
     """
-    comp = connected_components(same_as_edges(links, id_col))
-    term_canon = comp.filter(F.col("node").startswith("t:")).select(
-        F.expr("substring(node, 3)").alias("_norm"), F.col("component").alias("canon")
+    concept = F.concat(F.lit("c:"), F.col("cui"))
+    by_surface = (
+        links.filter(F.col("text").isNotNull() & F.col("cui").isNotNull())
+        .groupBy(F.lower("text").alias("_norm"))
+        .agg(F.min(concept).alias("canon"), F.max(concept).alias("_max"))
+        # lazy: the stats action below materializes it in the same job
+        .localCheckpoint(eager=False)
     )
-    # comp is localCheckpointed by connected_components -> counting the
-    # filtered projection is a checkpoint scan, not a recompute
-    small_enough = term_canon.count() <= broadcast_max_terms
-    canon_rel = F.broadcast(term_canon) if small_enough else term_canon
+    n_terms, n_bridging = by_surface.agg(
+        F.count("*"), F.count_if(F.col("canon") != F.col("_max"))
+    ).first()
+    if n_bridging == 0:
+        term_canon = by_surface.select("_norm", "canon")
+    else:
+        comp = connected_components(same_as_edges(links, id_col))
+        term_canon = comp.filter(F.col("node").startswith("t:")).select(
+            F.expr("substring(node, 3)").alias("_norm"),
+            F.col("component").alias("canon"),
+        )
+    canon_rel = F.broadcast(term_canon) if n_terms <= broadcast_max_terms else term_canon
 
     def canon_of(text_col):
         return F.coalesce(F.col("canon"), F.concat(F.lit("t:"), F.lower(text_col)))

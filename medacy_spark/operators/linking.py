@@ -25,11 +25,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from medacy_spark.corpus import lexicons as lex
+from medacy_spark.session import local_table
 
 
 def cui_dictionary(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        lex.cui_dictionary_rows(), "term string, cui string, sem_types array<string>"
+    return local_table(
+        spark, lex.cui_dictionary_rows(), "term string, cui string, sem_types array<string>"
     )
 
 

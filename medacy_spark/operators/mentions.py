@@ -19,10 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from medacy_spark.corpus import lexicons as lex
+from medacy_spark.session import local_table
 
 
 def gazetteer_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(lex.gazetteer_rows(), "label string, term string")
+    return local_table(spark, lex.gazetteer_rows(), "label string, term string")
 
 
 def gazetteer_mentions(

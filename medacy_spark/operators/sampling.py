@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from medacy_spark.session import local_table
+
 
 def _hex_threshold(fraction: float) -> str:
     """32-hex-digit string threshold such that a uniformly distributed
@@ -76,8 +78,8 @@ def upsample_sources(
         (s, float(w), int(w), _hex_threshold(float(w) - int(w)))
         for s, w in sorted(weights.items())
     ]
-    wdf = df.sparkSession.createDataFrame(
-        rows, f"{source_col} string, _w double, _whole int, _thr string"
+    wdf = local_table(
+        df.sparkSession, rows, f"{source_col} string, _w double, _whole int, _thr string"
     )
     digest = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
     n_copies = F.col("_whole") + F.when(digest < F.col("_thr"), 1).otherwise(0)

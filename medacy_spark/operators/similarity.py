@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from medacy_spark.operators.linking import array_dot, array_norm, cosine
+from medacy_spark.session import local_table
 
 
 def brute_force_topk(
@@ -141,7 +142,7 @@ def ivf_topk(
 
     def cents_df(data):
         return F.broadcast(
-            spark.createDataFrame(data, "cell int, c_vec array<double>")
+            local_table(spark, data, "cell int, c_vec array<double>")
         )
 
     for _ in range(max(0, kmeans_iters)):

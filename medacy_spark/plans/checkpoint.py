@@ -18,19 +18,20 @@ files whose cached output is missing or < 200 bytes (metamap.py:74-96,
 
 Scale design (the round-1 version looped one Spark job per partition —
 O(N) full source scans): all not-yet-committed partitions now run as ONE
-pruned job per *batch* (default: a single batch), with per-partition
-metrics derived from two aggregations, so the source is scanned O(1)
-times per stage regardless of N:
+pruned job per *batch* (default: a single batch), and the per-partition
+metrics ride along that job, so the source is scanned once per batch
+regardless of N:
 
-  job 1  filter(partition_id ∈ todo) → stage_fn → one write.partitionBy
-  job 2  rows_in:  groupBy(partition_id).count() over the pruned source
-  job 3  rows_out: groupBy(partition_id).count() over the written output
-         (partition-pruned directory listing — reads only the new dirs)
+  job 1  filter(partition_id ∈ todo) → stage_fn → one write.partitionBy;
+         `DataFrame.observe` counts rows per partition_id on the batch
+         input (rows_in) and on the frame being written (rows_out)
+  job 2  append the batch's metrics rows (a driver-side local table)
 
+plus one metrics read per stage to find the completed partitions.
 `batch_size` trades commit granularity against scan count: a crash loses
-at most one batch of work (ceil(todo/batch) × 3 scans per stage). With a
-real prunable partition column (`partition_col`, an Iceberg
-identity/bucket partition in production) job 1/2 prune at the file level;
+at most one batch of work (ceil(todo/batch) source scans per stage).
+With a real prunable partition column (`partition_col`, an Iceberg
+identity/bucket partition in production) job 1 prunes at the file level;
 the derived pmod(xxhash64) bucket cannot prune but still scans once.
 """
 
@@ -39,8 +40,10 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from medacy_spark.session import local_table
 
 METRICS_SCHEMA = (
     "run_id string, partition_id int, stage string, rows_in long, "
@@ -55,13 +58,20 @@ def with_partition_id(df: DataFrame, key_col: str, n_partitions: int) -> DataFra
     )
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
 def completed_partitions(spark: SparkSession, metrics_path: str, run_id: str, stage: str) -> list[int]:
-    try:
-        m = spark.read.parquet(metrics_path)
-    except Exception:
+    """Partition ids of `stage` committed under `run_id`. A missing metrics
+    table means nothing has committed yet; any other read error raises
+    (treating it as "nothing committed" would silently rerun everything)."""
+    if not _path_exists(spark, metrics_path):
         return []
     rows = (
-        m.filter(
+        spark.read.schema(METRICS_SCHEMA).parquet(metrics_path)
+        .filter(
             (F.col("run_id") == run_id)
             & (F.col("stage") == stage)
             & (F.col("status") == "ok")
@@ -71,6 +81,19 @@ def completed_partitions(spark: SparkSession, metrics_path: str, run_id: str, st
         .collect()
     )
     return sorted(r["partition_id"] for r in rows)
+
+
+def _partition_counts(batch: list[int]) -> list[Column]:
+    """One row-count aggregate per partition id of the batch, for
+    `DataFrame.observe` (which takes global aggregates, no grouping)."""
+    return [F.count_if(F.col("partition_id") == p).alias(str(p)) for p in batch]
+
+
+def _observed(obs: Observation) -> dict | None:
+    """The metrics of `obs`, or None when its node was optimized out of the
+    executed plan: Spark then completes the observation with an empty row,
+    which `Observation.get` cannot convert."""
+    return obs.get if obs._jo.getRow().length() else None
 
 
 def run_stage_checkpointed(
@@ -95,14 +118,15 @@ def run_stage_checkpointed(
     `stage_fn` receives the pruned source INCLUDING the `partition_id`
     column; if its output drops that column it is re-derived from
     `key_col` (so row-wise stages need no changes as long as they keep the
-    key column).
+    key column). The input it receives is observed: rows_in is counted by
+    the first action over it, normally the batch write itself.
 
     Crash-safety: the batch write lands before the batch's metrics append;
     a crash between them re-runs those partitions into the same directories
-    (partitionOverwriteMode=dynamic) — idempotent. A crash mid-batch loses
-    at most `batch_size` partitions of work, never committed ones.
+    (a dynamic partitionOverwriteMode writer option, so the session conf
+    is left untouched) — idempotent. A crash mid-batch loses at most
+    `batch_size` partitions of work, never committed ones.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     if partition_col is not None:
         parts = source.withColumn("partition_id", F.col(partition_col).cast("int"))
     else:
@@ -114,7 +138,8 @@ def run_stage_checkpointed(
         batch = todo[i : i + step]
         t0 = time.monotonic()
         chunk = parts.filter(F.col("partition_id").isin(batch))
-        out = stage_fn(chunk)
+        seen_in, seen_out = Observation(), Observation()
+        out = stage_fn(chunk.observe(seen_in, *_partition_counts(batch)))
         if "partition_id" not in out.columns:
             if key_col not in out.columns:
                 raise ValueError(
@@ -122,26 +147,25 @@ def run_stage_checkpointed(
                     f"{key_col!r} so output rows can be re-partitioned"
                 )
             out = with_partition_id(out.drop("partition_id"), key_col, n_partitions)
-        out.write.mode("overwrite").partitionBy("partition_id").parquet(output_path)
-        rows_in = {
-            r["partition_id"]: r["c"]
-            for r in chunk.groupBy("partition_id").agg(F.count("*").alias("c")).collect()
-        }
-        rows_out = {
-            r["partition_id"]: r["c"]
-            for r in spark.read.parquet(output_path)
-            .filter(F.col("partition_id").isin(batch))
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("c"))
-            .collect()
-        }
+        (
+            out.observe(seen_out, *_partition_counts(batch))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("partition_id")
+            .parquet(output_path)
+        )
+        rows_in = _observed(seen_in)
+        if rows_in is None:
+            # the optimizer removed stage_fn's read of its input (e.g. a
+            # join with an empty relation), so nothing was observed there
+            rows_in = chunk.agg(*_partition_counts(batch)).first().asDict()
+        rows_out = _observed(seen_out)
         wall_ms = int((time.monotonic() - t0) * 1000)
         metrics_rows = [
-            (run_id, int(pid), stage, int(rows_in.get(pid, 0)),
-             int(rows_out.get(pid, 0)), wall_ms, "ok")
+            (run_id, pid, stage, rows_in[str(pid)], rows_out[str(pid)], wall_ms, "ok")
             for pid in batch
         ]
-        spark.createDataFrame(metrics_rows, METRICS_SCHEMA).write.mode(
-            "append"
-        ).parquet(metrics_path)
+        local_table(spark, metrics_rows, METRICS_SCHEMA).write.mode("append").parquet(
+            metrics_path
+        )
     return spark.read.parquet(output_path)

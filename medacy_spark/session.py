@@ -9,8 +9,12 @@ partitions sized to the parallelism rather than the 200 default.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -59,3 +63,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_table(spark: SparkSession, rows: Sequence[Sequence], schema: str | StructType) -> DataFrame:
+    """A small driver-side table (dictionaries, lookup dims, metrics rows,
+    empty bootstraps) as an Arrow-backed ``LocalRelation``.
+
+    A Python list handed to ``spark.createDataFrame`` ships as a pickled
+    PythonRDD, so every job that scans the table forks Python workers to
+    unpickle a few dozen rows. An Arrow table is handed to the JVM once
+    and planned as a ``LocalTableScan``: no Python worker, and the
+    optimizer can fold filters/projections over it at plan time.
+    ``rows`` are tuples in ``schema`` column order.
+    """
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.table(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

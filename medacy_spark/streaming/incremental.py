@@ -128,10 +128,11 @@ def run_incremental_packing(
     from pyspark.sql.types import LongType, StructField, StructType
 
     from medacy_spark.operators.packing import pack_sequences
+    from medacy_spark.session import local_table
 
     spark = stream_df.sparkSession
-    empty = spark.createDataFrame(
-        [], StructType([StructField("n_stream_tokens", LongType())])
+    empty = local_table(
+        spark, [], StructType([StructField("n_stream_tokens", LongType())])
     )
     _write_batch(empty, f"{output_path}/totals", -1)
 
@@ -193,12 +194,13 @@ def run_incremental_dedup(
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
     from medacy_spark.operators.dedup import dedup_batch_against_state
+    from medacy_spark.session import local_table
 
     # bootstrap an empty state partition so the first batch's read
     # resolves (batch=-1 sorts before every real batch id); idempotent
     spark = stream_df.sparkSession
     id_type = stream_df.schema[id_col].dataType
-    empty_state = spark.createDataFrame([], StructType([
+    empty_state = local_table(spark, [], StructType([
         StructField("id", id_type),
         StructField("band", IntegerType()),
         StructField("bucket", StringType()),

@@ -10,7 +10,13 @@ REF = "/root/reference/medacy/tests/sample_data"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="medacy_spark_tests", cores=8, shuffle_partitions=8)
+    # a bounded heap: G1 expands toward its maximum before collecting, so
+    # with the 16g default the one long-lived test JVM outgrows a machine
+    # with 16 GB of memory and is killed mid-suite
+    s = get_spark(
+        app_name="medacy_spark_tests", cores=8, shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "6g"},
+    )
     yield s
     s.stop()
 

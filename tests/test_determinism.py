@@ -64,12 +64,16 @@ def test_gold_triples_deterministic(spark, doc_ids):
 
 def test_no_row_level_python_udfs():
     """Input-hint contract: no per-row Python UDFs anywhere in the engine —
-    only Arrow-batched pandas UDFs / mapInPandas (CI grep per SURVEY §7.4)."""
+    only Arrow-batched pandas UDFs / mapInPandas (CI grep per SURVEY §7.4).
+    The same holds for driver-side tables: ``createDataFrame`` over Python
+    data is a pickled PythonRDD whose every scan forks Python workers, so
+    the engine builds them only through ``session.local_table`` (Arrow)."""
     import pathlib
     import re
 
     root = pathlib.Path(__file__).resolve().parents[1] / "medacy_spark"
     offenders = []
+    local_tables = []
     for p in root.rglob("*.py"):
         src = p.read_text()
         # F.udf( / @udf( — row-at-a-time; pandas_udf is the allowed form
@@ -77,4 +81,24 @@ def test_no_row_level_python_udfs():
             frag = src[max(0, m.start() - 20):m.start()]
             if "pandas_" not in frag:
                 offenders.append(f"{p.name}:{src[:m.start()].count(chr(10)) + 1}")
+        for m in re.finditer(r"\bcreateDataFrame\(", src):
+            enclosing = re.findall(r"^def (\w+)", src[:m.start()], re.M)
+            local_tables.append((p.relative_to(root).as_posix(), enclosing[-1:]))
     assert offenders == [], offenders
+    assert local_tables == [("session.py", ["local_table"])], local_tables
+
+
+def test_lookup_tables_are_local_relations(spark):
+    """The KG chain's dictionaries are Arrow-backed LocalRelations: no job
+    that scans them starts a Python worker."""
+    from medacy_spark.corpus import lexicons as lex
+    from medacy_spark.operators.linking import cui_dictionary
+
+    for df in (gazetteer_df(spark), cui_dictionary(spark)):
+        analyzed = df._jdf.queryExecution().analyzed()
+        assert analyzed.getClass().getSimpleName() == "LocalRelation"
+    # same rows as the lexicons they are built from
+    assert sorted(tuple(r) for r in gazetteer_df(spark).collect()) == sorted(lex.gazetteer_rows())
+    assert sorted(tuple(r) for r in cui_dictionary(spark).collect()) == sorted(
+        lex.cui_dictionary_rows()
+    )

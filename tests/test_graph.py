@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from medacy_spark.operators.graph import connected_components
@@ -217,3 +219,85 @@ def test_triangle_counts_hub_no_fanout(spark):
     }
     assert got == {0: 1, 1: 1, 2: 1}
     assert "CartesianProduct" not in stats["plan"]
+
+
+# ------------------------------------------------------ canonicalization
+
+_SURFACES = ["Aspirin", "ASPIRIN", "aspirin", "ASA", "asa", "Tylenol", "warfarin"]
+_OTHER = ["5 mg", "Oral", "daily"]
+
+
+def _kg_via_cc(links, triples):
+    """Nodes/edges of materialize_nodes_edges recomputed on the driver from
+    the iterative connected_components labels over the same_as edges."""
+    from medacy_spark.operators.graph import same_as_edges
+
+    comp = connected_components(same_as_edges(links)).collect()
+    canon = {r["node"][2:]: r["component"] for r in comp if r["node"].startswith("t:")}
+    edges, names = {}, {}
+    for _, pred, subj, obj in triples:
+        s_id = canon.get(subj.lower(), "t:" + subj.lower())
+        o_id = canon.get(obj.lower(), "t:" + obj.lower())
+        edges[(s_id, pred, o_id)] = edges.get((s_id, pred, o_id), 0) + 1
+        names.setdefault(s_id, set()).add(subj.lower())
+        names.setdefault(o_id, set()).add(obj.lower())
+    return {k: sorted(v) for k, v in names.items()}, edges
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(0, 3),
+            st.sampled_from(_SURFACES + [None]),
+            st.sampled_from(["C1", "C2", "C3", None]),
+        ),
+        max_size=10,
+    ),
+    st.lists(
+        st.tuples(
+            st.integers(0, 3),
+            st.sampled_from(["has_dosage", "has_route"]),
+            st.sampled_from(_SURFACES),
+            st.sampled_from(_SURFACES + _OTHER),
+        ),
+        min_size=1,
+        max_size=8,
+    ),
+)
+@example(  # every surface on one CUI: closed form, case variants collapse
+    [(0, "Aspirin", "C1"), (1, "ASA", "C1"), (1, "asa", "C1"), (2, "warfarin", None)],
+    [(0, "has_dosage", "ASPIRIN", "5 mg"), (1, "has_route", "asa", "Oral")],
+)
+@example(  # 'asa' bridges C1 and C2: connected_components fallback
+    [(0, "Aspirin", "C1"), (1, "ASA", "C2"), (2, "asa", "C1"), (3, "Tylenol", "C2")],
+    [(0, "has_dosage", "Tylenol", "5 mg"), (1, "has_route", "aspirin", "warfarin")],
+)
+def test_closed_form_canonicalization_matches_cc(spark, links, triples):
+    """materialize_nodes_edges skips connected_components when no surface
+    links to two CUIs; either way its tables equal the CC-label answer."""
+    from unittest import mock
+
+    from medacy_spark.operators import graph
+
+    links_df = spark.createDataFrame(links, "doc_id long, text string, cui string")
+    tri_df = spark.createDataFrame(
+        [(d, p, (s,), (o,)) for d, p, s, o in triples],
+        "doc_id long, pred string, subj struct<text:string>, obj struct<text:string>",
+    )
+    want_nodes, want_edges = _kg_via_cc(links_df, triples)
+    cuis = {}
+    for _, text, cui in links:
+        if text is not None and cui is not None:
+            cuis.setdefault(text.lower(), set()).add(cui)
+    bridging = any(len(c) > 1 for c in cuis.values())
+
+    with mock.patch.object(
+        graph, "connected_components", wraps=graph.connected_components
+    ) as cc:
+        nodes, edges = graph.materialize_nodes_edges(links_df, tri_df)
+        got_edges = {(r["src_id"], r["pred"], r["dst_id"]): r["weight"] for r in edges.collect()}
+        got_nodes = {r["canonical_id"]: list(r["names"]) for r in nodes.collect()}
+    assert got_edges == want_edges
+    assert got_nodes == want_nodes
+    assert cc.called == bridging

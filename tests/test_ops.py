@@ -113,8 +113,83 @@ def test_checkpoint_scan_count_is_partition_independent(spark, doc_ids, tmp_path
 
     j8 = jobs_for(8, "ckpt8")
     j32 = jobs_for(32, "ckpt32")
-    assert j8 > 0
+    # one write job (rows_in/rows_out are observed inside it), one metrics
+    # append, one footer read of the returned sink — no recount jobs
+    assert j8 == 3
     assert j32 == j8  # O(1) jobs per stage, independent of partition count
+
+
+def test_checkpoint_metrics_match_recount(spark, doc_ids, tmp_path):
+    """rows_in/rows_out observed during the write equal a recount of the
+    batch input and of the sink, per partition — for a stage that drops
+    rows and one that emits several rows per input row."""
+    from medacy_spark.plans.checkpoint import run_stage_checkpointed, with_partition_id
+    from medacy_spark.session import local_table
+
+    docs = clinical_documents(doc_ids.filter("doc_id < 120")).select("doc_id", "url", "text")
+    stages = {
+        "drop": lambda df: df.filter(F.col("doc_id") % 3 == 0).select("url"),
+        "fan_out": lambda df: df.select(
+            "url", F.explode(F.slice(F.split("text", " "), 1, 4)).alias("w")
+        ),
+        # the optimizer prunes the read of the input away (a join with an
+        # empty relation), so rows_in is recounted instead of observed
+        "input_pruned": lambda df: df.join(local_table(spark, [], "url string"), "url")
+        .select("url")
+        .unionByName(docs.filter("doc_id < 60").select("url")),
+    }
+    want_in = {
+        r["partition_id"]: r["count"]
+        for r in with_partition_id(docs, "url", 4).groupBy("partition_id").count().collect()
+    }
+    for name, fn in stages.items():
+        out = str(tmp_path / name)
+        met = str(tmp_path / f"met_{name}")
+        run_stage_checkpointed(
+            spark, docs, fn, run_id="rc", stage=name, key_col="url",
+            n_partitions=4, output_path=out, metrics_path=met, batch_size=3,
+        )
+        want_out = {
+            r["partition_id"]: r["count"]
+            for r in spark.read.parquet(out).groupBy("partition_id").count().collect()
+        }
+        got = {
+            r["partition_id"]: (r["rows_in"], r["rows_out"])
+            for r in spark.read.parquet(met).collect()
+        }
+        assert got == {p: (want_in[p], want_out.get(p, 0)) for p in range(4)}, name
+        assert sum(o for _, o in got.values()) != sum(want_in.values())  # shape changed
+
+
+def test_checkpoint_leaves_session_conf_unchanged(spark, doc_ids, tmp_path):
+    """Dynamic partition overwrite is a writer option, not a session conf."""
+    from medacy_spark.plans.checkpoint import run_stage_checkpointed
+
+    docs = clinical_documents(doc_ids.filter("doc_id < 40")).select("doc_id", "url", "text")
+    # start from the default so an earlier leak cannot mask one here
+    spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    before = dict(spark.conf.getAll)
+    run_stage_checkpointed(
+        spark, docs, lambda df: df.select("url", F.length("text").alias("n")),
+        run_id="rconf", stage="len", key_col="url", n_partitions=2,
+        output_path=str(tmp_path / "out"), metrics_path=str(tmp_path / "met"),
+    )
+    assert dict(spark.conf.getAll) == before
+
+
+def test_completed_partitions_missing_vs_unreadable(spark, tmp_path):
+    """A missing metrics table means nothing committed; an unreadable one
+    raises instead of silently rerunning every partition."""
+    import pytest as _pytest
+
+    from medacy_spark.plans.checkpoint import completed_partitions
+
+    assert completed_partitions(spark, str(tmp_path / "absent"), "r", "s") == []
+    bad = tmp_path / "corrupt"
+    bad.mkdir()
+    (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with _pytest.raises(Exception):
+        completed_partitions(spark, str(bad), "r", "s")
 
 
 def test_salted_repartition_spreads_hot_host(spark, doc_ids):

@@ -211,19 +211,23 @@ def test_iter_shuffle_partitions_sizing(spark):
         _iter_shuffle_partitions,
     )
 
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert cap >= 3  # the fixture session configures 8
-    # floor 2: a 1-partition hash layout normalizes to SinglePartition at
-    # checkpoint capture and the preserved-layout join re-inserts an
-    # Exchange per iteration (plan-gate-caught in r8)
-    assert _iter_shuffle_partitions(spark, 0) == 2
-    assert _iter_shuffle_partitions(spark, 1) == 2
-    assert _iter_shuffle_partitions(spark, GRAPH_ROWS_PER_PARTITION) == 2
-    assert _iter_shuffle_partitions(spark, 2 * GRAPH_ROWS_PER_PARTITION) == 2
-    assert _iter_shuffle_partitions(spark, 2 * GRAPH_ROWS_PER_PARTITION + 1) == 3
-    # capped at the session's configured shuffle partitions, so a
-    # cluster's own tuning wins at scale
-    assert _iter_shuffle_partitions(spark, 10**9) == cap
+    # a known cap, not whatever the shared session holds
+    part_before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        # floor 2: a 1-partition hash layout normalizes to SinglePartition at
+        # checkpoint capture and the preserved-layout join re-inserts an
+        # Exchange per iteration (plan-gate-caught in r8)
+        assert _iter_shuffle_partitions(spark, 0) == 2
+        assert _iter_shuffle_partitions(spark, 1) == 2
+        assert _iter_shuffle_partitions(spark, GRAPH_ROWS_PER_PARTITION) == 2
+        assert _iter_shuffle_partitions(spark, 2 * GRAPH_ROWS_PER_PARTITION) == 2
+        assert _iter_shuffle_partitions(spark, 2 * GRAPH_ROWS_PER_PARTITION + 1) == 3
+        # capped at the session's configured shuffle partitions, so a
+        # cluster's own tuning wins at scale
+        assert _iter_shuffle_partitions(spark, 10**9) == 8
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", part_before)
 
 
 @pytest.mark.parametrize("op", ["cc", "pagerank"])
@@ -248,6 +252,7 @@ def test_graph_ops_restore_session_confs(spark, op):
         assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
         assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
     finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         spark.conf.set("spark.sql.shuffle.partitions", part_before)
 
 
