@@ -24,10 +24,6 @@ def overlap_len(s1: Column, e1: Column, s2: Column, e2: Column) -> Column:
     return F.greatest(F.lit(0), F.least(e1, e2) - F.greatest(s1, s2))
 
 
-def spans_overlap(s1: Column, e1: Column, s2: Column, e2: Column) -> Column:
-    return overlap_len(s1, e1, s2, e2) != F.lit(0)
-
-
 def leniency_window(start: Column, end: Column, leniency: float) -> Column:
     """w = ceil(leniency * span_length) — annotations.py:138."""
     return F.ceil(F.lit(float(leniency)) * (end - start)).cast("long")

@@ -235,13 +235,6 @@ def word_shingles_arr(words: Column, n: int = 3) -> Column:
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Array of n-word shingles (space-joined) from a space-tokenized text.
-    Prefer word_shingles_arr over a materialized token array in operator
-    hot paths (see its docstring)."""
-    return word_shingles_arr(F.split(text, " "), n)
-
-
 def minhash_signature_table(
     df: DataFrame,
     text_col: str = "text",

@@ -36,7 +36,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from medacy_spark.session import local_table
+from medacy_spark.session import aqe_off, local_table
 
 DIM = 50
 WINDOW = 5
@@ -504,15 +504,10 @@ def train_word_vectors_distributed(
     float addition order; the byte-pinned pmc_word2vec fixture stays on
     the driver path).
     """
-    spark = tokens.sparkSession
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with aqe_off(tokens.sparkSession):
         return _twvd_inner(
             tokens, dim, window, alpha, id_cols, order_col, word_col, iters
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
 
 def _twvd_inner(

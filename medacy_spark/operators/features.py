@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from medacy_spark.operators.sequence import LIKE_NUM, feature_window
+from medacy_spark.plans.numbering import global_row_index
 
 WINDOW_SIZES = {"clinical": 3, "systematic_review": 10, "fda_nano": 6, "lstm": 0}
 
@@ -284,47 +285,14 @@ def vocab_index(values: DataFrame, col: str) -> DataFrame:
     The reference uses nondeterministic first-seen order; we define the
     documented deterministic order (ascending value) instead.
 
-    Scale shape (no global window): range-partition the distinct values on
-    the sort key, number locally per partition, and add driver-computed
-    per-partition offsets — the proven ``folds.assign_folds(scale=True)``
-    topology. The only driver traffic is one count per partition; no
+    Index = position of the distinct value in ascending order, numbered by
+    ``plans.numbering.global_row_index`` (range partition + per-partition
+    offsets; the same numbering ``folds.assign_folds`` uses). No
     SinglePartition exchange anywhere (plan-gated), so a 100x token
     vocabulary indexes at full parallelism. Output is bit-identical to a
-    global ``row_number() over (order by value)``."""
-    from pyspark.sql import Window
-
-    spark = values.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    d = (
-        values.select(col).distinct()
-        .repartitionByRange(n_parts, col)
-        .sortWithinPartitions(col)
-        .withColumn("_pid", F.spark_partition_id())
-        # pin the (sampled) range boundaries so the counts pass and the
-        # numbering pass see the same partitioning
-        .localCheckpoint(eager=False)
-    )
-    counts = sorted(
-        (r["_pid"], r["c"])
-        for r in d.groupBy("_pid").agg(F.count("*").alias("c")).collect()
-    )
-    if not counts:
-        return d.select(col).withColumn("index", F.lit(0).cast("int"))
-    offsets, acc = {}, 0
-    for pid, c in counts:
-        offsets[pid] = acc
-        acc += c
-    off_expr = F.element_at(
-        F.map_from_arrays(
-            F.array(*[F.lit(p) for p in offsets]),
-            F.array(*[F.lit(o) for o in offsets.values()]),
-        ),
-        F.col("_pid"),
-    )
-    wl = Window.partitionBy("_pid").orderBy(col)
-    return d.select(
-        col, (off_expr + F.row_number().over(wl) - 1).cast("int").alias("index")
-    )
+    global ``row_number() over (order by value) - 1``."""
+    ranked = global_row_index(values.select(col).distinct(), [col], "index")
+    return ranked.select(col, F.col("index").cast("int").alias("index"))
 
 
 def detect_window_size(feature_tuples: DataFrame, id_col: str = "doc_id") -> int:

@@ -12,7 +12,7 @@ Reproduces medacy's ``create_folds`` (medacy/model/model.py:23-66) exactly:
 
 Equivalent closed form: order sequences by (alphabetically smallest label
 they contain, sequence index); fold = (global row_number - 1) mod k. That
-is a pure window computation — one sort, no Python.
+is a pure numbering computation — one range sort, no Python.
 
 Cross-fold stats (A5, model.py:429-441): per-(fold,label) metrics then
 mean/min/max per label.
@@ -20,8 +20,10 @@ mean/min/max per label.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from medacy_spark.plans.numbering import global_row_index
 
 
 def assign_folds(
@@ -29,63 +31,24 @@ def assign_folds(
     num_folds: int = 10,
     seq_col: str = "seq_id",
     labels_col: str = "labels",
-    scale: bool = False,
 ) -> DataFrame:
     """sequences(seq_id, labels array<string>) -> (seq_id, fold int).
 
     Sequences with an empty label set are never assigned by the reference
     (they appear in no fold) — they are dropped here too.
 
-    Two physical paths, identical output (tested):
-      * exact replay (default): one unpartitioned global window — the
-        bit-for-bit parity path; every row funnels through one task, fine
-        at fixture scale, a scale-killer on a real corpus.
-      * ``scale=True``: range-partition on the sort key, per-partition
-        local numbering, driver-side per-partition counts → offsets
-        (n_partitions rows), fold = (offset + local_rn - 1) mod k. No
-        single-partition exchange anywhere in the plan (gate-tested).
+    fold = (global position in (smallest label, seq_id) order) mod k,
+    numbered by ``plans.numbering.global_row_index``: range partition,
+    per-partition counts, offsets plus a local row_number — no
+    single-partition exchange anywhere in the plan (gate-tested).
     """
     if num_folds < 2:
         raise ValueError(f"'num_folds' must be >= 2, but is {num_folds!r}")
     keyed = sequences.filter(F.size(labels_col) > 0).select(
         seq_col, F.array_min(labels_col).alias("_first_label")
     )
-    if not scale:
-        w = Window.orderBy("_first_label", seq_col)
-        return keyed.select(
-            seq_col,
-            ((F.row_number().over(w) - 1) % num_folds).cast("int").alias("fold"),
-        )
-    spark = sequences.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    d = (
-        keyed.repartitionByRange(n_parts, "_first_label", seq_col)
-        .sortWithinPartitions("_first_label", seq_col)
-        .withColumn("_pid", F.spark_partition_id())
-        # pin the (sampled) range boundaries so the counts pass and the
-        # numbering pass see the same partitioning
-        .localCheckpoint(eager=False)
-    )
-    counts = sorted(
-        (r["_pid"], r["c"])
-        for r in d.groupBy("_pid").agg(F.count("*").alias("c")).collect()
-    )
-    offsets, acc = {}, 0
-    for pid, c in counts:
-        offsets[pid] = acc
-        acc += c
-    off_expr = F.element_at(
-        F.map_from_arrays(
-            F.array(*[F.lit(p) for p in offsets]),
-            F.array(*[F.lit(o) for o in offsets.values()]),
-        ),
-        F.col("_pid"),
-    )
-    wl = Window.partitionBy("_pid").orderBy("_first_label", seq_col)
-    return d.select(
-        seq_col,
-        ((off_expr + F.row_number().over(wl) - 1) % num_folds).cast("int").alias("fold"),
-    )
+    ranked = global_row_index(keyed, ["_first_label", seq_col], "_rn")
+    return ranked.select(seq_col, (F.col("_rn") % num_folds).cast("int").alias("fold"))
 
 
 def fold_split(data: DataFrame, folds: DataFrame, k: int, seq_col: str = "seq_id"):

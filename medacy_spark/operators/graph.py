@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from medacy_spark.session import aqe_off
+
 # Scale-adaptive shuffle sizing for the iterative operators (CC /
 # pagerank): they run AQE-off (checkpoint-partitioning preservation), so
 # AQE's small-partition coalescing never applies, and a graph of a few
@@ -65,7 +67,6 @@ def connected_components(
     into it — the observability hook the convergence gate reads; this
     function is EAGER (it iterates to convergence when called).
     """
-    spark = edges.sparkSession
     # Checkpoints created under AQE report Unknown partitioning to their
     # consumers (AdaptiveSparkPlanExec hides the final layout at
     # LogicalRDD capture), which re-inserts a full edge-relation
@@ -73,14 +74,8 @@ def connected_components(
     # computation AQE-off so the repartition+sortWithinPartitions layout
     # below survives into the loop — same recipe as pagerank, measured
     # there at 1.8x.
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    part_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with aqe_off(edges.sparkSession):
         return _connected_components_inner(edges, src, dst, max_iter, stats)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", part_before)
 
 
 def _connected_components_inner(edges, src, dst, max_iter, stats) -> DataFrame:
@@ -288,7 +283,6 @@ def pagerank(
     node table.
     """
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
-    spark = edges.sparkSession
     # AQE wraps checkpointed plans in AdaptiveSparkPlanExec, whose
     # outputPartitioning reads as Unknown at LogicalRDD capture — which
     # silently re-inserts a full edge-relation Exchange+Sort into EVERY
@@ -297,17 +291,11 @@ def pagerank(
     # checkpoint-partitioned or node-scale, the hub-skewed transpose
     # shuffle is tamed by map-side combine (not by AQE, which doesn't
     # split skewed aggregations anyway).
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    part_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with aqe_off(edges.sparkSession):
         return _pagerank_inner(
             edges, src, dst, w, iterations, damping, stats,
             materialize_every, seeds, seed_col,
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", part_before)
 
 
 def _pagerank_inner(
@@ -461,13 +449,8 @@ def random_walks(
     argmin aggregation (min of a (hash, dst) struct — no window), with
     the frontier checkpointed per step so plans stay flat.
     """
-    spark = edges.sparkSession
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with aqe_off(edges.sparkSession):
         return _random_walks_inner(edges, n_walks, walk_len, src, dst, salt)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
 
 def _random_walks_inner(edges, n_walks, walk_len, src, dst, salt) -> DataFrame:
@@ -700,13 +683,8 @@ def bfs_distances(
     skew, which the distinct's partial aggregation absorbs. Eager like
     connected_components (it iterates when called).
     """
-    spark = edges.sparkSession
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with aqe_off(edges.sparkSession):
         return _bfs_inner(edges, seeds, src, dst, node_col, max_hops, stats)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
 
 def _bfs_inner(edges, seeds, src, dst, node_col, max_hops, stats) -> DataFrame:

@@ -168,41 +168,6 @@ def lexicon_overlay(
     return out.drop("_tags")
 
 
-def unit_mentions(tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Number+unit adjacency mentions: Dose (num + mass/volume unit) and
-    Duration (num + time unit) — unit_component.py:152-172 semantics.
-
-    Single lead() pass partitioned by doc (ordered by sentence, token; the
-    lead's sentence id is checked so patterns never cross a sentence) —
-    shares the tokenizer's exchange, classifies both unit families from
-    one frame.
-    """
-    from medacy_spark.operators.sequence import LIKE_NUM
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy("sent_id", "tok_id")
-    nb = (
-        tokens.withColumn("_nw", F.lead("word").over(w))
-        .withColumn("_ne", F.lead("end_idx").over(w))
-        .withColumn("_ns", F.lead("sent_id").over(w))
-        .withColumn("_nl", F.lower(F.col("_nw")))
-    )
-    dose_u = [u.lower() for u in lex.DOSE_UNITS]
-    time_u = [u.lower() for u in lex.TIME_UNITS]
-    hit = nb.filter(
-        F.col("word").rlike(LIKE_NUM)
-        & (F.col("_ns") == F.col("sent_id"))
-        & (F.col("_nl").isin(dose_u + time_u))
-    )
-    return hit.select(
-        id_col, "sent_id",
-        F.when(F.col("_nl").isin(dose_u), F.lit("Dose")).otherwise(F.lit("Duration")).alias("tag"),
-        F.col("idx").alias("start"),
-        F.col("_ne").alias("end"),
-        F.concat_ws(" ", "word", "_nw").alias("text"),
-    )
-
-
 def detect_mentions(
     tokens: DataFrame,
     gazetteer: DataFrame,

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from medacy_spark.session import aqe_off
+
 
 def doc_token_offsets(
     docs: DataFrame,
@@ -62,15 +64,10 @@ def doc_token_offsets(
     # checkpoint AQE-off so its hashpartitioning(_bkt) layout is reported
     # to consumers (under AQE a LogicalRDD reports Unknown and the rollup
     # re-exchanges; BENCH.md "one-exchange iteration plan")
-    spark = docs.sparkSession
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with aqe_off(docs.sparkSession):
         local = base.withColumn(
             "_local_end", F.sum(step).over(in_bucket)  # inclusive, in-bucket
         ).localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
     # bucket-count-scale relation: per-bucket totals (the max inclusive
     # in-bucket cumsum IS the bucket total — integer-exact) + their
     # exclusive prefix sum; rides the checkpoint's _bkt layout

@@ -10,8 +10,9 @@ the document key.
     entity (medacy/model/model.py:243-264 and 88-107).
   * feature_window — W1: ±k neighbor features per token, never crossing a
     sentence (discrete_feature_extractor.py:89-106).
-  * adjacency_match — W7: token-adjacency patterns (LIKE_NUM + unit, etc.,
-    unit_component.py:61-172) via lead() columns, no self-join needed.
+  * LIKE_NUM — the number-token pattern that W7's token-adjacency
+    matchers (LIKE_NUM + unit, unit_component.py:61-172) use; the
+    matchers themselves live in operators/matchers.py.
   * resegment — W4: collapse matched multi-token spans into one token
     (unit_component.py:179-307) via a running boundary sum.
 """
@@ -110,57 +111,7 @@ def feature_window(
     )
 
 
-def with_neighbors(
-    tokens: DataFrame,
-    n: int = 2,
-    part_cols: Sequence[str] = ("url", "sent_id"),
-    order_col: str = "tok_id",
-    text_col: str = "word",
-    end_col: str = "end_idx",
-) -> DataFrame:
-    """Attach next-token columns _next1.._nextN (+ their end offsets) for
-    adjacency pattern matching (W7) — lead() beats a self-join: one window
-    pass, zero extra shuffles when already partitioned by document."""
-    w = Window.partitionBy(*part_cols).orderBy(order_col)
-    out = tokens
-    for i in range(1, n + 1):
-        out = out.withColumn(f"_next{i}", F.lead(text_col, i).over(w))
-        out = out.withColumn(f"_next{i}_end", F.lead(end_col, i).over(w))
-    return out
-
-
 LIKE_NUM = r"^\d+(\.\d+)?$"
-
-
-def number_unit_mentions(
-    tokens: DataFrame,
-    units: Sequence[str],
-    tag: str,
-    part_cols: Sequence[str] = ("url", "sent_id"),
-    order_col: str = "tok_id",
-    text_col: str = "word",
-    start_col: str = "idx",
-    end_col: str = "end_idx",
-) -> DataFrame:
-    """LIKE_NUM token followed by a unit token -> one mention spanning both.
-
-    This is the reference's measurement/duration Matcher pattern
-    (unit_component.py:152-172: [{'LIKE_NUM': True}, {'ENT_TYPE': unit}])
-    re-expressed as lead() + literal predicates; Catalyst constant-folds the
-    unit IN-list.
-    """
-    nb = with_neighbors(tokens, 1, part_cols, order_col, text_col, end_col)
-    hit = nb.filter(
-        F.col(text_col).rlike(LIKE_NUM)
-        & F.lower(F.col("_next1")).isin([u.lower() for u in units])
-    )
-    return hit.select(
-        *part_cols,
-        F.lit(tag).alias("tag"),
-        F.col(start_col).alias("start"),
-        F.col("_next1_end").alias("end"),
-        F.concat_ws(" ", F.col(text_col), F.col("_next1")).alias("text"),
-    )
 
 
 def resegment(

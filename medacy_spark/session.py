@@ -9,7 +9,8 @@ partitions sized to the parallelism rather than the 200 default.
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -84,3 +85,31 @@ def local_table(spark: SparkSession, rows: Sequence[Sequence], schema: str | Str
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, struct)
+
+
+_AQE_OFF_KEYS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+@contextmanager
+def aqe_off(spark: SparkSession) -> Iterator[None]:
+    """Plan and run the block with AQE off, then put the session back.
+
+    Checkpoints captured under AQE report Unknown partitioning to their
+    consumers, so an operator that lays a relation out once and reuses
+    that layout (graph iterations, packing, the distributed SVD) must
+    build it AQE-off. The block may also size
+    ``spark.sql.shuffle.partitions``; on exit — normal or by exception —
+    both keys return to their prior values, and a key that was unset
+    before is unset again. This is the only place the engine changes
+    ``spark.sql.adaptive.enabled``.
+    """
+    before = {k: v for k, v in spark.conf.getAll.items() if k in _AQE_OFF_KEYS}
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        yield
+    finally:
+        for k in _AQE_OFF_KEYS:
+            if k in before:
+                spark.conf.set(k, before[k])
+            else:
+                spark.conf.unset(k)

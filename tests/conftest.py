@@ -21,6 +21,26 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _session_conf_unchanged(request):
+    """A test that uses the shared session leaves its conf as it found it:
+    same keys set, same values."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    spark = request.getfixturevalue("spark")
+    before = dict(spark.conf.getAll)
+    yield
+    after = dict(spark.conf.getAll)
+    changed = {
+        k: (before.get(k), after.get(k))
+        for k in before.keys() | after.keys()
+        if before.get(k) != after.get(k)
+    }
+    if changed:
+        pytest.fail(f"session conf changed (key: (before, after)): {changed}")
+
+
 @pytest.fixture(scope="session")
 def doc_ids(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").select("doc_id").cache()

@@ -67,15 +67,20 @@ def test_no_row_level_python_udfs():
     only Arrow-batched pandas UDFs / mapInPandas (CI grep per SURVEY §7.4).
     The same holds for driver-side tables: ``createDataFrame`` over Python
     data is a pickled PythonRDD whose every scan forks Python workers, so
-    the engine builds them only through ``session.local_table`` (Arrow)."""
+    the engine builds them only through ``session.local_table`` (Arrow).
+    AQE is switched off only through ``session.aqe_off``, which restores
+    the session conf."""
     import pathlib
     import re
 
     root = pathlib.Path(__file__).resolve().parents[1] / "medacy_spark"
     offenders = []
     local_tables = []
+    aqe_flips = []
     for p in root.rglob("*.py"):
         src = p.read_text()
+        if "spark.sql.adaptive.enabled" in src:
+            aqe_flips.append(p.relative_to(root).as_posix())
         # F.udf( / @udf( — row-at-a-time; pandas_udf is the allowed form
         for m in re.finditer(r"(?<!pandas_)\budf\s*\(", src):
             frag = src[max(0, m.start() - 20):m.start()]
@@ -86,6 +91,7 @@ def test_no_row_level_python_udfs():
             local_tables.append((p.relative_to(root).as_posix(), enclosing[-1:]))
     assert offenders == [], offenders
     assert local_tables == [("session.py", ["local_table"])], local_tables
+    assert aqe_flips == ["session.py"], aqe_flips
 
 
 def test_lookup_tables_are_local_relations(spark):

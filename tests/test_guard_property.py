@@ -1,4 +1,4 @@
-"""Property tests for the hot-bucket star guard and the PNG codec.
+"""Property tests for the hot-bucket star guard.
 
 The guard's load-bearing invariant is PROVABLE and therefore
 property-testable: within any band bucket, a star on the member set has
@@ -13,7 +13,6 @@ partitions match.
 
 from __future__ import annotations
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -74,18 +73,3 @@ def test_star_guard_preserves_connectivity(spark, cluster_sizes, cap):
     assert guarded <= unguarded | {
         (min(a, b), max(a, b)) for a in ids for b in ids if a != b
     }
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    h=st.integers(min_value=1, max_value=12),
-    w=st.integers(min_value=1, max_value=12),
-    ch=st.sampled_from([1, 2, 3, 4]),
-    ft=st.integers(min_value=0, max_value=4),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_png_roundtrip_property(h, w, ch, ft, seed):
-    from medacy_spark.functions.png import png_decode, png_encode
-
-    img = np.random.RandomState(seed).randint(0, 256, (h, w, ch)).astype(np.uint8)
-    assert np.array_equal(png_decode(png_encode(img, ft)), img)

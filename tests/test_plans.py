@@ -78,9 +78,10 @@ def test_pipeline_is_exchange_free_from_range(spark):
 
 
 def test_whole_stage_codegen_active(spark):
+    from medacy_spark.session import aqe_off
+
     # AQE defers codegen until execution; disable it for the plan check
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with aqe_off(spark):
         df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").groupBy(
             "l_returnflag"
         ).agg(F.sum("l_quantity").alias("s"))
@@ -88,10 +89,8 @@ def test_whole_stage_codegen_active(spark):
         with redirect_stdout(buf):
             df.explain("codegen")  # "Found N WholeStageCodegen subtrees"
         out = buf.getvalue()
-        assert "WholeStageCodegen subtrees" in out
-        assert "Found 0" not in out
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert "WholeStageCodegen subtrees" in out
+    assert "Found 0" not in out
 
 
 def test_bucketed_join_is_shuffle_free(spark, doc_ids, tmp_path):
@@ -101,13 +100,14 @@ def test_bucketed_join_is_shuffle_free(spark, doc_ids, tmp_path):
     from medacy_spark.plans.bucketing import read_table, write_bucketed
 
     # warehouse.dir is a static conf; tables land in ./spark-warehouse
-    # (gitignored) and are dropped below
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    docs = clinical_documents(doc_ids.filter("doc_id < 200")).select("doc_id", "text")
-    gold = gold_mentions(doc_ids.filter("doc_id < 200"))
-    write_bucketed(docs, "t_docs_b", "doc_id", buckets=8)
-    write_bucketed(gold, "t_gold_b", "doc_id", buckets=8)
+    # (gitignored) and are dropped below; bucketed reads rely on
+    # spark.sql.sources.bucketing.enabled, which is on by default
+    assert spark.conf.get("spark.sql.sources.bucketing.enabled") == "true"
     try:
+        docs = clinical_documents(doc_ids.filter("doc_id < 200")).select("doc_id", "text")
+        gold = gold_mentions(doc_ids.filter("doc_id < 200"))
+        write_bucketed(docs, "t_docs_b", "doc_id", buckets=8)
+        write_bucketed(gold, "t_gold_b", "doc_id", buckets=8)
         j = read_table(spark, "t_docs_b").join(read_table(spark, "t_gold_b"), "doc_id")
         plan = _plan(j)
         shuffle = [line for line in plan.splitlines()

@@ -12,7 +12,7 @@ Each test pins the *internal* invariant an r8 change relies on
   ``cosine()`` fold (same fold arithmetic, just hoisted).
 - graph._iter_shuffle_partitions: iteration shuffles are sized from
   the materialized edge count (floor 2, capped at the configured
-  ``spark.sql.shuffle.partitions``), and the AQE-off blocks restore
+  ``spark.sql.shuffle.partitions``), and ``session.aqe_off`` restores
   both ``adaptive.enabled`` and ``shuffle.partitions`` on exit.
 - lm.train_ngram_lm: the token-array lineage cut must not change the
   trained count tables.
@@ -254,6 +254,33 @@ def test_graph_ops_restore_session_confs(spark, op):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         spark.conf.set("spark.sql.shuffle.partitions", part_before)
+
+
+def test_aqe_off_restores_conf_on_exception_and_unsets_unset_keys(spark):
+    from medacy_spark.session import aqe_off
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = dict(spark.conf.getAll)
+    assert all(k in before for k in keys)
+    # set before: values come back on normal exit
+    with aqe_off(spark):
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+    assert dict(spark.conf.getAll) == before
+    # unset before: unset again, also when the block raises
+    for k in keys:
+        spark.conf.unset(k)
+    try:
+        with pytest.raises(RuntimeError, match="boom"):
+            with aqe_off(spark):
+                assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+                spark.conf.set("spark.sql.shuffle.partitions", "3")
+                raise RuntimeError("boom")
+        assert not any(k in spark.conf.getAll for k in keys)
+    finally:
+        for k in keys:
+            spark.conf.set(k, before[k])
+    assert dict(spark.conf.getAll) == before
 
 
 # ------------------------------------------------- lm lineage cut
