@@ -176,6 +176,50 @@ def test_checkpoint_leaves_session_conf_unchanged(spark, doc_ids, tmp_path):
     assert dict(spark.conf.getAll) == before
 
 
+def test_kg_batch_reuses_generated_code(spark, tmp_path):
+    """A second KG batch of the same plan shape compiles (almost) no new
+    classes: one batch cycles 126–133 generated classes, so Spark's
+    default 100-entry codegen cache would evict each one before the next
+    batch needs it and janino would recompile the whole chain."""
+    from medacy_spark.functions.html import extract_text_expr
+    from medacy_spark.operators.graph import materialize_nodes_edges
+    from medacy_spark.operators.linking import cui_dictionary, link_mentions
+    from medacy_spark.operators.mentions import detect_mentions, gazetteer_df
+    from medacy_spark.operators.relations import extract_triples
+    from medacy_spark.operators.tokenize import tokenize_native
+    from medacy_spark.plans.checkpoint import run_stage_checkpointed
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def kg_pass(out):
+        # jobs/kg_pipeline.py's chain, as perfbench's kg_build runs it
+        sinks = dict(run_id="r", key_col="doc_id", n_partitions=4, metrics_path=f"{out}/metrics")
+        docs = clinical_documents(spark.range(200).withColumnRenamed("id", "doc_id"))
+        mentions = run_stage_checkpointed(
+            spark, docs,
+            lambda df: detect_mentions(
+                tokenize_native(df.select("doc_id", extract_text_expr(F.col("html")).alias("text"))),
+                gazetteer_df(spark),
+            ),
+            stage="mentions", output_path=f"{out}/mentions", **sinks,
+        )
+        triples = run_stage_checkpointed(
+            spark, mentions, lambda df: extract_triples(df.drop("partition_id")),
+            stage="triples", output_path=f"{out}/triples", partition_col="partition_id", **sinks,
+        )
+        nodes, edges = materialize_nodes_edges(link_mentions(mentions, cui_dictionary(spark)), triples)
+        nodes.write.parquet(f"{out}/nodes")
+        edges.write.parquet(f"{out}/edges")
+        return spark.read.parquet(f"{out}/nodes").count(), spark.read.parquet(f"{out}/edges").count()
+
+    first = kg_pass(str(tmp_path / "a"))
+    before = compiles.getCount()
+    second = kg_pass(str(tmp_path / "b"))
+    assert second == first
+    assert compiles.getCount() - before <= 2
+
+
 def test_completed_partitions_missing_vs_unreadable(spark, tmp_path):
     """A missing metrics table means nothing committed; an unreadable one
     raises instead of silently rerunning every partition."""
