@@ -1,8 +1,16 @@
 """Production entry point: the full webtext training-data curation job.
 
-  spark-submit --py-files dist/medacy_spark.zip jobs/curation_pipeline.py \\
+  spark-submit --py-files dist/medacy_spark.zip --driver-memory 16g \\
+      --conf "spark.driver.defaultJavaOptions=-XX:Tier4InvocationThreshold=40000 \\
+          -XX:Tier4MinInvocationThreshold=4800 -XX:Tier4CompileThreshold=120000 \\
+          -XX:Tier4BackEdgeThreshold=320000" \\
+      jobs/curation_pipeline.py \\
       --input <documents parquet/Iceberg path> \\
       --output <warehouse dir> --seq-len 2048 --cores 32
+
+The driver memory and the `--conf` value are the JVM-launch settings
+`get_spark` applies when it starts the JVM itself; the value is
+`medacy_spark.session.DRIVER_JAVA_OPTIONS` (see `jobs/kg_pipeline.py`).
 
 Stages (each an operator with its own contract query; this job is the
 composition a 100-TB curation run actually ships):

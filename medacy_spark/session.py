@@ -17,6 +17,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
+# HotSpot's tier-4 (C2) compile thresholds at 8x the JDK 17 defaults
+# (5000/600/15000/40000); get_spark's docstring says why.
+DRIVER_JAVA_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=40000 -XX:Tier4MinInvocationThreshold=4800"
+    " -XX:Tier4CompileThreshold=120000 -XX:Tier4BackEdgeThreshold=320000"
+)
+
 
 def get_spark(
     app_name: str = "medacy_spark",
@@ -41,6 +48,31 @@ def get_spark(
     setting is static: the cache is JVM-wide and sized when the first
     session generates code, so it holds only if the JVM's first session
     comes from here.
+
+    The driver JVM runs HotSpot's tier-4 (C2) compile thresholds at 8x
+    the JDK 17 defaults (``DRIVER_JAVA_OPTIONS``), so C2 compiles only
+    really hot code. Neither benchmark workload is bound by data work:
+    with the defaults, C2 threads took 63-71 of 118-137 CPU-s of a
+    contract-suite pass and 18 of 35 s of a 10k-doc KG batch, compiling a
+    large, flat set of lukewarm Catalyst and planner methods. At 8x (the
+    best of a 2x/4x/8x sweep) they took 25-27 s and 9-11 s; over ten
+    benchmark pairs the pass's CPU fell 121 -> 88 s and the batch's
+    33 -> 29 s. In steady state at 100k docs per batch, the executors'
+    CPU held (medians of ten batches per side: mentions and triples
+    stages equal, link stage 5% higher, inside the run-to-run spread and
+    less than the compiler CPU that stage saves). C1 only
+    (``-XX:TieredStopAtLevel=1``) was rejected: it cut the first 10k-doc
+    batch's CPU 63 -> 25 s, but it leaves the executors' hot loops in C1
+    code, and at 100k docs per batch their steady CPU rose 3-4x (mentions
+    stage 64-71 vs 16-18 s, triples 28-32 vs 8-10 s).
+
+    The options go through ``spark.driver.defaultJavaOptions``, which the
+    launcher puts before ``spark.driver.extraJavaOptions``, so a caller
+    passing its own ``extraJavaOptions`` (perfbench, ``tools/``) keeps
+    them. JVM-launch settings — these options and ``spark.driver.memory``
+    — take effect only when this call starts the JVM; under
+    ``spark-submit``, or with a JVM already running, pass them on the
+    command line (see ``jobs/kg_pipeline.py``).
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -63,6 +95,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
     )
     # shuffle through tmpfs when available: local-mode shuffles serialize on
     # disk I/O otherwise, capping multi-core scaling

@@ -69,7 +69,8 @@ def test_no_row_level_python_udfs():
     data is a pickled PythonRDD whose every scan forks Python workers, so
     the engine builds them only through ``session.local_table`` (Arrow).
     AQE is switched off only through ``session.aqe_off``, which restores
-    the session conf."""
+    the session conf. Driver JVM options are set only in
+    ``session.get_spark``."""
     import pathlib
     import re
 
@@ -77,10 +78,13 @@ def test_no_row_level_python_udfs():
     offenders = []
     local_tables = []
     aqe_flips = []
+    jvm_opts = []
     for p in root.rglob("*.py"):
         src = p.read_text()
         if "spark.sql.adaptive.enabled" in src:
             aqe_flips.append(p.relative_to(root).as_posix())
+        if re.search(r"spark\.driver\.(defaultJavaOptions|extraJavaOptions)", src):
+            jvm_opts.append(p.relative_to(root).as_posix())
         # F.udf( / @udf( — row-at-a-time; pandas_udf is the allowed form
         for m in re.finditer(r"(?<!pandas_)\budf\s*\(", src):
             frag = src[max(0, m.start() - 20):m.start()]
@@ -92,6 +96,24 @@ def test_no_row_level_python_udfs():
     assert offenders == [], offenders
     assert local_tables == [("session.py", ["local_table"])], local_tables
     assert aqe_flips == ["session.py"], aqe_flips
+    assert jvm_opts == ["session.py"], jvm_opts
+
+
+def test_driver_jvm_runs_raised_c2_thresholds(spark):
+    """The test session passes its own ``extra_conf``, yet its JVM was
+    launched with get_spark's tier-4 (C2) thresholds: they go through
+    ``spark.driver.defaultJavaOptions``, which a caller's conf does not
+    replace."""
+    from medacy_spark.session import DRIVER_JAVA_OPTIONS
+
+    runtime = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    args = list(runtime.getInputArguments())
+    opts = DRIVER_JAVA_OPTIONS.split()
+    assert [o.split("=")[0] for o in opts] == [
+        "-XX:Tier4InvocationThreshold", "-XX:Tier4MinInvocationThreshold",
+        "-XX:Tier4CompileThreshold", "-XX:Tier4BackEdgeThreshold",
+    ]
+    assert [o for o in opts if o not in args] == [], args
 
 
 def test_lookup_tables_are_local_relations(spark):

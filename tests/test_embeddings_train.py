@@ -9,9 +9,12 @@ over the operator, so this also pins the fixture's provenance)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
+from conftest import REF
 from medacy_spark.operators.embeddings_train import (
     cooccurrence_pairs,
     ppmi,
@@ -103,6 +106,7 @@ def test_train_word_vectors_vocab_from_token_stream(spark):
     assert np.allclose(norms[norms > 0], 1.0)
 
 
+@pytest.mark.skipif(not os.path.isdir(REF), reason="reference fixtures unavailable")
 def test_train_word_vectors_reproduces_pmc_fixture(spark, tmp_path):
     """The headline gate: distributed counting + driver PPMI/SVD over
     the reference sample dataset's unlabeled text == the checked-in

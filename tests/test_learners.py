@@ -5,9 +5,12 @@ round-trip."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import REF
 from medacy_spark.learners import PerceptronLearner
 from medacy_spark.model import FrequencyLearner, Model
 
@@ -201,6 +204,7 @@ def test_crf_sharded_ipm_path(spark, ambiguous_corpus):
     assert f["system"] == 1.0
 
 
+@pytest.mark.skipif(not os.path.isdir(REF), reason="reference fixtures unavailable")
 def test_crf_learns_reference_corpus_with_sentence_splits(spark):
     """Real-corpus learning gate: with the clinical tokenizer supplying
     actual sentence boundaries (the one-doc-one-sequence shape is what

@@ -4,9 +4,12 @@ the broadcast Arrow scoring contract."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
+from conftest import REF
 from medacy_spark.learners_nn import BiLSTMCRFLearner
 
 
@@ -165,6 +168,7 @@ def test_bilstm_spec_and_broadcast_scoring(spark):
     assert scored == driver
 
 
+@pytest.mark.skipif(not os.path.isdir(REF), reason="reference fixtures unavailable")
 def test_spec_word_embeddings_load_reference_fixture():
     """The spec's word_embeddings path loads via the S6 local loader
     (vectorizer.load_word_embeddings analogue) and freezes the table;

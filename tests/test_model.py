@@ -4,9 +4,12 @@ table-out, cross_validate completes and rejects k<=1)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import REF
 from medacy_spark.corpus.synth import clinical_documents, gold_mentions
 from medacy_spark.model import FrequencyLearner, Model
 from medacy_spark.operators.scoring import measures
@@ -96,6 +99,7 @@ def test_learner_shootout_ordering(spark):
         assert f1[ctx] > f1["frequency"]
 
 
+@pytest.mark.skipif(not os.path.isdir(REF), reason="reference fixtures unavailable")
 def test_fit_windows_overlong_training_sequences(spark):
     """fit_max_seq_len: per-sequence update rules starve when a tokenizer
     without sentence breaks hands whole documents to the learner as one
