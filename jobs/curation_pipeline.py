@@ -1,9 +1,9 @@
 """Production entry point: the full webtext training-data curation job.
 
   spark-submit --py-files dist/medacy_spark.zip --driver-memory 16g \\
-      --conf "spark.driver.defaultJavaOptions=-XX:Tier4InvocationThreshold=40000 \\
-          -XX:Tier4MinInvocationThreshold=4800 -XX:Tier4CompileThreshold=120000 \\
-          -XX:Tier4BackEdgeThreshold=320000" \\
+      --conf "spark.driver.defaultJavaOptions=-XX:+UseParallelGC \\
+          -XX:Tier4InvocationThreshold=40000 -XX:Tier4MinInvocationThreshold=4800 \\
+          -XX:Tier4CompileThreshold=120000 -XX:Tier4BackEdgeThreshold=320000" \\
       jobs/curation_pipeline.py \\
       --input <documents parquet/Iceberg path> \\
       --output <warehouse dir> --seq-len 2048 --cores 32

@@ -48,21 +48,23 @@ def extract_triples(
     here would branch the DAG and recompute the whole upstream pipeline
     twice (measured), and its ranking window would add another full
     sort — per-sentence mention counts are tiny, so the array fold is
-    both exact and cheap.
+    both exact and cheap. The explode takes the bare array and the tag
+    filter follows it: a lambda ``filter`` inside the generator keeps
+    ``Generate`` out of whole-stage codegen.
     """
     preds = list(PRED_FOR_TAG)
     sent_ms = mentions.groupBy(id_col, sent_col).agg(
         F.collect_list(F.struct("tag", "start", "end", "text")).alias("ms")
     )
     subj_arr = F.filter(F.col("ms"), lambda m: m["tag"] == subj_tag)
-    obj_arr = F.filter(
-        F.col("ms"), lambda m: m["tag"].isin(preds) & (m["tag"] != subj_tag)
-    )
+    obj_tag = F.col("obj.tag")
     rows = sent_ms.select(
         id_col,
         subj_arr.alias("subjs"),
-        F.explode(obj_arr).alias("obj"),
-    ).filter(F.size("subjs") > 0)
+        F.explode("ms").alias("obj"),
+    ).filter(
+        (F.size("subjs") > 0) & obj_tag.isin(preds) & (obj_tag != subj_tag)
+    )
     # fold: pick the subject minimizing (|s.start - obj.start|, s.start)
     def _closer(acc, s):
         d_s = F.abs(s["start"] - F.col("obj.start"))

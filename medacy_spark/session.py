@@ -17,10 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-# HotSpot's tier-4 (C2) compile thresholds at 8x the JDK 17 defaults
-# (5000/600/15000/40000); get_spark's docstring says why.
+# The parallel (throughput) collector, and HotSpot's tier-4 (C2) compile
+# thresholds at 8x the JDK 17 defaults (5000/600/15000/40000); get_spark's
+# docstring says why.
 DRIVER_JAVA_OPTIONS = (
-    "-XX:Tier4InvocationThreshold=40000 -XX:Tier4MinInvocationThreshold=4800"
+    "-XX:+UseParallelGC"
+    " -XX:Tier4InvocationThreshold=40000 -XX:Tier4MinInvocationThreshold=4800"
     " -XX:Tier4CompileThreshold=120000 -XX:Tier4BackEdgeThreshold=320000"
 )
 
@@ -66,6 +68,26 @@ def get_spark(
     code, and at 100k docs per batch their steady CPU rose 3-4x (mentions
     stage 64-71 vs 16-18 s, triples 28-32 vs 8-10 s).
 
+    The driver JVM also runs the parallel collector (``-XX:+UseParallelGC``,
+    HotSpot's throughput collector) instead of G1. Its young generation
+    has a fixed size, so old-generation pages that nothing has been
+    promoted into are never touched, while G1 allocates across all of its
+    regions and keeps the whole heap resident: at the end of a
+    contract-suite pass on a 3g heap, both collectors had the full
+    3,145,728 KB committed, but the JVM's Pss was 3.52 GB under G1 and
+    1.82 GB under ParallelGC (young generation 0.95 GB, old 2 GB of which
+    0.3 GB used). Over ten benchmark pairs the pass's peak RSS fell
+    3437 -> 1780 MB and a 10k-doc KG batch's 3135 -> 2043 MB, with CPU
+    flat. At 100k docs per batch on a 6g heap, the steady stages'
+    executor + GC CPU held (ParallelGC alone: mentions 4.99 -> 4.61 s,
+    triples 2.67 -> 2.46 s, link 2.16 -> 1.82 s, medians of eight
+    batches), at 0-2 full collections per batch (up to 366 ms of pause
+    in a batch) where G1 ran none. Over many batches the old generation fills up
+    before each full collection, so a long run's peak approaches G1's
+    (3.7 GB on that 6g heap after five batches, G1 3.0-3.8 GB). SerialGC
+    reached the same short-run peaks but collects on one thread, so its
+    pauses grow with the live set at the 16g default heap; it is not used.
+
     The options go through ``spark.driver.defaultJavaOptions``, which the
     launcher puts before ``spark.driver.extraJavaOptions``, so a caller
     passing its own ``extraJavaOptions`` (perfbench, ``tools/``) keeps
@@ -89,8 +111,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.session.timeZone", "UTC")
         # 16g measured ~5-10x faster than 48g on this workload in local
-        # mode: a huge heap makes G1 young-gen pauses dominate the short
-        # sort-heavy stages. Override via SPARK_GRAFT_DRIVER_MEM.
+        # mode: a huge heap made G1 young-gen pauses dominate the short
+        # sort-heavy stages (measured under G1, not re-measured on the
+        # parallel collector). Override via SPARK_GRAFT_DRIVER_MEM.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

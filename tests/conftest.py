@@ -10,9 +10,10 @@ REF = "/root/reference/medacy/tests/sample_data"
 
 @pytest.fixture(scope="session")
 def spark():
-    # a bounded heap: G1 expands toward its maximum before collecting, so
-    # with the 16g default the one long-lived test JVM outgrows a machine
-    # with 16 GB of memory and is killed mid-suite
+    # a bounded heap: measured under G1, which expands toward its maximum
+    # before collecting, the one long-lived test JVM outgrew a machine with
+    # 16 GB of memory at the 16g default and was killed mid-suite (14.9 GB);
+    # not re-measured at 16g on the parallel collector
     s = get_spark(
         app_name="medacy_spark_tests", cores=8, shuffle_partitions=8,
         extra_conf={"spark.driver.memory": "6g"},

@@ -101,19 +101,22 @@ def test_no_row_level_python_udfs():
 
 def test_driver_jvm_runs_raised_c2_thresholds(spark):
     """The test session passes its own ``extra_conf``, yet its JVM was
-    launched with get_spark's tier-4 (C2) thresholds: they go through
-    ``spark.driver.defaultJavaOptions``, which a caller's conf does not
-    replace."""
+    launched with get_spark's collector and tier-4 (C2) thresholds: they
+    go through ``spark.driver.defaultJavaOptions``, which a caller's conf
+    does not replace."""
     from medacy_spark.session import DRIVER_JAVA_OPTIONS
 
-    runtime = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
-    args = list(runtime.getInputArguments())
+    mgmt = spark._jvm.java.lang.management.ManagementFactory
+    args = list(mgmt.getRuntimeMXBean().getInputArguments())
     opts = DRIVER_JAVA_OPTIONS.split()
     assert [o.split("=")[0] for o in opts] == [
+        "-XX:+UseParallelGC",
         "-XX:Tier4InvocationThreshold", "-XX:Tier4MinInvocationThreshold",
         "-XX:Tier4CompileThreshold", "-XX:Tier4BackEdgeThreshold",
     ]
     assert [o for o in opts if o not in args] == [], args
+    collectors = sorted(b.getName() for b in mgmt.getGarbageCollectorMXBeans())
+    assert collectors == ["PS MarkSweep", "PS Scavenge"], collectors
 
 
 def test_lookup_tables_are_local_relations(spark):

@@ -8,6 +8,7 @@ value tests while being catastrophically slower at scale.
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
@@ -91,6 +92,28 @@ def test_whole_stage_codegen_active(spark):
         out = buf.getvalue()
     assert "WholeStageCodegen subtrees" in out
     assert "Found 0" not in out
+
+
+def test_kg_chain_explodes_are_whole_stage_compiled(spark, doc_ids):
+    """The KG chain's explodes run inside whole-stage codegen: a lambda
+    ``filter`` inside the generator would make ``Generate`` fall back to
+    row-at-a-time evaluation."""
+    from medacy_spark.corpus.synth import clinical_documents
+    from medacy_spark.operators.mentions import (
+        detect_mentions, gazetteer_df, gazetteer_mentions,
+    )
+    from medacy_spark.operators.relations import extract_triples
+    from medacy_spark.operators.tokenize import tokenize_native
+    from medacy_spark.session import aqe_off
+
+    toks = tokenize_native(clinical_documents(doc_ids).select("doc_id", "text"))
+    m = detect_mentions(toks, gazetteer_df(spark))
+    with aqe_off(spark):
+        for df in (m, gazetteer_mentions(toks, gazetteer_df(spark)), extract_triples(m)):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            explodes = [ln for ln in plan.splitlines() if " Generate explode(" in ln]
+            assert explodes
+            assert all(re.search(r"\*\(\d+\) Generate explode\(", ln) for ln in explodes), plan
 
 
 def test_bucketed_join_is_shuffle_free(spark, doc_ids, tmp_path):
