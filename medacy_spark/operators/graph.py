@@ -10,28 +10,43 @@ Connected components here is the alternating large-star/small-star
 min-label propagation (Kiveris et al., "Connected Components in MapReduce
 and Beyond", SOCC'14) expressed purely in DataFrame ops: each iteration is
 two self-joins + an aggregation; convergence when no label changes.
-localCheckpoint truncates lineage per iteration so plans don't snowball —
-standard practice for iterative DataFrame algorithms.
+
+The four iterative operators (connected_components, pagerank,
+random_walks, bfs_distances) share one frame: they plan AQE-off
+(:func:`_iterative`), cut the input lineage with an eager checkpoint whose
+own job counts the rows that size every iteration shuffle (:func:`_cut`),
+lay the relation each round re-reads out once by its join key
+(:func:`_laid_out`), and localCheckpoint per iteration so plans don't
+snowball. They are EAGER: each returns one materialized checkpoint and
+releases every other checkpoint it made (:func:`_release`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from medacy_spark.session import aqe_off
 
-# Scale-adaptive shuffle sizing for the iterative operators (CC /
-# pagerank): they run AQE-off (checkpoint-partitioning preservation), so
-# AQE's small-partition coalescing never applies, and a graph of a few
-# hundred edges otherwise pays the full configured partition count on
-# every one of ~2 shuffles x N iterations — pure scheduling overhead at
-# bench scale, and the identical constant would be wrong again on a
-# cluster. Partition count is derived from the materialized edge count
-# instead (guide §2: derive partitioning from input size); the cap is
-# whatever spark.sql.shuffle.partitions is configured to, so production
-# clusters keep their tuning.
+# Scale-adaptive shuffle sizing for the iterative operators: they run
+# AQE-off (checkpoint-partitioning preservation), so AQE's small-partition
+# coalescing never applies, and a graph of a few hundred edges otherwise
+# pays the full configured partition count on every one of ~2 shuffles x N
+# iterations — pure scheduling overhead at bench scale, and the identical
+# constant would be wrong again on a cluster. Partition count is derived
+# from the materialized input row count instead (guide §2: derive
+# partitioning from input size); the cap is whatever
+# spark.sql.shuffle.partitions is configured to, so production clusters
+# keep their tuning.
 GRAPH_ROWS_PER_PARTITION = 100_000
+# connected_components' round cap: pointer jumping converges in
+# O(log diameter) rounds (a 10k-node path takes 13)
+_CC_MAX_ROUNDS = 50
+# pagerank checkpoints its rounds lazily and materializes every this many
+# (and the last): bounds the un-materialized plan depth of long runs
+_PR_MATERIALIZE_EVERY = 8
 
 
 def _iter_shuffle_partitions(spark, n_rows: int) -> int:
@@ -44,11 +59,66 @@ def _iter_shuffle_partitions(spark, n_rows: int) -> int:
     return min(cap, want)
 
 
+def _iterative(op):
+    """Run a graph operator AQE-off; the session conf, the shuffle sizing
+    of :func:`_cut` included, is restored on exit. A checkpoint captured
+    under AQE reports ``UnknownPartitioning(0)`` (Spark 4.1), so every
+    round's join re-adds an Exchange+Sort of the laid-out relation;
+    AQE-off it keeps its ``hashpartitioning``. Hub skew is tamed by
+    map-side combine, not by AQE (which doesn't split skewed
+    aggregations anyway)."""
+
+    @functools.wraps(op)
+    def framed(edges: DataFrame, *args, **kwargs) -> DataFrame:
+        with aqe_off(edges.sparkSession):
+            return op(edges, *args, **kwargs)
+
+    return framed
+
+
+def _cut(df: DataFrame) -> DataFrame:
+    """Eager lineage cut of an operator's input. Its one job also counts
+    the rows (``observe``), and the count sizes every later shuffle of the
+    operator. Observing a lazy checkpoint reads 0 rows, so the cut is
+    eager."""
+    seen = Observation()
+    cut = df.observe(seen, F.count(F.lit(1)).alias("rows")).localCheckpoint()
+    spark = cut.sparkSession
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(_iter_shuffle_partitions(spark, seen.get["rows"])),
+    )
+    return cut
+
+
+def _laid_out(df: DataFrame, key: str) -> DataFrame:
+    """``df`` without duplicate rows, hash-partitioned and sorted by
+    ``key`` in a lazy checkpoint, which keeps that layout: every round's
+    sort-merge join reads it with zero exchange and zero sort. The
+    partitioning by ``key`` satisfies the dedup's distribution, so it is
+    one exchange; the operator's first action materializes it (eager
+    would be a separate barrier job)."""
+    return (
+        df.repartition(key)
+        .dropDuplicates()
+        .sortWithinPartitions(key)
+        .localCheckpoint(eager=False)
+    )
+
+
+def _release(*checkpoints: DataFrame) -> None:
+    """Drop the blocks of checkpoints whose successors are materialized.
+    ``DataFrame.unpersist`` does not release a localCheckpoint; the RDD
+    behind its LogicalRDD is unpersisted instead."""
+    for cp in checkpoints:
+        cp._jdf.queryExecution().logical().rdd().unpersist(True)
+
+
+@_iterative
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 50,
     stats: dict | None = None,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id of
@@ -64,51 +134,22 @@ def connected_components(
 
     ``stats`` (optional dict) gets ``iterations`` (rounds run, including
     the final no-change confirmation round) and ``converged`` written
-    into it — the observability hook the convergence gate reads; this
-    function is EAGER (it iterates to convergence when called).
+    into it — the observability hook the convergence gate reads. EAGER:
+    it iterates to convergence when called and returns one materialized
+    checkpoint, releasing every other one it made.
     """
-    # Checkpoints created under AQE report Unknown partitioning to their
-    # consumers (AdaptiveSparkPlanExec hides the final layout at
-    # LogicalRDD capture), which re-inserts a full edge-relation
-    # Exchange+Sort into every propagation round. Plan the whole
-    # computation AQE-off so the repartition+sortWithinPartitions layout
-    # below survives into the loop — same recipe as pagerank, measured
-    # there at 1.8x.
-    with aqe_off(edges.sparkSession):
-        return _connected_components_inner(edges, src, dst, max_iter, stats)
-
-
-def _connected_components_inner(edges, src, dst, max_iter, stats) -> DataFrame:
     # cut the input lineage BEFORE branching: the undirected union reads
     # `edges` twice and every propagation iteration re-reads the edge set —
     # without this an expensive upstream (e.g. minhash candidate generation
     # over 100k docs) is recomputed once per branch per iteration
     # (measured: 25 s → ~1 s for CC over a 502-edge candidate graph)
-    e = (
+    cut = _cut(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .localCheckpoint()
     )
-    # size every iteration shuffle to the (now materialized) edge count —
-    # the count is a cached-checkpoint scan, not a recompute
-    spark = e.sparkSession
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_iter_shuffle_partitions(spark, e.count())),
-    )
-    # the undirected relation is consumed once per iteration and its
-    # distinct is a shuffle — materialize it ONCE, laid out for the
-    # propagation join (partitioned+sorted by the label-carrying end) so
-    # each round's edge-side join plans zero exchange and zero sort
-    und = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .repartition("b")
-        .sortWithinPartitions("b")
-        # lazy: iteration 1's single action materializes it once; eager
-        # here would cost a separate barrier job (r8: each extra job is
-        # ~100-200 ms of fixed overhead, which dominates small graphs)
-        .localCheckpoint(eager=False)
+    # the undirected relation, laid out by the label-carrying end
+    und = _laid_out(
+        cut.union(cut.select(F.col("b").alias("a"), F.col("a").alias("b"))), "b"
     )
     # initial label = min(self, neighbors)
     labels = (
@@ -117,11 +158,11 @@ def _connected_components_inner(edges, src, dst, max_iter, stats) -> DataFrame:
             F.col("a").alias("node"),
             F.least("a", "nbr_min").alias("component"),
         )
+        .localCheckpoint(eager=False)
     )
-    labels = labels.localCheckpoint(eager=False)
     n_iter = 0
     converged = False
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         n_iter += 1
         # (1) neighbor propagation: min over adjacent labels
         nbr = (
@@ -166,10 +207,12 @@ def _connected_components_inner(edges, src, dst, max_iter, stats) -> DataFrame:
             .limit(1)
             .count()
         )
+        _release(labels, stepped)
         labels = new_labels
         if changed == 0:
             converged = True
             break
+    _release(cut, und)
     if stats is not None:
         stats["iterations"] = n_iter
         stats["converged"] = converged
@@ -244,6 +287,7 @@ def triangle_counts(
     )
 
 
+@_iterative
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -252,7 +296,6 @@ def pagerank(
     iterations: int = 6,
     damping: float = 0.85,
     stats: dict | None = None,
-    materialize_every: int = 8,
     seeds: DataFrame | None = None,
     seed_col: str = "node",
 ) -> DataFrame:
@@ -280,69 +323,33 @@ def pagerank(
     Each iteration is one equi-join on src (rank side is node-scale,
     far smaller than edges) + one map-side-combinable groupBy(dst).
     No collect anywhere — N comes from a count on the checkpointed
-    node table.
+    node table. EAGER: the last round is materialized when called and
+    returned as the one checkpoint kept; every other checkpoint it made
+    is released.
     """
+    if iterations < 1:
+        raise ValueError("pagerank: iterations must be at least 1")
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
-    # AQE wraps checkpointed plans in AdaptiveSparkPlanExec, whose
-    # outputPartitioning reads as Unknown at LogicalRDD capture — which
-    # silently re-inserts a full edge-relation Exchange+Sort into EVERY
-    # iteration (measured: the whole win below evaporates). Plan the
-    # entire computation with AQE off: all relations here are either
-    # checkpoint-partitioned or node-scale, the hub-skewed transpose
-    # shuffle is tamed by map-side combine (not by AQE, which doesn't
-    # split skewed aggregations anyway).
-    with aqe_off(edges.sparkSession):
-        return _pagerank_inner(
-            edges, src, dst, w, iterations, damping, stats,
-            materialize_every, seeds, seed_col,
-        )
-
-
-def _pagerank_inner(
-    edges, src, dst, w, iterations, damping, stats, materialize_every,
-    seeds=None, seed_col="node",
-) -> DataFrame:
-    e = (
+    e = _cut(
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"), w.alias("_w"))
         .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
-        .localCheckpoint()
     )
-    # size the per-iteration shuffles to the materialized edge count
-    # (cached-checkpoint scan; see _iter_shuffle_partitions)
-    spark = e.sparkSession
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_iter_shuffle_partitions(spark, e.count())),
-    )
-    nodes = (
-        e.select(F.col("_s").alias("node"))
-        .union(e.select("_d"))
-        .distinct()
-        .repartition("node")
-        .sortWithinPartitions("node")
-        # lazy: the count() below materializes it in the same job
-        .localCheckpoint(eager=False)
-    )
+    nodes = _laid_out(e.select(F.col("_s").alias("node")).union(e.select("_d")), "node")
     n = nodes.count()
     if n == 0:
+        _release(e)
         return nodes.withColumn("pagerank", F.lit(0.0))
     # pre-normalize: each edge carries its share of the source's out-mass,
-    # so the per-iteration join never recomputes out-degrees
+    # so the per-iteration join never recomputes out-degrees. Laid out by
+    # the join key like _laid_out, without the dedup: parallel edges each
+    # carry their own share. Lazy: iteration 1 materializes it once inside
+    # the first (pipelined) action.
     outd = e.groupBy("_s").agg(F.sum("_w").alias("_wout"))
-    # Lay the edge relation out for the iterative join ONCE:
-    # Dataset.localCheckpoint preserves the physical plan's output
-    # partitioning AND ordering in the LogicalRDD, so checkpointing
-    # after repartition+sortWithinPartitions on the join key means
-    # every iteration's sort-merge join reads this side with zero
-    # exchange and zero sort — only the node-scale rank side moves.
-    # (Same idea as bucketing, without a table.)
     norm = (
         e.join(outd, "_s")
         .select("_s", "_d", (F.col("_w") / F.col("_wout")).alias("_share"))
         .repartition("_s")
         .sortWithinPartitions("_s")
-        # lazy: iteration 1 materializes it once inside the final
-        # (pipelined) action — eager was a separate barrier job
         .localCheckpoint(eager=False)
     )
     if seeds is None:
@@ -360,6 +367,7 @@ def _pagerank_inner(
         )
         k = marked.filter(F.col("_is") == 1).count()
         if k == 0:
+            _release(e, nodes, norm)
             raise ValueError("pagerank: no seed node appears in the graph")
         join_base = marked.select(
             "node",
@@ -368,7 +376,8 @@ def _pagerank_inner(
         ).localCheckpoint()
         tele = F.lit(1.0 - damping) * F.col("_p")
         ranks = join_base.select("node", F.col("_p").alias("pagerank"))
-    for it in range(iterations):
+    chain = []
+    for it in range(1, iterations + 1):
         contrib = (
             norm.join(ranks.withColumnRenamed("node", "_s"), "_s")
             .groupBy(F.col("_d").alias("node"))
@@ -388,13 +397,16 @@ def _pagerank_inner(
                 step._jdf.queryExecution().executedPlan().toString()
             )
         # lazy checkpoint: marks the lineage cut but defers
-        # materialization, so a block of up to ``materialize_every``
-        # iterations pipelines as ONE Spark action instead of one
-        # barrier job per round. The periodic eager count bounds the
-        # un-materialized plan depth for long runs.
-        ranks = step.localCheckpoint(eager=False)
-        if (it + 1) % materialize_every == 0:
-            ranks.count()
+        # materialization, so a block of shuffle-joined rounds pipelines
+        # as ONE Spark action (a broadcast rank side is still built by a
+        # job of its own when the round is planned); the last round is
+        # eager, so the result is materialized and the chain behind it
+        # can go
+        ranks = step.localCheckpoint(
+            eager=it == iterations or it % _PR_MATERIALIZE_EVERY == 0
+        )
+        chain.append(ranks)
+    _release(e, nodes, norm, join_base, *chain[:-1])
     if stats is not None:
         stats["n_nodes"] = n
     return ranks
@@ -422,6 +434,7 @@ def degree_stats(
     )
 
 
+@_iterative
 def random_walks(
     edges: DataFrame,
     *,
@@ -447,31 +460,21 @@ def random_walks(
     out ONCE by the join key under AQE-off and localCheckpointed; each
     step is one frontier-sized equi-join + one map-side-combinable
     argmin aggregation (min of a (hash, dst) struct — no window), with
-    the frontier checkpointed per step so plans stay flat.
+    the frontier checkpointed per step so plans stay flat. EAGER: the
+    walk table is materialized when called and returned as the one
+    checkpoint kept; every other checkpoint it made is released.
     """
-    with aqe_off(edges.sparkSession):
-        return _random_walks_inner(edges, n_walks, walk_len, src, dst, salt)
-
-
-def _random_walks_inner(edges, n_walks, walk_len, src, dst, salt) -> DataFrame:
-    e = (
+    cut = _cut(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .repartition("a")
-        .dropDuplicates(["a", "b"])
-        .sortWithinPartitions("a")
-        .localCheckpoint()
     )
+    e = _laid_out(cut, "a")
     starts = e.select(F.col("a").alias("start")).distinct()
     frontier = starts.select(
         "start",
         F.explode(F.sequence(F.lit(0), F.lit(int(n_walks) - 1))).alias("walk_id"),
-    ).select("start", "walk_id", F.col("start").alias("cur")).localCheckpoint()
-    rows = [
-        frontier.select(
-            "start", "walk_id", F.lit(0).alias("step"), F.col("cur").alias("node")
-        )
-    ]
+    ).select("start", "walk_id", F.col("start").alias("cur")).localCheckpoint(eager=False)
+    frontiers = [frontier]
     for t in range(1, int(walk_len) + 1):
         key = F.md5(
             F.concat_ws(
@@ -483,7 +486,7 @@ def _random_walks_inner(edges, n_walks, walk_len, src, dst, salt) -> DataFrame:
                 F.col("b").cast("string"),
             )
         )
-        nxt = (
+        frontier = (
             frontier.withColumnRenamed("cur", "a")
             .join(e, "a")
             .select("start", "walk_id", key.alias("_h"), "b")
@@ -492,16 +495,12 @@ def _random_walks_inner(edges, n_walks, walk_len, src, dst, salt) -> DataFrame:
             .select("start", "walk_id", F.col("_m.b").alias("cur"))
             .localCheckpoint(eager=False)
         )
-        rows.append(
-            nxt.select(
-                "start", "walk_id", F.lit(t).alias("step"),
-                F.col("cur").alias("node"),
-            )
-        )
-        frontier = nxt
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
+        frontiers.append(frontier)
+    out = functools.reduce(DataFrame.unionByName, (
+        f.select("start", "walk_id", F.lit(t).alias("step"), F.col("cur").alias("node"))
+        for t, f in enumerate(frontiers)
+    )).localCheckpoint()
+    _release(cut, e, *frontiers)
     return out
 
 
@@ -656,6 +655,7 @@ def materialize_nodes_edges(
     return nodes, edges
 
 
+@_iterative
 def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
@@ -680,51 +680,44 @@ def bfs_distances(
     the edge side — the only per-hop shuffles move frontier-sized data
     (the expansion's distinct and the visited anti-join). Frontier-level
     sets never concentrate on one reducer beyond the graph's own degree
-    skew, which the distinct's partial aggregation absorbs. Eager like
-    connected_components (it iterates when called).
+    skew, which the distinct's partial aggregation absorbs. EAGER like
+    connected_components (it iterates when called): it returns one
+    materialized checkpoint and releases every other one it made.
     """
-    with aqe_off(edges.sparkSession):
-        return _bfs_inner(edges, seeds, src, dst, node_col, max_hops, stats)
-
-
-def _bfs_inner(edges, seeds, src, dst, node_col, max_hops, stats) -> DataFrame:
-    # one exchange, not two: partitioning by `a` alone already satisfies
-    # the (a, b) dedup's clustered distribution, so the dropDuplicates
-    # runs in-partition after the layout repartition (distinct-then-
-    # repartition would shuffle the edge relation twice)
-    e = (
+    cut = _cut(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .repartition("a")
-        .dropDuplicates(["a", "b"])
-        .sortWithinPartitions("a")
-        .localCheckpoint()
     )
+    e = _laid_out(cut, "a")
     dist = (
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
         .select("node", F.lit(0).alias("dist"))
         .localCheckpoint()
     )
-    frontier = dist.select("node")
     hops = 0
     for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.withColumnRenamed("node", "a")
+        # the frontier is last hop's rows of dist; one job per hop
+        # materializes the grown dist and counts its new rows
+        new = (
+            dist.filter(F.col("dist") == hop - 1)
+            .select(F.col("node").alias("a"))
             .join(e, "a")
             .select(F.col("b").alias("node"))
             .distinct()
-        )
-        new = (
-            nxt.join(dist.select("node"), "node", "left_anti")
+            .join(dist.select("node"), "node", "left_anti")
             .select("node", F.lit(hop).alias("dist"))
-            .localCheckpoint()
         )
-        if not new.take(1):
+        seen = Observation()
+        grown = dist.union(new).observe(
+            seen, F.count_if(F.col("dist") == hop).alias("new")
+        ).localCheckpoint()
+        if seen.get["new"] == 0:
+            _release(grown)
             break
-        hops = hop
-        dist = dist.union(new).localCheckpoint()
-        frontier = new.select("node")
+        _release(dist)
+        dist, hops = grown, hop
+    _release(cut, e)
     if stats is not None:
         stats["hops"] = hops
     return dist

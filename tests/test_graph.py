@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -49,7 +50,7 @@ def test_cc_string_ids(spark):
 def test_pointer_jumping_convergence(spark):
     """The O(log diameter) claim, gated on the pathological shape: a
     10,000-node path graph (diameter 9,999 — plain min-propagation would
-    need ~10k rounds, i.e. hit max_iter and return garbage) must converge
+    need ~10k rounds, i.e. hit the round cap and return garbage) must converge
     in ≤ log2(n) + c rounds thanks to the per-iteration pointer jump, and
     every node must land in the single exact component."""
     import math
@@ -61,7 +62,7 @@ def test_pointer_jumping_convergence(spark):
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
     stats = {}
-    comp = connected_components(edges, max_iter=50, stats=stats)
+    comp = connected_components(edges, stats=stats)
     assert stats["converged"]
     # propagation + one jump per round: label reach more than doubles per
     # iteration; +4 covers the startup round and the final no-change
@@ -70,6 +71,34 @@ def test_pointer_jumping_convergence(spark):
     rows = comp.groupBy("component").count().collect()
     assert len(rows) == 1
     assert rows[0]["component"] == 0 and rows[0]["count"] == n
+
+
+@pytest.mark.parametrize("op", ["cc", "pagerank", "ppr", "bfs", "walks"])
+def test_graph_ops_release_superseded_checkpoints(spark, op):
+    """Each iterative operator returns one materialized checkpoint and
+    releases every other checkpoint it made (``DataFrame.unpersist`` does
+    not release a localCheckpoint), and the kept result still reads the
+    same rows once its predecessors are gone."""
+    from medacy_spark.operators import graph
+
+    edges = spark.range(60).select(
+        F.col("id").alias("src"), ((F.col("id") * 7 + 3) % 60).alias("dst")
+    )
+    seeds = spark.range(2).select(F.col("id").alias("node"))
+    run = {
+        "cc": lambda: graph.connected_components(edges),
+        "pagerank": lambda: graph.pagerank(edges, iterations=3),
+        "ppr": lambda: graph.pagerank(edges, iterations=3, seeds=seeds),
+        "bfs": lambda: graph.bfs_distances(edges, seeds, max_hops=3),
+        "walks": lambda: graph.random_walks(edges, n_walks=2, walk_len=3),
+    }[op]
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    out = run()
+    rows = sorted(map(tuple, out.collect()))
+    assert rows
+    assert persisted().size() - before <= 1
+    assert sorted(map(tuple, out.collect())) == rows
 
 
 # ---------------------------------------------------------------- pagerank

@@ -11,9 +11,10 @@ Each test pins the *internal* invariant an r8 change relies on
   per row before the pair join must be BIT-identical to the inline
   ``cosine()`` fold (same fold arithmetic, just hoisted).
 - graph._iter_shuffle_partitions: iteration shuffles are sized from
-  the materialized edge count (floor 2, capped at the configured
-  ``spark.sql.shuffle.partitions``), and ``session.aqe_off`` restores
-  both ``adaptive.enabled`` and ``shuffle.partitions`` on exit.
+  the row count of the operator's eager lineage cut (floor 2, capped at
+  the configured ``spark.sql.shuffle.partitions``), and
+  ``session.aqe_off`` restores both ``adaptive.enabled`` and
+  ``shuffle.partitions`` on exit.
 - lm.train_ngram_lm: the token-array lineage cut must not change the
   trained count tables.
 """
@@ -230,30 +231,54 @@ def test_iter_shuffle_partitions_sizing(spark):
         spark.conf.set("spark.sql.shuffle.partitions", part_before)
 
 
-@pytest.mark.parametrize("op", ["cc", "pagerank"])
+@pytest.mark.parametrize("op", ["cc", "pagerank", "bfs", "walks"])
 def test_graph_ops_restore_session_confs(spark, op):
-    """The AQE-off blocks now also mutate spark.sql.shuffle.partitions
-    per iteration — both confs must come back on exit."""
+    """The iterative graph operators run AQE-off and size
+    spark.sql.shuffle.partitions from their input — both confs must
+    come back on exit."""
+    from medacy_spark.operators import graph
+
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5)], "src long, dst long"
     )
+    seeds = spark.createDataFrame([(1,)], "node long")
+    run = {
+        "cc": lambda: graph.connected_components(edges),
+        "pagerank": lambda: graph.pagerank(edges, iterations=2),
+        "bfs": lambda: graph.bfs_distances(edges, seeds),
+        "walks": lambda: graph.random_walks(edges),
+    }[op]
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
     part_before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "13")
     try:
-        if op == "cc":
-            from medacy_spark.operators.graph import connected_components
-
-            connected_components(edges).collect()
-        else:
-            from medacy_spark.operators.graph import pagerank
-
-            pagerank(edges, iterations=2).collect()
+        run().collect()
         assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
         assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         spark.conf.set("spark.sql.shuffle.partitions", part_before)
+
+
+def test_cc_job_count_is_pinned(spark):
+    """The eager lineage cut counts the edges that size CC's shuffles
+    inside its own job (``observe``): no separate count job. On this
+    fixed graph CC runs the cut, then one job per round (the
+    changed-label check that materializes the round's checkpoints)."""
+    from medacy_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5)], "src long, dst long"
+    )
+    sc = spark.sparkContext
+    stats = {}
+    sc.setJobGroup("cc_jobs", "cc_jobs")
+    try:
+        connected_components(edges, stats=stats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats["iterations"] == 2
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_jobs")) == 3
 
 
 def test_aqe_off_restores_conf_on_exception_and_unsets_unset_keys(spark):
