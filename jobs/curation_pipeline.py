@@ -1,7 +1,7 @@
 """Production entry point: the full webtext training-data curation job.
 
   spark-submit --py-files dist/medacy_spark.zip --driver-memory 16g \\
-      --conf "spark.driver.defaultJavaOptions=-XX:+UseParallelGC \\
+      --conf "spark.driver.defaultJavaOptions=-XX:+UseParallelGC -XX:NewRatio=3 \\
           -XX:Tier4InvocationThreshold=40000 -XX:Tier4MinInvocationThreshold=4800 \\
           -XX:Tier4CompileThreshold=120000 -XX:Tier4BackEdgeThreshold=320000" \\
       jobs/curation_pipeline.py \\

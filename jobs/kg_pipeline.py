@@ -1,7 +1,7 @@
 """Production entry point: the full KG-construction job, shippable via
 
   spark-submit --py-files dist/medacy_spark.zip --driver-memory 16g \\
-      --conf "spark.driver.defaultJavaOptions=-XX:+UseParallelGC \\
+      --conf "spark.driver.defaultJavaOptions=-XX:+UseParallelGC -XX:NewRatio=3 \\
           -XX:Tier4InvocationThreshold=40000 -XX:Tier4MinInvocationThreshold=4800 \\
           -XX:Tier4CompileThreshold=120000 -XX:Tier4BackEdgeThreshold=320000" \\
       jobs/kg_pipeline.py \\
@@ -11,9 +11,10 @@
 (`tools/package.sh` builds the zip.) spark-submit starts the driver JVM
 before `get_spark` runs, so the JVM-launch settings `get_spark` would
 apply are passed on the command line: the driver memory and
-`medacy_spark.session.DRIVER_JAVA_OPTIONS` (the parallel collector and
-HotSpot's C2 compile thresholds; keep the `--conf` value equal to that
-constant).
+`medacy_spark.session.DRIVER_JAVA_OPTIONS` (the parallel collector, its
+young-generation bound and HotSpot's C2 compile thresholds; the `--conf`
+value must equal that constant, which `tests/test_determinism.py`
+checks).
 
 Stages (all resumable per logical partition via the metrics lineage table):
   documents → extract text (byte-identical) → tokenize → detect mentions →

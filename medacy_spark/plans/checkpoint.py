@@ -25,9 +25,12 @@ regardless of N:
   job 1  filter(partition_id ∈ todo) → stage_fn → one write.partitionBy;
          `DataFrame.observe` counts rows per partition_id on the batch
          input (rows_in) and on the frame being written (rows_out)
-  job 2  append the batch's metrics rows (a driver-side local table)
+  job 2  append the batch's metrics rows (a driver-side local table) as
+         one parquet file
 
-plus one metrics read per stage to find the completed partitions.
+plus one metrics read per stage to find the completed partitions. The
+returned sink is read with the written frame's schema, so reading it
+back runs no schema-inference job.
 `batch_size` trades commit granularity against scan count: a crash loses
 at most one batch of work (ceil(todo/batch) source scans per stage).
 With a real prunable partition column (`partition_col`, an Iceberg
@@ -42,6 +45,7 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from medacy_spark.session import local_table
 
@@ -134,6 +138,7 @@ def run_stage_checkpointed(
     done = set(completed_partitions(spark, metrics_path, run_id, stage))
     todo = [p for p in range(n_partitions) if p not in done]
     step = max(1, len(todo)) if batch_size is None else max(1, batch_size)
+    written = None  # schema of the frames written by this call
     for i in range(0, len(todo), step):
         batch = todo[i : i + step]
         t0 = time.monotonic()
@@ -154,6 +159,7 @@ def run_stage_checkpointed(
             .partitionBy("partition_id")
             .parquet(output_path)
         )
+        written = out.schema
         rows_in = _observed(seen_in)
         if rows_in is None:
             # the optimizer removed stage_fn's read of its input (e.g. a
@@ -165,7 +171,16 @@ def run_stage_checkpointed(
             (run_id, pid, stage, rows_in[str(pid)], rows_out[str(pid)], wall_ms, "ok")
             for pid in batch
         ]
-        local_table(spark, metrics_rows, METRICS_SCHEMA).write.mode("append").parquet(
-            metrics_path
-        )
-    return spark.read.parquet(output_path)
+        # one file per batch: every later completed_partitions lists and
+        # opens each metrics file
+        local_table(spark, metrics_rows, METRICS_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(metrics_path)
+    if written is None:  # no batch ran: infer the schema from the sink
+        return spark.read.parquet(output_path)
+    # the sink's layout: the data columns, then the partition column
+    schema = StructType(
+        [f for f in written.fields if f.name != "partition_id"]
+        + [StructField("partition_id", IntegerType())]
+    )
+    return spark.read.schema(schema).parquet(output_path)

@@ -17,11 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-# The parallel (throughput) collector, and HotSpot's tier-4 (C2) compile
-# thresholds at 8x the JDK 17 defaults (5000/600/15000/40000); get_spark's
-# docstring says why.
+# The parallel (throughput) collector with its young generation at a quarter
+# of the heap, and HotSpot's tier-4 (C2) compile thresholds at 8x the JDK 17
+# defaults (5000/600/15000/40000); get_spark's docstring says why.
 DRIVER_JAVA_OPTIONS = (
-    "-XX:+UseParallelGC"
+    "-XX:+UseParallelGC -XX:NewRatio=3"
     " -XX:Tier4InvocationThreshold=40000 -XX:Tier4MinInvocationThreshold=4800"
     " -XX:Tier4CompileThreshold=120000 -XX:Tier4BackEdgeThreshold=320000"
 )
@@ -87,6 +87,29 @@ def get_spark(
     (3.7 GB on that 6g heap after five batches, G1 3.0-3.8 GB). SerialGC
     reached the same short-run peaks but collects on one thread, so its
     pauses grow with the live set at the 16g default heap; it is not used.
+
+    The young generation is a quarter of the heap (``-XX:NewRatio=3``)
+    instead of ParallelGC's third: 768 MB of a 3g heap, 1.5 GB of the
+    tests' 6g, 4 GB of the 16g default. Every workload allocates through
+    all of eden within seconds and so keeps it resident, so the young
+    generation's maximum sets much of the peak. It is a ratio, so it
+    scales with the heap. Over ten benchmark pairs (3g heap) the
+    contract-suite pass's peak RSS fell 1760 -> 1589 MB and a 10k-doc KG
+    batch's 2073 -> 1834 MB, with CPU flat (young collections per run
+    16 -> 20-21 and 20-25 -> 23-28; the young generation committed at
+    exit 953 -> 682 MB). A smaller young generation cuts short-run peaks
+    further (NewRatio 4/5/8/11:
+    1423/1338/1231/1213 MB on the pass, medians of three runs, against
+    1752 at the default) but fails the long run: at 100k docs per batch
+    on a 6g heap with no ``-Xms`` (four steady batches per run) the
+    default ran 0.42 full collections per batch (13 runs, 0-3 per run),
+    a quarter 0.55 (5 runs, 1-3 per run), and 4/5/8 ran 0.85/1.04/1.60:
+    more survivors overflow into the old generation, and ParallelGC's
+    ``Ergonomics`` full collections follow. At 8 the mentions stage's
+    executor + GC CPU also rose 2.88 -> 3.57 s (medians), outside the
+    run-to-run spread; at a quarter it read 3.14 s, inside it (per-run
+    medians 2.70-3.50 s at the default). A quarter also lowers the long
+    run's peak Pss: 3169-3786 MB at the default, 2856-3059 MB here.
 
     The options go through ``spark.driver.defaultJavaOptions``, which the
     launcher puts before ``spark.driver.extraJavaOptions``, so a caller

@@ -101,22 +101,47 @@ def test_no_row_level_python_udfs():
 
 def test_driver_jvm_runs_raised_c2_thresholds(spark):
     """The test session passes its own ``extra_conf``, yet its JVM was
-    launched with get_spark's collector and tier-4 (C2) thresholds: they
-    go through ``spark.driver.defaultJavaOptions``, which a caller's conf
-    does not replace."""
+    launched with get_spark's collector, young-generation bound and tier-4
+    (C2) thresholds: they go through ``spark.driver.defaultJavaOptions``,
+    which a caller's conf does not replace."""
     from medacy_spark.session import DRIVER_JAVA_OPTIONS
 
     mgmt = spark._jvm.java.lang.management.ManagementFactory
     args = list(mgmt.getRuntimeMXBean().getInputArguments())
     opts = DRIVER_JAVA_OPTIONS.split()
     assert [o.split("=")[0] for o in opts] == [
-        "-XX:+UseParallelGC",
+        "-XX:+UseParallelGC", "-XX:NewRatio",
         "-XX:Tier4InvocationThreshold", "-XX:Tier4MinInvocationThreshold",
         "-XX:Tier4CompileThreshold", "-XX:Tier4BackEdgeThreshold",
     ]
     assert [o for o in opts if o not in args] == [], args
     collectors = sorted(b.getName() for b in mgmt.getGarbageCollectorMXBeans())
     assert collectors == ["PS MarkSweep", "PS Scavenge"], collectors
+    # the young generation (eden + two survivor spaces) is bounded at
+    # 1/(NewRatio + 1) of the heap (young + old generation)
+    ratio = int(opts[1].split("=")[1])
+    pool_max = {p.getName(): p.getUsage().getMax() for p in mgmt.getMemoryPoolMXBeans()}
+    young = pool_max["PS Eden Space"] + 2 * pool_max["PS Survivor Space"]
+    heap = young + pool_max["PS Old Gen"]
+    assert young <= heap / (ratio + 1) + heap / 100, (young, heap)
+
+
+def test_jobs_submit_lines_carry_driver_java_options():
+    """Under ``spark-submit`` get_spark does not launch the JVM, so each
+    job's documented submit line passes ``session.DRIVER_JAVA_OPTIONS``
+    itself; it must carry exactly the constant."""
+    import ast
+    import pathlib
+    import re
+
+    from medacy_spark.session import DRIVER_JAVA_OPTIONS
+
+    jobs = pathlib.Path(__file__).resolve().parents[1] / "jobs"
+    for name in ("kg_pipeline.py", "curation_pipeline.py"):
+        doc = ast.get_docstring(ast.parse((jobs / name).read_text()))
+        (value,) = re.findall(r'--conf "spark\.driver\.defaultJavaOptions=([^"]*)"', doc)
+        # join the shell's continuation lines
+        assert " ".join(re.sub(r"\\\n", " ", value).split()) == DRIVER_JAVA_OPTIONS, name
 
 
 def test_lookup_tables_are_local_relations(spark):

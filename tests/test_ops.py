@@ -112,10 +112,34 @@ def test_checkpoint_scan_count_is_partition_independent(spark, doc_ids, tmp_path
 
     j8 = jobs_for(8, "ckpt8")
     j32 = jobs_for(32, "ckpt32")
-    # one write job (rows_in/rows_out are observed inside it), one metrics
-    # append, one footer read of the returned sink — no recount jobs
-    assert j8 == 3
+    # one write job (rows_in/rows_out are observed inside it) and one
+    # metrics append — no recount jobs, and the returned sink is read with
+    # the written schema, so no schema-inference job either
+    assert j8 == 2
     assert j32 == j8  # O(1) jobs per stage, independent of partition count
+
+
+def test_checkpoint_writes_one_metrics_file_per_batch(spark, doc_ids, tmp_path):
+    """Each stage-batch appends its metrics rows as one parquet file, and
+    the sink read back with the written schema equals an inferring read."""
+    from medacy_spark.plans.checkpoint import run_stage_checkpointed
+
+    docs = clinical_documents(doc_ids.filter("doc_id < 100")).select("doc_id", "url", "text")
+    met = tmp_path / "metrics"
+    for stage, fn in {
+        "len": lambda df: df.select("url", F.length("text").alias("n")),
+        "words": lambda df: df.select("url", F.split("text", " ").alias("w"), "partition_id"),
+    }.items():
+        out = str(tmp_path / stage)
+        res = run_stage_checkpointed(
+            spark, docs, fn, run_id="rf", stage=stage, key_col="url",
+            n_partitions=8, output_path=out, metrics_path=str(met), batch_size=3,
+        )
+        inferred = spark.read.parquet(out)
+        assert res.schema == inferred.schema, stage
+        assert sorted(res.collect()) == sorted(inferred.collect()), stage
+    # two stages of three batches each (8 partitions, 3 per batch)
+    assert len(list(met.glob("part-*.parquet"))) == 6
 
 
 def test_checkpoint_metrics_match_recount(spark, doc_ids, tmp_path):
