@@ -14,7 +14,8 @@ apply are passed on the command line: the driver memory and
 `medacy_spark.session.DRIVER_JAVA_OPTIONS` (the parallel collector, its
 young-generation bound and HotSpot's C2 compile thresholds; the `--conf`
 value must equal that constant, which `tests/test_determinism.py`
-checks).
+checks). Tungsten's page size is a SparkContext setting, so `get_spark`
+applies it under spark-submit too and the line needs no `--conf` for it.
 
 Stages (all resumable per logical partition via the metrics lineage table):
   documents → extract text (byte-identical) → tokenize → detect mentions →

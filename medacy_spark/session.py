@@ -51,6 +51,37 @@ def get_spark(
     session generates code, so it holds only if the JVM's first session
     comes from here.
 
+    Tungsten's execution memory comes in 1 MB pages
+    (``spark.buffer.pageSize``). Spark's default is nextPow2(execution
+    pool / cores / 16): 16 MB on a 3g heap with 4 cores and on a 6g heap
+    with 8, 32 MB on 6g with 4. Every sorter, ``BytesToBytesMap`` and
+    aggregate hash map allocates one whole page as an on-heap ``long[]``
+    on its first insert, even for a task of a dozen rows. At this engine's task
+    sizes (KB to a few MB) those pages live for the whole task, outlast
+    young collections and are promoted, so they held the old generation's
+    peak. 1 MB is the floor of Spark's own formula, not a value tuned to
+    the test data: a record larger than a page still gets a page of its
+    own size, and the 8192-entry page table still lets a task address
+    8 GB. No plan changes. Over ten benchmark pairs (3g heap) a 10k-doc KG
+    batch's peak RSS fell 1935 -> 1453 MB and the contract-suite pass's
+    1613 -> 1371 MB, lower in every pair, with CPU inside the run-to-run
+    spread; the old generation used at exit fell 686 -> 203 MB and
+    356 -> 127 MB, and young collections per run fell slightly (full ones
+    stay at the five metaspace ones). 2 MB and 4 MB pages (a sweep of
+    three or four runs each, not paired) gave about 1495 MB on the KG
+    batch, so the gain is in leaving 16 MB, not in the last halving. At 100k docs
+    per batch on a 6g heap with 4 cores, where the default is 32 MB
+    (``tools/steady_state.py``, six runs per side of five batches after a
+    10k-doc warm-up), full collections per batch fell 0.97 -> 0.47, the
+    old generation used after the last batch 532-664 -> 296-450 MB and
+    the peak Pss 2726-3026 -> 2370-2509 MB; each stage's executor + GC CPU
+    stayed inside the run-to-run spread (pooled medians: mentions
+    3.05 -> 3.11 s, triples 2.38 -> 2.42 s, link 1.85 -> 1.93 s, against
+    per-run medians of 3.01-3.77, 2.32-2.67 and 1.76-2.02 s at 32 MB), and
+    every batch wrote the same edges.
+    It is a SparkContext setting, not a JVM-launch one, so it applies
+    whenever this call creates the context, under ``spark-submit`` too.
+
     The driver JVM runs HotSpot's tier-4 (C2) compile thresholds at 8x
     the JDK 17 defaults (``DRIVER_JAVA_OPTIONS``), so C2 compiles only
     really hot code. Neither benchmark workload is bound by data work:
@@ -141,6 +172,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.buffer.pageSize", "1m")
         .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
     )
     # shuffle through tmpfs when available: local-mode shuffles serialize on

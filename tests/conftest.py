@@ -13,7 +13,10 @@ def spark():
     # a bounded heap: measured under G1, which expands toward its maximum
     # before collecting, the one long-lived test JVM outgrew a machine with
     # 16 GB of memory at the 16g default and was killed mid-suite (14.9 GB);
-    # not re-measured at 16g on the parallel collector
+    # not re-measured at 16g on the parallel collector. At 6g on the
+    # parallel collector with 1 MB Tungsten pages, the suite's process tree
+    # peaked at 5.20 GB of summed Pss, the test JVM at 3.01 GB (16 MB
+    # pages: 5.66 and 3.54 GB; 4-core host, sampled every 2 s)
     s = get_spark(
         app_name="medacy_spark_tests", cores=8, shuffle_partitions=8,
         extra_conf={"spark.driver.memory": "6g"},

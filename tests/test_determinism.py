@@ -69,8 +69,8 @@ def test_no_row_level_python_udfs():
     data is a pickled PythonRDD whose every scan forks Python workers, so
     the engine builds them only through ``session.local_table`` (Arrow).
     AQE is switched off only through ``session.aqe_off``, which restores
-    the session conf. Driver JVM options are set only in
-    ``session.get_spark``."""
+    the session conf. Driver JVM options and the Tungsten page size are set
+    only in ``session.get_spark``."""
     import pathlib
     import re
 
@@ -79,12 +79,15 @@ def test_no_row_level_python_udfs():
     local_tables = []
     aqe_flips = []
     jvm_opts = []
+    page_size = []
     for p in root.rglob("*.py"):
         src = p.read_text()
         if "spark.sql.adaptive.enabled" in src:
             aqe_flips.append(p.relative_to(root).as_posix())
         if re.search(r"spark\.driver\.(defaultJavaOptions|extraJavaOptions)", src):
             jvm_opts.append(p.relative_to(root).as_posix())
+        if "spark.buffer.pageSize" in src:
+            page_size.append(p.relative_to(root).as_posix())
         # F.udf( / @udf( — row-at-a-time; pandas_udf is the allowed form
         for m in re.finditer(r"(?<!pandas_)\budf\s*\(", src):
             frag = src[max(0, m.start() - 20):m.start()]
@@ -97,6 +100,7 @@ def test_no_row_level_python_udfs():
     assert local_tables == [("session.py", ["local_table"])], local_tables
     assert aqe_flips == ["session.py"], aqe_flips
     assert jvm_opts == ["session.py"], jvm_opts
+    assert page_size == ["session.py"], page_size
 
 
 def test_driver_jvm_runs_raised_c2_thresholds(spark):
@@ -124,6 +128,43 @@ def test_driver_jvm_runs_raised_c2_thresholds(spark):
     young = pool_max["PS Eden Space"] + 2 * pool_max["PS Survivor Space"]
     heap = young + pool_max["PS Old Gen"]
     assert young <= heap / (ratio + 1) + heap / 100, (young, heap)
+
+
+def _plan_nodes(plan):
+    """Every node of an executed plan, through AQE's final plan and the
+    plans inside its query stages."""
+    yield plan
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        children = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        children = [plan.plan()]
+    else:
+        seq = plan.children()
+        children = [seq.apply(i) for i in range(seq.size())]
+    for c in children:
+        yield from _plan_nodes(c)
+
+
+def test_tungsten_pages_are_1mb(spark):
+    """get_spark sets Tungsten's page size to 1 MB, so a sort or hash
+    aggregate over a small task allocates 1 MB on its first insert, not
+    the 16 MB page Spark derives from the test session's heap and cores.
+    In a 100-row, 7-group group-by the final aggregate (one task after AQE
+    coalesces the shuffle) takes a page: 17,039,360 bytes of peak memory
+    at 16 MB pages. The partial one keeps its groups in the generated
+    fast hash map, so it reports only its tasks' pointer arrays."""
+    env = spark._jvm.org.apache.spark.SparkEnv.get()
+    assert env.memoryManager().pageSizeBytes() == 1 << 20
+    df = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+    assert len(df.collect()) == 7
+    peaks = {
+        n.simpleString(25): n.metrics().get("peakMemory").get().value()
+        for n in _plan_nodes(df._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "HashAggregateExec"
+    }
+    assert len(peaks) == 2, peaks  # partial and final
+    assert all(0 < v <= 2 << 20 for v in peaks.values()), peaks
 
 
 def test_jobs_submit_lines_carry_driver_java_options():
