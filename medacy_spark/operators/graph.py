@@ -17,18 +17,29 @@ random_walks, bfs_distances) share one frame: they plan AQE-off
 own job counts the rows that size every iteration shuffle (:func:`_cut`),
 lay the relation each round re-reads out once by its join key
 (:func:`_laid_out`), and localCheckpoint per iteration so plans don't
-snowball. They are EAGER: each returns one materialized checkpoint and
-releases every other checkpoint it made (:func:`_release`).
+snowball. connected_components and pagerank first ask :func:`_driver_side`
+whether the cut is small enough to iterate on the driver (at most
+``_DRIVER_MAX_EDGES`` rows, the measured crossover, and within
+``spark.sql.autoBroadcastJoinThreshold``); when it is, they collect it
+once and run the same rounds in numpy on the driver instead of one Spark
+job chain per round (McSherry et al., "Scalability! But at what COST?",
+HotOS 2015: at this size a single-threaded loop wins). They are EAGER:
+each returns either one materialized checkpoint, releasing every other
+checkpoint it made (:func:`_release`), or a local relation, having
+released its cut.
 """
 
 from __future__ import annotations
 
 import functools
 
+import numpy as np
+import pyarrow as pa
+from pyspark.errors import ArithmeticException
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from medacy_spark.session import aqe_off
+from medacy_spark.session import aqe_off, local_table
 
 # Scale-adaptive shuffle sizing for the iterative operators: they run
 # AQE-off (checkpoint-partitioning preservation), so AQE's small-partition
@@ -66,7 +77,9 @@ def _iterative(op):
     round's join re-adds an Exchange+Sort of the laid-out relation;
     AQE-off it keeps its ``hashpartitioning``. Hub skew is tamed by
     map-side combine, not by AQE (which doesn't split skewed
-    aggregations anyway)."""
+    aggregations anyway). Inside the frame, an operator with a driver
+    side hands its cut to :func:`_driver_side`, which picks where the
+    rounds run."""
 
     @functools.wraps(op)
     def framed(edges: DataFrame, *args, **kwargs) -> DataFrame:
@@ -76,19 +89,19 @@ def _iterative(op):
     return framed
 
 
-def _cut(df: DataFrame) -> DataFrame:
-    """Eager lineage cut of an operator's input. Its one job also counts
-    the rows (``observe``), and the count sizes every later shuffle of the
-    operator. Observing a lazy checkpoint reads 0 rows, so the cut is
-    eager."""
+def _cut(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager lineage cut of an operator's input, and its row count. Its one
+    job also counts the rows (``observe``), and the count sizes every later
+    shuffle of the operator. Observing a lazy checkpoint reads 0 rows, so
+    the cut is eager."""
     seen = Observation()
     cut = df.observe(seen, F.count(F.lit(1)).alias("rows")).localCheckpoint()
+    rows = seen.get["rows"]
     spark = cut.sparkSession
     spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_iter_shuffle_partitions(spark, seen.get["rows"])),
+        "spark.sql.shuffle.partitions", str(_iter_shuffle_partitions(spark, rows))
     )
-    return cut
+    return cut, rows
 
 
 def _laid_out(df: DataFrame, key: str) -> DataFrame:
@@ -114,6 +127,59 @@ def _release(*checkpoints: DataFrame) -> None:
         cp._jdf.queryExecution().logical().rdd().unpersist(True)
 
 
+# the largest edge cut whose rounds run on the driver: the largest size at
+# which numpy beat the Spark rounds in every measured run of both operators,
+# counting the call and two downstream queries over its result (4-core
+# host, string ids). The driver side runs the rounds faster at every size
+# (CC 9-16x, PageRank 2-5x), but a local relation of a million rows costs
+# each later query about 1.5 s more than a checkpoint does, and for
+# PageRank that erases the lead between 600k and 1M edges;
+# connected_components won at every size measured.
+_DRIVER_MAX_EDGES = 600_000
+# id types whose order and equality numpy reproduces exactly: integers, and
+# strings under the default binary collation (Python orders str by code
+# point, which is the order of their UTF-8 bytes, Spark's string order)
+_DRIVER_ID_TYPES = frozenset({"tinyint", "smallint", "int", "bigint", "string"})
+
+
+def _driver_side(cut: DataFrame, rows: int, *ids: str) -> pa.Table | None:
+    """The cut as an Arrow table, released from Spark, when the operator's
+    rounds should run on the driver; None when they should run in Spark.
+
+    The rounds run on the driver when the cut has at most
+    ``_DRIVER_MAX_EDGES`` rows, the measured crossover, and the driver may
+    hold it: its size is at most ``spark.sql.autoBroadcastJoinThreshold``,
+    the bound under which Spark itself collects a relation onto the
+    driver to broadcast it (-1 switches both off). The cut is sized as
+    Spark sizes the local relation it would become, its counted rows
+    times the schema's estimated row width: the optimizer's estimate of a
+    checkpoint is its origin plan's, which a join multiplies out (7.9e27
+    bytes for a 604-edge KG) and a Python-list input leaves at
+    ``Long.MaxValue``. The id columns must also share one type from
+    ``_DRIVER_ID_TYPES``. This is the one place the choice is made."""
+    conf = cut.sparkSession._jsparkSession.sessionState().conf()
+    # EstimationUtils.getSizePerRow: 8 bytes of row overhead + the columns'
+    # default sizes (LocalRelation.computeStats multiplies it by the rows)
+    size = rows * (8 + cut._jdf.schema().defaultSize())
+    types = {cut.schema[c].dataType.simpleString() for c in ids}
+    if not (rows <= _DRIVER_MAX_EDGES and size <= conf.autoBroadcastJoinThreshold()
+            and len(types) == 1 and types <= _DRIVER_ID_TYPES):
+        return None
+    table = cut.toArrow()
+    _release(cut)
+    return table
+
+
+def _indexed(
+    table: pa.Table, a: str, b: str
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The sorted distinct ids of ``table``'s two id columns, and each
+    column as indices into them: index order is the ids' Spark order."""
+    ids_a, ids_b = table.column(a).to_numpy(), table.column(b).to_numpy()
+    ids, inv = np.unique(np.concatenate([ids_a, ids_b]), return_inverse=True)
+    return ids, inv[: len(ids_a)], inv[len(ids_a):]
+
+
 @_iterative
 def connected_components(
     edges: DataFrame,
@@ -130,23 +196,31 @@ def connected_components(
     path graph (gate-tested on a 10k-node chain in
     test_graph.test_pointer_jumping_convergence), far fewer on clustered
     linking graphs (alias clusters are near-cliques). Each iteration: one
-    shuffle (groupBy node) + one broadcast-eligible join.
+    shuffle (groupBy node) + one broadcast-eligible join. When the edge
+    cut is small enough (:func:`_driver_side`) the same
+    rounds run in numpy on the driver (:func:`_cc_on_driver`): two jobs
+    per call, the cut and its collect, where the Spark rounds run one
+    job per round after the cut.
 
     ``stats`` (optional dict) gets ``iterations`` (rounds run, including
     the final no-change confirmation round) and ``converged`` written
-    into it — the observability hook the convergence gate reads. EAGER:
-    it iterates to convergence when called and returns one materialized
-    checkpoint, releasing every other one it made.
+    into it — the observability hook the convergence gate reads; both
+    sides write the same values. EAGER: it iterates to convergence when
+    called and returns one materialized checkpoint, releasing every other
+    one it made, or, on the driver side, a local relation.
     """
     # cut the input lineage BEFORE branching: the undirected union reads
     # `edges` twice and every propagation iteration re-reads the edge set —
     # without this an expensive upstream (e.g. minhash candidate generation
     # over 100k docs) is recomputed once per branch per iteration
     # (measured: 25 s → ~1 s for CC over a 502-edge candidate graph)
-    cut = _cut(
+    cut, rows = _cut(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
     )
+    edge_table = _driver_side(cut, rows, "a", "b")
+    if edge_table is not None:
+        return _cc_on_driver(cut.sparkSession, edge_table, stats)
     # the undirected relation, laid out by the label-carrying end
     und = _laid_out(
         cut.union(cut.select(F.col("b").alias("a"), F.col("a").alias("b"))), "b"
@@ -217,6 +291,36 @@ def connected_components(
         stats["iterations"] = n_iter
         stats["converged"] = converged
     return labels
+
+
+def _cc_on_driver(spark, edge_table: pa.Table, stats: dict | None) -> DataFrame:
+    """connected_components' rounds over an edge table on the driver: the
+    same initial labels, min-neighbour propagation and pointer jump per
+    round, round cap and ``stats``, over indices of the sorted ids."""
+    ids, a, b = _indexed(edge_table, "a", "b")
+    u, v = np.concatenate([a, b]), np.concatenate([b, a])  # undirected
+    labels = np.arange(len(ids))
+    np.minimum.at(labels, u, v)
+    n_iter = 0
+    converged = False
+    for _ in range(_CC_MAX_ROUNDS):
+        n_iter += 1
+        stepped = labels.copy()
+        np.minimum.at(stepped, u, labels[v])
+        new_labels = np.minimum(stepped, stepped[stepped])
+        changed = (new_labels != labels).any()
+        labels = new_labels
+        if not changed:
+            converged = True
+            break
+    if stats is not None:
+        stats["iterations"] = n_iter
+        stats["converged"] = converged
+    id_type = edge_table.schema.field("a").type
+    return local_table(spark, pa.table({
+        "node": pa.array(ids, type=id_type),
+        "component": pa.array(ids[labels], type=id_type),
+    }))
 
 
 def triangle_counts(
@@ -304,7 +408,8 @@ def pagerank(
     ``seeds`` switches to PERSONALIZED (topic-sensitive) PageRank: the
     teleport mass (1-d) restarts only at the seed nodes (p_i =
     1/|seeds∩nodes|), init = the teleport vector — "entities related to
-    THESE" ranking. Raises if no seed appears in the graph. The uniform
+    THESE" ranking. Seeds are cast to the graph's id type. Raises if no
+    seed appears in the graph. The uniform
     path is byte-identical to before the option existed (oracle-pinned).
 
     Fixed-iteration power method — the KG analytics companion to
@@ -317,23 +422,41 @@ def pagerank(
     and keeps the per-iteration plan to exactly one join + one
     aggregation, replayable closed-form in SQL.
 
-    Scale shape: the edge relation (with its out-degree normalization
-    pre-joined) is localCheckpointed ONCE and re-read per iteration;
-    ranks are checkpointed per iteration so plans don't snowball.
-    Each iteration is one equi-join on src (rank side is node-scale,
-    far smaller than edges) + one map-side-combinable groupBy(dst).
-    No collect anywhere — N comes from a count on the checkpointed
-    node table. EAGER: the last round is materialized when called and
-    returned as the one checkpoint kept; every other checkpoint it made
-    is released.
+    Scale shape: when the edge cut is small enough
+    (:func:`_driver_side`), the rounds run in numpy on the driver
+    (:func:`_pagerank_on_driver`) and the ranks come back as a local
+    relation: two jobs per call, the cut and its collect (plus one to
+    collect ``seeds``). Above it, the edge relation (with its out-degree
+    normalization pre-joined) is localCheckpointed ONCE and re-read per
+    iteration; ranks are checkpointed per iteration so plans don't
+    snowball. Each iteration is one equi-join on src (rank side is
+    node-scale, far smaller than edges) + one map-side-combinable
+    groupBy(dst). No collect on that side — N comes from a count on the
+    checkpointed node table. A lazy round checkpoint whose plan holds a
+    broadcast join still runs the broadcast's build job when it is
+    created, so the Spark rounds run more jobs than rounds. EAGER: the
+    last round is materialized when called and returned as the one
+    checkpoint kept; every other checkpoint it made is released.
     """
     if iterations < 1:
         raise ValueError("pagerank: iterations must be at least 1")
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
-    e = _cut(
+    e, rows = _cut(
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"), w.alias("_w"))
         .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
     )
+    if seeds is not None:
+        # both sides compare seeds with ids by plain equality in the ids'
+        # type: a bigint seed 1 is the string id '1', never '01' (which an
+        # implicit join coercion to bigint would also match)
+        seeds = seeds.select(
+            F.col(seed_col).cast(e.schema["_s"].dataType).alias("node")
+        ).distinct()
+    edge_table = _driver_side(e, rows, "_s", "_d")
+    if edge_table is not None:
+        return _pagerank_on_driver(
+            e.sparkSession, edge_table, iterations, damping, stats, seeds
+        )
     nodes = _laid_out(e.select(F.col("_s").alias("node")).union(e.select("_d")), "node")
     n = nodes.count()
     if n == 0:
@@ -361,9 +484,8 @@ def pagerank(
         # the seed set — (1-d)·p_i with p_i = 1/|seeds∩nodes|. Broadcast
         # seed marker preserves the node layout; init = the teleport
         # vector itself (the standard PPR start).
-        sd = seeds.select(F.col(seed_col).alias("node")).distinct()
         marked = nodes.join(
-            F.broadcast(sd.withColumn("_is", F.lit(1))), "node", "left"
+            F.broadcast(seeds.withColumn("_is", F.lit(1))), "node", "left"
         )
         k = marked.filter(F.col("_is") == 1).count()
         if k == 0:
@@ -410,6 +532,61 @@ def pagerank(
     if stats is not None:
         stats["n_nodes"] = n
     return ranks
+
+
+def _pagerank_on_driver(
+    spark,
+    edge_table: pa.Table,
+    iterations: int,
+    damping: float,
+    stats: dict | None,
+    seeds: DataFrame | None,
+) -> DataFrame:
+    """pagerank's rounds over an edge table on the driver, with the Spark
+    rounds' arithmetic: ``share = w / wout`` first, then rank × share
+    summed per destination; a null weight contributes nothing, a zero
+    out-weight raises ``ArithmeticException`` as Spark's ANSI division
+    does (without ANSI its share is null and contributes nothing), dangling
+    mass is not redistributed. ``seeds`` are pagerank's, distinct and
+    cast to the ids' type."""
+    ids, s, d = _indexed(edge_table, "_s", "_d")
+    n = len(ids)
+    id_type = edge_table.schema.field("_s").type
+    if n == 0:
+        return local_table(spark, pa.table({
+            "node": pa.array(ids, type=id_type), "pagerank": np.zeros(0),
+        }))
+    if seeds is None:
+        tele = (1.0 - damping) / n
+        ranks = np.full(n, 1.0 / n)
+    else:
+        is_seed = np.isin(ids, seeds.toArrow().column(0).drop_null().to_numpy())
+        k = int(is_seed.sum())
+        if k == 0:
+            raise ValueError("pagerank: no seed node appears in the graph")
+        p = np.where(is_seed, 1.0 / k, 0.0)
+        tele = (1.0 - damping) * p
+        ranks = p
+    # the Spark rounds divide in their first round, after the seed count
+    w = edge_table.column("_w")
+    valid = w.is_valid().to_numpy()
+    s, d, w = s[valid], d[valid], w.fill_null(0.0).to_numpy()[valid]
+    wout = np.bincount(s, weights=w, minlength=n)[s]
+    zero = wout == 0
+    if zero.any():
+        if spark.conf.get("spark.sql.ansi.enabled") == "true":
+            raise ArithmeticException(
+                "[DIVIDE_BY_ZERO] pagerank: a source's out-weights sum to 0"
+            )
+        s, d, w, wout = s[~zero], d[~zero], w[~zero], wout[~zero]
+    share = w / wout
+    for _ in range(iterations):
+        ranks = tele + damping * np.bincount(d, weights=ranks[s] * share, minlength=n)
+    if stats is not None:
+        stats["n_nodes"] = n
+    return local_table(spark, pa.table({
+        "node": pa.array(ids, type=id_type), "pagerank": ranks,
+    }))
 
 
 def degree_stats(
@@ -464,7 +641,7 @@ def random_walks(
     walk table is materialized when called and returned as the one
     checkpoint kept; every other checkpoint it made is released.
     """
-    cut = _cut(
+    cut, _ = _cut(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
     )
@@ -684,7 +861,7 @@ def bfs_distances(
     connected_components (it iterates when called): it returns one
     materialized checkpoint and releases every other one it made.
     """
-    cut = _cut(
+    cut, _ = _cut(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
     )

@@ -14,7 +14,7 @@ from contextlib import contextmanager
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructType
 
 # The parallel (throughput) collector with its young generation at a quarter
@@ -188,24 +188,34 @@ def get_spark(
     return spark
 
 
-def local_table(spark: SparkSession, rows: Sequence[Sequence], schema: str | StructType) -> DataFrame:
+def local_table(
+    spark: SparkSession,
+    rows: Sequence[Sequence] | pa.Table,
+    schema: str | StructType | None = None,
+) -> DataFrame:
     """A small driver-side table (dictionaries, lookup dims, metrics rows,
-    empty bootstraps) as an Arrow-backed ``LocalRelation``.
+    empty bootstraps, graph results computed on the driver) as an
+    Arrow-backed ``LocalRelation``.
 
     A Python list handed to ``spark.createDataFrame`` ships as a pickled
     PythonRDD, so every job that scans the table forks Python workers to
     unpickle a few dozen rows. An Arrow table is handed to the JVM once
     and planned as a ``LocalTableScan``: no Python worker, and the
     optimizer can fold filters/projections over it at plan time.
-    ``rows`` are tuples in ``schema`` column order.
+    ``rows`` are tuples in ``schema`` column order, or a
+    ``pyarrow.Table``, which carries its own schema (``schema`` is then
+    omitted).
     """
-    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
-    arrow_schema = to_arrow_schema(struct)
-    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
-    table = pa.table(
-        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
-        schema=arrow_schema,
-    )
+    if isinstance(rows, pa.Table):
+        table, struct = rows, from_arrow_schema(rows.schema)
+    else:
+        struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+        arrow_schema = to_arrow_schema(struct)
+        columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+        table = pa.table(
+            [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+            schema=arrow_schema,
+        )
     return spark.createDataFrame(table, struct)
 
 

@@ -48,3 +48,23 @@ def _session_conf_unchanged(request):
 @pytest.fixture(scope="session")
 def doc_ids(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").select("doc_id").cache()
+
+
+@pytest.fixture
+def graph_sides(spark):
+    """Both sides of ``graph._driver_side``'s choice, for tests of
+    connected_components and pagerank. Iterating yields "driver" with the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` (rounds in numpy
+    for a graph within ``graph._DRIVER_MAX_EDGES``) and then "spark" with
+    it at -1 (the Spark rounds); the session's value is restored after
+    the test."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+
+    def sides():
+        for side, value in (("driver", old), ("spark", "-1")):
+            spark.conf.set(key, value)
+            yield side
+
+    yield sides()
+    spark.conf.set(key, old)

@@ -10,6 +10,13 @@ from pyspark.sql import functions as F
 from medacy_spark.operators.graph import connected_components
 
 
+def _side(out):
+    """Where an operator's rounds ran: its result is a local relation when
+    they ran on the driver, a checkpoint when they ran in Spark."""
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    return "driver" if plan.startswith("LocalRelation") else "spark"
+
+
 def _union_find(edges):
     parent = {}
 
@@ -27,7 +34,7 @@ def _union_find(edges):
     return {n: find(n) for n in parent}
 
 
-def test_cc_matches_union_find(spark):
+def test_cc_matches_union_find(spark, graph_sides):
     # deterministic pseudo-random sparse graph incl. a long path (worst case
     # for propagation count) and several cliques
     edges = [(i, i + 1) for i in range(0, 40)]                      # path
@@ -35,19 +42,25 @@ def test_cc_matches_union_find(spark):
     edges += [(200, 200)]                                           # self-loop
     edges += [(i * 13 % 300 + 300, i * 29 % 300 + 300) for i in range(50)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
     want = _union_find(edges)
-    assert got == want
+    for side in graph_sides:
+        out = connected_components(df)
+        assert _side(out) == side
+        got = {r["node"]: r["component"] for r in out.collect()}
+        assert got == want, side
 
 
-def test_cc_string_ids(spark):
+def test_cc_string_ids(spark, graph_sides):
     edges = [("a", "b"), ("b", "c"), ("x", "y")]
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+    for side in graph_sides:
+        out = connected_components(df)
+        assert _side(out) == side
+        got = {r["node"]: r["component"] for r in out.collect()}
+        assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}, side
 
 
-def test_pointer_jumping_convergence(spark):
+def test_pointer_jumping_convergence(spark, graph_sides):
     """The O(log diameter) claim, gated on the pathological shape: a
     10,000-node path graph (diameter 9,999 — plain min-propagation would
     need ~10k rounds, i.e. hit the round cap and return garbage) must converge
@@ -61,24 +74,28 @@ def test_pointer_jumping_convergence(spark):
     edges = spark.range(n - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
-    stats = {}
-    comp = connected_components(edges, stats=stats)
-    assert stats["converged"]
-    # propagation + one jump per round: label reach more than doubles per
-    # iteration; +4 covers the startup round and the final no-change
-    # confirmation round
-    assert stats["iterations"] <= math.floor(math.log2(n)) + 4
-    rows = comp.groupBy("component").count().collect()
-    assert len(rows) == 1
-    assert rows[0]["component"] == 0 and rows[0]["count"] == n
+    for side in graph_sides:
+        stats = {}
+        comp = connected_components(edges, stats=stats)
+        assert _side(comp) == side
+        assert stats["converged"]
+        # propagation + one jump per round: label reach more than doubles
+        # per iteration; +4 covers the startup round and the final
+        # no-change confirmation round
+        assert stats["iterations"] <= math.floor(math.log2(n)) + 4
+        rows = comp.groupBy("component").count().collect()
+        assert len(rows) == 1
+        assert rows[0]["component"] == 0 and rows[0]["count"] == n
 
 
 @pytest.mark.parametrize("op", ["cc", "pagerank", "ppr", "bfs", "walks"])
-def test_graph_ops_release_superseded_checkpoints(spark, op):
+def test_graph_ops_release_superseded_checkpoints(spark, graph_sides, op):
     """Each iterative operator returns one materialized checkpoint and
     releases every other checkpoint it made (``DataFrame.unpersist`` does
     not release a localCheckpoint), and the kept result still reads the
-    same rows once its predecessors are gone."""
+    same rows once its predecessors are gone. On the driver side
+    (connected_components and pagerank) it returns a local relation and
+    keeps no checkpoint at all."""
     from medacy_spark.operators import graph
 
     edges = spark.range(60).select(
@@ -93,12 +110,14 @@ def test_graph_ops_release_superseded_checkpoints(spark, op):
         "walks": lambda: graph.random_walks(edges, n_walks=2, walk_len=3),
     }[op]
     persisted = spark.sparkContext._jsc.getPersistentRDDs
-    before = persisted().size()
-    out = run()
-    rows = sorted(map(tuple, out.collect()))
-    assert rows
-    assert persisted().size() - before <= 1
-    assert sorted(map(tuple, out.collect())) == rows
+    for side in graph_sides:
+        before = persisted().size()
+        out = run()
+        assert _side(out) == (side if op in ("cc", "pagerank", "ppr") else "spark")
+        rows = sorted(map(tuple, out.collect()))
+        assert rows
+        assert persisted().size() - before <= (0 if _side(out) == "driver" else 1)
+        assert sorted(map(tuple, out.collect())) == rows
 
 
 # ---------------------------------------------------------------- pagerank
@@ -121,7 +140,7 @@ def _pagerank_ref(edges, iters, d=0.85):
     return r
 
 
-def test_pagerank_matches_reference(spark):
+def test_pagerank_matches_reference(spark, graph_sides):
     from medacy_spark.operators.graph import pagerank
 
     # weighted digraph with a dangling node (3), a hub (0), and a cycle
@@ -130,38 +149,168 @@ def test_pagerank_matches_reference(spark):
         (4, 5, 3.0), (5, 6, 1.0), (6, 4, 1.0), (2, 5, 1.0),
     ]
     df = spark.createDataFrame(edges, "src long, dst long, w double")
-    got = {
-        r["node"]: r["pagerank"]
-        for r in pagerank(df, weight="w", iterations=8).collect()
-    }
     want = _pagerank_ref(edges, iters=8)
-    assert set(got) == set(want)
-    for v in want:
-        assert abs(got[v] - want[v]) < 1e-12, (v, got[v], want[v])
-    # ranking sanity: the hub (three in-edges) beats a pure source
-    assert got[0] > got[1]
-    # dangling node keeps its floor + inflow; total mass undershoots 1
-    assert sum(got.values()) < 1.0 + 1e-9
+    for side in graph_sides:
+        out = pagerank(df, weight="w", iterations=8)
+        assert _side(out) == side
+        got = {r["node"]: r["pagerank"] for r in out.collect()}
+        assert set(got) == set(want)
+        for v in want:
+            assert abs(got[v] - want[v]) < 1e-12, (side, v, got[v], want[v])
+        # ranking sanity: the hub (three in-edges) beats a pure source
+        assert got[0] > got[1]
+        # dangling node keeps its floor + inflow; total mass undershoots 1
+        assert sum(got.values()) < 1.0 + 1e-9
 
 
-def test_pagerank_unweighted_star(spark):
+def test_pagerank_unweighted_star(spark, graph_sides):
     from medacy_spark.operators.graph import pagerank
 
     # star: every leaf points at the center; center rank strictly largest,
     # all leaves identical by symmetry
     edges = [(i, 0) for i in range(1, 9)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["pagerank"] for r in pagerank(df, iterations=5).collect()}
-    leaf_vals = {round(got[i], 15) for i in range(1, 9)}
-    assert len(leaf_vals) == 1
-    assert got[0] > max(got[i] for i in range(1, 9))
+    for side in graph_sides:
+        out = pagerank(df, iterations=5)
+        assert _side(out) == side
+        got = {r["node"]: r["pagerank"] for r in out.collect()}
+        leaf_vals = {round(got[i], 15) for i in range(1, 9)}
+        assert len(leaf_vals) == 1, side
+        assert got[0] > max(got[i] for i in range(1, 9)), side
 
 
-def test_pagerank_empty(spark):
+def test_pagerank_empty(spark, graph_sides):
     from medacy_spark.operators.graph import pagerank
 
     df = spark.createDataFrame([], "src long, dst long")
-    assert pagerank(df).count() == 0
+    for side in graph_sides:
+        out = pagerank(df)
+        assert _side(out) == side
+        assert out.count() == 0
+
+
+def test_driver_side_takes_graphs_up_to_the_edge_cap(spark, monkeypatch):
+    """At the session's broadcast threshold, a cut of at most
+    ``_DRIVER_MAX_EDGES`` rows (nulls filtered) runs its rounds on the
+    driver and a larger one runs the Spark rounds."""
+    from medacy_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 3)
+    at_cap = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5), (6, None)], "src long, dst long"
+    )
+    over_cap = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5), (5, 6)], "src long, dst long"
+    )
+    assert _side(graph.connected_components(at_cap)) == "driver"
+    assert _side(graph.pagerank(at_cap)) == "driver"
+    assert _side(graph.connected_components(over_cap)) == "spark"
+    assert _side(graph.pagerank(over_cap)) == "spark"
+
+
+# name: (edge rows, edge schema, weight column, seeds as (rows, schema);
+# None seeds the first edge's source)
+_PARITY_CASES = {
+    "empty": ([], "src long, dst long, w double", "w", None),
+    "null_endpoints": (
+        [(1, None, 1.0), (None, 2, 1.0), (1, 3, 2.0), (3, 4, None), (3, 1, 1.0)],
+        "src long, dst long, w double", "w", None,
+    ),
+    "self_loop": (
+        [(5, 5, 1.0), (5, 6, 3.0), (6, 7, 1.0)], "src long, dst long, w double", "w", None
+    ),
+    "string_ids": (
+        [("b", "a", 1.0), ("é", "z", 2.0), ("Z", "é", 1.0), ("ab", "a", 1.0)],
+        "src string, dst string, w double", "w", None,
+    ),
+    "unweighted": (
+        [(i, 0) for i in range(1, 9)] + [(0, 3), (0, 9)], "src long, dst long", None, None
+    ),
+    # two communities bridged by one edge, personalized on community a
+    "two_communities": (
+        [(f"a{i}", f"a{(i + 1) % 4}") for i in range(4)]
+        + [(f"b{i}", f"b{(i + 1) % 4}") for i in range(4)]
+        + [("a0", "b0")],
+        "src string, dst string", None, ([("a0",), ("a1",)], "node string"),
+    ),
+    # bigint seeds against string ids: both sides cast the seeds to the
+    # ids' type, so seed 1 is '1' and not '01'
+    "mixed_seed_types": (
+        [("01", "2"), ("1", "2"), ("2", "10"), ("10", "01")],
+        "src string, dst string", None, ([(1,), (7,)], "node bigint"),
+    ),
+    # a source whose out-weights sum to 0: pagerank raises on both sides
+    "zero_weight": (
+        [(1, 2, 0.0), (2, 1, 1.0), (2, 3, 1.0)], "src long, dst long, w double", "w", None
+    ),
+}
+
+
+def _outcome(run):
+    """An operator call's result, or the kind of error it raised."""
+    from pyspark.errors import ArithmeticException
+
+    try:
+        return run()
+    except ArithmeticException:
+        return "ArithmeticException"
+    except ValueError as exc:
+        return f"ValueError: {exc}"
+
+
+@pytest.mark.parametrize("case", sorted(_PARITY_CASES))
+def test_driver_and_spark_rounds_agree(spark, graph_sides, case):
+    """The two sides of graph._driver_side give the same rows and stats:
+    connected_components exactly, pagerank (uniform and seeded) up to
+    float summation order; seeds that miss the graph and zero
+    out-weights raise the same error on both."""
+    from medacy_spark.operators.graph import pagerank
+
+    rows, schema, weight, seed_spec = _PARITY_CASES[case]
+    df = spark.createDataFrame(rows, schema)
+    id_type = df.schema["src"].dataType.simpleString()
+    seeds = spark.createDataFrame(
+        *(seed_spec or ([(r[0],) for r in rows[:1]], f"node {id_type}"))
+    )
+    missing = spark.createDataFrame(
+        [(None,), ("zz" if id_type == "string" else 999,)], f"node {id_type}"
+    )
+    results = {}
+    for side in graph_sides:
+        cc_stats, pr_stats = {}, {}
+        outs = [
+            _outcome(lambda: connected_components(df, stats=cc_stats)),
+            _outcome(lambda: pagerank(df, weight=weight, iterations=4, stats=pr_stats)),
+        ]
+        if rows:
+            outs.append(_outcome(
+                lambda: pagerank(df, weight=weight, iterations=4, seeds=seeds)
+            ))
+            outs.append(_outcome(lambda: pagerank(df, weight=weight, seeds=missing)))
+            assert outs[-1] == "ValueError: pagerank: no seed node appears in the graph"
+        assert {_side(o) for o in outs if not isinstance(o, str)} == {side}
+        pr_stats.pop("last_iter_plan", None)
+        results[side] = (
+            [o if isinstance(o, str) else sorted(map(tuple, o.collect())) for o in outs],
+            cc_stats, pr_stats,
+        )
+    (d_rows, *d_stats), (s_rows, *s_stats) = results["driver"], results["spark"]
+    assert d_stats == s_stats
+    assert d_rows[0] == s_rows[0]
+    for d_ranks, s_ranks in zip(d_rows[1:], s_rows[1:]):
+        if isinstance(d_ranks, str) or isinstance(s_ranks, str):
+            assert d_ranks == s_ranks
+            continue
+        assert [n for n, _ in d_ranks] == [n for n, _ in s_ranks]
+        for (_, d), (_, s) in zip(d_ranks, s_ranks):
+            assert abs(d - s) < 1e-15, (case, d, s)
+    if case == "zero_weight":
+        # the seeds that miss the graph are counted before any division
+        assert d_rows[1:3] == ["ArithmeticException"] * 2
+    if case == "mixed_seed_types":
+        # '1' has no in-edges: it keeps the whole teleport mass, 1 - d,
+        # only if '01' did not match seed 1
+        assert dict(d_rows[2])["1"] == pytest.approx(0.15)
 
 
 def test_degree_stats(spark):

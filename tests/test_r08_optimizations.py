@@ -235,7 +235,8 @@ def test_iter_shuffle_partitions_sizing(spark):
 def test_graph_ops_restore_session_confs(spark, op):
     """The iterative graph operators run AQE-off and size
     spark.sql.shuffle.partitions from their input — both confs must
-    come back on exit."""
+    come back on exit. The broadcast threshold is -1, so cc and pagerank
+    run their Spark rounds."""
     from medacy_spark.operators import graph
 
     edges = spark.createDataFrame(
@@ -250,7 +251,9 @@ def test_graph_ops_restore_session_confs(spark, op):
     }[op]
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
     part_before = spark.conf.get("spark.sql.shuffle.partitions")
+    bcast_before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.shuffle.partitions", "13")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         run().collect()
         assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
@@ -258,27 +261,51 @@ def test_graph_ops_restore_session_confs(spark, op):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         spark.conf.set("spark.sql.shuffle.partitions", part_before)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast_before)
 
 
-def test_cc_job_count_is_pinned(spark):
+def test_cc_job_count_is_pinned(spark, graph_sides):
     """The eager lineage cut counts the edges that size CC's shuffles
-    inside its own job (``observe``): no separate count job. On this
-    fixed graph CC runs the cut, then one job per round (the
-    changed-label check that materializes the round's checkpoints)."""
+    inside its own job (``observe``): no separate count job. With the
+    Spark rounds, CC on this fixed graph runs the cut, then one job per
+    round (the changed-label check that materializes the round's
+    checkpoints), and keeps one checkpoint. With the rounds on the
+    driver it runs the cut and its Arrow collect, whatever the round
+    count (a 10k-node chain takes 13), and keeps no persisted RDD."""
     from medacy_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5)], "src long, dst long"
     )
+    chain = spark.range(9_999).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    inputs = {"edges": edges, "chain": chain}
     sc = spark.sparkContext
-    stats = {}
-    sc.setJobGroup("cc_jobs", "cc_jobs")
-    try:
-        connected_components(edges, stats=stats)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert stats["iterations"] == 2
-    assert len(sc.statusTracker().getJobIdsForGroup("cc_jobs")) == 3
+    persisted = sc._jsc.getPersistentRDDs
+    # (side, input, rounds, jobs, persisted RDDs kept)
+    want = [
+        ("driver", "edges", 2, 2, 0),
+        ("driver", "chain", 13, 2, 0),
+        ("spark", "edges", 2, 3, 1),
+    ]
+    got = []
+    for side in graph_sides:
+        for name in [w[1] for w in want if w[0] == side]:
+            group = f"cc_jobs_{side}_{name}"
+            before = persisted().size()
+            stats = {}
+            sc.setJobGroup(group, group)
+            try:
+                connected_components(inputs[name], stats=stats)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            got.append((
+                side, name, stats["iterations"],
+                len(sc.statusTracker().getJobIdsForGroup(group)),
+                persisted().size() - before,
+            ))
+    assert got == want
 
 
 def test_aqe_off_restores_conf_on_exception_and_unsets_unset_keys(spark):

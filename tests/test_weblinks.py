@@ -81,22 +81,24 @@ def test_host_link_graph_rollup(spark):
     }
 
 
-def test_host_pagerank_sink_ranks_highest(spark):
+def test_host_pagerank_sink_ranks_highest(spark, graph_sides):
     # star: 4 hosts all link to hub.com; hub links back to one
     rows = [
         (f"https://s{i}.com/p", '<a href="https://hub.com/x">h</a>') for i in range(4)
     ] + [("https://hub.com/p", '<a href="https://s0.com/b">b</a>')]
-    pr = {
-        r["node"]: r["pagerank"]
-        for r in host_pagerank(extract_links(_pages(spark, rows))).collect()
-    }
-    assert len(pr) == 5
-    # the hub↔s0 pair holds the link mass (the graph is near-bipartite so
-    # finite power iterations leave it on one side of the 2-cycle — which
-    # side depends on the parity of `iterations`, so assert the pair)
-    assert set(sorted(pr, key=pr.get)[-2:]) == {"hub.com", "s0.com"}
-    assert pr["s0.com"] > pr["s1.com"]  # gets hub's backlink mass
-    assert abs(pr["s1.com"] - pr["s3.com"]) < 1e-12
+    for side in graph_sides:
+        pr = {
+            r["node"]: r["pagerank"]
+            for r in host_pagerank(extract_links(_pages(spark, rows))).collect()
+        }
+        assert len(pr) == 5, side
+        # the hub↔s0 pair holds the link mass (the graph is near-bipartite
+        # so finite power iterations leave it on one side of the 2-cycle —
+        # which side depends on the parity of `iterations`, so assert the
+        # pair)
+        assert set(sorted(pr, key=pr.get)[-2:]) == {"hub.com", "s0.com"}, side
+        assert pr["s0.com"] > pr["s1.com"], side  # gets hub's backlink mass
+        assert abs(pr["s1.com"] - pr["s3.com"]) < 1e-12, side
 
 
 def test_extraction_plan_is_shuffle_free(spark):
@@ -284,7 +286,7 @@ def test_canonical_url_idempotent(spark):
     assert all(a == b for a, b in got), [x for x in got if x[0] != x[1]]
 
 
-def test_personalized_pagerank(spark):
+def test_personalized_pagerank(spark, graph_sides):
     import pytest
 
     from medacy_spark.operators.graph import pagerank
@@ -297,14 +299,15 @@ def test_personalized_pagerank(spark):
     )
     e = spark.createDataFrame(edges, ["src", "dst"])
     seeds = spark.createDataFrame([("a0",), ("a1",)], ["node"])
-    pr = {r["node"]: r["pagerank"] for r in pagerank(e, seeds=seeds).collect()}
-    # mass concentrates in the seed community (the a0→b0 bridge leaks
-    # half of a0's out-mass every round, so the split is ~60/40, not
-    # extreme — assert the direction plus per-node dominance)
-    a_mass = sum(v for k, v in pr.items() if k.startswith("a"))
-    b_mass = sum(v for k, v in pr.items() if k.startswith("b"))
-    assert a_mass > 1.4 * b_mass
-    assert pr["a0"] > pr["b2"]  # non-seed far nodes get no teleport floor
-    assert min(pr[f"a{i}"] for i in range(4)) > 0
-    with pytest.raises(ValueError):
-        pagerank(e, seeds=spark.createDataFrame([("zz",)], ["node"]))
+    for side in graph_sides:
+        pr = {r["node"]: r["pagerank"] for r in pagerank(e, seeds=seeds).collect()}
+        # mass concentrates in the seed community (the a0→b0 bridge leaks
+        # half of a0's out-mass every round, so the split is ~60/40, not
+        # extreme — assert the direction plus per-node dominance)
+        a_mass = sum(v for k, v in pr.items() if k.startswith("a"))
+        b_mass = sum(v for k, v in pr.items() if k.startswith("b"))
+        assert a_mass > 1.4 * b_mass, side
+        assert pr["a0"] > pr["b2"], side  # non-seed far nodes get no teleport floor
+        assert min(pr[f"a{i}"] for i in range(4)) > 0, side
+        with pytest.raises(ValueError):
+            pagerank(e, seeds=spark.createDataFrame([("zz",)], ["node"]))
