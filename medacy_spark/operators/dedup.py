@@ -38,7 +38,8 @@ def perm_hash(s: Column, i: int, base_hash: str) -> Column:
     the permutation index), not a linear transform of one shared hash.
 
     Why not the cheaper linear family (hash once, then a_i*h + b_i mod
-    p)? Measured, twice, at tools/dedup_scale.py's 1M-doc corpus:
+    p)? Measured, twice, at the 1M-doc corpus of tools/dedup_scale.py
+    (deleted; last at a3140ec):
 
       * a = 2i+1 (tiny multipliers) nearly preserves base-hash ORDER, so
         two docs sharing one low-hash shingle agreed on many permutation
@@ -113,9 +114,10 @@ def _capped_band_pairs(
     partitioning and sort order preserved — the join plans ZERO
     additional exchanges. The previous shape (a separate count
     aggregation job before the join) cost a measured 33% at the 100k-doc
-    dedup benchmark (tools/guard_ab.py); this shape is at parity with
-    the unguarded plan. Hot switches are still logged eagerly — never
-    silent — via one cheap scan of the already-materialized checkpoint.
+    dedup benchmark (tools/guard_ab.py, last at a3140ec); this shape is
+    at parity with the unguarded plan. Hot switches are still logged
+    eagerly — never silent — via one cheap scan of the
+    already-materialized checkpoint.
     """
     import logging
 
@@ -627,7 +629,7 @@ def dedup_batch_against_state(
 
     Survivor sets are order-dependent BY DESIGN — every streaming dedup
     is (first writer wins). The pinned properties instead (gated in
-    test_streaming_windowed): (a) against an empty state this IS exactly
+    test_streaming_incremental): (a) against an empty state this IS exactly
     dedup_corpus(batch); (b) accepted docs are pairwise non-near-dup
     across ALL batches, because the state only ever holds survivors;
     (c) an identical batch sequence yields identical survivors,

@@ -133,12 +133,12 @@ def cooccurrence_pairs(
     position and segmentation is pure row-local arithmetic — no rank
     checkpoint/join/window; a FALSE promise fails loudly (an in-window
     contiguity assert), never silently mis-counts. Measured on 50k docs
-    + one planted 8M-token doc (tools/cooc_skew_ab.py, value-checksummed
-    across plans): dense path -47% wall vs unsegmented (-25% in an
-    earlier host state), general rank path +53% (its corpus-wide
-    machinery outweighs this straggler) — in a split-from-text pipeline
-    mega-doc hardening should ride the dense path; reserve the general
-    path for gappy positions under heavier skew."""
+    + one planted 8M-token doc (tools/cooc_skew_ab.py, last at a3140ec;
+    value-checksummed across plans): dense path -47% wall vs unsegmented
+    (-25% in an earlier host state), general rank path +53% (its
+    corpus-wide machinery outweighs this straggler) — in a split-from-text
+    pipeline mega-doc hardening should ride the dense path; reserve the
+    general path for gappy positions under heavier skew."""
     toks = tokens.select(
         *id_cols, order_col, _clean(word_col).alias("_w")
     ).filter(F.col("_w") != "")

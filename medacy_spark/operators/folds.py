@@ -1,4 +1,4 @@
-"""Stratified fold assignment + cross-validation aggregates (X4/J12/A5).
+"""Stratified fold assignment + per-fold train/test splits (X4/J12).
 
 Reproduces medacy's ``create_folds`` (medacy/model/model.py:23-66) exactly:
 
@@ -13,9 +13,6 @@ Reproduces medacy's ``create_folds`` (medacy/model/model.py:23-66) exactly:
 Equivalent closed form: order sequences by (alphabetically smallest label
 they contain, sequence index); fold = (global row_number - 1) mod k. That
 is a pure numbering computation — one range sort, no Python.
-
-Cross-fold stats (A5, model.py:429-441): per-(fold,label) metrics then
-mean/min/max per label.
 """
 
 from __future__ import annotations
@@ -56,16 +53,3 @@ def fold_split(data: DataFrame, folds: DataFrame, k: int, seq_col: str = "seq_id
     indices join (model.py:380-392)."""
     j = data.join(folds, seq_col)
     return j.filter(F.col("fold") != k).drop("fold"), j.filter(F.col("fold") == k).drop("fold")
-
-
-def cross_fold_stats(per_fold_metrics: DataFrame) -> DataFrame:
-    """A5: per-(fold, label) P/R/F1 rows -> per-label mean/min/max
-    (model.py:429-441)."""
-    aggs = []
-    for m in ("precision", "recall", "f1"):
-        aggs += [
-            F.avg(m).alias(f"avg_{m}"),
-            F.min(m).alias(f"min_{m}"),
-            F.max(m).alias(f"max_{m}"),
-        ]
-    return per_fold_metrics.groupBy("label").agg(*aggs).orderBy("label")

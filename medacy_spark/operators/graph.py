@@ -61,7 +61,7 @@ _PR_MATERIALIZE_EVERY = 8
 
 
 def _iter_shuffle_partitions(spark, n_rows: int) -> int:
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # floor of 2, not 1: a 1-partition hash partitioning normalizes to
     # SinglePartition at checkpoint capture and the preserved-layout
     # join re-inserts an Exchange per iteration (measured via the

@@ -26,7 +26,7 @@ def global_row_index(df: DataFrame, order_cols: Sequence[str], name: str) -> Dat
     same range boundaries.
     """
     cols = list(order_cols)
-    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     d = (
         df.repartitionByRange(n_parts, *cols)
         .sortWithinPartitions(*cols)

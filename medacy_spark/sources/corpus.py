@@ -1,23 +1,14 @@
 """Corpus sources/sinks.
 
-S1 (directory corpus scan, dataset.py:82-128) becomes table scans; the
-txt/ann/metamapped pairing is a full-outer equi-join on basename, with
-nulls encoding the reference's directory modes (txt-only = to-predict,
-ann-only = gold-only; dataset.py:44-53).
+S1 (directory corpus scan, dataset.py:82-128) reads a loose ``.txt``
+directory as one row per file; S4 writes predictions as a parquet table
+or as a reference-shaped directory of ``.ann`` files.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-DOCUMENTS_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-
-def read_documents(spark: SparkSession, path: str) -> DataFrame:
-    """Scan the documents table (parquet/Iceberg). Catalyst pushes filters
-    and prunes columns — e.g. a `text`-only pipeline never reads `html`."""
-    return spark.read.parquet(path)
 
 
 def read_text_dir(spark: SparkSession, path: str, glob: str = "*.txt") -> DataFrame:
@@ -28,14 +19,6 @@ def read_text_dir(spark: SparkSession, path: str, glob: str = "*.txt") -> DataFr
         F.regexp_extract(F.input_file_name(), r"([^/]+)\.[a-z]+$", 1).alias("file_name"),
         F.col("value").alias("text"),
     )
-
-
-def pair_corpus_files(txt: DataFrame, ann: DataFrame) -> DataFrame:
-    """J1: full-outer join on file_name; null txt/ann columns encode the
-    reference's directory modes (dataset.py:101-128)."""
-    t = txt.select("file_name", F.col("text").alias("txt"))
-    a = ann.select("file_name", F.col("text").alias("ann"))
-    return t.join(a, "file_name", "full_outer").orderBy("file_name")
 
 
 def write_mentions(mentions: DataFrame, path: str, mode: str = "overwrite") -> None:

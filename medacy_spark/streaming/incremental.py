@@ -86,7 +86,7 @@ def run_incremental_counts(
     Exactly-once per micro-batch: checkpointLocation tracks progress and
     the batch_id-keyed overwrite (`_write_batch`) makes a replayed batch
     rewrite rather than double-count; a rerun with no new input appends
-    nothing (both gated in test_streaming_windowed)."""
+    nothing (both gated in test_streaming_incremental)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         _write_batch(count_fn(batch_df), output_path, batch_id)
@@ -188,7 +188,7 @@ def run_incremental_dedup(
     state write and the checkpoint commit therefore recomputes from
     exactly the state the first attempt saw, then overwrites both
     partitions wholesale. Survivor determinism across a kill-and-resume
-    is gated in test_streaming_windowed.
+    is gated in test_streaming_incremental.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType

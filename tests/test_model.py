@@ -58,10 +58,10 @@ def test_cross_validate(spark, doc_ids):
 
 
 def test_learner_shootout_ordering(spark):
-    """The shootout's qualitative ordering (tools/learner_shootout.py →
-    BASELINE.md), pinned on the synthetic corpus where runtimes stay
-    test-sized: every context learner — perceptron, CRF, BiLSTM-CRF,
-    transformer — separates the ambiguous surface perfectly under
+    """The shootout's qualitative ordering (tools/learner_shootout.py,
+    last at a3140ec → BASELINE.md), pinned on the synthetic corpus where
+    runtimes stay test-sized: every context learner — perceptron, CRF,
+    BiLSTM-CRF, transformer — separates the ambiguous surface perfectly under
     cross-validation, while the frequency memorizer collapses both
     contexts onto one label. All learners are seeded/deterministic, so
     this ordering is stable across reruns by construction."""

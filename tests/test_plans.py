@@ -116,32 +116,6 @@ def test_kg_chain_explodes_are_whole_stage_compiled(spark, doc_ids):
             assert all(re.search(r"\*\(\d+\) Generate explode\(", ln) for ln in explodes), plan
 
 
-def test_bucketed_join_is_shuffle_free(spark, doc_ids, tmp_path):
-    """The production layout claim: two tables bucketed on the doc key
-    join without any shuffle exchange (Iceberg bucket(url) analogue)."""
-    from medacy_spark.corpus.synth import clinical_documents, gold_mentions
-    from medacy_spark.plans.bucketing import read_table, write_bucketed
-
-    # warehouse.dir is a static conf; tables land in ./spark-warehouse
-    # (gitignored) and are dropped below; bucketed reads rely on
-    # spark.sql.sources.bucketing.enabled, which is on by default
-    assert spark.conf.get("spark.sql.sources.bucketing.enabled") == "true"
-    try:
-        docs = clinical_documents(doc_ids.filter("doc_id < 200")).select("doc_id", "text")
-        gold = gold_mentions(doc_ids.filter("doc_id < 200"))
-        write_bucketed(docs, "t_docs_b", "doc_id", buckets=8)
-        write_bucketed(gold, "t_gold_b", "doc_id", buckets=8)
-        j = read_table(spark, "t_docs_b").join(read_table(spark, "t_gold_b"), "doc_id")
-        plan = _plan(j)
-        shuffle = [line for line in plan.splitlines()
-                   if "Exchange" in line and "BroadcastExchange" not in line]
-        assert shuffle == []
-        assert j.count() == gold.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_docs_b")
-        spark.sql("DROP TABLE IF EXISTS t_gold_b")
-
-
 def test_partition_pruning(spark, doc_ids, tmp_path):
     """Writes partitioned by lang must scan only the filtered partition."""
     from medacy_spark.corpus.synth import clinical_documents

@@ -322,6 +322,33 @@ def test_assign_folds_scale_path_parity_and_plan(spark):
     assert assign_folds(empty, 5).count() == 0
 
 
+def test_row_numbering_reads_effective_shuffle_partitions(spark, monkeypatch):
+    """With ``spark.sql.shuffle.partitions`` unset, the numbering
+    range-partitions into the session's effective value (Spark's
+    default), the count every other shuffle uses."""
+    from medacy_spark.plans.numbering import global_row_index
+
+    df = spark.range(100)
+    asked = []
+    real = type(df).repartitionByRange
+
+    def spy(self, n, *cols):
+        asked.append(n)
+        return real(self, n, *cols)
+
+    monkeypatch.setattr(type(df), "repartitionByRange", spy)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.unset(key)
+        effective = int(spark.conf.get(key))
+        out = global_row_index(df, ["id"], "rn")
+    finally:
+        spark.conf.set(key, before)
+    assert asked == [effective]
+    assert sorted(r["rn"] for r in out.collect()) == list(range(100))
+
+
 def test_line_word_index_mixed_whitespace_exact(spark):
     """Offsets stay exact with tabs and multi-space runs — verified against
     Python's own str.find ground truth for every word."""

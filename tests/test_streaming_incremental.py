@@ -1,75 +1,9 @@
-"""Structured-Streaming extensions: windowed aggregation + custom state."""
+"""Incremental streaming state: additive per-batch partials, streaming
+dedup against a band state, idempotent batch writes and compaction."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-
-def test_windowed_event_counts_match_batch(spark, tmp_path):
-    from medacy_spark.streaming.windowed import windowed_event_counts
-
-    src = str(tmp_path / "events")
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events.write.parquet(src)
-
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    q = (
-        windowed_event_counts(stream)
-        .writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.sql("select * from win_counts")
-
-    want = (
-        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type", "cnt",
-        )
-    )
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
-def test_stateful_running_totals_across_batches(spark, tmp_path):
-    from medacy_spark.streaming.windowed import running_user_totals
-
-    src = tmp_path / "ev2"
-    src.mkdir()
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    half1 = events.filter("event_id % 2 = 0")
-    half2 = events.filter("event_id % 2 = 1")
-    half1.write.parquet(str(src / "f1"))
-    half2.write.parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "*"))
-    )
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("usr_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    # the LAST emitted total per user must equal the batch count — state
-    # accumulated across micro-batches
-    got = spark.sql(
-        "select user_id, max(total) as total from usr_totals group by user_id"
-    )
-    want = events.groupBy("user_id").agg(F.count("*").alias("total"))
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
 
 
 def test_incremental_cooccurrence_counts_match_batch(spark, tmp_path):
@@ -322,46 +256,3 @@ def test_compact_state_folds_batches(spark, tmp_path):
     _write_batch(spark.createDataFrame([("a", 7)], "k string, n long"), out, 3)
     got2 = {r["k"]: r["n"] for r in merged_counts(spark, out, ("k",)).collect()}
     assert got2 == {"a": 8, "b": 11}  # replay rewrote, never double-counted
-
-
-def test_session_window_stream_matches_batch_sessionize(spark, tmp_path):
-    """The native-session_window streaming path and the batch
-    gaps-and-islands sessionize must produce the SAME sessions
-    (per-user start timestamp, event count, value sum) on the corpus —
-    pinning that the two gap semantics agree away from exact-boundary
-    ties (zero-probability with microsecond event times)."""
-    from medacy_spark.operators.events import sessionize
-    from medacy_spark.streaming.windowed import session_aggregates
-
-    src = str(tmp_path / "ev_sess")
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events.write.parquet(src)
-
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    q = (
-        session_aggregates(stream, gap="6 hours")
-        .writeStream.format("memory")
-        .queryName("sess_agg")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.sql(
-        "select user_id, cast(session_start as timestamp_ntz) session_start,"
-        " n_events, round(sess_value, 6) sess_value from sess_agg"
-    )
-
-    want = (
-        sessionize(events, gap_seconds=6 * 3600)
-        .groupBy("user_id", "session_seq")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sess_value"),
-        )
-        .drop("session_seq")
-    )
-    assert got.count() == want.count() and got.count() > 0
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
