@@ -9,8 +9,8 @@ Dataset layout (dataset.py:82-128); doc ids are file basenames. `predict`
 writes one .ann per input .txt (the reference's predictions/ output,
 model.py:260-270) through sources.corpus.write_brat_dir — a partitioned
 executor-side sink (no driver collect), lines in the reference writer's
-(start, end) span order; the at-scale sink remains
-sources.corpus.write_mentions (parquet, bucket-by-doc in production).
+(start, end) span order. At scale, write the DataFrame that
+Model.predict returns as a parquet table instead.
 `validate` prints the reference's per-label cross-validation table
 (avg/min/max P, R, F1 — model.py:429-441).
 """

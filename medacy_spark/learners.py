@@ -8,11 +8,14 @@ model.FrequencyLearner:
 
   * fit        — driver-side over collected training sentences (the
                  reference's own X3 shape: training is never distributed
-                 there), OR sharded parameter-mixing where each shard
-                 trains a local perceptron inside an Arrow batch and the
-                 driver averages the sparse weight dicts (McDonald et al.
-                 2010, "Distributed training strategies for the
-                 structured perceptron" — public).
+                 there), OR ``ShardedFit.fit_sharded``: iterative
+                 parameter mixing where each shard trains a local
+                 learner inside an Arrow batch and the driver averages
+                 the shard states (McDonald et al. 2010, "Distributed
+                 training strategies for the structured perceptron" —
+                 public). Every sequence learner, the neural ones in
+                 learners_nn / learners_tx included, inherits that one
+                 mixing loop and supplies only its hooks.
   * __call__   — (sentences: list[list[str]]) -> list[list[str]] label
                  lists, broadcast to executors and scored in the Arrow
                  batch stage (operators/ner_model.score_sentences).
@@ -75,7 +78,96 @@ def _trans_feat(prev_label: str) -> int:
     return D + _h("prev_label=" + prev_label)
 
 
-class PerceptronLearner:
+class ShardedFit:
+    """Distributed fit by ITERATIVE parameter mixing (McDonald, Hall &
+    Mann, NAACL 2010; the same topology as federated averaging), shared
+    by every sequence learner. A learner supplies four hooks:
+
+      * ``_mix_start(sh)``   — the state round 0 starts from (may collect
+                               from the sharded frame ``sh``);
+      * ``_fit_shard(examples, labels, init, mix_rounds, last_round)`` —
+                               one shard's local fit from ``init``,
+                               returning its end-state;
+      * ``_mix(states)``     — the average of the shard states;
+      * ``_adopt(state)``    — take the final mixed state as the model.
+
+    ``n_shards`` is the class's default shard count.
+    """
+
+    n_shards = 32
+
+    def fit_sharded(
+        self, sentence_df, n_shards: int | None = None, mix_rounds: int = 3
+    ) -> "ShardedFit":
+        """Shard sentences deterministically by doc key; each round, every
+        shard fits a local learner inside a grouped Arrow batch (a pandas
+        UDF — never row-level Python) STARTING FROM the previous round's
+        mixed state, over the GLOBAL label set; the driver averages the
+        shard states. One-shot mixing washes out when shards are
+        few/heterogeneous (measured on the perceptron: 7 vs 82 non-O
+        predictions on the reference corpus); re-seeding each round makes
+        the shards converge on a shared model. Only n_shards states per
+        round reach the driver — model-scale, never corpus-scale.
+
+        sentence_df columns: doc_id (any orderable), sent_id int,
+        words array<string>, labels array<string> — the Model.fit contract.
+        """
+        import pickle
+
+        import pandas as pd
+        from pyspark.sql import functions as F
+
+        if n_shards is None:
+            n_shards = self.n_shards
+        sh = sentence_df.select(
+            F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_shards))
+            .cast("int").alias("shard"),
+            "doc_id", "sent_id", "words", "labels",
+        ).localCheckpoint(eager=False)  # rounds re-read it; cut the upstream
+
+        # distributed distinct over the CHECKPOINTED table (shares its
+        # materialization with the rounds), then a dictionary-scale collect
+        global_labels = sorted(
+            {"O"}
+            | {r["l"] for r in
+               sh.select(F.explode("labels").alias("l")).distinct().collect()}
+        )
+        self.labels = global_labels
+        mixed = self._mix_start(sh)
+        proto = self.fresh()  # untrained prototype; ships the subclass
+
+        def make_train(init_blob: bytes, last_round: bool):
+            def train(pdf: pd.DataFrame) -> pd.DataFrame:
+                pdf = pdf.sort_values(["doc_id", "sent_id"])  # deterministic
+                state = proto.fresh()._fit_shard(
+                    list(zip(pdf["words"], pdf["labels"])),
+                    global_labels, pickle.loads(init_blob),
+                    mix_rounds, last_round,
+                )
+                return pd.DataFrame({
+                    "shard": [int(pdf["shard"].iloc[0])],
+                    "blob": [pickle.dumps(state)],
+                })
+            return train
+
+        for rnd in range(mix_rounds):
+            rows = (
+                sh.groupBy("shard")
+                .applyInPandas(
+                    make_train(pickle.dumps(mixed), rnd == mix_rounds - 1),
+                    "shard int, blob binary",
+                )
+                .collect()
+            )
+            states = [pickle.loads(bytes(r["blob"]))
+                      for r in sorted(rows, key=lambda r: r["shard"])]
+            if states:  # a frame with no rows has no shards: keep the start
+                mixed = self._mix(states)
+        self._adopt(mixed)
+        return self
+
+
+class PerceptronLearner(ShardedFit):
     """Averaged structured perceptron; plugs into model.Model and the
     operators/ner_model broadcast + Arrow batch contract."""
 
@@ -196,82 +288,26 @@ class PerceptronLearner:
             self.weights = {k: v for k, v in w.items() if v != 0.0}
         return self
 
-    # --------------------------------------------------- distributed fit
+    # --------------------------------------------- ShardedFit hooks
 
-    def fit_sharded(
-        self, sentence_df, n_shards: int = 32, mix_rounds: int = 3
-    ) -> "PerceptronLearner":
-        """ITERATIVE parameter mixing (McDonald, Hall & Mann, NAACL 2010):
-        shard sentences deterministically by doc key; each round, every
-        shard trains a local perceptron inside an Arrow batch
-        (applyInPandas — never row-level Python) STARTING FROM the
-        previous round's mixed weights, over the GLOBAL label set; the
-        driver averages the sparse weight dicts. One-shot mixing washes
-        out when shards are few/heterogeneous (measured: 7 vs 82 non-O
-        predictions on the reference corpus); re-seeding each round makes
-        the shards converge on a shared model. Only n_shards weight dicts
-        per round reach the driver — model-scale, not corpus-scale; the
-        final round trains with averaging on.
+    def _mix_start(self, sh) -> dict[tuple[str, int], float]:
+        return {}
 
-        sentence_df columns: doc_id (any orderable), sent_id int,
-        words array<string>, labels array<string>.
-        """
-        import pickle
+    def _fit_shard(self, examples, labels, init, mix_rounds, last_round):
+        # raw end-states in the early rounds; averaging only in the last
+        self.fit(examples, labels=labels, init=init, average=last_round)
+        return self.weights
 
-        import pandas as pd
-        from pyspark.sql import functions as F
+    def _mix(self, states) -> dict[tuple[str, int], float]:
+        merged: dict[tuple[str, int], float] = defaultdict(float)
+        n = len(states)
+        for w in states:
+            for k, v in w.items():
+                merged[k] += v / n
+        return dict(merged)
 
-        sh = sentence_df.select(
-            F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_shards))
-            .cast("int").alias("shard"),
-            "doc_id", "sent_id", "words", "labels",
-        ).localCheckpoint(eager=False)  # rounds re-read it; cut the upstream
-
-        # derive the global label set from the CHECKPOINTED table so this
-        # scan shares the materialization with the mixing rounds
-        global_labels = sorted(
-            {"O"}
-            | {r["l"] for r in
-               sh.select(F.explode("labels").alias("l")).distinct().collect()}
-        )
-
-        proto = self.fresh()  # zero-weight prototype; ships the subclass
-
-        def make_train(init_blob: bytes, avg: bool):
-            def train(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values(["doc_id", "sent_id"])  # deterministic
-                local = proto.fresh()
-                local.fit(
-                    list(zip(pdf["words"], pdf["labels"])),
-                    labels=global_labels,
-                    init=pickle.loads(init_blob),
-                    average=avg,
-                )
-                return pd.DataFrame({
-                    "shard": [int(pdf["shard"].iloc[0])],
-                    "blob": [pickle.dumps(local.weights)],
-                })
-            return train
-
-        mixed: dict[tuple[str, int], float] = {}
-        for rnd in range(mix_rounds):
-            rows = (
-                sh.groupBy("shard")
-                .applyInPandas(
-                    make_train(pickle.dumps(mixed), rnd == mix_rounds - 1),
-                    "shard int, blob binary",
-                )
-                .collect()
-            )
-            merged: dict[tuple[str, int], float] = defaultdict(float)
-            n = max(len(rows), 1)
-            for r in sorted(rows, key=lambda r: r["shard"]):
-                for k, v in pickle.loads(bytes(r["blob"])).items():
-                    merged[k] += v / n
-            mixed = dict(merged)
-        self.labels = global_labels
-        self.weights = mixed
-        return self
+    def _adopt(self, state) -> None:
+        self.weights = state
 
 
 class CRFLearner(PerceptronLearner):
@@ -325,6 +361,8 @@ class CRFLearner(PerceptronLearner):
     ) -> "CRFLearner":
         import numpy as np
 
+        from medacy_spark.learners_nn import _lse as lse
+
         # bound TRAINING sequence length: one-doc-one-sequence corpora
         # (directory corpora without sentence splits) hand us 7k-token
         # "sentences" — one giant gradient step per epoch trains nothing.
@@ -376,12 +414,6 @@ class CRFLearner(PerceptronLearner):
                     T[L if p == _START else lab_i[p], lab_i[y]] = v
                 elif f in fidx:
                     W[fidx[f], lab_i[y]] = v
-
-        def lse(a, axis):
-            m = a.max(axis=axis, keepdims=True)
-            return np.squeeze(
-                m + np.log(np.exp(a - m).sum(axis=axis, keepdims=True)), axis=axis
-            )
 
         s = 1.0  # scale: true weights = s * (W, T)
         # Learning-rate schedule: constant within an epoch, 1/(1+epoch)

@@ -35,12 +35,13 @@ tests/test_learners_nn.py — the correctness evidence a from-scratch
 backprop needs.
 
 Distribution contract: driver-side fit like the reference's for
-directory-scale corpora, plus ``fit_sharded`` — distributed training by
-iterative model averaging (each shard runs local SGD inside an
-applyInPandas Arrow batch from the broadcast mixed parameters; only
-model-scale snapshots reach the driver) for corpora above
-Model.driver_fit_max_sentences. Scoring plugs the fitted learner into
-the SAME broadcast + Arrow-batch stage as every other learner
+directory-scale corpora, plus ``fit_sharded`` for corpora above
+Model.driver_fit_max_sentences — the one ``learners.ShardedFit`` mixing
+loop, whose dense hooks (``DenseShardedFit``, shared with the
+transformer) make it iterative model averaging: each shard runs local
+SGD inside an Arrow batch from the broadcast mixed parameters; only
+model-scale snapshots reach the driver. Scoring plugs the fitted learner
+into the SAME broadcast + Arrow-batch stage as every other learner
 (operators/ner_model.score_sentences takes any
 ``list[list[str]] -> list[list[str]]`` callable). Pickle-safe for
 Model.save/load.
@@ -51,6 +52,8 @@ from __future__ import annotations
 from collections.abc import Iterable, Sequence
 
 import numpy as np
+
+from medacy_spark.learners import ShardedFit
 
 _UNK = 0  # row 0 of the embedding table is the unknown-word vector
 _CHAR_BUCKETS = 4096
@@ -214,7 +217,89 @@ class _LSTM:
         return dX, {"Wx": dWx, "Wh": dWh, "b": db}
 
 
-class BiLSTMCRFLearner:
+class DenseShardedFit(ShardedFit):
+    """What the two neural learners (BiLSTMCRFLearner, learners_tx's
+    TransformerCRFLearner) share: token encoding, the seeded embedding
+    tables, the fitted check on scoring, and the dense side of
+    ``ShardedFit.fit_sharded`` — iterative MODEL AVERAGING of parameter
+    tensors. Round 0 starts from ONE seeded init built on the driver over
+    the global vocab (shards starting from unrelated bases would average
+    to noise; a shared vocab keeps every shard's tensors row-aligned);
+    each round runs ``epochs // mix_rounds`` local SGD epochs, and the
+    driver averages every tensor (an LSTM's (Wx, Wh, b) element by
+    element). A subclass provides ``_build``, ``fit``, ``export_params``,
+    ``_load_params`` and ``_decode``."""
+
+    n_shards = 8
+
+    def _build_embeddings(self, vocab: list[str]):
+        """Seeded RNG, vocab index, word table E (frozen pretrained rows
+        when ``word_vectors`` is given — nn.Embedding.from_pretrained,
+        the unknown row stays zero like the reference's appended zero row
+        — else trainable random rows) and char-trigram table C: the first
+        draws of every ``_build``. Returns (rng, E, C)."""
+        rng = np.random.RandomState(self.seed)
+        self.vocab = {w: i + 1 for i, w in enumerate(vocab)}  # 0 = <unk>
+        if self.word_vectors:
+            self.embedding_dim = len(next(iter(self.word_vectors.values())))
+            E = np.zeros((len(vocab) + 1, self.embedding_dim))
+            for w, i in self.vocab.items():
+                if w.lower() in self.word_vectors:
+                    E[i] = np.asarray(self.word_vectors[w.lower()], dtype=float)
+            self._freeze_emb = True
+        else:
+            E = rng.uniform(-0.1, 0.1, (len(vocab) + 1, self.embedding_dim))
+            self._freeze_emb = False
+        C = rng.uniform(-0.1, 0.1, (_CHAR_BUCKETS, self.char_dim))
+        return rng, E, C
+
+    def _encode(self, words: Sequence[str]):
+        ids = np.array([self.vocab.get(w.lower(), _UNK) for w in words], dtype=np.int64)
+        chars = [_char_trigram_ids(w) for w in words]
+        return ids, chars
+
+    def __call__(self, sentences: list[list[str]]) -> list[list[str]]:
+        if self._params is None:
+            raise RuntimeError("fit() must run before scoring")
+        return [self._decode(s) for s in sentences]
+
+    # --------------------------------------------- ShardedFit hooks
+
+    def _mix_start(self, sh) -> dict:
+        from pyspark.sql import functions as F
+
+        # distributed distinct, then a dictionary-scale collect (the same
+        # class of collect the frequency learner's table fit performs)
+        vocab = sorted(
+            r["w"] for r in
+            sh.select(F.explode("words").alias("w"))
+            .select(F.lower("w").alias("w")).distinct().collect()
+        )
+        self._build(vocab)
+        return self.export_params()
+
+    def _fit_shard(self, examples, labels, init, mix_rounds, last_round):
+        self.fit(
+            examples, epochs=max(self.epochs // mix_rounds, 1),
+            labels=labels, vocab=init["vocab"], init_params=init,
+        )
+        return self.export_params()
+
+    def _mix(self, states) -> dict:
+        n = len(states)
+        out = dict(states[0])  # labels and vocab are the same on every shard
+        for k, v in states[0].items():
+            if isinstance(v, tuple):  # an LSTM's (Wx, Wh, b)
+                out[k] = tuple(sum(s[k][i] for s in states) / n for i in range(len(v)))
+            elif isinstance(v, np.ndarray):
+                out[k] = sum(s[k] for s in states) / n
+        return out
+
+    def _adopt(self, state) -> None:
+        self._load_params(state)
+
+
+class BiLSTMCRFLearner(DenseShardedFit):
     """Numpy BiLSTM-CRF honoring the PerceptronLearner call contract:
     ``fit(examples)``, ``learner(sentences) -> label lists``,
     ``fresh()`` — so Model.fit/save/load and the broadcast Arrow scoring
@@ -251,24 +336,8 @@ class BiLSTMCRFLearner:
     # ------------------------------------------------------------ internals
 
     def _build(self, vocab: list[str]) -> None:
-        rng = np.random.RandomState(self.seed)
-        self.vocab = {w: i + 1 for i, w in enumerate(vocab)}  # 0 = <unk>
-        de = self.embedding_dim
-        if self.word_vectors:
-            # frozen pretrained table (nn.Embedding.from_pretrained);
-            # unknown row stays zero like the reference's appended zero row
-            de = len(next(iter(self.word_vectors.values())))
-            self.embedding_dim = de
-            E = np.zeros((len(vocab) + 1, de))
-            for w, i in self.vocab.items():
-                if w.lower() in self.word_vectors:
-                    E[i] = np.asarray(self.word_vectors[w.lower()], dtype=float)
-            self._freeze_emb = True
-        else:
-            E = rng.uniform(-0.1, 0.1, (len(vocab) + 1, de))
-            self._freeze_emb = False
-        C = rng.uniform(-0.1, 0.1, (_CHAR_BUCKETS, self.char_dim))
-        d_in = de + self.char_dim
+        rng, E, C = self._build_embeddings(vocab)
+        d_in = self.embedding_dim + self.char_dim
         h, L = self.hidden_dim, len(self.labels)
         self.fwd = _LSTM(rng, d_in, h)
         self.bwd = _LSTM(rng, d_in, h)
@@ -280,11 +349,6 @@ class BiLSTMCRFLearner:
             "bo": np.zeros(L),
             "T": np.zeros((L + 1, L)),  # row L = start transitions
         }
-
-    def _encode(self, words: Sequence[str]):
-        ids = np.array([self.vocab.get(w.lower(), _UNK) for w in words], dtype=np.int64)
-        chars = [_char_trigram_ids(w) for w in words]
-        return ids, chars
 
     def _emissions(self, words: Sequence[str], want_cache: bool = False):
         p = self._params
@@ -407,105 +471,9 @@ class BiLSTMCRFLearner:
         for name, lstm in (("fwd", self.fwd), ("bwd", self.bwd)):
             lstm.Wx[...], lstm.Wh[...], lstm.b[...] = d[name]
 
-    def fit_sharded(
-        self,
-        sentence_df,
-        n_shards: int = 8,
-        mix_rounds: int = 3,
-        epochs_per_round: int | None = None,
-    ) -> "BiLSTMCRFLearner":
-        """Distributed fit by ITERATIVE MODEL AVERAGING — the neural
-        analogue of the perceptron's parameter mixing (McDonald, Hall &
-        Mann, NAACL 2010; same topology as federated averaging): shard
-        sentences by doc key; each round every shard runs local SGD
-        inside an applyInPandas Arrow batch STARTING FROM the previous
-        round's averaged parameters (round 0 starts from one shared
-        seeded init built on the driver, so all shards are row-aligned);
-        the driver averages the dense tensors. Per round only n_shards
-        parameter snapshots reach the driver — model-scale, never
-        corpus-scale. The global label set and vocab are derived from
-        ONE pass over the checkpointed sentence table (vocab is
-        dictionary-scale, the same class of collect the frequency
-        learner's table fit performs).
-
-        sentence_df columns: doc_id, sent_id int, words array<string>,
-        labels array<string> — the Model.fit contract.
-        """
-        import pickle
-
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        sh = sentence_df.select(
-            F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_shards))
-            .cast("int").alias("shard"),
-            "doc_id", "sent_id", "words", "labels",
-        ).localCheckpoint(eager=False)
-        # distributed distinct (explode + map-side combine), then a
-        # dictionary-scale collect — never a corpus-scale array on one
-        # reducer
-        global_labels = sorted(
-            {"O"}
-            | {r["l"] for r in
-               sh.select(F.explode("labels").alias("l")).distinct().collect()}
-        )
-        global_vocab = sorted(
-            r["w"] for r in
-            sh.select(F.explode("words").alias("w"))
-            .select(F.lower("w").alias("w")).distinct().collect()
-        )
-
-        # one shared seeded init: every shard must start from IDENTICAL
-        # tensors or averaging round 0 mixes unrelated bases
-        self.labels = sorted(global_labels)
-        self._build(list(global_vocab))
-        mixed = self.export_params()
-        proto = self.fresh()
-        k_epochs = epochs_per_round or max(self.epochs // mix_rounds, 1)
-
-        def make_train(init_blob: bytes):
-            def train(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values(["doc_id", "sent_id"])
-                local = proto.fresh()
-                local.fit(
-                    list(zip(pdf["words"], pdf["labels"])),
-                    epochs=k_epochs,
-                    labels=global_labels,
-                    vocab=global_vocab,
-                    init_params=pickle.loads(init_blob),
-                )
-                return pd.DataFrame({
-                    "shard": [int(pdf["shard"].iloc[0])],
-                    "blob": [pickle.dumps(local.export_params())],
-                })
-            return train
-
-        for _ in range(mix_rounds):
-            rows = (
-                sh.groupBy("shard")
-                .applyInPandas(make_train(pickle.dumps(mixed)), "shard int, blob binary")
-                .collect()
-            )
-            snaps = [pickle.loads(bytes(r["blob"]))
-                     for r in sorted(rows, key=lambda r: r["shard"])]
-            n = len(snaps)
-            for k in ("E", "C", "Wo", "bo", "T"):
-                mixed[k] = sum(s[k] for s in snaps) / n
-            for name in ("fwd", "bwd"):
-                mixed[name] = tuple(
-                    sum(s[name][i] for s in snaps) / n for i in range(3)
-                )
-        self._load_params(mixed)
-        return self
-
-    def _viterbi(self, words: Sequence[str]) -> list[str]:
+    def _decode(self, words: Sequence[str]) -> list[str]:
         if not words:
             return []
         S = self._emissions(words)
         path = viterbi_decode(S, self._params["T"])
         return [self.labels[i] for i in path]
-
-    def __call__(self, sentences: list[list[str]]) -> list[list[str]]:
-        if self._params is None:
-            raise RuntimeError("fit() must run before scoring")
-        return [self._viterbi(s) for s in sentences]

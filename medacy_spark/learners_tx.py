@@ -35,10 +35,12 @@ tests/test_learners_tx.py, and the encoder is gated on a long-distance
 agreement task where attention's O(1) path length beats the BiLSTM's
 recurrence at an equal training budget.
 
-Distribution contract: identical to the BiLSTM — driver fit below
+Distribution contract: identical to the BiLSTM, through the same
+``learners_nn.DenseShardedFit`` base — driver fit below
 Model.driver_fit_max_sentences, ``fit_sharded`` iterative model
-averaging above it (flat parameter dict → uniform tensor averaging),
-scoring through the same broadcast + Arrow-batch stage
+averaging above it (flat parameter dict → uniform tensor averaging,
+CRF transitions included), scoring through the same broadcast +
+Arrow-batch stage
 (operators/ner_model.score_sentences). Pickle-safe for Model.save/load.
 """
 
@@ -49,9 +51,7 @@ from collections.abc import Iterable, Sequence
 import numpy as np
 
 from medacy_spark.learners_nn import (
-    _CHAR_BUCKETS,
-    _UNK,
-    _char_trigram_ids,
+    DenseShardedFit,
     crf_nll_grads,
     resolve_label_set,
     viterbi_decode,
@@ -101,7 +101,7 @@ def _softmax_rows(x: np.ndarray) -> np.ndarray:
     return e / e.sum(axis=-1, keepdims=True)
 
 
-class TransformerCRFLearner:
+class TransformerCRFLearner(DenseShardedFit):
     """Spec value 'BERT' (pipeline.py): numpy transformer encoder +
     softmax or CRF token-classification head. Same callable contract as
     every learner: ``learner(list[list[str]]) -> list[list[str]]``."""
@@ -150,26 +150,14 @@ class TransformerCRFLearner:
     # ------------------------------------------------------------ internals
 
     def _build(self, vocab: list[str]) -> None:
-        rng = np.random.RandomState(self.seed)
-        self.vocab = {w: i + 1 for i, w in enumerate(vocab)}  # 0 = <unk>
+        rng, E, C = self._build_embeddings(vocab)
         de = self.embedding_dim
-        if self.word_vectors:
-            de = len(next(iter(self.word_vectors.values())))
-            self.embedding_dim = de
-            E = np.zeros((len(vocab) + 1, de))
-            for w, i in self.vocab.items():
-                if w.lower() in self.word_vectors:
-                    E[i] = np.asarray(self.word_vectors[w.lower()], dtype=float)
-            self._freeze_emb = True
-        else:
-            E = rng.uniform(-0.1, 0.1, (len(vocab) + 1, de))
-            self._freeze_emb = False
         d, L = self.d_model, len(self.labels)
         s_in = 1.0 / np.sqrt(de + self.char_dim)
         s_d = 1.0 / np.sqrt(d)
         p: dict[str, np.ndarray] = {
             "E": E,
-            "C": rng.uniform(-0.1, 0.1, (_CHAR_BUCKETS, self.char_dim)),
+            "C": C,
             "Win": rng.uniform(-s_in, s_in, (de + self.char_dim, d)),
             "bin": np.zeros(d),
             "P": rng.uniform(-0.1, 0.1, (self.max_len, d)),
@@ -194,13 +182,6 @@ class TransformerCRFLearner:
         if self.using_crf:
             p["T"] = np.zeros((L + 1, L))  # row L = start transitions
         self._params = p
-
-    def _encode(self, words: Sequence[str]):
-        ids = np.array(
-            [self.vocab.get(w.lower(), _UNK) for w in words], dtype=np.int64
-        )
-        chars = [_char_trigram_ids(w) for w in words]
-        return ids, chars
 
     def _attn_fwd(self, x: np.ndarray, l: int):
         p = self._params
@@ -409,79 +390,6 @@ class TransformerCRFLearner:
                 raise ValueError(f"param {k}: shape {d[k].shape} != {p[k].shape}")
             p[k][...] = d[k]
 
-    def fit_sharded(
-        self,
-        sentence_df,
-        n_shards: int = 8,
-        mix_rounds: int = 3,
-        epochs_per_round: int | None = None,
-    ) -> "TransformerCRFLearner":
-        """Distributed fit by iterative model averaging — identical
-        topology to BiLSTMCRFLearner.fit_sharded (shared seeded init so
-        shard tensors stay row-aligned; local SGD inside applyInPandas
-        from the broadcast mixed parameters; driver averages dense
-        snapshots). The flat parameter dict makes the averaging uniform
-        over every tensor, CRF transitions included."""
-        import pickle
-
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        sh = sentence_df.select(
-            F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_shards))
-            .cast("int").alias("shard"),
-            "doc_id", "sent_id", "words", "labels",
-        ).localCheckpoint(eager=False)
-        global_labels = sorted(
-            {"O"}
-            | {r["l"] for r in
-               sh.select(F.explode("labels").alias("l")).distinct().collect()}
-        )
-        global_vocab = sorted(
-            r["w"] for r in
-            sh.select(F.explode("words").alias("w"))
-            .select(F.lower("w").alias("w")).distinct().collect()
-        )
-        self.labels = sorted(global_labels)
-        self._build(list(global_vocab))
-        mixed = self.export_params()
-        tensor_keys = [k for k in mixed if k not in ("labels", "vocab")]
-        proto = self.fresh()
-        k_epochs = epochs_per_round or max(self.epochs // mix_rounds, 1)
-
-        def make_train(init_blob: bytes):
-            def train(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values(["doc_id", "sent_id"])
-                local = proto.fresh()
-                local.fit(
-                    list(zip(pdf["words"], pdf["labels"])),
-                    epochs=k_epochs,
-                    labels=global_labels,
-                    vocab=global_vocab,
-                    init_params=pickle.loads(init_blob),
-                )
-                return pd.DataFrame({
-                    "shard": [int(pdf["shard"].iloc[0])],
-                    "blob": [pickle.dumps(local.export_params())],
-                })
-            return train
-
-        for _ in range(mix_rounds):
-            rows = (
-                sh.groupBy("shard")
-                .applyInPandas(
-                    make_train(pickle.dumps(mixed)), "shard int, blob binary"
-                )
-                .collect()
-            )
-            snaps = [pickle.loads(bytes(r["blob"]))
-                     for r in sorted(rows, key=lambda r: r["shard"])]
-            n = len(snaps)
-            for k in tensor_keys:
-                mixed[k] = sum(s[k] for s in snaps) / n
-        self._load_params(mixed)
-        return self
-
     # ---------------------------------------------------------------- decode
 
     def _decode(self, words: Sequence[str]) -> list[str]:
@@ -498,8 +406,3 @@ class TransformerCRFLearner:
                 path = S.argmax(axis=1).tolist()
             out.extend(self.labels[int(j)] for j in path)
         return out
-
-    def __call__(self, sentences: list[list[str]]) -> list[list[str]]:
-        if self._params is None:
-            raise RuntimeError("fit() must run before scoring")
-        return [self._decode(s) for s in sentences]

@@ -14,13 +14,16 @@ Mirrors medacy's main entry surface (medacy/model/model.py:200-475):
   * cross_validate — X4 stratified folds → per-fold fit/predict →
                  strict Measures per (fold, tag) → A5 mean/min/max.
 
-The built-in ``FrequencyLearner`` (most-frequent-tag-per-word + the unit
-adjacency rules) stands in for CRF/BiLSTM/BERT — those libraries aren't in
-this container; any callable (sentences -> label lists) plugs into the
-same broadcast + batch contract (operators/ner_model.py). For a learner
-with real model state, ``learners.PerceptronLearner`` (numpy-free averaged
-structured perceptron, sharded parameter-mixing fit) trains through the
-same ``Model`` facade: ``Model(spark, PerceptronLearner()).fit(...)``.
+The default learner is ``FrequencyLearner`` (most-frequent-tag-per-word
++ the unit adjacency rules), fitted from a distributed count table. The
+sequence learners — ``learners.PerceptronLearner`` and ``CRFLearner``,
+``learners_nn.BiLSTMCRFLearner``, ``learners_tx.TransformerCRFLearner``
+(the reference's CRF/BiLSTM/BERT families, implemented in numpy) — train
+through the same facade, e.g. ``Model(spark, CRFLearner()).fit(...)``,
+driver-side or by the sharded parameter-mixing fit they all inherit
+from ``learners.ShardedFit``. Any callable (sentences -> label lists)
+plugs into the same broadcast + batch scoring contract
+(operators/ner_model.py).
 """
 
 from __future__ import annotations
@@ -143,12 +146,14 @@ class Model:
             table = {r["w"]: r["gold_label"] for r in top.collect()}
             self.learner.fit_table(table)
         else:
-            # sequence learners (learners.PerceptronLearner): below the
-            # threshold, collect and fit driver-side — exactly the
+            # sequence learners (learners.ShardedFit subclasses): below
+            # the threshold, collect and fit driver-side — exactly the
             # reference's X3 shape (training is never distributed there)
             # and the best-quality fit on directory-scale corpora; above
-            # it, iterative parameter mixing inside Arrow batches, where
-            # only n_shards sparse weight dicts per round reach the driver
+            # it, fit_sharded's iterative parameter mixing inside Arrow
+            # batches at the learner class's default shard count, where
+            # only one model-scale state per shard and round reaches the
+            # driver
             sent_df = labeled.groupBy("doc_id", "sent_id").agg(
                 F.array_sort(
                     F.collect_list(F.struct("tok_id", "word", "gold_label"))
@@ -181,11 +186,10 @@ class Model:
             can_shard = hasattr(self.learner, "fit_sharded")
             if n_sents <= self.driver_fit_max_sentences or not can_shard:
                 if n_sents > self.driver_fit_max_sentences:
-                    # only learners WITHOUT a fit_sharded land here (the
-                    # perceptron/CRF mix parameters, the BiLSTM averages
-                    # models — both shard); e.g. a bare callable plugged
-                    # in as a learner falls back to driver-side fit,
-                    # loudly
+                    # only learners WITHOUT a fit_sharded land here
+                    # (every learners.ShardedFit subclass shards); a
+                    # custom learner with only ``fit`` falls back to
+                    # driver-side fit, loudly
                     import logging
 
                     logging.getLogger(__name__).warning(

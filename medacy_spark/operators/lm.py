@@ -117,8 +117,8 @@ def lm_count_relation(
     text_col: str = "text",
 ) -> DataFrame:
     """The ADDITIVE keyed-count relation for streaming/incremental LM
-    training (the ``run_incremental_counts`` shape): gram rows
-    (ctx, w, c) plus vocabulary rows (ctx NULL, w=token, c).  Counts
+    training (a count stage for ``streaming.incremental.run_incremental``):
+    gram rows (ctx, w, c) plus vocabulary rows (ctx NULL, w=token, c).  Counts
     form a commutative monoid, so per-batch partials appended and
     folded equal the whole-corpus relation exactly;
     :func:`lm_from_counts` rebuilds the model from the fold."""

@@ -1,8 +1,8 @@
 """Corpus sources/sinks.
 
 S1 (directory corpus scan, dataset.py:82-128) reads a loose ``.txt``
-directory as one row per file; S4 writes predictions as a parquet table
-or as a reference-shaped directory of ``.ann`` files.
+directory as one row per file; S4 writes predictions as a
+reference-shaped directory of ``.ann`` files.
 """
 
 from __future__ import annotations
@@ -19,12 +19,6 @@ def read_text_dir(spark: SparkSession, path: str, glob: str = "*.txt") -> DataFr
         F.regexp_extract(F.input_file_name(), r"([^/]+)\.[a-z]+$", 1).alias("file_name"),
         F.col("value").alias("text"),
     )
-
-
-def write_mentions(mentions: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S4: prediction sink — the mentions table partitioned for downstream
-    co-located joins (bucket-by-doc in production Iceberg)."""
-    mentions.write.mode(mode).parquet(path)
 
 
 def write_brat_dir(
@@ -49,7 +43,7 @@ def write_brat_dir(
     for "no content" — still no driver collect.
 
     Local/shared-filesystem sink: on a cluster without a shared mount the
-    at-scale sink remains write_mentions (parquet, bucket-by-doc); this is
+    at-scale sink is the mentions table itself, written as parquet; this is
     the directory-layout convenience the reference CLI journey expects.
     """
     import os

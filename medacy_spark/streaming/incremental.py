@@ -43,6 +43,21 @@ def _write_batch(out: DataFrame, output_path: str, batch_id: int) -> None:
     out.write.mode("overwrite").parquet(f"{output_path}/batch={batch_id}")
 
 
+def _start_available_now(
+    stream_df: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_path: str,
+) -> StreamingQuery:
+    """Start ``process`` as the foreachBatch sink over everything the
+    stream has now (availableNow), tracked by ``checkpoint_path``."""
+    return (
+        stream_df.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def run_incremental(
     stream_df: DataFrame,
     stage_fn: Callable[[DataFrame], DataFrame],
@@ -55,48 +70,25 @@ def run_incremental(
     windows/joins/aggregations exactly as in batch mode. Exactly-once at
     the sink via the batch_id-keyed idempotent write (`_write_batch`) on
     top of the checkpointLocation's replay tracking.
+
+    Additive-state incremental aggregation is the same call: when
+    ``stage_fn`` maps a micro-batch to a KEYED COUNT relation, each batch
+    appends its partials and `merged_counts` folds the log at read time.
+    Because counts form a commutative monoid, append+fold equals the
+    whole-corpus recompute EXACTLY — provided the unit stage_fn
+    aggregates over (the document) never straddles batches, which a file
+    stream guarantees for row-per-document corpora. This is the streaming
+    shape for corpus-scale statistics that are sums in disguise:
+    co-occurrence counts (embeddings_train), token/vocab frequencies,
+    n-gram tables. The batch_id-keyed overwrite makes a replayed batch
+    rewrite rather than double-count; a rerun with no new input appends
+    nothing (both gated in test_streaming_incremental).
     """
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         _write_batch(stage_fn(batch_df), output_path, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def run_incremental_counts(
-    stream_df: DataFrame,
-    count_fn: Callable[[DataFrame], DataFrame],
-    output_path: str,
-    checkpoint_path: str,
-) -> StreamingQuery:
-    """Additive-state incremental aggregation: ``count_fn`` maps a
-    micro-batch to a KEYED COUNT relation and each batch appends its
-    partials; `merged_counts` folds the log at read time. Because counts
-    form a commutative monoid, append+fold equals the whole-corpus
-    recompute EXACTLY — provided the unit count_fn aggregates over (the
-    document) never straddles batches, which a file stream guarantees
-    for row-per-document corpora. This is the streaming shape for
-    corpus-scale statistics that are sums in disguise: co-occurrence
-    counts (embeddings_train), token/vocab frequencies, n-gram tables.
-    Exactly-once per micro-batch: checkpointLocation tracks progress and
-    the batch_id-keyed overwrite (`_write_batch`) makes a replayed batch
-    rewrite rather than double-count; a rerun with no new input appends
-    nothing (both gated in test_streaming_incremental)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _write_batch(count_fn(batch_df), output_path, batch_id)
-
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(stream_df, process, checkpoint_path)
 
 
 def run_incremental_packing(
@@ -157,12 +149,7 @@ def run_incremental_packing(
         )
         _write_batch(tot, f"{output_path}/totals", batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(stream_df, process, checkpoint_path)
 
 
 def run_incremental_dedup(
@@ -174,7 +161,7 @@ def run_incremental_dedup(
     **dedup_kw,
 ) -> StreamingQuery:
     """Streaming near-dup removal over a growing corpus — the additive-
-    state shape of ``run_incremental_counts`` applied to dedup: the
+    state shape of ``run_incremental``'s counts applied to dedup: the
     persisted band-bucket relation (``state_path``) only ever APPENDS,
     and each micro-batch LSH-dedups against the accepted corpus via a
     band equi-join on it, so there is NO full-corpus recompute per batch
@@ -222,12 +209,7 @@ def run_incremental_dedup(
         _write_batch(survivors, survivors_path, batch_id)
         _write_batch(new_state, state_path, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(stream_df, process, checkpoint_path)
 
 
 def compact_state(spark: SparkSession, state_path: str) -> int:

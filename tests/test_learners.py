@@ -204,6 +204,75 @@ def test_crf_sharded_ipm_path(spark, ambiguous_corpus):
     assert f["system"] == 1.0
 
 
+def _sequence_learners():
+    from medacy_spark.learners import CRFLearner
+    from medacy_spark.learners_nn import BiLSTMCRFLearner
+    from medacy_spark.learners_tx import TransformerCRFLearner
+
+    return {
+        "perceptron": lambda: PerceptronLearner(epochs=3),
+        "crf": lambda: CRFLearner(epochs=3),
+        "bilstm_crf": lambda: BiLSTMCRFLearner(
+            embedding_dim=5, char_dim=3, hidden_dim=4, epochs=2
+        ),
+        "transformer_crf": lambda: TransformerCRFLearner(
+            d_model=8, n_heads=2, d_ff=12, n_layers=1, char_dim=4,
+            embedding_dim=5, epochs=2, using_crf=True,
+        ),
+    }
+
+
+@pytest.mark.parametrize("name", list(_sequence_learners()))
+def test_fit_sharded_one_shard_one_round_equals_local_fit(spark, name):
+    """With one shard and one round, ShardedFit.fit_sharded is exactly a
+    local fit over the corpus in (doc_id, sent_id) order with the global
+    label set: the mixing loop, the shard sort and each learner's hooks
+    (start state, shard fit, average, adopt) add nothing of their own."""
+    import numpy as np
+
+    make = _sequence_learners()[name]
+    sents = {
+        (2, 0): (["felt", "x", "today"], ["O", "ADE", "O"]),
+        (0, 1): (["take", "x", "now"], ["O", "Drug", "O"]),
+        (1, 0): (["dose", "of", "aspirin", "daily"], ["O", "O", "Drug", "O"]),
+        (0, 0): (["the", "rash", "was", "bad"], ["O", "ADE", "O", "O"]),
+        (1, 1): (["aspirin", "helps"], ["Drug", "O"]),
+    }
+    sent_df = spark.createDataFrame(
+        [(d, s, w, g) for (d, s), (w, g) in sents.items()],
+        "doc_id long, sent_id int, words array<string>, labels array<string>",
+    )
+    sharded = make().fit_sharded(sent_df, n_shards=1, mix_rounds=1)
+    examples = [sents[k] for k in sorted(sents)]
+    labels = sorted({"O"} | {y for _, g in examples for y in g})
+    local = make().fresh().fit(examples, labels=labels)
+
+    assert sharded.labels == local.labels == labels
+    if hasattr(local, "weights"):
+        assert sharded.weights == local.weights
+        return
+    a, b = sharded.export_params(), local.export_params()
+    assert a["vocab"] == b["vocab"]
+    tensors = [k for k in b if k not in ("labels", "vocab")]
+    assert sorted(a) == sorted(b)
+    for k in tensors:
+        pairs = zip(a[k], b[k]) if isinstance(b[k], tuple) else [(a[k], b[k])]
+        for x, y in pairs:
+            assert np.array_equal(x, y), k
+
+
+@pytest.mark.parametrize("name", list(_sequence_learners()))
+def test_fit_sharded_empty_frame_gives_untrained_model(spark, name):
+    """A sentence frame with no rows has no shards: every learner keeps
+    its start state and scores all-O, instead of failing in the mix."""
+    empty = spark.createDataFrame(
+        [], "doc_id long, sent_id int, words array<string>, labels array<string>"
+    )
+    learner = _sequence_learners()[name]().fit_sharded(empty, n_shards=2, mix_rounds=2)
+    assert learner.labels == ["O"]
+    assert learner([["take", "x"]]) == [["O", "O"]]
+
+
 @pytest.mark.skipif(not os.path.isdir(REF), reason="reference fixtures unavailable")
 def test_crf_learns_reference_corpus_with_sentence_splits(spark):
     """Real-corpus learning gate: with the clinical tokenizer supplying

@@ -228,13 +228,13 @@ def test_bilstm_fit_sharded_model_averaging(spark):
     sent_df = spark.createDataFrame(
         rows, "doc_id long, sent_id int, words array<string>, labels array<string>"
     )
-    nn = BiLSTMCRFLearner(embedding_dim=10, char_dim=4, hidden_dim=12, epochs=60, lr=0.05)
-    nn.fit_sharded(sent_df, n_shards=3, mix_rounds=3, epochs_per_round=30)
+    nn = BiLSTMCRFLearner(embedding_dim=10, char_dim=4, hidden_dim=12, epochs=90, lr=0.05)
+    nn.fit_sharded(sent_df, n_shards=3, mix_rounds=3)
     acc = sum(nn([w])[0][5] == tags[5] for w, tags in test) / len(test)
     assert acc == 1.0
     # deterministic: same sharding, same seed, same result
-    nn2 = BiLSTMCRFLearner(embedding_dim=10, char_dim=4, hidden_dim=12, epochs=60, lr=0.05)
-    nn2.fit_sharded(sent_df, n_shards=3, mix_rounds=3, epochs_per_round=30)
+    nn2 = BiLSTMCRFLearner(embedding_dim=10, char_dim=4, hidden_dim=12, epochs=90, lr=0.05)
+    nn2.fit_sharded(sent_df, n_shards=3, mix_rounds=3)
     assert nn([w for w, _ in test]) == nn2([w for w, _ in test])
 
 

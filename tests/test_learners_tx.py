@@ -175,7 +175,7 @@ def test_transformer_fit_sharded_model_averaging(spark):
         rows, "doc_id long, sent_id int, words array<string>, labels array<string>"
     )
     learner = TransformerCRFLearner(epochs=60, lr=0.05)
-    learner.fit_sharded(sent_df, n_shards=4, mix_rounds=3, epochs_per_round=20)
+    learner.fit_sharded(sent_df, n_shards=4, mix_rounds=3)
     it = sum(1 for w, tags in test if learner([w])[0][-2] == tags[-2]) / len(test)
     assert it == 1.0
 

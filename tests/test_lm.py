@@ -88,13 +88,13 @@ def test_training_plan_single_corpus_pass(spark):
 
 def test_streaming_lm_counts_match_batch(spark, tmp_path):
     """The LM's additive-state shape: per-batch lm_count_relation
-    partials appended via run_incremental_counts (exactly-once,
+    partials appended via run_incremental (exactly-once,
     late-arrival resume), lm_from_counts over the raw append log —
     must equal whole-corpus train_ngram_lm EXACTLY, down to every
     scored perplexity."""
     from medacy_spark.operators.lm import lm_count_relation, lm_from_counts
     from medacy_spark.streaming.incremental import (
-        run_incremental_counts,
+        run_incremental,
         stream_documents,
     )
 
@@ -104,14 +104,14 @@ def test_streaming_lm_counts_match_batch(spark, tmp_path):
     src, out, ck = (str(tmp_path / p) for p in ("docs", "counts", "ck"))
     schema = "doc_id bigint, text string"
     docs.filter("doc_id < 250").write.parquet(src)
-    q = run_incremental_counts(
+    q = run_incremental(
         stream_documents(spark, src, schema),
         lambda b: lm_count_relation(b, n=2),
         out, ck,
     )
     q.awaitTermination(180)
     docs.filter("doc_id >= 250").write.mode("append").parquet(src)
-    q2 = run_incremental_counts(
+    q2 = run_incremental(
         stream_documents(spark, src, schema),
         lambda b: lm_count_relation(b, n=2),
         out, ck,

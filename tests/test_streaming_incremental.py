@@ -15,7 +15,7 @@ def test_incremental_cooccurrence_counts_match_batch(spark, tmp_path):
     from medacy_spark.operators.embeddings_train import cooccurrence_pairs
     from medacy_spark.streaming.incremental import (
         merged_counts,
-        run_incremental_counts,
+        run_incremental,
         stream_documents,
     )
 
@@ -38,12 +38,12 @@ def test_incremental_cooccurrence_counts_match_batch(spark, tmp_path):
 
     schema = "doc_id bigint, text string"
     docs.filter("doc_id < 250").write.parquet(src)
-    q = run_incremental_counts(stream_documents(spark, src, schema), count_fn, out, ck)
+    q = run_incremental(stream_documents(spark, src, schema), count_fn, out, ck)
     q.awaitTermination(180)
 
     # late arrival; SAME checkpoint -> only the new files are processed
     docs.filter("doc_id >= 250").write.mode("append").parquet(src)
-    q2 = run_incremental_counts(stream_documents(spark, src, schema), count_fn, out, ck)
+    q2 = run_incremental(stream_documents(spark, src, schema), count_fn, out, ck)
     q2.awaitTermination(180)
 
     got = merged_counts(spark, out, ("word", "ctx")).select("word", "ctx", "n")
@@ -53,7 +53,7 @@ def test_incremental_cooccurrence_counts_match_batch(spark, tmp_path):
 
     # idempotence: no new input, same checkpoint -> nothing appended
     n_rows = spark.read.parquet(out).count()
-    q3 = run_incremental_counts(stream_documents(spark, src, schema), count_fn, out, ck)
+    q3 = run_incremental(stream_documents(spark, src, schema), count_fn, out, ck)
     q3.awaitTermination(180)
     assert spark.read.parquet(out).count() == n_rows
 
