@@ -38,7 +38,6 @@ from medacy_spark.corpus import lexicons as lex
 from medacy_spark.session import local_table
 
 KEYWORDS = ["join", "filter", "sort", "scan", "merge", "group", "window", "hash"]
-STOPSET = ["the", "a"]
 
 # ---------------------------------------------------------------- Spark side
 

@@ -53,12 +53,6 @@ FORMS = ["tablet", "capsule", "pill", "injection", "spray", "patch", "drop"]
 # unit_component.py:132-149 (routes).
 ROUTES = ["po", "iv", "im", "orally", "subcutaneous", "topical", "intravenous"]
 
-# n2c2-2018 tag set (north star schema).
-N2C2_TAGS = [
-    "Drug", "Strength", "Dose", "Route", "Frequency", "Duration",
-    "Form", "ADE", "Reason",
-]
-
 # All dosage units (Strength/Dose right-neighbors of a number).
 DOSE_UNITS = MASS_UNITS + VOLUME_UNITS
 

@@ -4,8 +4,7 @@ The north-rule input table carries ``html: binary`` and ``text: string`` with
 the invariant that our extractor recovers ``text`` byte-identically from
 ``html`` (BASELINE.json input_hint). The reference has no HTML stage — its
 unit of input is a raw ``.txt`` file (medacy/data/dataset.py:101-128) — so
-this pair is defined by *our* engine and versioned: ``EXTRACTOR_VERSION``
-participates in lineage rows.
+this pair is defined by *our* engine.
 
 Escaping is the minimal XML triple (& < >), chosen so that
 ``extract(wrap(text)) == text`` holds for **every** string, exactly.
@@ -27,7 +26,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-EXTRACTOR_VERSION = "1"
 
 _PRE = '<html><head><meta charset="utf-8"></head><body><p>'
 _POST = "</p></body></html>"

@@ -15,8 +15,6 @@ band join instead.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -135,28 +133,6 @@ def ambiguity(
     )
 
 
-def ambiguity_entities(a: DataFrame, b: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Reference-exact ambiguity count semantics (annotations.py:174-195):
-    the result is a dict keyed by the LEFT entity, so `len(ambiguity)` is
-    the number of distinct left mentions having ≥1 overlapping mention with
-    a different label in `b` — directional, no pair dedup (golden 25→26 of
-    test_annotation.py:95-105). Returns the distinct left mention rows."""
-    left = a.select(
-        F.col(id_col).alias("id"), F.col("tag").alias("tag_a"),
-        F.col("start").alias("start_a"), F.col("end").alias("end_a"),
-        F.col("text").alias("text_a"),
-    )
-    right = b.select(
-        F.col(id_col).alias("id2"), F.col("tag").alias("tag_b"),
-        F.col("start").alias("start_b"), F.col("end").alias("end_b"),
-    )
-    ov = overlap_len(
-        F.col("start_a"), F.col("end_a"), F.col("start_b"), F.col("end_b")
-    )
-    cond = (F.col("id") == F.col("id2")) & (F.col("tag_a") != F.col("tag_b")) & (ov != 0)
-    return left.join(right, cond, "left_semi").distinct()
-
-
 def confusion_cells(
     gold: DataFrame,
     system: DataFrame,
@@ -213,33 +189,6 @@ def confusion_cells(
     return diag.unionByName(off)
 
 
-def confusion_matrix(
-    gold: DataFrame,
-    system: DataFrame,
-    leniency: float = 0.0,
-    id_col: str = "doc_id",
-    entities: Sequence[str] | None = None,
-) -> DataFrame:
-    """A2: square matrix over the label set (annotations.py:197-232).
-
-    Cells from :func:`confusion_cells` (reference-exact last-candidate
-    off-diagonals, distinct-gold diagonals), pivoted: one row per gold tag,
-    one column per system tag, missing combos zero-filled.
-    """
-    cells = confusion_cells(gold, system, leniency, id_col)
-    if entities is None:
-        entities = sorted(
-            r["tag"] for r in labels(gold.unionByName(system).select("tag")).collect()
-        )
-    return (
-        cells.groupBy("gold_tag")
-        .pivot("sys_tag", list(entities))
-        .sum("cnt")
-        .na.fill(0)
-        .orderBy("gold_tag")
-    )
-
-
 def lexical_variation(mentions: DataFrame) -> DataFrame:
     """A7: distinct mention texts ÷ total mentions per tag
     (lexical_variation.py:17-49)."""
@@ -267,11 +216,6 @@ def to_ann_lines(mentions: DataFrame, id_col: str = "doc_id") -> DataFrame:
             F.col("t_num"), F.col("tag"), F.col("start"), F.col("end"), F.col("_text"),
         ).alias("line"),
     )
-
-
-BRAT_PATTERN = r"^T(\d+)\t(\S+) (\d+ \d+;)*(\d+) (\d+;)*.*?(\d+)\t(.*)$"
-# simplified two-group extraction for the common single-span case:
-BRAT_SIMPLE = r"^T(\d+)\t(\S+) (\d+) (\d+)\t(.*)$"
 
 
 def from_ann_lines(lines: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -294,7 +294,7 @@ def band_table(
     """(id, band, bucket) — the banded minhash relation as a first-class
     output: the ADDITIVE state of incremental dedup. A new batch
     candidate-joins against the stored band rows, and its survivors'
-    rows append (streaming/incremental.run_incremental_dedup). Same
+    rows append (dedup_batch_against_state). Same
     arithmetic as minhash_lsh_candidates' internal banding — both build
     their bucket keys from _band_bucket_cols, so a stored state and a
     fresh sketch can never drift."""
@@ -627,13 +627,13 @@ def dedup_batch_against_state(
     Returns ``(survivors, survivor_band_rows)`` — append the latter to
     the state.
 
-    Survivor sets are order-dependent BY DESIGN — every streaming dedup
+    Survivor sets are order-dependent BY DESIGN — every incremental dedup
     is (first writer wins). The pinned properties instead (gated in
-    test_streaming_incremental): (a) against an empty state this IS exactly
-    dedup_corpus(batch); (b) accepted docs are pairwise non-near-dup
-    across ALL batches, because the state only ever holds survivors;
-    (c) an identical batch sequence yields identical survivors,
-    including across a kill-and-resume.
+    test_dedup_similarity and the incremental_dedup oracle): (a) against
+    an empty state this IS exactly dedup_corpus(batch); (b) accepted docs
+    are pairwise non-near-dup across ALL batches, because the state only
+    ever holds survivors; (c) an identical batch sequence yields
+    identical survivors.
 
     Scale shape: the state join is equi on (band, bucket); the join
     itself prunes the state to colliding buckets — no full-corpus scan,
@@ -732,43 +732,6 @@ def dedup_batch_against_state(
         survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
     )
     return survivors, new_state
-
-
-def clean_corpus(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_quality: float = 0.3,
-    lang: str | None = None,
-) -> DataFrame:
-    """Training-data hygiene composition: language filter → quality filter →
-    exact dedup (keep min id) → near-dup removal. Each stage is the
-    operator documented elsewhere; this is the composed pipeline a 100 TB
-    pretraining corpus runs before tokenization."""
-    from medacy_spark.operators.textstats import detect_language, quality_score
-
-    out = df
-    if lang:
-        out = out.filter(detect_language(F.col(text_col)) == lang)
-    out = out.filter(quality_score(F.col(text_col)) >= min_quality)
-    # the filtered corpus is read by FOUR consumers downstream (the dedup
-    # key aggregate, the survivor semi-join, the minhash sketch and the
-    # final anti-join) — cut the lineage once so the language/quality
-    # filters run a single time (at 100 TB this is where a production
-    # pipeline materializes the post-hygiene intermediate table)
-    out = out.localCheckpoint(eager=False)
-    # exact dedup: keep the smallest id per identical text. Shape matters
-    # at corpus scale: a Window.partitionBy(hash(text)) would shuffle FULL
-    # rows (text payload included) to co-locate each hash; the map-side-
-    # combined aggregate shuffles only (hash, id) pairs, and the survivor
-    # semi-join shuffles by the doc key — free on a bucket(id) source.
-    keep = (
-        out.select(F.col(id_col), F.xxhash64(text_col).alias("_h"))
-        .groupBy("_h")
-        .agg(F.min(id_col).alias(id_col))
-    )
-    out = out.join(keep.select(id_col), id_col, "left_semi")
-    return dedup_corpus(out, text_col, id_col)
 
 
 def embedding_near_dups(

@@ -25,12 +25,6 @@ from pyspark.sql import functions as F
 from medacy_spark.operators.sequence import LIKE_NUM, feature_window
 from medacy_spark.plans.numbering import global_row_index
 
-WINDOW_SIZES = {"clinical": 3, "systematic_review": 10, "fda_nano": 6, "lstm": 0}
-
-# The reference's built-in pipelines all feed pos_ into the CRF windows
-# (clinical_pipeline.py:41 and siblings).
-CLINICAL_FEATURES = ("pos_", "shape_", "prefix_", "suffix_", "word")
-
 # Universal-POS-ish closed classes for the deterministic rule tagger
 # (F18 pos_ source). First match wins — the ordering mirrors the CASE
 # chain replayed by the contract oracle; never reorder, only append.
@@ -238,10 +232,9 @@ def text_extractor_tuples(tokens: DataFrame, id_col: str = "doc_id") -> DataFram
     are the BARE token texts per sentence (not keyed dicts), indices the
     (idx, idx+len) spans, one row per sentence:
     (id, sent_id, features array<string>, indices
-    array<struct<start,end>>). Reachable from a pipeline spec via
-    ``feature_extractor: 'text'`` (pipeline.SparkPipeline); the
-    windowed-dict variant of the same configuration is
-    lstm_systematic_review_pipeline.py:48-52's window-0 extractor.
+    array<struct<start,end>>). The windowed-dict variant of the same
+    configuration is lstm_systematic_review_pipeline.py:48-52's window-0
+    extractor.
 
     One groupBy over the tokenizer's own (doc, sent) partitioning —
     map-side combined, no window pass needed at window 0."""

@@ -589,28 +589,6 @@ def _pagerank_on_driver(
     }))
 
 
-def degree_stats(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-node (node, out_degree, in_degree) — one pass per direction,
-    full-outer merged; the cheap KG health profile that precedes any
-    centrality run."""
-    o = edges.groupBy(F.col(src).alias("node")).agg(
-        F.count("*").alias("out_degree")
-    )
-    i = edges.groupBy(F.col(dst).alias("node")).agg(
-        F.count("*").alias("in_degree")
-    )
-    return (
-        o.join(i, "node", "full")
-        .select(
-            "node",
-            F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-            F.coalesce("in_degree", F.lit(0)).alias("in_degree"),
-        )
-    )
-
-
 @_iterative
 def random_walks(
     edges: DataFrame,
@@ -679,40 +657,6 @@ def random_walks(
     )).localCheckpoint()
     _release(cut, e, *frontiers)
     return out
-
-
-def node_embeddings(
-    edges: DataFrame,
-    *,
-    dim: int = 16,
-    n_walks: int = 8,
-    walk_len: int = 16,
-    window: int = 4,
-    src: str = "src",
-    dst: str = "dst",
-    salt: str = "",
-):
-    """DeepWalk node embeddings end to end: :func:`random_walks` as the
-    sentence corpus → the word2vec pipeline
-    (embeddings_train.train_word_vectors: co-occurrence + PPMI + SVD)
-    → (sorted node list, L2-normalized vectors).  Fully deterministic;
-    graph-close nodes land close in cosine space (gated in
-    test_weblinks).  The walk table is walk-count × walk-len × node
-    scale; everything downstream is the measured word2vec path."""
-    from pyspark.sql import functions as F  # local: keep module header slim
-
-    from medacy_spark.operators.embeddings_train import train_word_vectors
-
-    walks = random_walks(
-        edges, n_walks=n_walks, walk_len=walk_len, src=src, dst=dst, salt=salt
-    )
-    toks = walks.select(
-        F.col("start").alias("doc_id"),
-        F.col("walk_id").alias("sent_id"),
-        F.col("step").alias("tok_id"),
-        F.col("node").cast("string").alias("word"),
-    )
-    return train_word_vectors(toks, dim=dim, window=window)
 
 
 def same_as_edges(links: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -8,17 +8,15 @@ url with 10^6 spans) would still blow up a naive per-doc join.
 
 OSS Catalyst has no range-join optimization, so we implement the classic
 band join: assign each interval to every bucket of width B it touches,
-equi-join on (doc, bucket), post-filter the exact predicate, dedup pairs
-that met in several buckets. Cost drops from O(n·m) per doc to
-O(n·m / #buckets) with perfectly partitionable work.
+equi-join on (doc, bucket), post-filter the exact predicate, and keep
+each pair in the one bucket its attribution rule names. Cost drops from
+O(n·m) per doc to O(n·m / #buckets) with perfectly partitionable work.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from medacy_spark.functions.spans import overlap_len
 
 
 def _bucketed(df: DataFrame, id_col: str, start: str, end: str, bucket: int, side: str) -> DataFrame:
@@ -36,32 +34,6 @@ def _bucketed(df: DataFrame, id_col: str, start: str, end: str, bucket: int, sid
         b,
     )
     return renamed
-
-
-def interval_overlap_join(
-    left: DataFrame,
-    right: DataFrame,
-    id_col: str = "doc_id",
-    bucket: int = 64,
-    extra_pred=None,
-) -> DataFrame:
-    """All pairs (l, r) with same id and overlapping [start, end) spans.
-
-    Output columns: id, l_* and r_* for every non-id column. Pairs meeting
-    in multiple buckets are kept once (the pair is attributed to the bucket
-    containing the overlap start — a dedup-free trick: no distinct needed).
-    """
-    lb = _bucketed(left, id_col, "start", "end", bucket, "l")
-    rb = _bucketed(right, id_col, "start", "end", bucket, "r")
-    j = lb.join(rb, ["_id", "_bucket"])
-    ov_start = F.greatest("l_start", "r_start")
-    cond = (
-        overlap_len(F.col("l_start"), F.col("l_end"), F.col("r_start"), F.col("r_end"))
-        != 0
-    ) & ((ov_start / bucket).cast("long") == F.col("_bucket"))
-    if extra_pred is not None:
-        cond = cond & extra_pred
-    return j.filter(cond).drop("_bucket").withColumnRenamed("_id", id_col)
 
 
 def containment_join(

@@ -93,8 +93,7 @@ def train_ngram_lm(
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     # grams AND vocab read the token arrays — cut the lineage so the
-    # corpus split/lower runs once, not once per consumer (r8; same rule
-    # as lm_count_relation below)
+    # corpus split/lower runs once, not once per consumer (r8)
     toks = docs.select(_tokens(docs, text_col).alias("_toks")).localCheckpoint(
         eager=False
     )
@@ -106,62 +105,6 @@ def train_ngram_lm(
     ctx_counts = gram_counts.groupBy("ctx").agg(F.sum("c").alias("c_ctx"))
     vocab = toks.select(F.explode("_toks").alias("w")).agg(
         F.count_distinct("w").cast("double").alias("v")
-    )
-    return NgramLM(gram_counts, ctx_counts, vocab, n, float(k))
-
-
-def lm_count_relation(
-    docs: DataFrame,
-    *,
-    n: int = 2,
-    text_col: str = "text",
-) -> DataFrame:
-    """The ADDITIVE keyed-count relation for streaming/incremental LM
-    training (a count stage for ``streaming.incremental.run_incremental``):
-    gram rows (ctx, w, c) plus vocabulary rows (ctx NULL, w=token, c).  Counts
-    form a commutative monoid, so per-batch partials appended and
-    folded equal the whole-corpus relation exactly;
-    :func:`lm_from_counts` rebuilds the model from the fold."""
-    toks = docs.select(_tokens(docs, text_col).alias("_toks")).localCheckpoint(
-        eager=False  # grams + vocab both read it: one pass per batch
-    )
-    grams = (
-        toks.select(F.explode(_gram_structs(F.col("_toks"), n)).alias("g"))
-        .groupBy("g.ctx", "g.w")
-        .agg(F.count("*").alias("c"))
-    )
-    vocab = (
-        toks.select(F.explode("_toks").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("c"))
-        .select(F.lit(None).cast("string").alias("ctx"), "w", "c")
-    )
-    return grams.unionByName(vocab)
-
-
-def lm_from_counts(
-    rel: DataFrame,
-    *,
-    n: int = 2,
-    k: float = 0.1,
-    min_count: int = 1,
-) -> NgramLM:
-    """Rebuild an :class:`NgramLM` from (possibly multi-batch partial)
-    :func:`lm_count_relation` rows — folds first, so it accepts both the
-    raw append log and an already-merged relation."""
-    gram_counts = (
-        rel.filter(F.col("ctx").isNotNull())
-        .groupBy("ctx", "w")
-        .agg(F.sum("c").alias("c"))
-    )
-    if min_count > 1:
-        gram_counts = gram_counts.filter(F.col("c") >= min_count)
-    gram_counts = gram_counts.localCheckpoint(eager=False)
-    ctx_counts = gram_counts.groupBy("ctx").agg(F.sum("c").alias("c_ctx"))
-    vocab = (
-        rel.filter(F.col("ctx").isNull())
-        .select("w")
-        .agg(F.count_distinct("w").cast("double").alias("v"))
     )
     return NgramLM(gram_counts, ctx_counts, vocab, n, float(k))
 

@@ -66,9 +66,8 @@ TIME_LOWER = [
     "sec", "second", "seconds", "min", "minute", "minutes", "hr", "hour",
     "day", "days", "week", "weeks", "month", "months", "year", "years", "yrs",
 ]
-# 97-108 (singles; phrases below)
+# 97-108 (singles; the phrases are matched in `unit_spans`)
 FREQ_LOWER = ["bid", "prn", "qid", "tid", "qd", "daily", "hs"]
-FREQ_PHRASES = [["as", "needed"], ["once", "a", "day"], ["twice", "a", "day"]]
 # 111-130
 FORM_ORTH = ["dose", "doses", "lotion", "powder", "amps"]
 FORM_LEMMA = [
@@ -83,13 +82,6 @@ ROUTE_LOWER = [
 ]
 ROUTE_ORTH = ["intravenous", "gtt"]
 ROUTE_LEMMA = ["injection"]
-ROUTE_PHRASES = [["by", "mouth"], ["mucous", "membrane"]]
-
-FAMILIES = [
-    "mass_unit", "volume_unit", "time_unit", "frequency_indicator",
-    "form_unit", "route_type", "measurement_unit", "measurement",
-    "duration_pattern",
-]
 
 
 def _lemma_strip(l: Column) -> Column:  # noqa: E741

@@ -46,7 +46,6 @@ def doc_token_offsets(
     text_col: str = "text",
     eos: bool = True,
     bucket_width: int = 1_000_000,
-    base_offset: int = 0,
 ) -> DataFrame:
     """(id_col, n_tok, offset): each doc's whitespace token count and its
     exclusive prefix sum in ``id_col`` order (+1 EOS slot after every doc
@@ -82,10 +81,7 @@ def doc_token_offsets(
     return local.join(F.broadcast(starts), "_bkt").select(
         id_col,
         "n_tok",
-        (
-            F.lit(int(base_offset)) + F.col("_bkt_start")
-            + F.col("_local_end") - step
-        ).alias("offset"),
+        (F.col("_bkt_start") + F.col("_local_end") - step).alias("offset"),
     )
 
 
@@ -97,14 +93,8 @@ def pack_sequences(
     text_col: str = "text",
     eos: bool = True,
     bucket_width: int = 1_000_000,
-    base_offset: int = 0,
 ) -> DataFrame:
     """The packing map: one row per (sequence, document) overlap.
-
-    ``base_offset`` starts the stream at a prior global token position —
-    the incremental hook (streaming/incremental.run_incremental_packing):
-    a new batch's windows continue exactly where the accepted stream
-    ended, mid-window included.
 
     Columns: ``seq_id`` (0-based window index), ``id_col``,
     ``start_in_seq`` (token position inside the window where the doc
@@ -120,7 +110,6 @@ def pack_sequences(
         text_col=text_col,
         eos=eos,
         bucket_width=bucket_width,
-        base_offset=base_offset,
     )
     L = F.lit(int(seq_len))
     end = F.col("offset") + F.col("n_tok")  # exclusive

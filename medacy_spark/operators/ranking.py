@@ -1,4 +1,4 @@
-"""Keyword relevance scoring (TF-IDF / BM25) over a document corpus.
+"""Keyword relevance scoring (BM25) over a document corpus.
 
 A webtext training-data pipeline scores crawl pages against seed keyword
 sets to route them into domain mixtures (e.g. "medical" pages for a
@@ -115,48 +115,4 @@ def bm25_scores(
             F.coalesce("n_hit_terms", F.lit(0)).alias("n_hit_terms"),
             F.coalesce("bm25", F.lit(0.0)).alias("bm25"),
         )
-    )
-
-
-def tfidf_scores(
-    df: DataFrame,
-    query_terms: list[str],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Plain ltc-style TF-IDF relevance: sum over matched query terms of
-    (1 + ln tf) * ln(N / df). Same plan shape as :func:`bm25_scores`."""
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
-    toks = F.split(F.col(text_col), " ")
-    base = df.select(id_col, toks.alias("_toks"))
-    terms = F.array(*[F.lit(t) for t in sorted(set(query_terms))])
-    hits = (
-        base.select(
-            id_col,
-            F.explode(F.filter(F.col("_toks"), lambda w: F.array_contains(terms, w))).alias(
-                "term"
-            ),
-        )
-        .groupBy(id_col, "term")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
-    dfreq = hits.groupBy("term").agg(F.count("*").alias("df"))
-    n = base.agg(F.count("*").cast("double").alias("n_docs"))
-    contrib = (F.lit(1.0) + F.log(F.col("tf").cast("double"))) * F.log(
-        F.col("n_docs") / F.col("df")
-    )
-    per_doc = (
-        hits.join(F.broadcast(dfreq), "term")
-        .join(F.broadcast(n))
-        .select(id_col, F.round(contrib, 9).alias("contrib"))
-        .groupBy(id_col)
-        .agg(F.round(F.sum("contrib"), 6).alias("tfidf"))
-    )
-    return (
-        df.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(id_col, F.coalesce("tfidf", F.lit(0.0)).alias("tfidf"))
     )

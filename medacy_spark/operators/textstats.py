@@ -222,18 +222,3 @@ def repetition_signals(
         )
         .drop("_len", "_dup")
     )
-
-
-def text_profile(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One row per doc with the full hygiene profile."""
-    t = F.col(text_col)
-    return df.select(
-        id_col,
-        token_count(t).alias("n_tokens"),
-        F.length(t).alias("n_chars"),
-        stopword_ratio(t).alias("stopword_ratio"),
-        punct_ratio(t).alias("punct_ratio"),
-        quality_score(t).alias("quality"),
-        detect_language(t).alias("lang_pred"),
-        doc_fingerprint(t).alias("fingerprint"),
-    )

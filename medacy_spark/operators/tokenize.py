@@ -220,61 +220,3 @@ def train_sentence_boundary(
     from medacy_spark.learners import PerceptronLearner
 
     return PerceptronLearner(epochs=epochs, window=window).fit(tagged)
-
-
-def resegment_sentences(
-    tokens: DataFrame, spark, boundary_model, id_col: str = "doc_id"
-) -> DataFrame:
-    """Re-derive (sent_id, tok_id) from a trained boundary model
-    (train_sentence_boundary, or any ``list[list[str]] ->
-    list[list[str]]`` callable emitting 'B'/'I'): score each document's
-    token sequence through the broadcast Arrow stage, then
-    sent_id = running count of 'B' tokens, tok_id = position within the
-    new sentence. One window pass after scoring, partitioned by doc —
-    co-partitioned with the tokenizer output. The first token of a doc
-    always opens sentence 0 regardless of its predicted tag."""
-    from pyspark.sql import Window
-
-    from medacy_spark.operators.ner_model import score_sentences
-
-    bc = spark.sparkContext.broadcast(boundary_model)
-    if "pos" not in tokens.columns:
-        # tok_id restarts per sentence: collapsing multi-sentence docs
-        # to one pseudo-sentence on it would produce duplicate sort keys
-        # and scramble the scored sequence — refuse rather than corrupt
-        raise ValueError(
-            "resegment_sentences needs a doc-wide 'pos' column "
-            "(tokenize_native keeps one); per-sentence tok_id cannot "
-            "order a whole document"
-        )
-    order = "pos"
-    # doc-wide sequence: collapse to one pseudo-sentence so the model
-    # sees the whole document in order
-    t = tokens.select(
-        id_col,
-        F.lit(0).alias("sent_id"),
-        F.col(order).cast("int").alias("tok_id"),
-        "idx", "end_idx", "word",
-    )
-    scored = score_sentences(t, bc, id_col)
-    w = Window.partitionBy(id_col).orderBy("tok_id")
-    # a token opens a sentence when the model says 'B' — or when it is
-    # the document's first token, whatever the model said (two stacked
-    # projections because window functions cannot nest; same
-    # partition+order, so the planner keeps one sort)
-    out = scored.withColumn(
-        "_opens",
-        ((F.col("label") == "B") | (F.row_number().over(w) == 1)).cast("int"),
-    ).withColumn(
-        "_sid",
-        (F.sum("_opens").over(w.rowsBetween(Window.unboundedPreceding, 0)) - 1)
-        .cast("int"),
-    )
-    w2 = Window.partitionBy(id_col, "_sid").orderBy("tok_id")
-    return out.select(
-        id_col,
-        F.col("tok_id").alias("pos"),
-        F.col("_sid").alias("sent_id"),
-        (F.row_number().over(w2) - 1).cast("int").alias("tok_id"),
-        "idx", "end_idx", "word",
-    )

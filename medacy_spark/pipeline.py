@@ -11,11 +11,7 @@ compiles the same spec into the Spark operators:
   tokenizer        → operators.tokenize.tokenize_{clinical,systematic_
                      review,character}; default = the single-space native
                      fast path (the spec's spaCy-model-default analogue)
-  window_size /
-  spacy_features   → features.extract_feature_tuples configuration
-  metamap +
-  semantic_types   → linking.cui_overlay include list ('none' → [] like
-                     MetaMapOverlayer(semantic_type_labels=[]))
+  window_size      → the learner's feature window (make_learner)
   learner          → 'CRF' → learners.CRFLearner (a REAL numpy
                      linear-chain CRF: l2-regularized SGD with exact
                      forward-backward, matching crf_learner.py:8-13
@@ -34,7 +30,10 @@ compiles the same spec into the Spark operators:
                      'perceptron' name our other learners directly.
 
 Validation errors mirror the reference's messages (missing required
-keys, unknown tokenizer, semantic_types required/invalid).
+keys, unknown tokenizer, semantic_types required/invalid). The learners
+build their own window features, so ``spacy_features`` is unused and
+``feature_extractor`` and ``semantic_types`` are only validated, as the
+reference validates them.
 """
 
 from __future__ import annotations
@@ -48,39 +47,22 @@ from pyspark.sql import DataFrame, SparkSession
 REQUIRED_KEYS = ["learner", "spacy_pipeline"]
 TOKENIZERS = ("clinical", "systematic_review", "character")
 
-# the reference's pipelines name spaCy attributes both with and without
-# the trailing underscore ('pos_' in clinical_pipeline.py:41, 'pos' in
-# lstm_systematic_review_pipeline.py:51) — normalize either spelling to
-# our column names so reference specs are copy-pastable
-FEATURE_ALIASES = {
-    "text": "word", "pos": "pos_", "shape": "shape_", "prefix": "prefix_",
-    "suffix": "suffix_", "head": "head_", "lower": "lower_",
-}
-
 
 class SparkPipeline:
-    """A compiled pipeline: tokenize → (overlay) → featurize → model."""
+    """A compiled pipeline: tokenize → model."""
 
     def __init__(self, spec: dict, entities: Sequence[str] = ()):
         self.spec = spec
         self.entities = list(entities)
         self.window_size = int(spec.get("window_size", 0))
-        # the reference's FeatureExtractor defaults to spacy_features=
-        # ['text'] when the spec omits the key (json_to_pipeline.py:136) —
-        # 'word' is our surface-form analogue; richer feature sets are
-        # opt-in via the spec, either attribute spelling accepted
-        self.feature_cols = tuple(
-            FEATURE_ALIASES.get(f, f) for f in spec.get("spacy_features", ["word"])
-        )
         self.tokenizer = spec.get("tokenizer")
-        self.semantic_types = spec.get("semantic_types")
         # 'discrete' (default) = the windowed FeatureExtractor; 'text' =
         # the TextExtractor (window 0, bare token texts)
-        self.feature_extractor = spec.get("feature_extractor", "discrete")
-        if self.feature_extractor not in ("discrete", "text"):
+        extractor = spec.get("feature_extractor", "discrete")
+        if extractor not in ("discrete", "text"):
             raise ValueError(
                 "'feature_extractor' must be 'discrete' or 'text', "
-                f"but is {self.feature_extractor!r}"
+                f"but is {extractor!r}"
             )
 
     # ------------------------------------------------------------ stages
@@ -96,35 +78,6 @@ class SparkPipeline:
             "character": tk.tokenize_character,
         }[self.tokenizer]
         return fn(documents, id_col)
-
-    def overlay_cuis(
-        self, tokens: DataFrame, candidates: DataFrame, id_col: str = "doc_id"
-    ) -> DataFrame:
-        """MetaMap-shaped overlay per the spec's semantic_types: 'all' →
-        no filter + all flags (include=None), 'none' → feature_cui only
-        (include=[]), list → filter + flags for those types
-        (metamap_component.py:94-136)."""
-        from medacy_spark.operators.linking import cui_overlay
-
-        st = self.semantic_types
-        include = None if st in ("all", None) else ([] if st == "none" else tuple(st))
-        return cui_overlay(tokens, candidates, id_col, include_sem_types=include)
-
-    def featurize(self, tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
-        from medacy_spark.operators.features import (
-            extract_feature_tuples,
-            text_extractor_tuples,
-        )
-
-        # feature_extractor: 'text' selects the reference's TextExtractor
-        # (text_extractor.py:5-30): bare token texts per sentence, no
-        # window, no feature dicts — the BERT-facing shape
-        if self.feature_extractor == "text":
-            return text_extractor_tuples(tokens, id_col=id_col)
-        return extract_feature_tuples(
-            tokens, window_size=self.window_size,
-            feature_cols=self.feature_cols, id_col=id_col,
-        )
 
     def make_learner(self):
         from medacy_spark.learners import CRFLearner, PerceptronLearner

@@ -170,12 +170,6 @@ def parse_ast(lines: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def invalid_lines(lines: DataFrame, pattern: str) -> DataFrame:
-    """The reference logs skipped-line counts (con_to_brat.py:32-34 stats);
-    relationally that's just the anti filter."""
-    return lines.filter(~F.col("line").rlike(pattern) & (F.length(F.trim("line")) > 0))
-
-
 def ade_to_brat_lines(
     rel_lines: DataFrame, id_col: str = "doc_id", file_col: str = "file_name"
 ) -> DataFrame:

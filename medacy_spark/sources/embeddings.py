@@ -1,30 +1,14 @@
-"""Word-embedding file source (S6) -> broadcast lookup.
+"""Word-embedding file source (S6) -> driver-side lookup.
 
 The reference loads gensim word2vec text files into KeyedVectors on one
 node (nn/vectorizer.py:39-46; fixture format at
 medacy/tests/sample_data/test_word_embeddings.txt: optional `count dim`
-header line, then `word v1 v2 ...`). Here the file becomes a DataFrame
-(usable in joins) and/or a driver-side dict broadcast to executors for the
-scoring UDF — the BASELINE "broadcast of the gazetteer/linker artifacts"
-shape.
+header line, then `word v1 v2 ...`). Embedding tables are model artifacts,
+dimension-scale, so the file is read on the driver into the dict the
+neural learners take.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def read_word2vec_text(spark: SparkSession, path: str) -> DataFrame:
-    """-> (word string, vec array<double>). Skips a `count dim` header when
-    present (two integer tokens on the first line)."""
-    raw = spark.read.text(path).select(F.col("value").alias("line"))
-    raw = raw.filter(~F.col("line").rlike(r"^\d+\s+\d+\s*$"))
-    parts = F.split(F.trim("line"), r"\s+")
-    return raw.select(
-        F.element_at(parts, 1).alias("word"),
-        F.transform(F.slice(parts, 2, 100000), lambda x: x.cast("double")).alias("vec"),
-    ).filter(F.size("vec") > 0)
 
 
 def load_word_vectors_local(path: str) -> dict[str, list[float]]:
@@ -74,11 +58,3 @@ def load_word_vectors_local(path: str) -> dict[str, list[float]]:
                 )
             out[key] = vec
     return out
-
-
-def broadcast_embeddings(spark: SparkSession, df: DataFrame):
-    """Collect (small) embedding table to the driver and broadcast — for use
-    inside Arrow-batched scoring UDFs. The table must be dimension-scale
-    (gazetteer/linker artifacts), never corpus-scale."""
-    lookup = {r["word"]: list(r["vec"]) for r in df.collect()}
-    return spark.sparkContext.broadcast(lookup)

@@ -60,7 +60,7 @@ def test_ngram_jaccard_exact_value(spark):
 
 
 def test_dedup_and_clean_corpus(spark):
-    from medacy_spark.operators.dedup import clean_corpus, dedup_corpus
+    from medacy_spark.operators.dedup import dedup_corpus
 
     base = ("the quick brown fox jumps over the lazy dog and then runs far "
             "away to the old barn where it sleeps all day long")
@@ -77,9 +77,6 @@ def test_dedup_and_clean_corpus(spark):
     assert 1 in kept and 4 in kept and 5 in kept
     assert 2 not in kept        # exact dup removed (same cluster, higher id)
     assert 3 not in kept        # near dup removed
-
-    cleaned = {r["doc_id"] for r in clean_corpus(df, min_quality=0.3).collect()}
-    assert cleaned == {1, 4}    # dup cluster collapsed + low-quality dropped
 
 
 def test_ivf_recall_vs_brute_force(spark):
@@ -287,3 +284,65 @@ def test_hot_bucket_guard_megacluster(spark, caplog):
     # Independent per-permutation hashes restore the theory rate,
     # P(all 8 bands diverge) ≈ (1-(57/58)^4)^8 ≈ 2e-10 per member.
     assert kept == [0, n]
+
+
+def test_incremental_dedup_hot_state_bucket(spark):
+    """A batch doc colliding with a HOT state bucket (> max_bucket_size
+    members) is rejected on membership alone — the min_bands exemption
+    mirroring dedup_corpus's hot handling. Isolated by min_bands=9 with
+    bands=8: pure band counting can never reject, so only the hot flag
+    can; with the guard disabled the same doc survives."""
+    from medacy_spark.operators.dedup import band_table, dedup_batch_against_state
+
+    docs = spark.createDataFrame(
+        [(i, "the same boilerplate mirror text repeated across hosts")
+         for i in range(50)],
+        "doc_id long, text string",
+    )
+    state = band_table(docs)
+    batch = spark.createDataFrame(
+        [(1000, "the same boilerplate mirror text repeated across hosts"),
+         (2000, "a genuinely different document with its own words entirely")],
+        "doc_id long, text string",
+    )
+    surv_hot, _ = dedup_batch_against_state(
+        batch, state, min_bands=9, max_bucket_size=10
+    )
+    assert sorted(r["doc_id"] for r in surv_hot.collect()) == [2000]
+    surv_off, _ = dedup_batch_against_state(
+        batch, state, min_bands=9, max_bucket_size=None
+    )
+    assert sorted(r["doc_id"] for r in surv_off.collect()) == [1000, 2000]
+
+
+def test_incremental_dedup_against_state(spark):
+    """Two batches through the band-bucket state: (a) batch 1 against the
+    empty state equals dedup_corpus(batch 1) exactly; (b) exact copies of
+    accepted texts arriving in batch 2 are all rejected; (c) the accepted
+    set is pairwise non-near-dup across batches."""
+    from medacy_spark.operators.dedup import (
+        band_table,
+        dedup_batch_against_state,
+        dedup_corpus,
+        minhash_lsh_candidates,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+        "doc_id", "text"
+    )
+    b1 = docs.filter("doc_id < 250")
+    b2 = docs.filter("doc_id >= 250").unionByName(
+        b1.filter("doc_id < 50").selectExpr("doc_id + 10000 AS doc_id", "text")
+    )
+    s1, state = dedup_batch_against_state(b1, band_table(b1.limit(0)))
+    s2, _ = dedup_batch_against_state(b2, state)
+
+    ids1 = sorted(r["doc_id"] for r in s1.collect())
+    assert ids1 == sorted(r["doc_id"] for r in dedup_corpus(b1).collect())
+    ids2 = sorted(r["doc_id"] for r in s2.collect())
+    assert not [i for i in ids2 if i >= 10000]
+    accepted = docs.join(
+        spark.createDataFrame([(i,) for i in ids1 + ids2], "doc_id bigint"),
+        "doc_id", "left_semi",
+    )
+    assert minhash_lsh_candidates(accepted).filter("n_bands >= 2").count() == 0

@@ -18,7 +18,6 @@ from conftest import REF
 from medacy_spark.operators.embeddings_train import (
     cooccurrence_pairs,
     ppmi,
-    ppmi_svd,
     train_word_vectors,
     write_word2vec,
 )
@@ -126,19 +125,6 @@ def test_train_word_vectors_reproduces_pmc_fixture(spark, tmp_path):
     assert out.read_bytes() == want
 
 
-def test_prune_rare_words_min_count(spark):
-    from medacy_spark.operators.embeddings_train import prune_rare_words
-
-    kept = prune_rare_words(_tokens(spark), min_count=2).collect()
-    words = [r["word"].strip().lower() for r in kept]
-    # 'the' x3, 'dose' x2, 'rat' x2 survive; hapaxes and the '\n' token go
-    assert sorted(set(words)) == ["dose", "rat", "the"]
-    assert len(words) == 7
-    # schema preserved (original columns, any casing/padding intact)
-    assert set(kept[0].asDict()) == {"doc_id", "sent_id", "tok_id", "word"}
-    assert any(r["word"] == "Rat" for r in kept)  # original form kept
-
-
 def test_segmented_cooccurrence_bit_identical(spark):
     """max_segment (mega-document skew hardening) must not change a
     single count: segments carry ±window halos and only home rows emit,
@@ -235,32 +221,3 @@ def test_segmented_dense_guard_catches_gaps(spark):
     assert got == _brute_counts(
         2, [(0, 0, ["a", "b", "\n", "c", "d", "e", "f", "g", "h", "i", "j", "k"])]
     )
-
-
-def test_distributed_svd_matches_dense_path(spark):
-    """The beyond-driver-RAM path (train_word_vectors_distributed: block
-    subspace iteration over the PPMI DataFrame, k²-scale driver traffic
-    per round) must agree with the dense driver path on a
-    spectrum-separated corpus: same vocabulary, per-word cosine ≈ 1
-    after the shared sign-fix + L2 normalization. Tolerance-gated, not
-    byte-pinned: distributed float sums depend on partition layout (the
-    byte-pinned PMC fixture stays on the driver path)."""
-    from medacy_spark.operators.embeddings_train import (
-        train_word_vectors_distributed,
-    )
-
-    words = [f"w{i}" for i in range(25)]
-    rows = []
-    for s in range(40):
-        ln = 6 + (s % 5)
-        for j in range(ln):
-            rows.append((s // 8, s % 8, j, words[(s * 7 + j * j + (s % 3) * j) % 25]))
-    toks = spark.createDataFrame(
-        rows, "doc_id int, sent_id int, tok_id int, word string"
-    )
-    vocab_d, dense = train_word_vectors(toks, dim=8, window=3)
-    vocab_s, dist = train_word_vectors_distributed(toks, dim=8, window=3, iters=60)
-    assert vocab_d == vocab_s
-    assert dense.shape == dist.shape
-    cos = (dense * dist).sum(axis=1)  # both rows are unit-norm
-    assert float(cos.min()) >= 0.99

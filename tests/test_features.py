@@ -1,12 +1,10 @@
 """FeatureTuple extraction (W1/X1 tail), spaCy-ish features (F18),
-vocab indexing (A9), multi-model merge (U6), embedding source (S6),
-resegmentation (W4)."""
+vocab indexing (A9), multi-model merge (U6), resegmentation (W4)."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from medacy_spark.operators.features import (
@@ -16,8 +14,6 @@ from medacy_spark.operators.features import (
     with_spacy_features,
 )
 from medacy_spark.operators.tokenize import tokenize_native
-
-REF_EMB = "/root/reference/medacy/tests/sample_data/test_word_embeddings.txt"
 
 
 def test_spacy_features(spark):
@@ -65,19 +61,6 @@ def test_vocab_index_and_multi_model(spark):
     assert merged.count() == 2
 
 
-@pytest.mark.skipif(not os.path.exists(REF_EMB), reason="reference fixture unavailable")
-def test_word2vec_source(spark):
-    from medacy_spark.sources.embeddings import broadcast_embeddings, read_word2vec_text
-
-    df = read_word2vec_text(spark, REF_EMB)
-    rows = df.collect()
-    assert len(rows) >= 1
-    dims = {len(r["vec"]) for r in rows}
-    assert len(dims) == 1  # consistent dimensionality
-    bc = broadcast_embeddings(spark, df)
-    assert set(bc.value) == {r["word"] for r in rows}
-
-
 def test_resegment(spark):
     from medacy_spark.operators.sequence import resegment
 
@@ -115,9 +98,7 @@ def test_pos_drop_with_real_tagger_and_windows(spark):
     """P10 over REAL pos_ values: ADP/DET tokens vanish from the window
     context unless they are targets, and pos_ flows through the window
     features (clinical_pipeline.py:41 feature set)."""
-    from medacy_spark.operators.features import (
-        CLINICAL_FEATURES, extract_feature_tuples, with_pos,
-    )
+    from medacy_spark.operators.features import extract_feature_tuples, with_pos
     from medacy_spark.operators.misc import pos_drop
     from medacy_spark.operators.tokenize import tokenize_native
 
@@ -133,7 +114,8 @@ def test_pos_drop_with_real_tagger_and_windows(spark):
 
     # pos_ is a first-class window feature now
     ft = extract_feature_tuples(
-        tokenize_native(docs), window_size=1, feature_cols=list(CLINICAL_FEATURES),
+        tokenize_native(docs), window_size=1,
+        feature_cols=["pos_", "shape_", "prefix_", "suffix_", "word"],
     )
     feats = ft.filter(F.col("sent_id") == 0).first()["features"]
     assert feats[1]["0:pos_"] == "ADP"       # 'of'

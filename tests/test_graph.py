@@ -313,18 +313,6 @@ def test_driver_and_spark_rounds_agree(spark, graph_sides, case):
         assert dict(d_rows[2])["1"] == pytest.approx(0.15)
 
 
-def test_degree_stats(spark):
-    from medacy_spark.operators.graph import degree_stats
-
-    edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 1)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["node"]: (r["out_degree"], r["in_degree"])
-        for r in degree_stats(df).collect()
-    }
-    assert got == {1: (2, 2), 2: (1, 1), 3: (1, 2), 4: (1, 0)}
-
-
 # ---------------------------------------------------------- triangle_counts
 
 

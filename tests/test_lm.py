@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from medacy_spark.operators.lm import score_perplexity, train_ngram_lm
 
 
@@ -84,45 +82,3 @@ def test_training_plan_single_corpus_pass(spark):
     )
     assert "ExistingRDD" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_streaming_lm_counts_match_batch(spark, tmp_path):
-    """The LM's additive-state shape: per-batch lm_count_relation
-    partials appended via run_incremental (exactly-once,
-    late-arrival resume), lm_from_counts over the raw append log —
-    must equal whole-corpus train_ngram_lm EXACTLY, down to every
-    scored perplexity."""
-    from medacy_spark.operators.lm import lm_count_relation, lm_from_counts
-    from medacy_spark.streaming.incremental import (
-        run_incremental,
-        stream_documents,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    src, out, ck = (str(tmp_path / p) for p in ("docs", "counts", "ck"))
-    schema = "doc_id bigint, text string"
-    docs.filter("doc_id < 250").write.parquet(src)
-    q = run_incremental(
-        stream_documents(spark, src, schema),
-        lambda b: lm_count_relation(b, n=2),
-        out, ck,
-    )
-    q.awaitTermination(180)
-    docs.filter("doc_id >= 250").write.mode("append").parquet(src)
-    q2 = run_incremental(
-        stream_documents(spark, src, schema),
-        lambda b: lm_count_relation(b, n=2),
-        out, ck,
-    )
-    q2.awaitTermination(180)
-
-    inc = lm_from_counts(spark.read.parquet(out).select("ctx", "w", "c"), n=2)
-    ref = train_ngram_lm(docs, n=2)
-    for a, b in ((inc.gram_counts, ref.gram_counts), (inc.ctx_counts, ref.ctx_counts)):
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert inc.vocab.collect() == ref.vocab.collect()
-    pa = sorted(map(tuple, score_perplexity(docs, inc).collect()))
-    pb = sorted(map(tuple, score_perplexity(docs, ref).collect()))
-    assert pa == pb

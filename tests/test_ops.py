@@ -1,5 +1,4 @@
-"""Operational layer: checkpoint/resume, skew salting, streaming,
-interval joins, textstats."""
+"""Operational layer: checkpoint/resume, skew salting, textstats."""
 
 from __future__ import annotations
 
@@ -275,66 +274,23 @@ def test_salted_repartition_spreads_hot_host(spark, doc_ids):
     assert spread >= 4  # hot host split across several partitions
 
 
-def test_streaming_incremental(spark, doc_ids, tmp_path):
-    from medacy_spark.streaming.incremental import run_incremental, stream_documents
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    docs = clinical_documents(doc_ids.filter("doc_id < 50")).select("url", "text")
-    docs.write.parquet(src)
-
-    stream = stream_documents(spark, src, "url string, text string")
-    q = run_incremental(
-        stream,
-        lambda df: df.select("url", F.length("text").alias("n")),
-        out, ckpt,
-    )
-    q.awaitTermination(120)
-    assert spark.read.parquet(out).count() == 50
-
-    # second availableNow run with no new files appends nothing
-    q2 = run_incremental(
-        stream_documents(spark, src, "url string, text string"),
-        lambda df: df.select("url", F.length("text").alias("n")),
-        out, ckpt,
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == 50
-
-
-def test_interval_band_join_equals_naive(spark):
-    from medacy_spark.functions.spans import overlap_len
-    from medacy_spark.operators.intervals import interval_overlap_join
-
-    rows = [(d, (d * 37 + i * 11) % 500, (d * 37 + i * 11) % 500 + 5 + (i % 40))
-            for d in range(5) for i in range(60)]
-    df = spark.createDataFrame(
-        [(d, s, e) for d, s, e in rows], "doc_id long, start long, end long"
-    )
-    fast = interval_overlap_join(df, df, bucket=32)
-    naive = (
-        df.alias("a").join(
-            df.alias("b"),
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (overlap_len(F.col("a.start"), F.col("a.end"), F.col("b.start"), F.col("b.end")) != 0),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("a.start").alias("l_start"), F.col("a.end").alias("l_end"),
-            F.col("b.start").alias("r_start"), F.col("b.end").alias("r_end"),
-        )
-    )
-    f = fast.select("doc_id", "l_start", "l_end", "r_start", "r_end")
-    assert f.exceptAll(naive).count() == 0
-    assert naive.exceptAll(f).count() == 0
-
-
 def test_textstats_bounds(spark, doc_ids):
-    from medacy_spark.operators.textstats import text_profile
+    from medacy_spark.operators.textstats import (
+        doc_fingerprint,
+        quality_score,
+        stopword_ratio,
+    )
+
+    def profile(df):
+        t = F.col("text")
+        return df.select(
+            quality_score(t).alias("quality"),
+            stopword_ratio(t).alias("stopword_ratio"),
+            doc_fingerprint(t).alias("fingerprint"),
+        )
 
     docs = clinical_documents(doc_ids).select("doc_id", "text")
-    prof = text_profile(docs)
+    prof = profile(docs)
     bad = prof.filter(
         (F.col("quality") < 0) | (F.col("quality") > 1)
         | (F.col("stopword_ratio") < 0) | (F.col("stopword_ratio") > 1)
@@ -345,7 +301,7 @@ def test_textstats_bounds(spark, doc_ids):
     two = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "gamma beta alpha")], "doc_id long, text string"
     )
-    fps = [r["fingerprint"] for r in text_profile(two).collect()]
+    fps = [r["fingerprint"] for r in profile(two).collect()]
     assert fps[0] != fps[1]
 
 

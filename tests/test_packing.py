@@ -100,55 +100,3 @@ def test_stats_fill(spark):
     total = sum(r["n_doc_tokens"] for r in stats.values())
     assert total == 9
     assert all(0 < r["fill_frac"] <= 1.0 for r in stats.values())
-
-
-def test_incremental_packing_matches_batch(spark, tmp_path):
-    """Streaming packing: two-batch ingest (late arrival, same
-    checkpoint) must equal whole-corpus pack_sequences EXACTLY when
-    batches arrive in id order — windows spanning the batch boundary
-    included — and a rerun with no new input appends nothing."""
-    from medacy_spark.operators.packing import pack_sequences
-    from medacy_spark.streaming.incremental import (
-        run_incremental_packing,
-        stream_documents,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i} " * (i % 9 + 1)) for i in range(200)], ["doc_id", "text"]
-    ).select("doc_id", F.trim("text").alias("text"))
-    src, out, ck = (str(tmp_path / p) for p in ("docs", "pack", "ck"))
-    schema = "doc_id bigint, text string"
-    docs.filter("doc_id < 120").write.parquet(src)
-    q = run_incremental_packing(
-        stream_documents(spark, src, schema), 16,
-        output_path=out, checkpoint_path=ck,
-    )
-    q.awaitTermination(180)
-    docs.filter("doc_id >= 120").write.mode("append").parquet(src)
-    q2 = run_incremental_packing(
-        stream_documents(spark, src, schema), 16,
-        output_path=out, checkpoint_path=ck,
-    )
-    q2.awaitTermination(180)
-
-    got = sorted(
-        map(tuple, spark.read.parquet(f"{out}/packed")
-            .select("seq_id", "doc_id", "start_in_seq", "start_in_doc", "n_tokens")
-            .collect())
-    )
-    want = sorted(map(tuple, pack_sequences(docs, 16).collect()))
-    assert got == want
-    # a boundary-spanning window exists (both batches contribute to it)
-    import collections
-    by_seq = collections.defaultdict(set)
-    for s, d, *_ in got:
-        by_seq[s].add(d < 120)
-    assert any(len(v) == 2 for v in by_seq.values())
-    # idempotence: no new input, same checkpoint -> nothing changes
-    n = spark.read.parquet(f"{out}/packed").count()
-    q3 = run_incremental_packing(
-        stream_documents(spark, src, schema), 16,
-        output_path=out, checkpoint_path=ck,
-    )
-    q3.awaitTermination(180)
-    assert spark.read.parquet(f"{out}/packed").count() == n

@@ -110,17 +110,15 @@ def test_spec_pipeline_end_to_end(spark):
     want = {(i, t, s, e) for i in range(20) for t, s, e in GOLD}
     assert got == want
 
-    # featurize honors the spec's window size
-    toks = pipe.tokenize(docs)
-    ft = pipe.featurize(toks).first()
-    assert any(k.startswith("2:") for k in ft["features"][0].keys())
-
 
 def test_overlay_cuis_semantic_type_tristate(spark):
-    """The spec's semantic_types tri-state (json_to_pipeline.py:70-79):
-    'all' flags every candidate type, 'none' emits feature_cui ONLY, a
-    list flags just the listed types. No mode filters the candidates —
-    feature_cui overlays every mapped term (metamap_component.py:122-136)."""
+    """The spec's semantic_types tri-state (json_to_pipeline.py:70-79) as
+    cui_overlay include lists: None flags every candidate type, [] emits
+    feature_cui ONLY, a list flags just the listed types. No mode filters
+    the candidates — feature_cui overlays every mapped term
+    (metamap_component.py:122-136)."""
+    from medacy_spark.operators.linking import cui_overlay
+
     toks = spark.createDataFrame(
         [(1, 0, 0, 0, 5, "drugx")],
         "doc_id long, sent_id int, tok_id int, idx long, end_idx long, word string",
@@ -129,20 +127,18 @@ def test_overlay_cuis_semantic_type_tristate(spark):
         [(1, 0, 5, "C0001", ["T1", "T2"]), (1, 0, 5, "C0002", ["T3"])],
         "doc_id long, start long, end long, cui string, sem_types array<string>",
     )
-    base = {"learner": "CRF", "spacy_pipeline": "en", "metamap": "/bin/mm"}
 
-    def feats(st):
-        pipe = json_to_pipeline({**base, "semantic_types": st})
-        rows = pipe.overlay_cuis(toks, cand).collect()
+    def feats(include):
+        rows = cui_overlay(toks, cand, include_sem_types=include).collect()
         return {r["features"]["feature_cui"]: sorted(r["features"].keys())
                 for r in rows}
 
-    f_all = feats("all")
+    f_all = feats(None)
     assert f_all["C0001"] == ["feature_cui", "feature_is_T1", "feature_is_T2"]
     assert f_all["C0002"] == ["feature_cui", "feature_is_T3"]
-    f_none = feats("none")  # cui only, NO type flags, no candidate filter
+    f_none = feats([])  # cui only, NO type flags, no candidate filter
     assert f_none == {"C0001": ["feature_cui"], "C0002": ["feature_cui"]}
-    f_list = feats(["T2"])  # flags only T2; C0002 still gets its cui
+    f_list = feats(("T2",))  # flags only T2; C0002 still gets its cui
     assert f_list == {
         "C0001": ["feature_cui", "feature_is_T2"],
         "C0002": ["feature_cui"],
@@ -165,33 +161,13 @@ def test_spec_entities_key_validates(spark):
     ).validate_entities(gold)
 
 
-def test_spec_feature_aliases_and_head(spark):
-    """Reference pipelines spell attributes both ways ('pos_' vs 'pos',
-    'text'); either works, and 'head' flows through the window features
-    (drug_event_pipeline.py:44 feature set)."""
-    pipe = json_to_pipeline({
-        "learner": "CRF", "spacy_pipeline": "en", "window_size": 1,
-        "spacy_features": ["pos", "shape", "prefix", "suffix", "like_num",
-                           "text", "head"],
-    })
-    assert pipe.feature_cols == (
-        "pos_", "shape_", "prefix_", "suffix_", "like_num", "word", "head_"
-    )
-    docs = spark.createDataFrame(
-        [(1, "dose was increased today .")], "doc_id long, text string"
-    )
-    feats = pipe.featurize(pipe.tokenize(docs)).first()["features"]
-    assert feats[3]["0:head_"] == "increased"
-    assert feats[3]["0:pos_"] == "NOUN"
-    assert feats[3]["0:word"] == "today"
-
-
 def test_spec_text_extractor(spark):
-    """feature_extractor: 'text' selects the TextExtractor shim
-    (text_extractor.py:5-30): bare token texts per sentence (no dicts,
-    no window) and (idx, idx+len) index spans; unknown extractor names
-    raise at spec compile."""
+    """The TextExtractor shim (text_extractor.py:5-30): bare token texts
+    per sentence (no dicts, no window) and (idx, idx+len) index spans;
+    unknown extractor names raise at spec compile."""
     import pytest
+
+    from medacy_spark.operators.features import text_extractor_tuples
 
     pipe = json_to_pipeline({
         "learner": "CRF", "spacy_pipeline": "en", "feature_extractor": "text",
@@ -199,7 +175,7 @@ def test_spec_text_extractor(spark):
     docs = spark.createDataFrame(
         [(1, "aspirin 10 mg daily .")], "doc_id long, text string"
     )
-    row = pipe.featurize(pipe.tokenize(docs)).first()
+    row = text_extractor_tuples(pipe.tokenize(docs)).first()
     assert row["features"] == ["aspirin", "10", "mg", "daily", "."]
     assert [(s["start"], s["end"]) for s in row["indices"]] == [
         (0, 7), (8, 10), (11, 13), (14, 19), (20, 21)

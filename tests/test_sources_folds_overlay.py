@@ -33,13 +33,7 @@ def test_line_word_index(spark):
 
 
 def test_con_roundtrip(spark):
-    from medacy_spark.sources.converters import (
-        CON_PATTERN,
-        con_to_mentions,
-        invalid_lines,
-        mentions_to_con,
-        parse_con,
-    )
+    from medacy_spark.sources.converters import con_to_mentions, mentions_to_con, parse_con
 
     docs = _docs_with_lines(spark)
     lines = spark.createDataFrame(
@@ -52,7 +46,6 @@ def test_con_roundtrip(spark):
     )
     con = parse_con(lines)
     assert con.count() == 2
-    assert invalid_lines(lines, CON_PATTERN).count() == 1
     m = con_to_mentions(con, docs)
     got = {(r["tag"], r["start"], r["end"]) for r in m.collect()}
     assert got == {("Animal", 21, 28), ("Object", 17, 20)}

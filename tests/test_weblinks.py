@@ -237,33 +237,6 @@ def test_random_walks_feed_cooccurrence(spark):
     assert all(d(a, b) <= 4 for (a, b) in got)
 
 
-def test_node_embeddings_geometry(spark):
-    # ring of 12 nodes (±1, ±2 edges): adjacent nodes must embed closer
-    # than antipodal ones, and the whole thing must be deterministic
-    import numpy as np
-
-    from medacy_spark.operators.graph import node_embeddings
-
-    n = 12
-    edges = spark.createDataFrame(
-        [(f"n{i:02d}", f"n{(i + d) % n:02d}") for i in range(n) for d in (1, 2, n - 1, n - 2)],
-        ["src", "dst"],
-    )
-    vocab, vecs = node_embeddings(edges, dim=8, n_walks=6, walk_len=12)
-    assert len(vocab) == n
-    ix = {w: i for i, w in enumerate(vocab)}
-    cos = vecs @ vecs.T
-
-    def c(a, b):
-        return cos[ix[f"n{a:02d}"], ix[f"n{b:02d}"]]
-
-    adj = np.mean([c(i, (i + 1) % n) for i in range(n)])
-    anti = np.mean([c(i, (i + n // 2) % n) for i in range(n)])
-    assert adj > anti + 0.1
-    vocab2, vecs2 = node_embeddings(edges, dim=8, n_walks=6, walk_len=12)
-    assert vocab2 == vocab and np.array_equal(vecs, vecs2)
-
-
 def test_canonical_url_idempotent(spark):
     # canonicalization is a projection: applying it twice changes nothing
     import itertools

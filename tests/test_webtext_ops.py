@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from medacy_spark.operators.dedup import duplicate_passages
 from medacy_spark.operators.graph import bfs_distances
 from medacy_spark.operators.pii import pii_signals, redact_pii
-from medacy_spark.operators.ranking import bm25_scores, tfidf_scores
+from medacy_spark.operators.ranking import bm25_scores
 from medacy_spark.operators.webstats import host_profile
 
 
@@ -48,12 +48,6 @@ def test_bm25_rare_term_outscores_common(spark):
     r = {x["doc_id"]: x["bm25"] for x in bm25_scores(docs, ["common", "rare"]).collect()}
     # doc 100 matches both terms, and 'rare' (df=1) must dominate 'common' (df=21)
     assert r[100] > 2 * r[0] > 0
-
-
-def test_tfidf_zero_for_unmatched(spark):
-    docs = spark.createDataFrame([(0, "a b"), (1, "c d")], ["doc_id", "text"])
-    r = {x["doc_id"]: x["tfidf"] for x in tfidf_scores(docs, ["a"]).collect()}
-    assert r[1] == 0.0 and r[0] > 0.0
 
 
 # ---------------------------------------------------------------- pii
