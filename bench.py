@@ -198,11 +198,10 @@ def main() -> None:
         dedup_rate = max(dedup_rate, round(n_dedup / (time.monotonic() - t0), 1))
         assert survivors <= n_dedup - n_dedup // 200 + 1  # planted dups removed
 
-    # incremental-ingest throughput: dedup a 10k batch against a 100k-doc
-    # PERSISTED band-bucket state (the per-batch work of
-    # streaming/incremental.run_incremental_dedup, minus the streaming
-    # harness) — the number a continuously-growing corpus pays per batch,
-    # instead of re-running dedup_corpus over corpus+batch every time
+    # incremental-ingest throughput: dedup_batch_against_state dedups a
+    # 10k batch against a 100k-doc band_table state persisted to parquet
+    # — the number a continuously-growing corpus pays per batch, instead
+    # of re-running dedup_corpus over corpus+batch every time
     import shutil
     import tempfile
 

@@ -38,7 +38,7 @@ def _dataset(spark, d: str):
     return docs, from_ann_lines(ann)
 
 
-def main(argv: list[str] | None = None) -> int:
+def main() -> int:
     p = argparse.ArgumentParser(prog="medacy_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
     for name in ("train", "predict", "validate"):
@@ -53,7 +53,7 @@ def main(argv: list[str] | None = None) -> int:
     sub.choices["predict"].add_argument("-m", "--model", required=True)
     sub.choices["predict"].add_argument("-o", "--output", required=True)
     sub.choices["validate"].add_argument("-k", "--folds", type=int, default=5)
-    args = p.parse_args(argv)
+    args = p.parse_args()
 
     from medacy_spark.model import Model
     from medacy_spark.session import get_spark

@@ -30,8 +30,9 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from medacy_spark.corpus import lexicons as lex
@@ -88,14 +89,6 @@ def tokens_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def gold_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tokens_df(spark, sf_dir)
-    return t.filter(F.col("word").isin(KEYWORDS)).select(
-        "doc_id", F.col("word").alias("tag"), "start", "end",
-        F.col("word").alias("text"), "pos",
-    )
-
-
 def _swap_expr(col):
     m = {KEYWORDS[i]: KEYWORDS[(i + 1) % len(KEYWORDS)] for i in range(len(KEYWORDS))}
     expr = None
@@ -109,21 +102,70 @@ def _kw_pick(kcol):
     return F.element_at(arr, (kcol % len(KEYWORDS) + 1).cast("int"))
 
 
+_MENTION_COLS = ("tag", "start", "end", "text")
+
+
+def _mention_branches(side: str) -> list[tuple[Column, list[Column]]]:
+    """One mention side as (condition, [tag, start, end, text]) branches
+    over tokens_df's columns — the one statement of the gold / pred /
+    phrase arithmetic (pred's mod 7/11/13/17 perturbation included) that
+    the per-side frames and _mention_sides' single pass are both built
+    from. The phrase side reads the next token's word and end as
+    ``_nw`` / ``_ne`` (_with_next)."""
+    word, start, end = F.col("word"), F.col("start"), F.col("end")
+    is_kw = word.isin(KEYWORDS)
+    if side == "gold":
+        return [(is_kw, [word, start, end, word])]
+    if side == "phrase":
+        return [(
+            is_kw & F.col("_nw").isNotNull(),
+            [F.concat(F.lit("P_"), word), start, F.col("_ne"),
+             F.concat_ws(" ", "word", "_nw")],
+        )]
+    k = F.col("doc_id") + F.col("pos")
+    shift = (k % 7 == 0).cast("long")
+    return [
+        (
+            is_kw & (k % 11 != 0),
+            [F.when(k % 13 == 0, _swap_expr("word")).otherwise(word),
+             start + shift, end + shift, word],
+        ),
+        (~is_kw & (k % 17 == 0), [_kw_pick(k), start, end, word]),
+    ]
+
+
+def _with_next(t: DataFrame) -> DataFrame:
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    return t.withColumn("_nw", F.lead("word").over(w)).withColumn(
+        "_ne", F.lead("end").over(w)
+    )
+
+
+def _side_df(spark: SparkSession, sf_dir: str, side: str, *extra: str) -> DataFrame:
+    """One mention side as its own frame: a filter/select per branch
+    (unioned for pred's two), (doc_id, tag, start, end, text, *extra)."""
+    t = tokens_df(spark, sf_dir)
+    if side == "phrase":
+        t = _with_next(t)
+    frames = [
+        t.filter(cond).select(
+            "doc_id", *[c.alias(n) for c, n in zip(cols, _MENTION_COLS)], *extra
+        )
+        for cond, cols in _mention_branches(side)
+    ]
+    return reduce(DataFrame.unionByName, frames)
+
+
+def gold_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _side_df(spark, sf_dir, "gold", "pos")
+
+
 def pred_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tokens_df(spark, sf_dir).withColumn("k", F.col("doc_id") + F.col("pos"))
-    kept = t.filter(F.col("word").isin(KEYWORDS) & (F.col("k") % 11 != 0))
-    kept = kept.select(
-        "doc_id",
-        F.when(F.col("k") % 13 == 0, _swap_expr("word")).otherwise(F.col("word")).alias("tag"),
-        F.when(F.col("k") % 7 == 0, F.col("start") + 1).otherwise(F.col("start")).alias("start"),
-        F.when(F.col("k") % 7 == 0, F.col("end") + 1).otherwise(F.col("end")).alias("end"),
-        F.col("word").alias("text"),
-    )
-    halluc = t.filter(~F.col("word").isin(KEYWORDS) & (F.col("k") % 17 == 0)).select(
-        "doc_id", _kw_pick(F.col("k")).alias("tag"), "start", "end",
-        F.col("word").alias("text"),
-    )
-    return kept.unionByName(halluc)
+    return _side_df(spark, sf_dir, "pred")
+
+
+def phrase_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _side_df(spark, sf_dir, "phrase")
 
 
 def _mention_sides(
@@ -139,11 +181,12 @@ def _mention_sides(
     ``gold_df``/``pred_df``/``phrase_df`` each rebuild the whole token
     pipeline (scan → explode → window sums), so a two-sided join query
     re-derives it 2-4x.  This derives every requested side in a single
-    window pass — per token an array of side-tagged structs, exploded —
-    and localCheckpoints the small combined mention table once (the
+    window pass — per token an array of side-tagged structs (a ``when``
+    chain over the side's _mention_branches), exploded — and
+    localCheckpoints the small combined mention table once (the
     single-pass rule; see mentions.detect_mentions for the pattern).
-    Values are identical to the per-side builders (oracle-verified);
-    only the plan changes.
+    Values are identical to the per-side builders by construction; only
+    the plan changes.
 
     NOT a universal win: the checkpoint is a materialization barrier and
     its persisted blocks linger for the session, so fully-pipelined
@@ -155,91 +198,39 @@ def _mention_sides(
     Returns {"gold"/"pred"/"phrase": DataFrame(doc_id, tag, start, end,
     text)} filtered views of the one checkpoint.
     """
+    wanted = {"gold": gold, "pred": pred, "phrase": phrase}
+    codes = {"gold": "g", "pred": "p", "phrase": "h"}
     t = tokens_df(spark, sf_dir)
     if phrase:
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        t = t.withColumn("_nw", F.lead("word").over(w)).withColumn(
-            "_ne", F.lead("end").over(w)
-        )
-    is_kw = F.col("word").isin(KEYWORDS)
-    k = F.col("doc_id") + F.col("pos")
+        t = _with_next(t)
     structs = []
-    if gold:
-        structs.append(
-            F.when(
-                is_kw,
-                F.struct(
-                    F.lit("g").alias("_side"), F.col("word").alias("tag"),
-                    F.col("start"), F.col("end"), F.col("word").alias("text"),
-                ),
+    for side in (s for s in codes if wanted[s]):
+        chain = None
+        for cond, cols in _mention_branches(side):
+            st = F.struct(
+                F.lit(codes[side]).alias("_side"),
+                *[c.alias(n) for c, n in zip(cols, _MENTION_COLS)],
             )
-        )
-    if pred:
-        shift = (k % 7 == 0).cast("long")
-        structs.append(
-            F.when(
-                is_kw & (k % 11 != 0),
-                F.struct(
-                    F.lit("p").alias("_side"),
-                    F.when(k % 13 == 0, _swap_expr("word")).otherwise(F.col("word")).alias("tag"),
-                    (F.col("start") + shift).alias("start"),
-                    (F.col("end") + shift).alias("end"),
-                    F.col("word").alias("text"),
-                ),
-            ).when(
-                ~is_kw & (k % 17 == 0),
-                F.struct(
-                    F.lit("p").alias("_side"), _kw_pick(k).alias("tag"),
-                    F.col("start"), F.col("end"), F.col("word").alias("text"),
-                ),
-            )
-        )
-    if phrase:
-        structs.append(
-            F.when(
-                is_kw & F.col("_nw").isNotNull(),
-                F.struct(
-                    F.lit("h").alias("_side"),
-                    F.concat(F.lit("P_"), F.col("word")).alias("tag"),
-                    F.col("start"), F.col("_ne").alias("end"),
-                    F.concat_ws(" ", "word", "_nw").alias("text"),
-                ),
-            )
-        )
+            chain = F.when(cond, st) if chain is None else chain.when(cond, st)
+        structs.append(chain)
     m = t.select(
         "doc_id",
         F.explode(F.filter(F.array(*structs), lambda s: s.isNotNull())).alias("s"),
     ).select("doc_id", "s._side", "s.tag", "s.start", "s.end", "s.text")
     m = m.localCheckpoint(eager=False)
-    cols = ["doc_id", "tag", "start", "end", "text"]
+    cols = ["doc_id", *_MENTION_COLS]
     out: dict[str, DataFrame] = {}
-    for name, code in (("gold", "g"), ("pred", "p"), ("phrase", "h")):
-        if {"gold": gold, "pred": pred, "phrase": phrase}[name]:
-            # fresh attribute ids per view: two views of ONE checkpoint fed
-            # to a self-join/cogroup otherwise share exprIds, and Spark's
-            # relation dedup mis-projects the right side of a pandas
-            # cogroup (observed: pred arrived without its 'tag' column)
-            out[name] = m.filter(F.col("_side") == code).select(
-                *[F.col(c).alias(c) for c in cols]
-            )
+    for side in (s for s in codes if wanted[s]):
+        # fresh attribute ids per view: two views of ONE checkpoint fed
+        # to a self-join/cogroup otherwise share exprIds, and Spark's
+        # relation dedup mis-projects the right side of a pandas
+        # cogroup (observed: pred arrived without its 'tag' column)
+        out[side] = m.filter(F.col("_side") == codes[side]).select(
+            *[F.col(c).alias(c) for c in cols]
+        )
     # the union the ambiguity workload wants, without re-reading per side
     out["all"] = m.select(*[F.col(c).alias(c) for c in cols])
     return out
-
-
-def phrase_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = tokens_df(spark, sf_dir)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    t = t.withColumn("nxt_word", F.lead("word").over(w)).withColumn(
-        "nxt_end", F.lead("end").over(w)
-    )
-    return t.filter(F.col("word").isin(KEYWORDS) & F.col("nxt_word").isNotNull()).select(
-        "doc_id",
-        F.concat(F.lit("P_"), F.col("word")).alias("tag"),
-        "start",
-        F.col("nxt_end").alias("end"),
-        F.concat_ws(" ", "word", "nxt_word").alias("text"),
-    )
 
 
 # ------------------------------------------------------------- DuckDB CTEs
@@ -1342,7 +1333,7 @@ def q_embedding_topk(spark, sf):
     )
     # score excluded from the hash compare (float rounding differs in the
     # 15th digit between engines); rank is the verified output
-    return brute_force_topk(emb, qs, k=10, dim=64).select(
+    return brute_force_topk(emb, qs, k=10).select(
         "q_id", "vec_id", F.col("rank").cast("int").alias("rank")
     ).orderBy("q_id", "rank")
 
@@ -1982,15 +1973,15 @@ _PR_ITERS = 6
 _PR_DAMPING = 0.85
 
 
-def _pagerank_tail_sql(iters: int = _PR_ITERS, d: float = _PR_DAMPING) -> str:
+def _pagerank_tail_sql() -> str:
     """The iteration chain + final select, given an ``ed(src_id, dst_id,
     weight)`` CTE in scope — shared by every pagerank oracle so the
     float parenthesization can never drift between graph bases."""
     steps = []
-    for k in range(1, iters + 1):
+    for k in range(1, _PR_ITERS + 1):
         steps.append(f"""pr{k} AS (
   SELECT nd.node,
-         (1.0 - {d}) / (SELECT n FROM nn) + {d} * coalesce(c.contrib, 0.0) AS rnk
+         (1.0 - {_PR_DAMPING}) / (SELECT n FROM nn) + {_PR_DAMPING} * coalesce(c.contrib, 0.0) AS rnk
   FROM nodes nd LEFT JOIN (
     SELECT ed.dst_id AS node, sum(p.rnk * (ed.weight / o.wout)) AS contrib
     FROM pr{k - 1} p
@@ -2004,16 +1995,16 @@ outd AS (SELECT src_id, sum(weight) AS wout FROM ed GROUP BY src_id),
 pr0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS rnk FROM nodes),
 {chain}
 SELECT node, round(rnk, 9) AS pagerank
-FROM pr{iters} ORDER BY node
+FROM pr{_PR_ITERS} ORDER BY node
 """
 
 
-def _pagerank_sql(iters: int = _PR_ITERS, d: float = _PR_DAMPING) -> str:
+def _pagerank_sql() -> str:
     return f"""{_kg_e_base()},
 ed AS (
   SELECT src_id, dst_id, CAST(count(*) AS DOUBLE) AS weight
   FROM e GROUP BY src_id, dst_id),
-{_pagerank_tail_sql(iters, d)}"""
+{_pagerank_tail_sql()}"""
 
 
 @q("kg_pagerank", _pagerank_sql())
@@ -2130,7 +2121,7 @@ def q_embedding_near_dups(spark, sf):
     emb = spark.read.parquet(f"{sf}/embeddings.parquet").filter("vec_id < 200")
     # exact variant (n_planes=0) so the oracle matches; cosine column
     # excluded from the hash (float rounding differs across engines)
-    return embedding_near_dups(emb, threshold=0.25, n_planes=0, dim=64).select(
+    return embedding_near_dups(emb, threshold=0.25).select(
         "id_a", "id_b"
     ).orderBy("id_a", "id_b")
 
@@ -2171,7 +2162,7 @@ def q_embedding_topk_ivf(spark, sf):
     from medacy_spark.operators.similarity import ivf_topk
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     qs = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("q_id"), "embedding")
-    return ivf_topk(emb, qs, n_cells=16, n_probe=4, k=10, kmeans_iters=0, dim=64).select(
+    return ivf_topk(emb, qs, n_cells=16, n_probe=4, k=10, kmeans_iters=0).select(
         "q_id", "vec_id", F.col("rank").cast("int").alias("rank")
     ).orderBy("q_id", "rank")
 
@@ -2975,14 +2966,14 @@ def q_spacy_token_features(spark, sf):
 # identical CASE chain, generated from the SAME class lists.
 
 
-def _pos_case_sql(word: str = "word") -> str:
+def _pos_case_sql() -> str:
     from medacy_spark.operators import features as ft
 
-    l = f"lower({word})"  # noqa: E741
+    l = "lower(word)"  # noqa: E741
     return (
         "CASE "
-        f"WHEN regexp_full_match({word}, '[^\\w\\s]+') THEN 'PUNCT' "
-        f"WHEN regexp_full_match({word}, '[0-9]+(\\.[0-9]+)?') THEN 'NUM' "
+        "WHEN regexp_full_match(word, '[^\\w\\s]+') THEN 'PUNCT' "
+        "WHEN regexp_full_match(word, '[0-9]+(\\.[0-9]+)?') THEN 'NUM' "
         f"WHEN {l} IN ({_sql_list(ft.POS_DET)}) THEN 'DET' "
         f"WHEN {l} IN ({_sql_list(ft.POS_ADP)}) THEN 'ADP' "
         f"WHEN {l} IN ({_sql_list(ft.POS_CCONJ)}) THEN 'CCONJ' "
@@ -3600,9 +3591,9 @@ def q_repetition_signals(spark, sf):
 _DECONTAM_N = 8
 
 
-def _decontam_sql(n: int = _DECONTAM_N) -> str:
+def _decontam_sql() -> str:
     parts = " || ' ' || ".join(
-        ["word"] + [f"lead(word, {k}) OVER win" for k in range(1, n)]
+        ["word"] + [f"lead(word, {k}) OVER win" for k in range(1, _DECONTAM_N)]
     )
     return f"""
 WITH bench AS (
@@ -3618,7 +3609,7 @@ bw AS (
 bg AS (
   SELECT DISTINCT {parts} AS gram FROM bw
   WINDOW win AS (PARTITION BY bench_id ORDER BY pos)
-  QUALIFY lead(word, {n - 1}) OVER win IS NOT NULL),
+  QUALIFY lead(word, {_DECONTAM_N - 1}) OVER win IS NOT NULL),
 w AS (
   SELECT doc_id,
          unnest(string_split(text, ' ')) AS word,
@@ -3627,7 +3618,7 @@ w AS (
 g AS (
   SELECT doc_id, {parts} AS gram FROM w
   WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-  QUALIFY lead(word, {n - 1}) OVER win IS NOT NULL),
+  QUALIFY lead(word, {_DECONTAM_N - 1}) OVER win IS NOT NULL),
 per AS (
   SELECT g.doc_id,
          count(*) AS n_grams,
@@ -4514,13 +4505,13 @@ def q_alias_entity_clusters(spark, sf):
 _PPR_SEEDS = ["src0.example.com", "src1.example.com"]
 
 
-def _ppr_tail_sql(iters: int = _PR_ITERS, d: float = _PR_DAMPING) -> str:
+def _ppr_tail_sql() -> str:
     seeds = ", ".join(f"'{s}'" for s in _PPR_SEEDS)
     steps = []
-    for k in range(1, iters + 1):
+    for k in range(1, _PR_ITERS + 1):
         steps.append(f"""pr{k} AS (
   SELECT tp.node,
-         (1.0 - {d}) * tp.p + {d} * coalesce(c.contrib, 0.0) AS rnk
+         (1.0 - {_PR_DAMPING}) * tp.p + {_PR_DAMPING} * coalesce(c.contrib, 0.0) AS rnk
   FROM tp LEFT JOIN (
     SELECT ed.dst_id AS node, sum(p.rnk * (ed.weight / o.wout)) AS contrib
     FROM pr{k - 1} p
@@ -4539,7 +4530,7 @@ outd AS (SELECT src_id, sum(weight) AS wout FROM ed GROUP BY src_id),
 pr0 AS (SELECT node, p AS rnk FROM tp),
 {chain}
 SELECT node, round(rnk, 9) AS pagerank
-FROM pr{iters} ORDER BY node
+FROM pr{_PR_ITERS} ORDER BY node
 """
 
 
@@ -4586,7 +4577,7 @@ _WALK_N = 2
 _WALK_LEN = 4
 
 
-def _host_walks_sql(n_walks: int = _WALK_N, walk_len: int = _WALK_LEN) -> str:
+def _host_walks_sql() -> str:
     parts = [_WEB_LINKS_CTES + f""",
 e AS MATERIALIZED (
   SELECT DISTINCT src_host AS a, dst_host AS b FROM links
@@ -4594,8 +4585,8 @@ e AS MATERIALIZED (
 c0 AS (
   SELECT a AS start, CAST(walk_id AS INTEGER) AS walk_id, a AS cur
   FROM (SELECT DISTINCT a FROM e),
-       (SELECT unnest(generate_series(0, {n_walks - 1})) AS walk_id))"""]
-    for t in range(1, walk_len + 1):
+       (SELECT unnest(generate_series(0, {_WALK_N - 1})) AS walk_id))"""]
+    for t in range(1, _WALK_LEN + 1):
         parts.append(f""",
 w{t} AS (
   SELECT s.start, s.walk_id, e.b,
@@ -4607,7 +4598,7 @@ c{t} AS MATERIALIZED (
   SELECT start, walk_id, b AS cur FROM w{t} WHERE rn = 1)""")
     union = "\n  UNION ALL ".join(
         f"SELECT start, walk_id, CAST({t} AS INTEGER) AS step, cur AS node FROM c{t}"
-        for t in range(walk_len + 1)
+        for t in range(_WALK_LEN + 1)
     )
     parts.append(f"""
 SELECT * FROM ({union})
@@ -4755,19 +4746,19 @@ s{k} AS MATERIALIZED (
     return "".join(parts)
 
 
-def _bpe_merges_sql(iters: int = _BPE_MERGES) -> str:
+def _bpe_merges_sql() -> str:
     union = "\n  UNION ALL ".join(
         f"SELECT CAST({k} AS INTEGER) AS merge_rank, l AS lsym, r AS rsym, "
         f"CAST(cnt AS BIGINT) AS cnt FROM b{k}"
-        for k in range(1, iters + 1)
+        for k in range(1, _BPE_MERGES + 1)
     )
-    return f"{_bpe_ctes(iters)}\nSELECT * FROM ({union})\nORDER BY merge_rank\n"
+    return f"{_bpe_ctes(_BPE_MERGES)}\nSELECT * FROM ({union})\nORDER BY merge_rank\n"
 
 
-def _bpe_segmentations_sql(iters: int = _BPE_MERGES) -> str:
-    return f"""{_bpe_ctes(iters)}
+def _bpe_segmentations_sql() -> str:
+    return f"""{_bpe_ctes(_BPE_MERGES)}
 SELECT s.word, wc.wcnt, string_agg(s.sym, ' ' ORDER BY s.pos) AS segmentation
-FROM s{iters} s JOIN wc ON wc.word = s.word
+FROM s{_BPE_MERGES} s JOIN wc ON wc.word = s.word
 GROUP BY s.word, wc.wcnt ORDER BY s.word
 """
 
@@ -4879,7 +4870,7 @@ def q_source_mixture(spark, sf):
 _LOGREG_ITERS = 6
 
 
-def _logreg_sql(iters: int = _LOGREG_ITERS, lr: float = 1.0) -> str:
+def _logreg_sql() -> str:
     feat = """d AS (
   SELECT doc_id,
          CASE WHEN doc_id % 3 = 0 THEN 1.0 ELSE 0.0 END AS y,
@@ -4890,7 +4881,7 @@ def _logreg_sql(iters: int = _LOGREG_ITERS, lr: float = 1.0) -> str:
   FROM documents),
 wt0 AS (SELECT 0.0 AS b, 0.0 AS a1, 0.0 AS a2, 0.0 AS a3)"""
     steps = []
-    for k in range(1, iters + 1):
+    for k in range(1, _LOGREG_ITERS + 1):
         steps.append(f""",
 g{k} AS (
   SELECT avg(p - y) AS gb, avg((p - y) * f1) AS g1,
@@ -4899,13 +4890,13 @@ g{k} AS (
                1.0 / (1.0 + exp(-(b + a1 * f1 + a2 * f2 + a3 * f3))) AS p
         FROM d CROSS JOIN wt{k - 1})),
 wt{k} AS (
-  SELECT b - {lr} * gb AS b, a1 - {lr} * g1 AS a1,
-         a2 - {lr} * g2 AS a2, a3 - {lr} * g3 AS a3
+  SELECT b - 1.0 * gb AS b, a1 - 1.0 * g1 AS a1,
+         a2 - 1.0 * g2 AS a2, a3 - 1.0 * g3 AS a3
   FROM wt{k - 1} CROSS JOIN g{k})""")
     return "WITH " + feat + "".join(steps) + f"""
 SELECT doc_id, CAST(y AS DOUBLE) AS y,
        round(1.0 / (1.0 + exp(-(b + a1 * f1 + a2 * f2 + a3 * f3))), 9) AS p
-FROM d CROSS JOIN wt{iters} ORDER BY doc_id
+FROM d CROSS JOIN wt{_LOGREG_ITERS} ORDER BY doc_id
 """
 
 

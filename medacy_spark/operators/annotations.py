@@ -23,7 +23,7 @@ from medacy_spark.functions.spans import lenient_contains, overlap_len
 KEY = ("tag", "start", "end", "text")
 
 
-def _k(df: DataFrame, id_col: str) -> list[str]:
+def _k(id_col: str) -> list[str]:
     return [id_col, *KEY]
 
 
@@ -38,26 +38,26 @@ def counts(mentions: DataFrame, id_col: str | None = None) -> DataFrame:
     return mentions.groupBy(*keys).agg(F.count("*").alias("cnt"))
 
 
-def union_dedup(a: DataFrame, b: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def union_dedup(a: DataFrame, b: DataFrame) -> DataFrame:
     """U1: `|` union with EntTuple dedup (annotations.py:250-264)."""
-    cols = _k(a, id_col)
+    cols = _k("doc_id")
     return a.select(*cols).unionByName(b.select(*cols)).distinct()
 
 
-def exact_difference(a: DataFrame, b: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def exact_difference(a: DataFrame, b: DataFrame) -> DataFrame:
     """J3: set difference on the full tuple (annotations.py:130-131)."""
-    cols = _k(a, id_col)
+    cols = _k("doc_id")
     return a.select(*cols).exceptAll(b.select(*cols).distinct()).distinct()
 
 
-def exact_intersection(a: DataFrame, b: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def exact_intersection(a: DataFrame, b: DataFrame) -> DataFrame:
     """J4: set intersection on the full tuple (annotations.py:158-159)."""
-    cols = _k(a, id_col)
+    cols = _k("doc_id")
     return a.select(*cols).intersect(b.select(*cols))
 
 
 def lenient_intersection(
-    gold: DataFrame, system: DataFrame, leniency: float, id_col: str = "doc_id"
+    gold: DataFrame, system: DataFrame, leniency: float
 ) -> DataFrame:
     """J5: gold mentions having ≥1 system mention contained in the widened
     window, same tag (annotations.py:163-172). Returns matching gold rows.
@@ -67,13 +67,13 @@ def lenient_intersection(
     matters for which *candidate* matched; the output is the gold row) —
     a left-semi join reproduces it exactly.
     """
-    g = gold.select(*_k(gold, id_col))
+    g = gold.select(*_k("doc_id"))
     s = system.select(
-        F.col(id_col).alias("_id"), F.col("tag").alias("_tag"),
+        F.col("doc_id").alias("_id"), F.col("tag").alias("_tag"),
         F.col("start").alias("_start"), F.col("end").alias("_end"),
     )
     cond = (
-        (g[id_col] == s["_id"]) & (g["tag"] == s["_tag"])
+        (g["doc_id"] == s["_id"]) & (g["tag"] == s["_tag"])
         & lenient_contains(g["start"], g["end"], s["_start"], s["_end"], leniency)
     )
     return g.join(s, cond, "left_semi")
@@ -83,7 +83,7 @@ def lenient_difference(
     gold: DataFrame, system: DataFrame, leniency: float, id_col: str = "doc_id"
 ) -> DataFrame:
     """J5 complement: gold rows with no lenient match (annotations.py:135-145)."""
-    g = gold.select(*_k(gold, id_col))
+    g = gold.select(*_k(id_col))
     s = system.select(
         F.col(id_col).alias("_id"), F.col("tag").alias("_tag"),
         F.col("start").alias("_start"), F.col("end").alias("_end"),
@@ -96,7 +96,7 @@ def lenient_difference(
 
 
 def ambiguity(
-    a: DataFrame, b: DataFrame, id_col: str = "doc_id", self_compare: bool | None = None
+    a: DataFrame, b: DataFrame, self_compare: bool | None = None
 ) -> DataFrame:
     """J6: overlapping spans with different labels (annotations.py:174-195).
 
@@ -109,12 +109,12 @@ def ambiguity(
     if self_compare is None:
         self_compare = a is b
     left = a.select(
-        F.col(id_col).alias("id"), F.col("tag").alias("tag_a"),
+        F.col("doc_id").alias("id"), F.col("tag").alias("tag_a"),
         F.col("start").alias("start_a"), F.col("end").alias("end_a"),
         F.col("text").alias("text_a"),
     )
     right = b.select(
-        F.col(id_col).alias("id2"), F.col("tag").alias("tag_b"),
+        F.col("doc_id").alias("id2"), F.col("tag").alias("tag_b"),
         F.col("start").alias("start_b"), F.col("end").alias("end_b"),
         F.col("text").alias("text_b"),
     )
@@ -137,8 +137,7 @@ def confusion_cells(
     gold: DataFrame,
     system: DataFrame,
     leniency: float = 0.0,
-    id_col: str = "doc_id",
-) -> DataFrame:
+    ) -> DataFrame:
     """A2 cells, unpivoted — reference-exact (annotations.py:197-232).
 
     Off-diagonal: ``compute_ambiguity`` (annotations.py:174-195) keys a dict
@@ -154,12 +153,12 @@ def confusion_cells(
     cell, as in the reference (the two passes are independent).
     """
     g = gold.select(
-        F.col(id_col).alias("id"), F.col("tag").alias("gold_tag"),
+        F.col("doc_id").alias("id"), F.col("tag").alias("gold_tag"),
         F.col("start").alias("g_start"), F.col("end").alias("g_end"),
         F.col("text").alias("g_text"),
     ).distinct()  # dict/set keys collapse exact-duplicate gold tuples
     s = system.select(
-        F.col(id_col).alias("id2"), F.col("tag").alias("sys_tag"),
+        F.col("doc_id").alias("id2"), F.col("tag").alias("sys_tag"),
         F.col("start").alias("s_start"), F.col("end").alias("s_end"),
         F.col("text").alias("s_text"),
     )
@@ -218,7 +217,7 @@ def to_ann_lines(mentions: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def from_ann_lines(lines: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def from_ann_lines(lines: DataFrame) -> DataFrame:
     """S2: BRAT parser — regex-scan T-lines into (tag, start, end, text).
 
     Handles the reference's discontinuous-span collapse (first start, last
@@ -236,7 +235,7 @@ def from_ann_lines(lines: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return lines.filter(
         F.col("line").rlike(r"^T\d+\t\S+ (\d+ \d+;)*\d+ \d+\t.")
     ).select(
-        id_col,
+        "doc_id",
         F.regexp_extract("line", r"^T\d+\t(\S+)", 1).alias("tag"),
         first_start.cast("long").alias("start"),
         last_end.cast("long").alias("end"),

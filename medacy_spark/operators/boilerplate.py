@@ -92,8 +92,6 @@ def remove_boilerplate_lines(
     docs: DataFrame,
     min_docs: int = 5,
     min_line_chars: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     key_hash: str | None = "xxhash64",
     broadcast_max_lines: int = 2_000_000,
 ) -> DataFrame:
@@ -103,7 +101,7 @@ def remove_boilerplate_lines(
     clean_text, chars_removed, frac_chars_removed)``.
     """
     boiler = boilerplate_line_keys(
-        docs, min_docs, min_line_chars, id_col, text_col, key_hash
+        docs, min_docs, min_line_chars, "doc_id", "text", key_hash
     ).localCheckpoint()
     # counted-threshold broadcast: the boilerplate set is corpus-derived
     # (unbounded at web scale) — never force a broadcast above the cap
@@ -111,7 +109,7 @@ def remove_boilerplate_lines(
         F.broadcast(boiler) if boiler.count() <= broadcast_max_lines else boiler
     )
 
-    lines = _lines(docs, id_col, text_col)
+    lines = _lines(docs, "doc_id", "text")
     cand_key = F.when(
         F.length(F.trim(F.col("_line"))) >= min_line_chars,
         _line_key(F.col("_line"), key_hash),
@@ -128,7 +126,7 @@ def remove_boilerplate_lines(
             F.when(F.col("_hit").isNull(), F.struct("_pos", "_line"))
         )
     )
-    out = tagged.groupBy(F.col("_id").alias(id_col)).agg(
+    out = tagged.groupBy(F.col("_id").alias("doc_id")).agg(
         F.count("*").alias("n_lines"),
         F.coalesce(F.sum("_hit"), F.lit(0)).alias("n_boiler"),
         F.array_join(
@@ -141,7 +139,7 @@ def remove_boilerplate_lines(
     )
     removed = F.col("_orig_len") - F.length("clean_text")
     return out.select(
-        id_col,
+        "doc_id",
         "n_lines",
         "n_boiler",
         "clean_text",

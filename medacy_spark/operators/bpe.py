@@ -88,15 +88,13 @@ def learn_bpe(
     docs: DataFrame,
     *,
     n_merges: int,
-    text_col: str = "text",
-    min_pair_count: int = 1,
 ) -> BpeModel:
     """Learn ``n_merges`` BPE merges over one corpus pass + vocab-scale
-    iterations.  Stops early when no pair reaches ``min_pair_count``."""
+    iterations.  Stops early when no pair remains."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     wc = (
-        docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("wcnt"))
@@ -114,7 +112,7 @@ def learn_bpe(
             .agg(F.sum("wcnt").alias("cnt"))
         )
         best = pc.orderBy(F.desc("cnt"), "l", "r").limit(1).collect()
-        if not best or best[0]["cnt"] < min_pair_count:
+        if not best:
             break
         left, right, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
         merges.append((k, left, right, cnt))
@@ -127,26 +125,23 @@ def learn_bpe(
 def apply_bpe(
     docs: DataFrame,
     model: BpeModel,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(id_col, tokens): each doc re-tokenized through the learned
     segmentation map; words outside the training vocabulary fall back
     to characters.  One explode + one model-scale equi-join + one
     per-doc reassembly."""
     words = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "word"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "word"),
     ).filter(F.col("word") != "")
     seg = model.vocab.select("word", "syms")
     joined = words.join(seg, "word", "left").select(
-        id_col,
+        "doc_id",
         "pos",
         F.coalesce(F.col("syms"), F.split(F.col("word"), "")).alias("syms"),
     )
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("doc_id")
         .agg(
             F.flatten(
                 F.transform(

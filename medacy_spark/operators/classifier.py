@@ -72,7 +72,6 @@ def train_logreg(
     label_col: str = "y",
     *,
     iterations: int = 6,
-    lr: float = 1.0,
 ) -> LogRegModel:
     """Full-batch gradient descent from zero weights; ``df`` must carry
     the feature columns and a 0/1 double label."""
@@ -96,15 +95,15 @@ def train_logreg(
         w = (
             w.crossJoin(F.broadcast(grads))
             .select(
-                (F.col("b") - F.lit(lr) * F.col("g_b")).alias("b"),
+                (F.col("b") - F.lit(1.0) * F.col("g_b")).alias("b"),
                 *[
-                    (F.col(f"a_{n}") - F.lit(lr) * F.col(f"g_{n}")).alias(f"a_{n}")
+                    (F.col(f"a_{n}") - F.lit(1.0) * F.col(f"g_{n}")).alias(f"a_{n}")
                     for n in feature_names
                 ],
             )
             .localCheckpoint(eager=False)
         )
-    return LogRegModel(w, list(feature_names), float(lr), int(iterations))
+    return LogRegModel(w, list(feature_names), 1.0, int(iterations))
 
 
 def score_logreg(df: DataFrame, model: LogRegModel) -> DataFrame:

@@ -27,7 +27,7 @@ from medacy_spark.operators.textstats import word_ngrams
 
 
 def benchmark_ngrams(
-    benchmark: DataFrame, n: int = 8, text_col: str = "text"
+    benchmark: DataFrame, n: int = 8
 ) -> DataFrame:
     """Distinct word n-grams of the benchmark table: one column ``gram``.
     Entries shorter than ``n`` tokens contribute nothing."""
@@ -35,7 +35,7 @@ def benchmark_ngrams(
     # token array per gram position inside a lambda, where an inlined
     # split(text) would re-evaluate every time (see dedup.word_shingles_arr)
     return (
-        benchmark.select(F.split(F.col(text_col), " ").alias("_toks"))
+        benchmark.select(F.split(F.col("text"), " ").alias("_toks"))
         .select(F.explode(word_ngrams(F.col("_toks"), n)).alias("gram"))
         .distinct()
     )
@@ -45,8 +45,6 @@ def ngram_contamination(
     docs: DataFrame,
     benchmark: DataFrame,
     n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     broadcast_max_grams: int = 5_000_000,
 ) -> DataFrame:
     """Per-document contamination profile against a benchmark table.
@@ -63,24 +61,24 @@ def ngram_contamination(
     discipline as graph.canonicalize_triples; a corpus-sized "benchmark"
     degrades to a shuffle equi-join instead of killing executors.
     """
-    bg = benchmark_ngrams(benchmark, n=n, text_col=text_col).localCheckpoint()
+    bg = benchmark_ngrams(benchmark, n=n).localCheckpoint()
     bg_rel = F.broadcast(bg) if bg.count() <= broadcast_max_grams else bg
     dg = docs.select(
-        id_col, F.split(F.col(text_col), " ").alias("_toks")
-    ).select(id_col, F.explode(word_ngrams(F.col("_toks"), n)).alias("gram"))
+        "doc_id", F.split(F.col("text"), " ").alias("_toks")
+    ).select("doc_id", F.explode(word_ngrams(F.col("_toks"), n)).alias("gram"))
     per = (
         dg.join(bg_rel.withColumn("_hit", F.lit(1)), "gram", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_grams"),
             F.sum(F.coalesce("_hit", F.lit(0))).alias("n_contaminated"),
         )
     )
     return (
-        docs.select(id_col)
-        .join(per, id_col, "left")
+        docs.select("doc_id")
+        .join(per, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_grams", F.lit(0)).cast("long").alias("n_grams"),
             F.coalesce("n_contaminated", F.lit(0))
             .cast("long")

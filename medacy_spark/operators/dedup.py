@@ -198,8 +198,6 @@ def _base_hash(s: Column, base_hash: str) -> Column:
 
 def exact_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_ids: int | None = None,
 ) -> DataFrame:
     """Groups of byte-identical texts: (fingerprint, n, doc_ids).
@@ -208,11 +206,11 @@ def exact_duplicates(
     the true count) — at web scale a pathological mega-group (e.g. the
     empty page) would otherwise overflow a single row with collect_list.
     """
-    ids = F.sort_array(F.collect_list(id_col))
+    ids = F.sort_array(F.collect_list("doc_id"))
     if max_ids is not None:
         ids = F.slice(ids, 1, max_ids)
     return (
-        df.select(F.xxhash64(text_col).alias("fp"), F.col(id_col))
+        df.select(F.xxhash64("text").alias("fp"), F.col("doc_id"))
         .groupBy("fp")
         .agg(F.count("*").alias("n"), ids.alias("doc_ids"))
         .filter(F.col("n") > 1)
@@ -318,7 +316,6 @@ def minhash_lsh_candidates(
     bands: int = 8,
     shingle_n: int = 3,
     base_hash: str = "xxhash64",
-    cut_lineage: bool = True,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     mark_hot: bool = False,
 ) -> DataFrame:
@@ -333,17 +330,15 @@ def minhash_lsh_candidates(
     instead of an xxhash64 of it, so DuckDB joins on identical keys —
     same candidate topology, verifiable arithmetic.
 
-    ``cut_lineage`` localCheckpoints the signature table before the band
-    self-join: OSS Spark does not reuse the exchange between the two join
-    branches of a self-join (measured — the plan carries both aggregate
-    subtrees), so without the cut the shingle scan + signature
-    aggregation, the dominant cost at corpus scale, runs TWICE. Same
-    pattern as graph.connected_components' edge cut.
-
     ``max_bucket_size`` is the web-scale hot-bucket guard: buckets with
     more members switch from all-pairs to star topology (see
     _capped_band_pairs — O(k) edges, logged, cluster still merges in
-    dedup_corpus). Default on; ``None`` forces all-pairs everywhere. For
+    dedup_corpus). The guard's windowed banded relation is
+    localCheckpointed, which also cuts the signature lineage: OSS Spark
+    does not reuse the exchange between the two branches of a self-join,
+    so without a cut the shingle scan + signature aggregation, the
+    dominant cost at corpus scale, runs TWICE. ``None`` forces the
+    uncut all-pairs join (the exact reference the tests compare). For
     a star edge n_bands counts the bands where the pair met through the
     hub, a lower bound on the true collision count — and a direct edge
     between two non-hub hot-bucket members loses its hot-band counts
@@ -355,14 +350,6 @@ def minhash_lsh_candidates(
     """
     rows = num_hashes // bands
     sig = minhash_signature_table(df, text_col, id_col, num_hashes, shingle_n, base_hash)
-    # an active guard checkpoints the WINDOWED banded relation inside
-    # _capped_band_pairs (detection folded into the band shuffle), which
-    # already cuts the signature lineage — the banded relation is
-    # consumed exactly once, so a sig checkpoint here would be a second
-    # materialization for nothing. Guard-off keeps the classic cut: the
-    # all-pairs self-join reads the signature table twice.
-    if cut_lineage and max_bucket_size is None:
-        sig = sig.localCheckpoint(eager=False)
     banded = sig.select(
         "id",
         F.posexplode(
@@ -389,7 +376,6 @@ def simhash64_table(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_n: int = 2,
     base_hash: str = "xxhash64",
 ) -> DataFrame:
     """(id, sh): SimHash per doc — bit j is 1 iff more than half the
@@ -410,7 +396,7 @@ def simhash64_table(
         "id",
         F.explode(
             F.transform(
-                word_shingles_arr(F.col("_toks"), shingle_n),
+                word_shingles_arr(F.col("_toks"), 2),
                 lambda s: _base_hash(s, base_hash),
             )
         ).alias("h"),
@@ -431,60 +417,40 @@ def simhash64_table(
 
 def simhash_candidates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    n_blocks: int = 6,
     base_hash: str = "xxhash64",
-    cut_lineage: bool = True,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    mark_hot: bool = False,
 ) -> DataFrame:
     """Near-dup candidates: Manku-style block banding over the 64-bit
     simhash (Detecting Near-Duplicates for Web Crawling, WWW'07).
-    ``cut_lineage`` as in minhash_lsh_candidates: the band self-join
-    otherwise recomputes the bit-vote aggregation once per side.
     ``max_bucket_size`` is the hot-bucket guard (_capped_band_pairs):
     over-full key buckets — a near-identical megacluster collides in
     every combination family — emit star edges to the bucket min instead
-    of all pairs; default on, logged, no-op at oracle/bench scales.
+    of all pairs; default on, logged, no-op at oracle/bench scales. Its
+    checkpoint also cuts the bit-vote lineage, which the band self-join
+    would otherwise recompute once per side.
     ``hamming`` is always EXACT (recomputed from the carried signatures),
-    but for a star edge it measures member↔hub distance — two non-hub
-    members of a hot bucket may be mutually within ``max_hamming`` while
-    their hub edges are not, so a caller that post-filters by hamming can
-    silently disconnect hot-bucket members. ``mark_hot=True`` appends a
-    boolean ``hot`` column (pair met through a star edge) so callers can
-    exempt those edges, mirroring minhash's ``n_hot_bands``; the default
-    keeps the classic (id_a, id_b, hamming) schema.
+    but for a star edge it measures member↔hub distance.
 
-    The 64 bits split into ``n_blocks`` nearly-equal blocks; a pair within
-    Hamming distance ``max_hamming`` flips bits in at most that many
-    blocks, so at least one combination of (n_blocks - max_hamming) blocks
-    is identical on both sides — keys are all C(n_blocks, n_blocks-d)
-    such combinations. Defaults (6 blocks, d=3): 20 key families of ~32
-    exact-match bits each, i.e. ~2^32 buckets per family — bucket
-    occupancy keeps shrinking as the corpus grows, unlike the round-1
-    4×16-bit banding whose 65,536 buckets per chunk went quadratic past
-    ~10^9 docs. Cost: C(n,k) keys per doc instead of 4.
+    The bits split into 6 nearly-equal blocks; a pair within Hamming
+    distance 3 flips bits in at most 3 blocks, so at least one
+    combination of 3 blocks is identical on both sides — keys are all
+    C(6, 3) = 20 such combinations, of ~32 exact-match bits each, i.e.
+    ~2^32 buckets per family — bucket occupancy keeps shrinking as the
+    corpus grows, unlike the round-1 4×16-bit banding whose 65,536
+    buckets per chunk went quadratic past ~10^9 docs. Cost: 20 keys per
+    doc instead of 4.
     """
     from itertools import combinations
 
-    s = simhash64_table(df, text_col, id_col, base_hash=base_hash)
-    # an active guard cuts via the windowed banded checkpoint inside
-    # _capped_band_pairs (see minhash_lsh_candidates)
-    if cut_lineage and max_bucket_size is None:
-        s = s.localCheckpoint(eager=False)
+    s = simhash64_table(df, "text", "doc_id", base_hash=base_hash)
     n_bits = simhash_bits(base_hash)
-    sizes = [
-        n_bits // n_blocks + (1 if i < n_bits % n_blocks else 0)
-        for i in range(n_blocks)
-    ]
-    offsets = [sum(sizes[:i]) for i in range(n_blocks)]
+    sizes = [n_bits // 6 + (1 if i < n_bits % 6 else 0) for i in range(6)]
+    offsets = [sum(sizes[:i]) for i in range(6)]
     block = [
         F.shiftrightunsigned("sh", offsets[i]).bitwiseAND(F.lit((1 << sizes[i]) - 1))
-        for i in range(n_blocks)
+        for i in range(6)
     ]
-    combos = list(combinations(range(n_blocks), n_blocks - max_hamming))
+    combos = list(combinations(range(6), 3))
 
     def _key(combo):
         joined = F.concat_ws(",", *[block[i].cast("string") for i in combo])
@@ -499,51 +465,8 @@ def simhash_candidates(
         "simhash_candidates",
     )
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    if mark_hot:
-        return (
-            pairs.groupBy("id_a", "id_b", "sh_a", "sh_b")
-            .agg((F.max(F.col("_star").cast("int")) == 1).alias("hot"))
-            .select("id_a", "id_b", hamming.alias("hamming"), "hot")
-        )
     pairs = pairs.drop("_star").distinct()
     return pairs.select("id_a", "id_b", hamming.alias("hamming"))
-
-
-def verify_near_dups(
-    df: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Exact-Jaccard verification of sketch candidate pairs — the standard
-    MinHash→verify second stage. Only docs that appear in ``pairs`` grow
-    shingle sets (left-semi restriction), the Jaccard join runs inside
-    that subset, and the result is intersected back with the candidate
-    pair set: (id_a, id_b, jaccard) for candidates whose EXACT similarity
-    clears the threshold.
-
-    The hot-shingle guard defaults to DEFAULT_MAX_SHINGLE_DF here too
-    (``None`` inherits it) — a boilerplate shingle shared by every
-    candidate doc would otherwise make the verify stage df²-quadratic,
-    exactly the failure mode the sketch stage was avoiding.
-    """
-    if max_shingle_df is None:
-        max_shingle_df = DEFAULT_MAX_SHINGLE_DF
-    # the pair set is read three times (both union sides + the final
-    # intersect join) — cut its lineage so an expensive candidate
-    # generator (minhash band self-join) runs once, not three times
-    pairs = pairs.localCheckpoint(eager=False)
-    ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .union(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    sub = df.join(ids, id_col, "left_semi")
-    exact = ngram_jaccard_pairs(sub, text_col, id_col, n, threshold, max_shingle_df)
-    return pairs.select("id_a", "id_b").join(exact, ["id_a", "id_b"])
 
 
 def dedup_corpus(
@@ -553,7 +476,6 @@ def dedup_corpus(
     num_hashes: int = 32,
     bands: int = 8,
     min_bands: int = 2,
-    verify_threshold: float | None = None,
     base_hash: str = "xxhash64",
     shingle_n: int = 3,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
@@ -564,10 +486,7 @@ def dedup_corpus(
 
     This is the standard web-corpus dedup topology (candidate generation
     never materializes the cross product; the CC graph is tiny relative to
-    the corpus). min_bands tunes precision of the candidate edges;
-    ``verify_threshold`` additionally confirms every candidate edge by
-    EXACT n-gram Jaccard (verify_near_dups, hot-shingle guard on) before
-    clustering — sketch recall, exact precision.
+    the corpus). min_bands tunes precision of the candidate edges.
 
     Hot-bucket interaction: edges that met through a hot bucket
     (n_hot_bands > 0) are EXEMPT from the min_bands filter — star
@@ -575,9 +494,7 @@ def dedup_corpus(
     two non-hub members loses its hot-band collisions entirely), so
     filtering them by band count would silently un-dedup exactly the
     megacluster the guard exists for. A >max_bucket_size bucket is
-    itself a strong near-dup signal; when precision matters, set
-    ``verify_threshold`` and every edge (star included) is confirmed by
-    exact Jaccard before clustering.
+    itself a strong near-dup signal.
     """
     from medacy_spark.operators.graph import connected_components
 
@@ -585,10 +502,6 @@ def dedup_corpus(
         df, text_col, id_col, num_hashes, bands, shingle_n=shingle_n,
         base_hash=base_hash, max_bucket_size=max_bucket_size, mark_hot=True,
     ).filter((F.col("n_bands") >= min_bands) | (F.col("n_hot_bands") > 0))
-    if verify_threshold is not None:
-        pairs = verify_near_dups(
-            df, pairs, text_col, id_col, threshold=verify_threshold
-        )
     comp = connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
@@ -601,15 +514,9 @@ def dedup_corpus(
 def dedup_batch_against_state(
     batch: DataFrame,
     state: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
     min_bands: int = 2,
-    shingle_n: int = 3,
     base_hash: str = "xxhash64",
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    broadcast_max_buckets: int = 4_000_000,
 ) -> tuple[DataFrame, DataFrame]:
     """One ingest step of INCREMENTAL near-dup removal: dedup a new batch
     against the already-accepted corpus WITHOUT recomputing anything over
@@ -647,7 +554,7 @@ def dedup_batch_against_state(
     from pyspark.sql import Window
 
     new_bands = band_table(
-        batch, text_col, id_col, num_hashes, bands, shingle_n, base_hash
+        batch, "text", "doc_id", 32, 8, 3, base_hash
     ).localCheckpoint(eager=False)  # consumed by the state join AND the
     # survivor state append — cut once
     # prune the state to the buckets this batch touches BEFORE any
@@ -661,7 +568,7 @@ def dedup_batch_against_state(
     # threshold the prune falls back to a shuffle semi join, which is
     # still correct and still batch-bounded on the build side.
     bucket_set = new_bands.select("band", "bucket").distinct()
-    if bucket_set.count() <= broadcast_max_buckets:
+    if bucket_set.count() <= 4_000_000:
         bucket_set = F.broadcast(bucket_set)
     state = state.join(bucket_set, ["band", "bucket"], "left_semi")
     if max_bucket_size is not None:
@@ -692,9 +599,9 @@ def dedup_batch_against_state(
     )
     dup_ids = hits.filter(
         (F.col("n_bands") >= min_bands) | F.col("any_hot")
-    ).select(F.col("_new").alias(id_col)).distinct()
+    ).select(F.col("_new").alias("doc_id")).distinct()
     # consumed by the fresh-band semi join AND the final anti-join base
-    fresh = batch.join(dup_ids, id_col, "left_anti").localCheckpoint(eager=False)
+    fresh = batch.join(dup_ids, "doc_id", "left_anti").localCheckpoint(eager=False)
     # intra-batch dedup WITHOUT re-sketching: band rows are per-doc, so
     # restricting the ALREADY-CHECKPOINTED batch band relation to fresh
     # ids is arithmetically identical to dedup_corpus's re-sketch of the
@@ -704,7 +611,7 @@ def dedup_batch_against_state(
     from medacy_spark.operators.graph import connected_components
 
     fresh_bands = new_bands.join(
-        fresh.select(F.col(id_col).alias("id")), "id", "left_semi"
+        fresh.select(F.col("doc_id").alias("id")), "id", "left_semi"
     )
     pairs = (
         _capped_band_pairs(
@@ -722,14 +629,14 @@ def dedup_batch_against_state(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
     victims = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
+        F.col("node").alias("doc_id")
     )
-    survivors = fresh.join(victims, id_col, "left_anti").localCheckpoint(
+    survivors = fresh.join(victims, "doc_id", "left_anti").localCheckpoint(
         eager=False
     )  # both returned frames hang off the survivor set; the caller's
     # two sinks must not recompute it
     new_state = new_bands.join(
-        survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
+        survivors.select(F.col("doc_id").alias("id")), "id", "left_semi"
     )
     return survivors, new_state
 
@@ -737,47 +644,18 @@ def dedup_batch_against_state(
 def embedding_near_dups(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-    dim: int | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥ t).
-
-    Scale path: random-hyperplane bucket join prunes candidates (near-dups
-    at cosine ≥0.95 almost always share all sign bits), exact cosine
-    rescoring inside buckets. For the exact (oracle) variant set
-    n_planes=0 → full O(n²) per-partition cross join; keep that for small
-    n or verification only.
-
-    Pass ``dim`` (the embedding width) explicitly in pipelines — the
-    fallback probes it with a driver-side .first(), an extra job you don't
-    want mid-pipeline at scale.
-    """
+    """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥ t):
+    the exact O(n²) cross join, with cosine computed per pair. Each
+    side's L2 norm is hoisted to once per row (r8): same fold arithmetic
+    as the inline cosine, 3 HOF folds per pair -> 1."""
     from medacy_spark.operators.linking import array_dot, array_norm
-    from medacy_spark.operators.similarity import rh_bucket
 
-    # each side's L2 norm is hoisted to once-per-row (r8): same fold
-    # arithmetic as the inline cosine, 3 HOF folds/pair -> 1
-    if n_planes > 0:
-        if dim is None:
-            dim = len(embeddings.select(vec_col).first()[0])
-        e = embeddings.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-            rh_bucket(F.col(vec_col), dim, n_planes).alias("bucket"),
-            array_norm(F.col(vec_col)).alias("_n"),
-        )
-        a = e.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
-                     "bucket", F.col("_n").alias("_na"))
-        b = e.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
-                     "bucket", F.col("_n").alias("_nb"))
-        pairs = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    else:
-        a = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-                              array_norm(F.col(vec_col)).alias("_na"))
-        b = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-                              array_norm(F.col(vec_col)).alias("_nb"))
-        pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+    a = embeddings.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"),
+                          array_norm(F.col("embedding")).alias("_na"))
+    b = embeddings.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"),
+                          array_norm(F.col("embedding")).alias("_nb"))
+    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     sim = F.when(
         (F.col("_na") == 0) | (F.col("_nb") == 0), F.lit(0.0)
     ).otherwise(
@@ -798,8 +676,6 @@ DEFAULT_MAX_SHINGLE_DF = 1000
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
@@ -832,7 +708,7 @@ def ngram_jaccard_pairs(
     import logging
 
     sh = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("_toks")
+        F.col("doc_id").alias("id"), F.split(F.col("text"), " ").alias("_toks")
     ).select(
         "id",
         F.explode(F.array_distinct(word_shingles_arr(F.col("_toks"), n))).alias("shingle"),
@@ -874,8 +750,6 @@ def ngram_jaccard_pairs(
 
 def duplicate_passages(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 8,
     min_tokens: int = 16,
     base_hash: str = "xxhash64",
@@ -922,7 +796,7 @@ def duplicate_passages(
     # inside the transform lambda (no CSE across lambda scopes) — measured
     # 7.89 s → 0.52 s for the k=8 gram pass at sf0.1 (BENCH.md)
     toked = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("_toks")
+        F.col("doc_id").alias("id"), F.split(F.col("text"), " ").alias("_toks")
     )
     grams = toked.select(
         "id", F.posexplode(word_ngrams(F.col("_toks"), k)).alias("pos", "gram")

@@ -66,8 +66,6 @@ def cooccurrence_pairs(
     id_cols: Sequence[str] = ("doc_id", "sent_id"),
     order_col: str = "tok_id",
     word_col: str = "word",
-    max_segment: int | None = None,
-    dense_positions: bool = False,
 ) -> DataFrame:
     """Symmetric ±window co-occurrence counts -> (word, ctx, n).
 
@@ -77,175 +75,24 @@ def cooccurrence_pairs(
     pair within the window contributes one count in EACH direction —
     lead(d) and lag(d) over the same window spec — so the relation is
     symmetric without a union (a union would re-run the uncached
-    lineage; see mentions.detect_mentions for the same rule).
-
-    The window partitions on the sequence key, so ONE pathological
-    mega-document (a 20M-token web page in a 100 TB crawl) becomes a
-    single-task straggler. ``max_segment`` bounds that: sequences are
-    cut into ≤max_segment-row segments carrying ±window-row halos, the
-    lead/lag pass runs per segment, and only segment-HOME rows emit
-    pairs — bit-identical counts (property-gated), tasks bounded by
-    max_segment + 2·window rows. Leave it None for corpora whose
-    per-sequence length is already bounded (sentences).
-
-    ``dense_positions=True`` promises order_col is a gapless 0-based
-    row index per sequence AND that cleaning filters nothing (raw
-    posexplode output with no empty/whitespace tokens). Then rank ==
-    position and segmentation is pure row-local arithmetic — no rank
-    checkpoint/join/window; a FALSE promise fails loudly (an in-window
-    contiguity assert), never silently mis-counts. Measured on 50k docs
-    + one planted 8M-token doc (tools/cooc_skew_ab.py, last at a3140ec;
-    value-checksummed across plans): dense path -47% wall vs unsegmented
-    (-25% in an earlier host state), general rank path +53% (its
-    corpus-wide machinery outweighs this straggler) — in a split-from-text
-    pipeline mega-doc hardening should ride the dense path; reserve the
-    general path for gappy positions under heavier skew."""
+    lineage; see mentions.detect_mentions for the same rule)."""
     toks = tokens.select(
         *id_cols, order_col, _clean(word_col).alias("_w")
     ).filter(F.col("_w") != "")
-    if max_segment is not None:
-        toks = _segment_with_halo(
-            toks, max_segment, window, id_cols, order_col, dense_positions
-        )
-        id_cols = (*id_cols, "_seg")
     w = Window.partitionBy(*id_cols).orderBy(order_col)
     ctxs = [F.lead("_w", d).over(w) for d in range(1, window + 1)] + [
         F.lag("_w", d).over(w) for d in range(1, window + 1)
     ]
     # window exprs first, generator second — Spark rejects a window
     # function inside explode's project
-    cols = [F.col("_w").alias("word"), F.array(*ctxs).alias("_ctx")]
-    if max_segment is not None:
-        cols.append(F.col("_home"))
-        if dense_positions:
-            # the dense promise made FALSE corrupts counts silently
-            # (home/halo boundaries drift off cleaned row adjacency), so
-            # verify it where it's free: ranks inside a segment must be
-            # contiguous — one extra lag on a window already being
-            # computed. assert_true returns NULL when the check passes.
-            prev = F.lag(F.col(order_col), 1).over(w)
-            cols.append(
-                F.assert_true(
-                    prev.isNull() | (prev == F.col(order_col) - 1),
-                    F.lit(
-                        "dense_positions=True but positions have gaps "
-                        "(cleaning filtered rows?) — co-occurrence counts "
-                        "would be silently wrong; use dense_positions=False"
-                    ),
-                ).alias("_dense_ok")
-            )
-    neighbours = toks.select(*cols)
-    if max_segment is not None:
-        # halo rows exist only to complete neighbours' windows; their own
-        # pairs are emitted by their home segment. The _dense_ok filter is
-        # vacuously true — it exists to force the assert's evaluation
-        # (a merely-dropped column would be pruned before it ever ran)
-        if dense_positions:
-            neighbours = neighbours.filter(F.col("_dense_ok").isNull())
-        neighbours = neighbours.filter(F.col("_home"))
+    neighbours = toks.select(F.col("_w").alias("word"), F.array(*ctxs).alias("_ctx"))
     pairs = neighbours.select(
         "word", F.explode("_ctx").alias("ctx")
     ).filter(F.col("ctx").isNotNull())
     return pairs.groupBy("word", "ctx").agg(F.count("*").cast("bigint").alias("n"))
 
 
-def _segment_with_halo(
-    toks: DataFrame,
-    max_segment: int,
-    window: int,
-    id_cols: Sequence[str],
-    order_col: str,
-    dense_positions: bool = False,
-) -> DataFrame:
-    """Cut each sequence into dense-rank segments of ≤max_segment rows,
-    replicating the window-sized edge rows into the neighbouring segment
-    as non-home halos, so per-segment lead/lag sees exactly the rows the
-    unsegmented window would.
-
-    The dense rank itself must not re-create the straggler, so it is
-    computed the vocab_index way (A9): bucket rows by raw position,
-    count per bucket (plain agg — parallel), prefix-sum the PER-BUCKET
-    counts with a window whose partitions hold one row per bucket
-    (metadata-scale), then rank within buckets (tasks bounded by the
-    bucket's position span). No single-task sort anywhere.
-    """
-    if max_segment <= 2 * window:
-        raise ValueError(
-            f"max_segment {max_segment} must exceed 2*window {2 * window}"
-        )
-    ids = list(id_cols)
-    if dense_positions:
-        # rank == position by caller's promise: segmentation is pure
-        # row-local arithmetic, no extra pass of any kind
-        ranked = toks.withColumn("_rank", F.col(order_col).cast("long"))
-    else:
-        # positions may have gaps (cleaning filtered rows), so build a
-        # dense rank WITHOUT a per-sequence single-task sort (the
-        # straggler this function exists to remove): bucket by raw
-        # position, count per bucket (plain agg), prefix-sum the
-        # one-row-per-bucket counts, rank within buckets. Two consumers
-        # of the bucketed stream (offsets agg + rank join) — checkpoint
-        # once (single-pass invariant).
-        bucketed = toks.withColumn(
-            "_bkt", F.floor(F.col(order_col) / F.lit(max_segment)).cast("long")
-        ).localCheckpoint(eager=True)
-        offs = (
-            bucketed.groupBy(*ids, "_bkt")
-            .agg(F.count("*").alias("_bn"))
-            .withColumn(
-                "_off",
-                F.coalesce(
-                    F.sum("_bn").over(
-                        Window.partitionBy(*ids)
-                        .orderBy("_bkt")
-                        .rowsBetween(Window.unboundedPreceding, -1)
-                    ),
-                    F.lit(0),
-                ),
-            )
-            .drop("_bn")
-        )
-        ranked = bucketed.join(offs, [*ids, "_bkt"]).withColumn(
-            "_rank",
-            (
-                F.col("_off")
-                + F.row_number().over(
-                    Window.partitionBy(*ids, "_bkt").orderBy(order_col)
-                )
-                - F.lit(1)
-            ).cast("long"),
-        )
-    home = F.floor(F.col("_rank") / F.lit(max_segment)).cast("long")
-    pos_in = F.col("_rank") % F.lit(max_segment)
-    memberships = F.filter(
-        F.array(
-            F.struct(home.alias("_seg"), F.lit(True).alias("_home")),
-            # first `window` rows also serve as the previous segment's
-            # lead-halo; last `window` rows as the next one's lag-halo
-            F.when(
-                (pos_in < window) & (home > 0),
-                F.struct((home - 1).alias("_seg"), F.lit(False).alias("_home")),
-            ),
-            F.when(
-                pos_in >= max_segment - window,
-                F.struct((home + 1).alias("_seg"), F.lit(False).alias("_home")),
-            ),
-        ),
-        lambda m: m.isNotNull(),
-    )
-    return (
-        ranked.withColumn("_m", F.explode(memberships))
-        .select(
-            *ids,
-            F.col("_rank").alias(order_col),
-            "_w",
-            F.col("_m._seg").alias("_seg"),
-            F.col("_m._home").alias("_home"),
-        )
-    )
-
-
-def ppmi(cooc: DataFrame, alpha: float = ALPHA) -> DataFrame:
+def ppmi(cooc: DataFrame) -> DataFrame:
     """Positive PMI with context-distribution smoothing, in-engine ->
     (word, ctx, n, ppmi).
 
@@ -269,7 +116,7 @@ def ppmi(cooc: DataFrame, alpha: float = ALPHA) -> DataFrame:
     ct = cooc.groupBy("ctx").agg(F.sum("n").cast("double").alias("_c_n"))
     scalars = (
         cooc.agg(F.sum("n").cast("double").alias("_total"))
-        .crossJoin(ct.agg(F.sum(F.pow("_c_n", F.lit(alpha))).alias("_z")))
+        .crossJoin(ct.agg(F.sum(F.pow("_c_n", F.lit(ALPHA))).alias("_z")))
     )
     return (
         cooc.join(F.broadcast(wt), "word")
@@ -285,7 +132,7 @@ def ppmi(cooc: DataFrame, alpha: float = ALPHA) -> DataFrame:
                     (F.col("n") / F.col("_total"))
                     / (
                         (F.col("_w_n") / F.col("_total"))
-                        * (F.pow("_c_n", F.lit(alpha)) / F.col("_z"))
+                        * (F.pow("_c_n", F.lit(ALPHA)) / F.col("_z"))
                     )
                 ),
             ).alias("ppmi"),
@@ -294,14 +141,14 @@ def ppmi(cooc: DataFrame, alpha: float = ALPHA) -> DataFrame:
 
 
 def ppmi_svd(
-    vocab: list[str], counts: np.ndarray, dim: int = DIM, alpha: float = ALPHA
+    counts: np.ndarray, dim: int = DIM
 ) -> np.ndarray:
     """Dense PPMI + truncated SVD -> L2-normalized (len(vocab), dim)
     vectors scaled by sqrt(singular values). Deterministic: per-column
     SVD sign fixed by forcing the largest-|.| component positive."""
     total = counts.sum()
     word_p = counts.sum(axis=1) / total
-    ctx = counts.sum(axis=0) ** alpha
+    ctx = counts.sum(axis=0) ** ALPHA
     ctx_p = ctx / ctx.sum()
     with np.errstate(divide="ignore", invalid="ignore"):
         pmi = np.log((counts / total) / np.outer(word_p, ctx_p))
@@ -321,10 +168,6 @@ def train_word_vectors(
     tokens: DataFrame,
     dim: int = DIM,
     window: int = WINDOW,
-    alpha: float = ALPHA,
-    id_cols: Sequence[str] = ("doc_id", "sent_id"),
-    order_col: str = "tok_id",
-    word_col: str = "word",
 ) -> tuple[list[str], np.ndarray]:
     """Corpus-scale counting in Spark, model-scale factorization on the
     driver -> (sorted vocab, L2-normalized vectors).
@@ -346,16 +189,16 @@ def train_word_vectors(
     pass never saw (KeyError below).
     """
     toks = tokens.select(
-        *id_cols, order_col, _clean(word_col).alias("_w")
+        "doc_id", "sent_id", "tok_id", _clean("word").alias("_w")
     ).filter(F.col("_w") != "").localCheckpoint(eager=True)
     vocab = sorted(r["_w"] for r in toks.select("_w").distinct().collect())
     index = {w: i for i, w in enumerate(vocab)}
     counts = np.zeros((len(vocab), len(vocab)))
     for r in cooccurrence_pairs(
-        toks, window=window, id_cols=id_cols, order_col=order_col, word_col="_w"
+        toks, window=window, word_col="_w"
     ).collect():
         counts[index[r["word"]], index[r["ctx"]]] = float(r["n"])
-    return vocab, ppmi_svd(vocab, counts, dim=dim, alpha=alpha)
+    return vocab, ppmi_svd(counts, dim=dim)
 
 
 def write_word2vec(path: str, vocab: list[str], vecs: np.ndarray) -> None:

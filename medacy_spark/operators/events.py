@@ -9,8 +9,8 @@ operators Spark's DataFrame API lacks as primitives:
   token stream into bounded runs (ref ``clinical_tokenizer.py`` via the
   spaCy Sentencizer); this is the same operation over timestamps.
 - ``asof_join``: match each left row to the nearest right row at-or-
-  before (backward) / at-or-after (forward) its timestamp per key —
-  pandas ``merge_asof`` semantics, which Spark has no built-in for.
+  before its timestamp per key — pandas ``merge_asof`` backward
+  semantics, which Spark has no built-in for.
 
 Both are built on ONE hash-partitioned window pass — no range join, no
 cartesian, no per-row UDF — so the 100-TB plan is a single shuffle on
@@ -74,94 +74,61 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str | list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     right_payload: list[str] | None = None,
     right_seq: str | None = None,
-    direction: str = "backward",
-    allow_exact_matches: bool = True,
-    tolerance_seconds: int | None = None,
-    suffix: str = "_r",
 ) -> DataFrame:
-    """Left as-of join: every ``left`` row, plus the payload of the
-    single nearest ``right`` row per key — at-or-before the left
-    timestamp for ``direction='backward'``, at-or-after for
-    ``'forward'`` (pandas ``merge_asof`` semantics, left-join null when
-    no match / outside ``tolerance_seconds``).
+    """Left as-of join on ``ts``: every ``left`` row, plus the payload of
+    the single nearest ``right`` row per key at-or-before the left
+    timestamp (pandas ``merge_asof`` backward semantics with exact
+    matches allowed; left-join null when no match).
 
     Implementation is the union-tagged-stream trick: tag right rows
     side=0 and left rows side=1, union, and take
     ``last(right_payload, ignorenulls=True)`` over a per-key window
-    ordered by (ts, side[, right_seq]) — backward reads the preceding
-    frame, forward reads the following frame with ``first``. Exact-ts
-    matches are included/excluded purely by the side sort order, so
-    the operator is ONE shuffle on the key regardless of data volume;
-    there is no range predicate for the optimizer to mis-plan into a
+    ordered by (ts, side, right_seq) across the preceding frame. An
+    exact-ts right row sorts before the left row, so it is inside the
+    frame; the operator is ONE shuffle on the key regardless of data
+    volume, with no range predicate for the optimizer to mis-plan into a
     cartesian.
 
     ``right_seq`` (a right-side column) breaks ties among right rows
-    sharing (key, ts): the greatest wins for backward, the smallest
-    for forward. Without it, equal-(key, ts) right rows are
-    tie-ambiguous — pre-dedupe the right side if that matters.
+    sharing (key, ts): the greatest wins. Without it, equal-(key, ts)
+    right rows are tie-ambiguous — pre-dedupe the right side if that
+    matters.
 
-    Output: all left columns, then ``{right_ts}{suffix}`` and each
-    ``right_payload`` column as ``{name}{suffix}``.
+    Output: all left columns, then ``ts_r`` and each ``right_payload``
+    column as ``{name}_r``.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
     keys = [on] if isinstance(on, str) else list(on)
     right_payload = list(right_payload or [])
-    payload_cols = [F.col(right_ts).alias(f"{right_ts}{suffix}")] + [
-        F.col(c).alias(f"{c}{suffix}") for c in right_payload
+    payload_cols = [F.col("ts").alias("ts_r")] + [
+        F.col(c).alias(f"{c}_r") for c in right_payload
     ]
 
-    # right-side tie-break: greatest seq wins for backward (it sorts
-    # last inside the preceding frame), smallest for forward (it sorts
-    # first inside the following frame) — one ascending sort serves both
+    # right-side tie-break: the greatest seq sorts last inside the
+    # preceding frame
     rseq = F.col(right_seq) if right_seq else F.lit(0)
     r2 = right.select(
         *[F.col(k) for k in keys],
-        F.col(right_ts).alias("_t"),
+        F.col("ts").alias("_t"),
         F.lit(0).alias("_side"),
         rseq.cast("long").alias("_rseq"),
         F.struct(*payload_cols).alias("_rp"),
     )
     l2 = left.select(
         *[F.col(k) for k in keys],
-        F.col(left_ts).alias("_t"),
+        F.col("ts").alias("_t"),
         F.lit(1).alias("_side"),
         F.struct(*[F.col(c) for c in left.columns]).alias("_lp"),
     )
     u = l2.unionByName(r2, allowMissingColumns=True)
-
-    # side order decides whether an equal-ts right row lands inside the
-    # frame: backward+inclusive and forward+exclusive want right BEFORE
-    # left at ties (side asc); the other two want right after (desc).
-    if (direction == "backward") == allow_exact_matches:
-        side_order = F.col("_side").asc()
-    else:
-        side_order = F.col("_side").desc()
-    w = Window.partitionBy(*keys).orderBy(F.col("_t").asc(), side_order, "_rseq")
-    if direction == "backward":
-        frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        matched = F.last("_rp", ignorenulls=True).over(frame)
-    else:
-        frame = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        matched = F.first("_rp", ignorenulls=True).over(frame)
-
+    w = Window.partitionBy(*keys).orderBy(
+        F.col("_t").asc(), F.col("_side").asc(), "_rseq"
+    )
+    frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    matched = F.last("_rp", ignorenulls=True).over(frame)
     out = u.withColumn("_m", matched).filter(F.col("_side") == 1)
-    if tolerance_seconds is not None:
-        tol_us = int(tolerance_seconds) * 1_000_000
-        mt = _micros(F.col("_m")[f"{right_ts}{suffix}"])
-        lt = _micros(F.col("_t"))
-        dist = (lt - mt) if direction == "backward" else (mt - lt)
-        out = out.withColumn(
-            "_m", F.when(dist <= F.lit(tol_us), F.col("_m"))
-        )
     return out.select(
         "_lp.*",
-        *[
-            F.col("_m")[f"{c}{suffix}"].alias(f"{c}{suffix}")
-            for c in [right_ts, *right_payload]
-        ],
+        *[F.col("_m")[f"{c}_r"].alias(f"{c}_r") for c in ["ts", *right_payload]],
     )

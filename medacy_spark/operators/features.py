@@ -76,7 +76,6 @@ def with_pos(
 def train_pos_tagger(
     tagged: "Sequence[tuple[Sequence[str], Sequence[str]]]",
     epochs: int = 5,
-    window: int = 2,
 ):
     """Trainable upgrade path for the ``pos_`` column: a Collins averaged
     perceptron (learners.PerceptronLearner — exact Viterbi, window
@@ -95,15 +94,13 @@ def train_pos_tagger(
     trained tagger beats it on held-out tokens before anyone swaps."""
     from medacy_spark.learners import PerceptronLearner
 
-    return PerceptronLearner(epochs=epochs, window=window).fit(tagged)
+    return PerceptronLearner(epochs=epochs, window=2).fit(tagged)
 
 
 def with_pos_model(
     tokens: DataFrame,
     spark,
     tagger,
-    id_col: str = "doc_id",
-    out_col: str = "pos_",
 ) -> DataFrame:
     """Apply a trained tagger (train_pos_tagger, or any callable
     ``list[list[str]] -> list[list[str]]``) as the ``pos_`` source via
@@ -116,14 +113,12 @@ def with_pos_model(
     from medacy_spark.operators.ner_model import score_sentences
 
     bc = spark.sparkContext.broadcast(tagger)
-    return score_sentences(tokens, bc, id_col).withColumnRenamed("label", out_col)
+    return score_sentences(tokens, bc, "doc_id").withColumnRenamed("label", "pos_")
 
 
 def with_head(
     tokens: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "word",
-    out_col: str = "head_",
 ) -> DataFrame:
     """F18 head_ source: the reference's drug_event_pipeline feeds
     ``token.head`` (the syntactic head's surface form) into the CRF
@@ -140,27 +135,27 @@ def with_head(
     if "pos_" in tokens.columns:
         t = tokens.withColumn("_headpos", F.col("pos_"))
     else:
-        t = with_pos(tokens, text_col, "_headpos")
+        t = with_pos(tokens, "word", "_headpos")
     w = Window.partitionBy(id_col, "sent_id").orderBy("tok_id")
     prev = w.rowsBetween(Window.unboundedPreceding, -1)
     is_verb = F.col("_headpos").isin("VERB", "AUX")
     last_verb = F.last(
-        F.when(is_verb, F.col(text_col)), ignorenulls=True
+        F.when(is_verb, F.col("word")), ignorenulls=True
     ).over(prev)
-    first_tok = F.first(text_col).over(
+    first_tok = F.first("word").over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    head = F.when(is_verb, F.col(text_col)).otherwise(
+    head = F.when(is_verb, F.col("word")).otherwise(
         F.coalesce(last_verb, first_tok)
     )
-    return t.withColumn(out_col, head).drop("_headpos")
+    return t.withColumn("head_", head).drop("_headpos")
 
 
-def with_spacy_features(tokens: DataFrame, text_col: str = "word") -> DataFrame:
+def with_spacy_features(tokens: DataFrame) -> DataFrame:
     """F18: cheap spaCy-attribute analogues as pure column expressions
     (incl. the pos_ rule tagger, so window configs listing 'pos_' run;
     head_ comes from with_head when a pipeline lists it)."""
-    t = F.col(text_col)
+    t = F.col("word")
     shape = F.regexp_replace(
         F.regexp_replace(F.regexp_replace(t, "[A-Z]", "X"), "[a-z]", "x"), r"\d", "d"
     )
@@ -178,14 +173,13 @@ def with_spacy_features(tokens: DataFrame, text_col: str = "word") -> DataFrame:
     )
     # a caller-supplied pos_ (e.g. real tags from the Arrow scoring
     # stage) wins over the rule tagger — never silently clobbered
-    return out if "pos_" in tokens.columns else with_pos(out, text_col)
+    return out if "pos_" in tokens.columns else with_pos(out, "word")
 
 
 def extract_feature_tuples(
     tokens: DataFrame,
     window_size: int = 3,
     feature_cols: Sequence[str] = ("word", "lower_", "prefix_", "suffix_", "shape_", "like_num"),
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """tokens -> one row per sentence:
     (id, sent_id, features array<map<string,string>>, indices
@@ -195,10 +189,10 @@ def extract_feature_tuples(
     """
     t = with_spacy_features(tokens)
     if "head_" in feature_cols:
-        t = with_head(t, id_col)
+        t = with_head(t, "doc_id")
     t = feature_window(
         t, k=window_size, feature_cols=list(feature_cols),
-        part_cols=(id_col, "sent_id"), order_col="tok_id",
+        part_cols=("doc_id", "sent_id"), order_col="tok_id",
     )
     def by_tok_id(l, r):  # noqa: E741 - comparator for array_sort
         return (
@@ -207,7 +201,7 @@ def extract_feature_tuples(
             .otherwise(0)
         )
 
-    rows = t.groupBy(id_col, "sent_id").agg(
+    rows = t.groupBy("doc_id", "sent_id").agg(
         F.transform(
             F.array_sort(
                 F.collect_list(F.struct("tok_id", "features")), by_tok_id
@@ -226,7 +220,7 @@ def extract_feature_tuples(
     return rows
 
 
-def text_extractor_tuples(tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def text_extractor_tuples(tokens: DataFrame) -> DataFrame:
     """TextExtractor (text_extractor.py:5-30): the reference's
     BERT-facing extractor — window_size=0, spacy_features=[], features
     are the BARE token texts per sentence (not keyed dicts), indices the
@@ -245,7 +239,7 @@ def text_extractor_tuples(tokens: DataFrame, id_col: str = "doc_id") -> DataFram
             .otherwise(0)
         )
 
-    return tokens.groupBy(id_col, "sent_id").agg(
+    return tokens.groupBy("doc_id", "sent_id").agg(
         F.transform(
             F.array_sort(
                 F.collect_list(F.struct("tok_id", F.col("word").alias("text"))),
@@ -264,12 +258,12 @@ def text_extractor_tuples(tokens: DataFrame, id_col: str = "doc_id") -> DataFram
     )
 
 
-def multi_model_merge(mention_dfs: Sequence[DataFrame], id_col: str = "doc_id") -> DataFrame:
+def multi_model_merge(mention_dfs: Sequence[DataFrame]) -> DataFrame:
     """U6: MultiModel annotation merge (multi_model.py:90-98) — union of
     per-model mention tables with EntTuple dedup (U1)."""
-    out = mention_dfs[0].select(id_col, "tag", "start", "end", "text")
+    out = mention_dfs[0].select("doc_id", "tag", "start", "end", "text")
     for df in mention_dfs[1:]:
-        out = out.unionByName(df.select(id_col, "tag", "start", "end", "text"))
+        out = out.unionByName(df.select("doc_id", "tag", "start", "end", "text"))
     return out.distinct()
 
 

@@ -26,8 +26,6 @@ from medacy_spark.plans.numbering import global_row_index
 def assign_folds(
     sequences: DataFrame,
     num_folds: int = 10,
-    seq_col: str = "seq_id",
-    labels_col: str = "labels",
 ) -> DataFrame:
     """sequences(seq_id, labels array<string>) -> (seq_id, fold int).
 
@@ -41,15 +39,15 @@ def assign_folds(
     """
     if num_folds < 2:
         raise ValueError(f"'num_folds' must be >= 2, but is {num_folds!r}")
-    keyed = sequences.filter(F.size(labels_col) > 0).select(
-        seq_col, F.array_min(labels_col).alias("_first_label")
+    keyed = sequences.filter(F.size("labels") > 0).select(
+        "seq_id", F.array_min("labels").alias("_first_label")
     )
-    ranked = global_row_index(keyed, ["_first_label", seq_col], "_rn")
-    return ranked.select(seq_col, (F.col("_rn") % num_folds).cast("int").alias("fold"))
+    ranked = global_row_index(keyed, ["_first_label", "seq_id"], "_rn")
+    return ranked.select("seq_id", (F.col("_rn") % num_folds).cast("int").alias("fold"))
 
 
-def fold_split(data: DataFrame, folds: DataFrame, k: int, seq_col: str = "seq_id"):
+def fold_split(data: DataFrame, folds: DataFrame, k: int):
     """J12: (train, test) DataFrames for fold k — a fold column beats an
     indices join (model.py:380-392)."""
-    j = data.join(folds, seq_col)
+    j = data.join(folds, "seq_id")
     return j.filter(F.col("fold") != k).drop("fold"), j.filter(F.col("fold") == k).drop("fold")

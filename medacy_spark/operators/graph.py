@@ -183,8 +183,6 @@ def _indexed(
 @_iterative
 def connected_components(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     stats: dict | None = None,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id of
@@ -215,7 +213,7 @@ def connected_components(
     # over 100k docs) is recomputed once per branch per iteration
     # (measured: 25 s → ~1 s for CC over a 502-edge candidate graph)
     cut, rows = _cut(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
     )
     edge_table = _driver_side(cut, rows, "a", "b")
@@ -325,8 +323,6 @@ def _cc_on_driver(spark, edge_table: pa.Table, stats: dict | None) -> DataFrame:
 
 def triangle_counts(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     stats: dict | None = None,
 ) -> DataFrame:
     """Per-node triangle counts over an undirected simple graph —
@@ -348,7 +344,7 @@ def triangle_counts(
     (the never-branch-an-uncached-lineage rule).
     """
     e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .filter(F.col("a") != F.col("b"))
         .select(
@@ -401,7 +397,6 @@ def pagerank(
     damping: float = 0.85,
     stats: dict | None = None,
     seeds: DataFrame | None = None,
-    seed_col: str = "node",
 ) -> DataFrame:
     """Weighted PageRank over edges(src, dst[, weight]) -> (node, pagerank).
 
@@ -450,7 +445,7 @@ def pagerank(
         # type: a bigint seed 1 is the string id '1', never '01' (which an
         # implicit join coercion to bigint would also match)
         seeds = seeds.select(
-            F.col(seed_col).cast(e.schema["_s"].dataType).alias("node")
+            F.col("node").cast(e.schema["_s"].dataType).alias("node")
         ).distinct()
     edge_table = _driver_side(e, rows, "_s", "_d")
     if edge_table is not None:
@@ -595,9 +590,6 @@ def random_walks(
     *,
     n_walks: int = 2,
     walk_len: int = 4,
-    src: str = "src",
-    dst: str = "dst",
-    salt: str = "",
 ) -> DataFrame:
     """Deterministic random walks — the DeepWalk/node2vec corpus
     generator: from every node with out-edges, ``n_walks`` walks of up
@@ -605,10 +597,9 @@ def random_walks(
     (embeddings_train) as sentences, giving node embeddings.
 
     The step choice at (cur, walk, step) is the out-neighbor minimizing
-    ``md5(salt:cur:walk:step:dst)`` — a uniform-ish hash draw that is
-    engine-portable (md5 is md5 everywhere), rerun-stable, and
-    independent across steps/walks via the key; different ``salt``
-    values give independent walk sets.  Dead ends truncate the walk.
+    ``md5(:cur:walk:step:dst)`` (an empty salt) — a uniform-ish hash
+    draw that is engine-portable (md5 is md5 everywhere), rerun-stable,
+    and independent across steps/walks via the key.  Dead ends truncate the walk.
     Output: (start, walk_id, step, node), step 0 = the start itself.
 
     Scale shape (the bfs/pagerank recipe): the edge relation is laid
@@ -620,7 +611,7 @@ def random_walks(
     checkpoint kept; every other checkpoint it made is released.
     """
     cut, _ = _cut(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
     )
     e = _laid_out(cut, "a")
@@ -634,7 +625,7 @@ def random_walks(
         key = F.md5(
             F.concat_ws(
                 ":",
-                F.lit(salt),
+                F.lit(""),
                 F.col("a").cast("string"),  # the current node (cur, renamed)
                 F.col("walk_id").cast("string"),
                 F.lit(str(t)),
@@ -659,7 +650,7 @@ def random_walks(
     return out
 
 
-def same_as_edges(links: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def same_as_edges(links: DataFrame) -> DataFrame:
     """Build same_as edges from the links table: every surface form shares
     an edge with its CUI (term-node <-> concept-node), so all aliases of a
     CUI land in one component. Node ids are prefixed strings."""
@@ -717,7 +708,7 @@ def canonicalize_triples(
     if n_bridging == 0:
         term_canon = by_surface.select("_norm", "canon")
     else:
-        comp = connected_components(same_as_edges(links, id_col))
+        comp = connected_components(same_as_edges(links))
         term_canon = comp.filter(F.col("node").startswith("t:")).select(
             F.expr("substring(node, 3)").alias("_norm"),
             F.col("component").alias("canon"),
@@ -748,7 +739,6 @@ def canonicalize_triples(
 def materialize_nodes_edges(
     links: DataFrame,
     triples: DataFrame,
-    id_col: str = "doc_id",
     broadcast_max_terms: int = 2_000_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Materialize the KG: nodes(canonical_id, label, names) and
@@ -759,7 +749,7 @@ def materialize_nodes_edges(
     bounds); mentions without a CUI canonicalize to their surface form.
     Edge weight = support count (number of extracted triples).
     """
-    s = canonicalize_triples(links, triples, id_col, broadcast_max_terms)
+    s = canonicalize_triples(links, triples, "doc_id", broadcast_max_terms)
     # the canonicalized relation feeds edges once and the nodes union
     # TWICE — cut the lineage so the triples scan + both term_canon
     # joins run a single time (the single-pass invariant)
@@ -780,9 +770,6 @@ def materialize_nodes_edges(
 def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
     max_hops: int = 3,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -806,12 +793,12 @@ def bfs_distances(
     materialized checkpoint and releases every other one it made.
     """
     cut, _ = _cut(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
     )
     e = _laid_out(cut, "a")
     dist = (
-        seeds.select(F.col(node_col).alias("node"))
+        seeds.select(F.col("node").alias("node"))
         .distinct()
         .select("node", F.lit(0).alias("dist"))
         .localCheckpoint()

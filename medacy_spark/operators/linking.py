@@ -1,17 +1,13 @@
-"""Entity linking: mentions -> CUIs (M5, dictionary + embedding tie-break).
+"""Entity linking: mentions -> CUIs (M5, dictionary lookup).
 
 The reference links via the external MetaMap binary (metamap.py:113-152),
 whose candidates carry CandidateCUI + SemTypes + ConceptPI spans
 (metamap.py:237-264), overlaid as feature_cui per token
 (metamap_component.py:122-136). Our engine replaces the subprocess with the
-north star's "dictionary + embedding entity linking":
-
-  1. broadcast hash join of normalized mention text against the CUI
-     dictionary (term, cui, sem_types) — the dominant, shuffle-free path;
-  2. ambiguous surfaces (one term -> several CUIs) break ties by cosine
-     similarity between the mention's context embedding and the candidate
-     CUI embedding — both tiny broadcast tables; the similarity is computed
-     JVM-side with zip_with/aggregate, no Python.
+north star's dictionary entity linking: a broadcast hash join of
+normalized mention text against the CUI dictionary (term, cui,
+sem_types), shuffle-free; an ambiguous surface (one term -> several
+CUIs) takes the lexicographically smallest CUI.
 
 Semantic-type filtering reproduces the MetaMap include/exclude predicate
 (metamap.py:206-235).
@@ -49,11 +45,10 @@ def array_norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, v: s + v * v))
 
 
-def cosine(a, b, dim: int | None = None):
+def cosine(a, b):
     """JVM-side cosine similarity of two array<float/double> columns.
 
-    ``dim`` is accepted (and ignored) for call-site compatibility: an
-    r8 experiment unrolled the folds for statically-known widths and
+    An r8 experiment unrolled the folds for statically-known widths and
     measured it SLOWER than the HOF path (janino chokes on the nested
     chain; interpreted fallback is worse still) — the winning variant is
     norm-hoisting at the operator level (similarity.brute_force_topk),
@@ -67,52 +62,29 @@ def cosine(a, b, dim: int | None = None):
 def link_mentions(
     mentions: DataFrame,
     dictionary: DataFrame,
-    id_col: str = "doc_id",
-    mention_vecs: DataFrame | None = None,
-    cui_vecs: DataFrame | None = None,
 ) -> DataFrame:
     """mentions(id, tag, start, end, text) -> links(id, start, end, text,
     cui, sem_types).
 
-    Dictionary is broadcast (gazetteer-scale). When embeddings are given,
-    ambiguous surface forms rank candidates by cosine; otherwise the
-    lexicographically smallest CUI wins (deterministic).
+    Dictionary is broadcast (gazetteer-scale). An ambiguous surface form
+    takes the lexicographically smallest CUI (deterministic).
     """
     m = mentions.select(
-        id_col, "tag", "start", "end", "text", F.lower("text").alias("_norm")
+        "doc_id", "tag", "start", "end", "text", F.lower("text").alias("_norm")
     )
     d = F.broadcast(dictionary.select(F.lower("term").alias("_norm"), "cui", "sem_types"))
     cand = m.join(d, "_norm")
-    if mention_vecs is not None and cui_vecs is not None:
-        mv = mention_vecs.select(id_col, "start", "end", F.col("vec").alias("_mvec"))
-        cv = F.broadcast(cui_vecs.select("cui", F.col("vec").alias("_cvec")))
-        cand = (
-            cand.join(mv, [id_col, "start", "end"], "left")
-            .join(cv, "cui", "left")
-            .withColumn(
-                "_score",
-                F.when(
-                    F.col("_mvec").isNotNull() & F.col("_cvec").isNotNull(),
-                    cosine(F.col("_mvec"), F.col("_cvec")),
-                ).otherwise(F.lit(0.0)),
-            )
-        )
-        order = [F.col("_score").desc(), F.col("cui").asc()]
-    else:
-        cand = cand.withColumn("_score", F.lit(0.0))
-        order = [F.col("cui").asc()]
-    w = Window.partitionBy(id_col, "start", "end", "tag").orderBy(*order)
+    w = Window.partitionBy("doc_id", "start", "end", "tag").orderBy(F.col("cui").asc())
     return (
         cand.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select(id_col, "tag", "start", "end", "text", "cui", "sem_types")
+        .select("doc_id", "tag", "start", "end", "text", "cui", "sem_types")
     )
 
 
 def cui_overlay(
     tokens: DataFrame,
     candidates: DataFrame,
-    id_col: str = "doc_id",
     include_sem_types=None,
 ) -> DataFrame:
     """J9: overlay MetaMap-shaped candidate spans onto tokens — tokens
@@ -137,13 +109,13 @@ def cui_overlay(
     from medacy_spark.operators.intervals import containment_join
 
     cand = candidates.select(
-        id_col, "start", "end", "cui", "sem_types"
+        "doc_id", "start", "end", "cui", "sem_types"
     )
     toks = tokens.select(
-        id_col, "sent_id", "tok_id",
+        "doc_id", "sent_id", "tok_id",
         F.col("idx").alias("start"), F.col("end_idx").alias("end"), "word",
     )
-    j = containment_join(toks, cand, id_col=id_col)
+    j = containment_join(toks, cand)
     flagged_types = F.col("r_sem_types")
     if include_sem_types is not None:
         if len(include_sem_types) == 0:
@@ -165,7 +137,7 @@ def cui_overlay(
         ),
     )
     return j.select(
-        id_col,
+        "doc_id",
         F.col("l_sent_id").alias("sent_id"),
         F.col("l_tok_id").alias("tok_id"),
         F.col("l_start").alias("idx"),

@@ -24,8 +24,8 @@ scale shape (100 TB)
 - training is ONE narrow gram generate (bound token array → transform
   over an index sequence, no join) + ONE map-side-combined
   groupBy(ctx, w); the context totals ride the same key prefix as a
-  second partial agg.  Counts are model-scale (distinct grams, pruned
-  further by ``min_count``), localCheckpointed so training scans the
+  second partial agg.  Counts are model-scale (distinct grams),
+  localCheckpointed so training scans the
   corpus exactly once and scoring never re-derives it.
 - vocabulary size is a 1-row aggregate broadcast back — no collect, no
   global window.
@@ -75,7 +75,7 @@ class NgramLM:
     k: float
 
 
-def _tokens(df: DataFrame, text_col: str) -> Column:
+def _tokens(text_col: str) -> Column:
     return F.split(F.lower(F.col(text_col)), " ")
 
 
@@ -83,24 +83,18 @@ def train_ngram_lm(
     docs: DataFrame,
     *,
     n: int = 2,
-    text_col: str = "text",
     k: float = 0.1,
-    min_count: int = 1,
 ) -> NgramLM:
-    """Count-table training over one corpus pass.  ``min_count`` > 1
-    prunes rare grams (the 100-TB memory lever; keeps the Laplace floor
-    for whatever it drops)."""
+    """Count-table training over one corpus pass."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     # grams AND vocab read the token arrays — cut the lineage so the
     # corpus split/lower runs once, not once per consumer (r8)
-    toks = docs.select(_tokens(docs, text_col).alias("_toks")).localCheckpoint(
+    toks = docs.select(_tokens("text").alias("_toks")).localCheckpoint(
         eager=False
     )
     grams = toks.select(F.explode(_gram_structs(F.col("_toks"), n)).alias("g"))
     gram_counts = grams.groupBy("g.ctx", "g.w").agg(F.count("*").alias("c"))
-    if min_count > 1:
-        gram_counts = gram_counts.filter(F.col("c") >= min_count)
     gram_counts = gram_counts.localCheckpoint(eager=False)
     ctx_counts = gram_counts.groupBy("ctx").agg(F.sum("c").alias("c_ctx"))
     vocab = toks.select(F.explode("_toks").alias("w")).agg(
@@ -112,19 +106,16 @@ def train_ngram_lm(
 def score_perplexity(
     docs: DataFrame,
     lm: NgramLM,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(id_col, n_grams, avg_logp, perplexity) per doc with >= n tokens.
 
     ``avg_logp`` is the mean log10 add-k probability of the doc's
     n-grams; low perplexity = in-domain fluent text (keep), high =
     gibberish/boilerplate (drop) — threshold downstream."""
-    toks = docs.select(F.col(id_col), _tokens(docs, text_col).alias("_toks"))
+    toks = docs.select(F.col("doc_id"), _tokens("text").alias("_toks"))
     grams = toks.select(
-        id_col, F.explode(_gram_structs(F.col("_toks"), lm.n)).alias("g")
-    ).select(id_col, "g.ctx", "g.w")
+        "doc_id", F.explode(_gram_structs(F.col("_toks"), lm.n)).alias("g")
+    ).select("doc_id", "g.ctx", "g.w")
     joined = (
         grams.join(lm.gram_counts, ["ctx", "w"], "left")
         .join(lm.ctx_counts, ["ctx"], "left")
@@ -134,12 +125,12 @@ def score_perplexity(
     p = (F.coalesce(F.col("c"), F.lit(0)).cast("double") + kk) / (
         F.coalesce(F.col("c_ctx"), F.lit(0)).cast("double") + kk * F.col("v")
     )
-    per_doc = joined.groupBy(id_col).agg(
+    per_doc = joined.groupBy("doc_id").agg(
         F.count("*").alias("n_grams"),
         F.avg(F.log10(p)).alias("avg_logp"),
     )
     return per_doc.select(
-        id_col,
+        "doc_id",
         "n_grams",
         "avg_logp",
         F.pow(F.lit(10.0), -F.col("avg_logp")).alias("perplexity"),

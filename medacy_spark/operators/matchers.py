@@ -96,7 +96,7 @@ def _is_volume(l: Column, o: Column) -> Column:  # noqa: E741
     return l.isin(VOLUME_LOWER) | o.isin(VOLUME_ORTH)
 
 
-def _is_time(l: Column, o: Column) -> Column:  # noqa: E741
+def _is_time(l: Column) -> Column:  # noqa: E741
     return l.isin(TIME_LOWER)
 
 
@@ -108,7 +108,7 @@ def _is_route_single(l: Column, o: Column) -> Column:  # noqa: E741
     return l.isin(ROUTE_LOWER) | o.isin(ROUTE_ORTH) | _lemma_strip(l).isin(ROUTE_LEMMA)
 
 
-def _is_freq_single(l: Column, o: Column) -> Column:  # noqa: E741
+def _is_freq_single(l: Column) -> Column:  # noqa: E741
     return l.isin(FREQ_LOWER)
 
 
@@ -141,10 +141,10 @@ def _with_neighborhood(tokens: DataFrame, id_col: str) -> DataFrame:
     return t
 
 
-def unit_spans(tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def unit_spans(tokens: DataFrame) -> DataFrame:
     """tokens -> (id, sent_id, family, start, end, text): every span any
     matcher family would emit, all matches, original token space."""
-    t = _with_neighborhood(tokens, id_col)
+    t = _with_neighborhood(tokens, "doc_id")
     l0, o0 = F.col("_l0"), F.col("word")
     l1, o1 = F.col("_l1"), F.col("_o1")
     l2, o2 = F.col("_l2"), F.col("_o2")
@@ -170,17 +170,17 @@ def unit_spans(tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     compound1 = (  # a compound starting at offset 1 (for num+measurement_unit)
         (_is_mass(l1, o1) & slash2 & _is_volume(l3, o3))
-        | (_is_volume(l1, o1) & slash2 & _is_time(l3, o3))
+        | (_is_volume(l1, o1) & slash2 & _is_time(l3))
         | (_is_form(l1, o1) & slash2 & _is_volume(l3, o3))
     )
     cands = [
         # single-token unit families
         span(_is_mass(l0, o0), "mass_unit", 1),
         span(_is_volume(l0, o0), "volume_unit", 1),
-        span(_is_time(l0, o0), "time_unit", 1),
+        span(_is_time(l0), "time_unit", 1),
         span(_is_form(l0, o0), "form_unit", 1),
         span(_is_route_single(l0, o0), "route_type", 1),
-        span(_is_freq_single(l0, o0), "frequency_indicator", 1),
+        span(_is_freq_single(l0), "frequency_indicator", 1),
         # multi-word frequency / route phrases (97-108, 139/144)
         span((l0 == "as") & (l1 == "needed"), "frequency_indicator", 2),
         span(l0.isin("once", "twice") & (l1 == "a") & (l2 == "day"),
@@ -189,7 +189,7 @@ def unit_spans(tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
         span((l0 == "mucous") & (l1 == "membrane"), "route_type", 2),
         # x/y compound units (152-156)
         span(_is_mass(l0, o0) & slash1 & _is_volume(l2, o2), "measurement_unit", 3),
-        span(_is_volume(l0, o0) & slash1 & _is_time(l2, o2), "measurement_unit", 3),
+        span(_is_volume(l0, o0) & slash1 & _is_time(l2), "measurement_unit", 3),
         span(_is_form(l0, o0) & slash1 & _is_volume(l2, o2), "measurement_unit", 3),
         # measurements (157-165)
         span(num0 & (o1 == "%"), "measurement", 2),
@@ -199,16 +199,16 @@ def unit_spans(tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
         span(num0 & (l1 == "x") & _is_form(l2, o2), "measurement", 3),
         span(num0 & compound1, "measurement", 4),
         # durations (167-172; POS:PREP variant is dead, see module doc)
-        span(num0 & _is_time(l1, o1), "duration_pattern", 2),
-        span((l0 == "in") & o1.rlike(LIKE_NUM) & _is_time(l2, o2),
+        span(num0 & _is_time(l1), "duration_pattern", 2),
+        span((l0 == "in") & o1.rlike(LIKE_NUM) & _is_time(l2),
              "duration_pattern", 3),
         span(l0 == "prn", "duration_pattern", 1),
     ]
     return t.select(
-        id_col, "sent_id",
+        "doc_id", "sent_id",
         F.explode(F.filter(F.array(*cands), lambda c: c.isNotNull())).alias("m"),
     ).select(
-        id_col, "sent_id",
+        "doc_id", "sent_id",
         F.col("m.family").alias("family"),
         F.col("m.start").alias("start"),
         F.col("m.end").alias("end"),
@@ -216,7 +216,7 @@ def unit_spans(tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def unit_token_flags(tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def unit_token_flags(tokens: DataFrame) -> DataFrame:
     """tokens -> tokens + the six base feature_is_* boolean columns the
     reference registers (unit_component.py:21-37), set for every token
     INSIDE a matched span (the per-token loop at 186-187 etc.) — phrase
@@ -224,13 +224,13 @@ def unit_token_flags(tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
     interval join. Flags for the three composite families
     (measurement/measurement_unit/duration) live in unit_spans + a
     containment join when needed."""
-    t = _with_neighborhood(tokens, id_col)
+    t = _with_neighborhood(tokens, "doc_id")
     l0, o0 = F.col("_l0"), F.col("word")
     l1, l2 = F.col("_l1"), F.col("_l2")
     b1, b2 = F.col("_b1"), F.col("_b2")
 
     freq = (
-        _is_freq_single(l0, o0)
+        _is_freq_single(l0)
         | ((l0 == "as") & (l1 == "needed"))
         | ((l0 == "needed") & (b1 == "as"))
         | (l0.isin("once", "twice") & (l1 == "a") & (l2 == "day"))
@@ -247,7 +247,7 @@ def unit_token_flags(tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
     out = (
         t.withColumn("feature_is_mass_unit", _is_mass(l0, o0))
         .withColumn("feature_is_volume_unit", _is_volume(l0, o0))
-        .withColumn("feature_is_time_unit", _is_time(l0, o0))
+        .withColumn("feature_is_time_unit", _is_time(l0))
         .withColumn("feature_is_form_unit", _is_form(l0, o0))
         .withColumn("feature_is_frequency_indicator", freq)
         .withColumn("feature_is_route_type", route)

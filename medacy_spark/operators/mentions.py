@@ -29,7 +29,6 @@ def gazetteer_df(spark: SparkSession) -> DataFrame:
 def gazetteer_mentions(
     tokens: DataFrame,
     gazetteer: DataFrame,
-    id_col: str = "doc_id",
     max_ngram: int = 1,
 ) -> DataFrame:
     """Broadcast-join token n-grams (n ≤ max_ngram) against (label, term) —
@@ -72,7 +71,7 @@ def gazetteer_mentions(
 
     has_pos = "pos" in tokens.columns
     order_cols = ["pos"] if has_pos else ["sent_id", "tok_id"]
-    w = Window.partitionBy(id_col).orderBy(*order_cols)
+    w = Window.partitionBy("doc_id").orderBy(*order_cols)
     t = tokens if has_pos else tokens.withColumn("pos", F.lit(None).cast("int"))
     for i in range(1, max(ns)):
         t = t.withColumn(f"_w{i}", F.lead("word", i).over(w))
@@ -106,11 +105,11 @@ def gazetteer_mentions(
     # null when the token stream carries none (a schema that forks on the
     # input breaks unions of mention tables from different tokenizers)
     spans = t.select(
-        id_col,
+        "doc_id",
         "sent_id",
         F.explode(F.array(*cands)).alias("g"),
     ).filter(F.col("g").isNotNull()).select(
-        id_col, "sent_id",
+        "doc_id", "sent_id",
         F.element_at("g.positions", 1).alias("pos"),
         F.col("g.norm").alias("_norm"),
         F.col("g.n").alias("n"),
@@ -121,7 +120,7 @@ def gazetteer_mentions(
     )
     g = F.broadcast(gazetteer.select(F.lower("term").alias("_norm"), "label"))
     return spans.join(g, "_norm").select(
-        id_col, "sent_id", "pos", "n",
+        "doc_id", "sent_id", "pos", "n",
         F.col("label").alias("tag"),
         "start", "end", "text", "positions",
     )
@@ -130,7 +129,6 @@ def gazetteer_mentions(
 def lexicon_overlay(
     tokens: DataFrame,
     gazetteer: DataFrame,
-    id_col: str = "doc_id",
     max_ngram: int = 10,
 ) -> DataFrame:
     """Per-token ``feature_is_<label>_from_lexicon`` flags — the reference
@@ -154,13 +152,13 @@ def lexicon_overlay(
         r["label"] for r in gazetteer.select("label").distinct().collect()
     )
     tokens = tokens.localCheckpoint(eager=False)
-    m = gazetteer_mentions(tokens, gazetteer, id_col, max_ngram)
+    m = gazetteer_mentions(tokens, gazetteer, max_ngram)
     covered = m.select(
-        id_col,
+        "doc_id",
         F.explode("positions").alias("pos"),
         "tag",
-    ).groupBy(id_col, "pos").agg(F.collect_set("tag").alias("_tags"))
-    out = tokens.join(covered, [id_col, "pos"], "left")
+    ).groupBy("doc_id", "pos").agg(F.collect_set("tag").alias("_tags"))
+    out = tokens.join(covered, ["doc_id", "pos"], "left")
     for lab in labels:
         out = out.withColumn(
             f"feature_is_{lab}_from_lexicon",
@@ -172,8 +170,6 @@ def lexicon_overlay(
 def detect_mentions(
     tokens: DataFrame,
     gazetteer: DataFrame,
-    id_col: str = "doc_id",
-    dedup: bool = False,
 ) -> DataFrame:
     """Full rule-stack detection -> mentions(doc_id, sent_id, tag, start, end, text).
 
@@ -188,8 +184,7 @@ def detect_mentions(
     100k docs took 4.6 s of executor CPU that way, 2.9 s this way).
 
     The gazetteer and unit tag families are disjoint, so EntTuple dedup
-    (annotations.py:250-264 union semantics) is skippable; pass dedup=True
-    when plugging in overlapping detectors.
+    (annotations.py:250-264 union semantics) is not needed.
     """
     from medacy_spark.operators.sequence import LIKE_NUM
     from pyspark.sql import Window
@@ -197,7 +192,7 @@ def detect_mentions(
     # order by the tokenizer's own sort key when present → the planner
     # elides this window's sort (ordering already satisfied)
     order_col = "pos" if "pos" in tokens.columns else "tok_id"
-    w = Window.partitionBy(id_col).orderBy(*(
+    w = Window.partitionBy("doc_id").orderBy(*(
         [order_col] if order_col == "pos" else ["sent_id", "tok_id"]
     ))
     t = (
@@ -236,15 +231,12 @@ def detect_mentions(
             F.concat_ws(" ", "word", "_nw").alias("text"),
         ),
     )
-    out = j.select(
-        id_col, "sent_id", F.explode(F.array(gz_m, unit_m)).alias("m"),
+    return j.select(
+        "doc_id", "sent_id", F.explode(F.array(gz_m, unit_m)).alias("m"),
     ).filter(F.col("m").isNotNull()).select(
-        id_col, "sent_id",
+        "doc_id", "sent_id",
         F.col("m.tag").alias("tag"),
         F.col("m.start").alias("start"),
         F.col("m.end").alias("end"),
         F.col("m.text").alias("text"),
     )
-    if dedup:
-        out = out.dropDuplicates([id_col, "tag", "start", "end", "text"])
-    return out

@@ -28,12 +28,12 @@ from pyspark.sql import functions as F
 
 
 def zip_datasets(
-    a: DataFrame, b: DataFrame, key: str = "doc_id"
+    a: DataFrame, b: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """-> (paired, only_in_a, only_in_b)."""
-    paired = a.join(b.select(key).distinct(), key, "inner")
-    only_a = a.join(b.select(key).distinct(), key, "left_anti")
-    only_b = b.join(a.select(key).distinct(), key, "left_anti")
+    paired = a.join(b.select("doc_id").distinct(), "doc_id", "inner")
+    only_a = a.join(b.select("doc_id").distinct(), "doc_id", "left_anti")
+    only_b = b.join(a.select("doc_id").distinct(), "doc_id", "left_anti")
     return paired, only_a, only_b
 
 
@@ -51,23 +51,20 @@ def feature_projection(features: Column) -> Column:
     return F.map_filter(features, lambda k, _: k.startswith("feature_"))
 
 
-def pos_drop(
-    tokens: DataFrame, ignored_pos: Sequence[str], target_col: str = "is_target",
-    pos_col: str = "pos_",
-) -> DataFrame:
+def pos_drop(tokens: DataFrame, ignored_pos: Sequence[str]) -> DataFrame:
     """Drop ignored-POS tokens unless they are targets; downstream windows
     then see the compacted sequence (the reference filters the sentence
     list before windowing)."""
     return tokens.filter(
-        ~F.col(pos_col).isin(list(ignored_pos)) | F.col(target_col)
+        ~F.col("pos_").isin(list(ignored_pos)) | F.col("is_target")
     )
 
 
-def oov_tokens(tokens: DataFrame, vocab: DataFrame, word_col: str = "word") -> DataFrame:
+def oov_tokens(tokens: DataFrame, vocab: DataFrame) -> DataFrame:
     """Distinct tokens not covered by the vocabulary (broadcast anti-join)."""
     v = F.broadcast(vocab.select(F.lower(F.col("word")).alias("_w")).distinct())
     return (
-        tokens.select(F.lower(F.col(word_col)).alias("_w"))
+        tokens.select(F.lower(F.col("word")).alias("_w"))
         .join(v, "_w", "left_anti")
         .distinct()
         .withColumnRenamed("_w", "word")
@@ -87,17 +84,17 @@ def one_hot(value: Column, vocabulary: Sequence[str]) -> Column:
     ])
 
 
-def table_rows(documents: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def table_rows(documents: DataFrame) -> DataFrame:
     """F3: the reference's table-row heuristic — lines matching
     `^(.*?)[ \\t]{3,}\\d+` are table rows (table_matcher_component.py:31-40).
     Returns (id, line_no, line, row_label) with char offsets derivable via
     sources.converters.line_word_index."""
     lines = documents.select(
-        id_col, F.posexplode(F.split("text", "\n")).alias("line_idx", "line")
+        "doc_id", F.posexplode(F.split("text", "\n")).alias("line_idx", "line")
     )
     pat = r"^(.*?)[ \t]{3,}\d+"
     return lines.filter(F.col("line").rlike(pat)).select(
-        id_col,
+        "doc_id",
         (F.col("line_idx") + 1).cast("int").alias("line_no"),
         "line",
         F.regexp_extract("line", pat, 1).alias("row_label"),
@@ -112,13 +109,13 @@ def switch_extension(path: Column, new_ext: str) -> Column:
 
 
 def mention_text_from_doc(
-    mentions: DataFrame, documents: DataFrame, id_col: str = "doc_id"
+    mentions: DataFrame, documents: DataFrame
 ) -> DataFrame:
     """J13/F7: slice mention text from the document:
     substring(text, start+1, end-start)."""
-    d = documents.select(F.col(id_col).alias("_id"), F.col("text").alias("_doc_text"))
+    d = documents.select(F.col("doc_id").alias("_id"), F.col("text").alias("_doc_text"))
     return (
-        mentions.join(d, mentions[id_col] == d["_id"])
+        mentions.join(d, mentions["doc_id"] == d["_id"])
         .withColumn(
             "text",
             F.expr("substring(_doc_text, start + 1, end - start)"),

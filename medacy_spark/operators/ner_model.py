@@ -103,18 +103,16 @@ def score_sentences(
     return sent_rows.mapInPandas(run, schema=out_schema)
 
 
-def model_mentions(
-    tokens: DataFrame, model_broadcast, id_col: str = "doc_id"
-) -> DataFrame:
+def model_mentions(tokens: DataFrame, model_broadcast) -> DataFrame:
     """Full X2 path: score -> island-merge (W2) -> mentions. Byte-equal to
     the rule-stack detect_mentions on the synthetic corpus (tested)."""
     from medacy_spark.operators.sequence import island_merge
 
-    labeled = score_sentences(tokens, model_broadcast, id_col)
+    labeled = score_sentences(tokens, model_broadcast, "doc_id")
     return island_merge(
         labeled.withColumnRenamed("idx", "start").withColumnRenamed("end_idx", "end"),
-        part_cols=[id_col, "sent_id"],
+        part_cols=["doc_id", "sent_id"],
         order_cols=["tok_id"],
         label_col="label",
         text_col="word",
-    ).select(id_col, "sent_id", "tag", "start", "end", "text")
+    ).select("doc_id", "sent_id", "tag", "start", "end", "text")

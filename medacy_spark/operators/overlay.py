@@ -10,7 +10,6 @@ Reproduces GoldAnnotatorOverlayer (gold_annotator_component.py:32-109):
     compounds), so the real candidate set is exactly these three — we
     replicate the actual behavior, not the intended one;
   * broken annotations (start > end) are skipped (80-82, filter P5);
-  * label-subset predicate (97, P3);
   * when overlapping gold spans claim one token, the later span in
     (start, end) order wins (sequential overwrite semantics);
   * failure accounting: exact-overlay failures and unfixable spans become
@@ -22,8 +21,6 @@ containment join → last-writer-wins window. All equi-joins on the doc key.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -82,8 +79,6 @@ def _aligned_spans(
 def gold_overlay(
     tokens: DataFrame,
     gold: DataFrame,
-    id_col: str = "doc_id",
-    labels: Sequence[str] | None = None,
     order_col: str | None = None,
 ) -> DataFrame:
     """tokens + gold mentions -> tokens with a `gold_label` column ('O' when
@@ -97,18 +92,16 @@ def gold_overlay(
     file/ingest-order column on ``gold``, larger = later in file) replays
     the stable-tie behavior, with tag as a final deterministic fallback.
     """
-    spans = _aligned_spans(tokens, gold, id_col, order_col=order_col)
-    if labels:
-        spans = spans.filter(F.col("tag").isin(list(labels)))
+    spans = _aligned_spans(tokens, gold, "doc_id", order_col=order_col)
     fixed = spans.filter(F.col("fixed_end").isNotNull()).select(
-        F.col(id_col).alias("_id"), F.col("tag").alias("_tag"),
+        F.col("doc_id").alias("_id"), F.col("tag").alias("_tag"),
         F.col("start").alias("_gs"), F.col("end").alias("_geo"),
         F.col("fixed_end").alias("_ge"),
         *([F.col(order_col).alias("_ord")] if order_col else []),
     )
     j = tokens.join(
         fixed,
-        (tokens[id_col] == fixed["_id"])
+        (tokens["doc_id"] == fixed["_id"])
         & (tokens["idx"] >= fixed["_gs"]) & (tokens["end_idx"] <= fixed["_ge"]),
         "left",
     )
@@ -116,7 +109,7 @@ def gold_overlay(
     if order_col:
         order.append(F.col("_ord").desc_nulls_last())
     order.append(F.col("_tag").desc_nulls_last())
-    w = Window.partitionBy(id_col, "idx").orderBy(*order)
+    w = Window.partitionBy("doc_id", "idx").orderBy(*order)
     return (
         j.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

@@ -11,9 +11,9 @@ The reference has no analogue (it never trains LMs); this sits next to
 dedup/decontam in the beyond-reference training-pipeline surface.
 
 Semantics (fully deterministic, replayed by the ``sequence_packing``
-oracle): docs ordered by ``id_col``; doc d occupies global token span
+oracle): docs ordered by ``doc_id``; doc d occupies global token span
 ``[offset_d, offset_d + n_tok_d)`` where ``offset_d`` is the running sum
-of previous docs' ``n_tok + (1 if eos else 0)``; sequence ``s`` owns
+of previous docs' ``n_tok + 1`` (one EOS slot each); sequence ``s`` owns
 span ``[s*seq_len, (s+1)*seq_len)``.  Output: one row per (doc, seq)
 overlap with the slice coordinates on both axes.  EOS positions belong
 to no doc (they are the gaps between doc spans).
@@ -42,22 +42,19 @@ from medacy_spark.session import aqe_off
 def doc_token_offsets(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eos: bool = True,
     bucket_width: int = 1_000_000,
 ) -> DataFrame:
-    """(id_col, n_tok, offset): each doc's whitespace token count and its
-    exclusive prefix sum in ``id_col`` order (+1 EOS slot after every doc
-    when ``eos``).  The distributed prefix sum described in the module
+    """(doc_id, n_tok, offset): each doc's whitespace token count and its
+    exclusive prefix sum in ``doc_id`` order (+1 EOS slot after every
+    doc).  The distributed prefix sum described in the module
     docstring; exact integer arithmetic end to end."""
-    step = F.col("n_tok") + (F.lit(1) if eos else F.lit(0))
+    step = F.col("n_tok") + F.lit(1)
     base = docs.select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), " ")).alias("n_tok"),
-        F.floor(F.col(id_col) / F.lit(int(bucket_width))).alias("_bkt"),
+        F.col("doc_id"),
+        F.size(F.split(F.col("text"), " ")).alias("n_tok"),
+        F.floor(F.col("doc_id") / F.lit(int(bucket_width))).alias("_bkt"),
     )
-    in_bucket = Window.partitionBy("_bkt").orderBy(id_col)
+    in_bucket = Window.partitionBy("_bkt").orderBy("doc_id")
     # `local` feeds BOTH the bucket rollup and the final join — checkpoint
     # it so the corpus is scanned/tokenized exactly once, and capture the
     # checkpoint AQE-off so its hashpartitioning(_bkt) layout is reported
@@ -79,7 +76,7 @@ def doc_token_offsets(
         ),
     )
     return local.join(F.broadcast(starts), "_bkt").select(
-        id_col,
+        "doc_id",
         "n_tok",
         (F.col("_bkt_start") + F.col("_local_end") - step).alias("offset"),
     )
@@ -89,26 +86,20 @@ def pack_sequences(
     docs: DataFrame,
     seq_len: int,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eos: bool = True,
     bucket_width: int = 1_000_000,
 ) -> DataFrame:
     """The packing map: one row per (sequence, document) overlap.
 
-    Columns: ``seq_id`` (0-based window index), ``id_col``,
+    Columns: ``seq_id`` (0-based window index), ``doc_id``,
     ``start_in_seq`` (token position inside the window where the doc
     slice begins), ``start_in_doc`` (first doc token in the slice) and
     ``n_tokens`` (slice length).  Zero-token docs emit nothing but still
-    advance the stream by their EOS slot when ``eos``.
+    advance the stream by their EOS slot.
     """
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
     off = doc_token_offsets(
         docs,
-        id_col=id_col,
-        text_col=text_col,
-        eos=eos,
         bucket_width=bucket_width,
     )
     L = F.lit(int(seq_len))
@@ -118,13 +109,13 @@ def pack_sequences(
         F.sequence(F.floor(F.col("offset") / L), F.floor((end - 1) / L)),
     )
     exploded = off.select(
-        id_col, "n_tok", "offset", F.explode(seqs).alias("seq_id")
+        "doc_id", "n_tok", "offset", F.explode(seqs).alias("seq_id")
     )
     slice_start = F.greatest(F.col("offset"), F.col("seq_id") * L)
     slice_end = F.least(end, (F.col("seq_id") + 1) * L)
     return exploded.select(
         "seq_id",
-        id_col,
+        "doc_id",
         (slice_start - F.col("seq_id") * L).alias("start_in_seq"),
         (slice_start - F.col("offset")).alias("start_in_doc"),
         (slice_end - slice_start).alias("n_tokens"),

@@ -37,13 +37,11 @@ def redact_pii(text: Column) -> Column:
     return out
 
 
-def pii_signals(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def pii_signals(df: DataFrame) -> DataFrame:
     """One row per doc: per-category match counts, a total, a boolean
     flag, and the redacted text — the columns a filter/scrub stage keys
     on. Pure projection; no shuffle."""
-    t = F.col(text_col)
+    t = F.col("text")
     counts = {
         f"n_{name}": F.regexp_count(t, F.lit(pattern))
         for name, pattern, _ in PII_PATTERNS
@@ -52,7 +50,7 @@ def pii_signals(
     for c in counts.values():
         total = c if total is None else total + c
     return df.select(
-        id_col,
+        "doc_id",
         *[c.alias(n) for n, c in counts.items()],
         total.alias("n_pii"),
         (total > 0).alias("has_pii"),

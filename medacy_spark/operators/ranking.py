@@ -37,8 +37,6 @@ def bm25_scores(
     df: DataFrame,
     query_terms: list[str],
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
@@ -58,19 +56,19 @@ def bm25_scores(
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    toks = F.split(F.col(text_col), " ")
-    base = df.select(id_col, F.size(toks).alias("dl"), toks.alias("_toks"))
+    toks = F.split(F.col("text"), " ")
+    base = df.select("doc_id", F.size(toks).alias("dl"), toks.alias("_toks"))
 
     terms = F.array(*[F.lit(t) for t in sorted(set(query_terms))])
     hits = (
         base.select(
-            id_col,
+            "doc_id",
             "dl",
             F.explode(F.filter(F.col("_toks"), lambda w: F.array_contains(terms, w))).alias(
                 "term"
             ),
         )
-        .groupBy(id_col, "dl", "term")
+        .groupBy("doc_id", "dl", "term")
         .agg(F.count("*").alias("tf"))
         .localCheckpoint(eager=False)
     )
@@ -100,18 +98,18 @@ def bm25_scores(
     per_doc = (
         hits.join(F.broadcast(dfreq), "term")
         .join(F.broadcast(stats))
-        .select(id_col, F.round(idf * weight, 9).alias("contrib"))
-        .groupBy(id_col)
+        .select("doc_id", F.round(idf * weight, 9).alias("contrib"))
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_hit_terms"),
             (F.floor((nano + F.lit(500)) / F.lit(1000)) / F.lit(1e6)).alias("bm25"),
         )
     )
     return (
-        df.select(id_col)
-        .join(per_doc, id_col, "left")
+        df.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_hit_terms", F.lit(0)).alias("n_hit_terms"),
             F.coalesce("bm25", F.lit(0.0)).alias("bm25"),
         )

@@ -30,12 +30,7 @@ PRED_FOR_TAG = {
 }
 
 
-def extract_triples(
-    mentions: DataFrame,
-    id_col: str = "doc_id",
-    subj_tag: str = "Drug",
-    sent_col: str = "sent_id",
-) -> DataFrame:
+def extract_triples(mentions: DataFrame,) -> DataFrame:
     """mentions(id, sent_id, tag, start, end, text) ->
     triples(id, subj struct<tag,start,end,text>, pred, obj struct<...>).
 
@@ -53,17 +48,17 @@ def extract_triples(
     ``Generate`` out of whole-stage codegen.
     """
     preds = list(PRED_FOR_TAG)
-    sent_ms = mentions.groupBy(id_col, sent_col).agg(
+    sent_ms = mentions.groupBy("doc_id", "sent_id").agg(
         F.collect_list(F.struct("tag", "start", "end", "text")).alias("ms")
     )
-    subj_arr = F.filter(F.col("ms"), lambda m: m["tag"] == subj_tag)
+    subj_arr = F.filter(F.col("ms"), lambda m: m["tag"] == "Drug")
     obj_tag = F.col("obj.tag")
     rows = sent_ms.select(
-        id_col,
+        "doc_id",
         subj_arr.alias("subjs"),
         F.explode("ms").alias("obj"),
     ).filter(
-        (F.size("subjs") > 0) & obj_tag.isin(preds) & (obj_tag != subj_tag)
+        (F.size("subjs") > 0) & obj_tag.isin(preds) & (obj_tag != "Drug")
     )
     # fold: pick the subject minimizing (|s.start - obj.start|, s.start)
     def _closer(acc, s):
@@ -79,44 +74,44 @@ def extract_triples(
         F.col("obj.tag"),
     )
     return rows.select(
-        id_col,
+        "doc_id",
         best.alias("subj"),
         pred.alias("pred"),
         F.col("obj"),
     )
 
 
-def triples_to_brat_lines(triples: DataFrame, mentions: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def triples_to_brat_lines(triples: DataFrame, mentions: DataFrame) -> DataFrame:
     """Materialize R-lines: number mentions T1..Tn per doc in (start, end)
     order (annotations.py:105 / W5), then format
     `R{n}\\t{pred} Arg1:T{subj} Arg2:T{obj}` (add_rel_to_brat.py:154)."""
-    wnum = Window.partitionBy(id_col).orderBy("start", "end")
+    wnum = Window.partitionBy("doc_id").orderBy("start", "end")
     numbered = (
-        mentions.select(id_col, "start", "end").distinct()
+        mentions.select("doc_id", "start", "end").distinct()
         .withColumn("t_num", F.row_number().over(wnum))
     )
     t1 = numbered.select(
-        F.col(id_col).alias("_id1"),
+        F.col("doc_id").alias("_id1"),
         F.col("start").alias("s1"), F.col("end").alias("e1"),
         F.col("t_num").alias("subj_t"),
     )
     t2 = numbered.select(
-        F.col(id_col).alias("_id2"),
+        F.col("doc_id").alias("_id2"),
         F.col("start").alias("s2"), F.col("end").alias("e2"),
         F.col("t_num").alias("obj_t"),
     )
     flat = triples.select(
-        id_col, "pred",
+        "doc_id", "pred",
         F.col("subj.start").alias("ss"), F.col("subj.end").alias("se"),
         F.col("obj.start").alias("os"), F.col("obj.end").alias("oe"),
     )
     j = (
-        flat.join(t1, (flat[id_col] == t1["_id1"]) & (flat["ss"] == t1["s1"]) & (flat["se"] == t1["e1"]))
-        .join(t2, (flat[id_col] == t2["_id2"]) & (flat["os"] == t2["s2"]) & (flat["oe"] == t2["e2"]))
+        flat.join(t1, (flat["doc_id"] == t1["_id1"]) & (flat["ss"] == t1["s1"]) & (flat["se"] == t1["e1"]))
+        .join(t2, (flat["doc_id"] == t2["_id2"]) & (flat["os"] == t2["s2"]) & (flat["oe"] == t2["e2"]))
     )
-    wr = Window.partitionBy(id_col).orderBy("subj_t", "obj_t", "pred")
+    wr = Window.partitionBy("doc_id").orderBy("subj_t", "obj_t", "pred")
     return j.withColumn("r_num", F.row_number().over(wr)).select(
-        id_col,
+        "doc_id",
         F.format_string("R%d\t%s Arg1:T%d Arg2:T%d",
                         F.col("r_num"), F.col("pred"),
                         F.col("subj_t"), F.col("obj_t")).alias("line"),

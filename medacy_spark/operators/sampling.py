@@ -57,15 +57,11 @@ def hash_sample(
 def upsample_sources(
     df: DataFrame,
     weights: dict[str, float],
-    *,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "",
 ) -> DataFrame:
     """'Epochs per source' mixture construction (the public LLaMA-style
     data recipe: some sources repeated ~2x, others downsampled): each
     row from source ``s`` emits ``floor(w_s)`` copies plus one more
-    with probability ``frac(w_s)``, decided by md5(salt || id) against
+    with probability ``frac(w_s)``, decided by md5(id) against
     a per-source hex threshold — fully deterministic and engine-
     portable (the thresholds are driver-computed constants, so any SQL
     engine replays the selection). Sources absent from ``weights`` are
@@ -79,12 +75,12 @@ def upsample_sources(
         for s, w in sorted(weights.items())
     ]
     wdf = local_table(
-        df.sparkSession, rows, f"{source_col} string, _w double, _whole int, _thr string"
+        df.sparkSession, rows, "source string, _w double, _whole int, _thr string"
     )
-    digest = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+    digest = F.md5(F.concat(F.lit(""), F.col("doc_id").cast("string")))
     n_copies = F.col("_whole") + F.when(digest < F.col("_thr"), 1).otherwise(0)
     out = (
-        df.join(F.broadcast(wdf), source_col)
+        df.join(F.broadcast(wdf), "source")
         .withColumn("_n", n_copies)
         .filter(F.col("_n") > 0)
         .withColumn("copy_id", F.explode(F.sequence(F.lit(1), F.col("_n"))))
@@ -97,7 +93,6 @@ def stratified_sample(
     strata: str | list[str],
     n_per_stratum: int,
     id_col: str,
-    salt: str = "",
 ) -> DataFrame:
     """Exactly ``n_per_stratum`` rows per stratum (fewer if the stratum
     is smaller), chosen by md5-hash order — a deterministic uniform
@@ -109,7 +104,7 @@ def stratified_sample(
     stratum costs one big sorted partition, not memory.
     """
     strata_cols = [strata] if isinstance(strata, str) else list(strata)
-    digest = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+    digest = F.md5(F.concat(F.lit(""), F.col(id_col).cast("string")))
     w = Window.partitionBy(*strata_cols).orderBy(digest.asc(), F.col(id_col).asc())
     return (
         df.withColumn("sample_rank", F.row_number().over(w))

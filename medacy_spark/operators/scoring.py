@@ -155,7 +155,6 @@ def measures(
     gold: DataFrame,
     system: DataFrame,
     mode: str = "strict",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """A3+A6: per-tag (tp, fp, fn) over the whole dataset, plus a 'system'
     micro row (rollup grand total — inter_dataset_agreement.py:203-239).
@@ -164,9 +163,9 @@ def measures(
     (inter_dataset_agreement.py:174-182).
     """
     if mode == "strict":
-        tp_doc = match_counts_strict(gold, system, id_col)
+        tp_doc = match_counts_strict(gold, system, "doc_id")
     elif mode == "lenient":
-        tp_doc = match_counts_lenient(gold, system, id_col)
+        tp_doc = match_counts_lenient(gold, system, "doc_id")
     else:
         raise ValueError(f"mode must be strict|lenient, got {mode!r}")
     tp = tp_doc.groupBy("tag").agg(

@@ -33,7 +33,6 @@ def island_merge(
     start_col: str = "start",
     end_col: str = "end",
     text_col: str | None = "word",
-    outside: str = "O",
 ) -> DataFrame:
     """Gaps-and-islands merge of consecutive identical labels.
 
@@ -68,7 +67,7 @@ def island_merge(
     out = (
         seg.groupBy(*part_cols, "_seg", F.col(label_col).alias("tag"))
         .agg(*aggs)
-        .filter(F.col("tag") != outside)
+        .filter(F.col("tag") != "O")
         .drop("_seg")
     )
     return out

@@ -29,29 +29,24 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: (q_id, vec_id, score, rank), rank 1..k per query.
 
     Ties break on vec_id ascending — deterministic output.
 
-    ``dim`` is accepted for call-site compatibility (unused — see
-    linking.cosine).  The win here is norm HOISTING: each side's L2 norm
+    The win here is norm HOISTING: each side's L2 norm
     is a pure function of its own vector, so it is computed once per ROW
     before the pair join instead of once per PAIR (3 folds/pair → 1
     fold/pair + 1 fold/row; measured ~2x on the 20k x 5 contract scan).
     Fold arithmetic is unchanged → bit-identical scores.
     """
     q = queries.select(
-        F.col(q_id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
-        array_norm(F.col(vec_col)).alias("_qn"),
+        F.col("q_id").alias("q_id"), F.col("embedding").alias("q_vec"),
+        array_norm(F.col("embedding")).alias("_qn"),
     )
     c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec"),
-        array_norm(F.col(vec_col)).alias("_cn"),
+        F.col("vec_id").alias("vec_id"), F.col("embedding").alias("c_vec"),
+        array_norm(F.col("embedding")).alias("_cn"),
     )
     score = F.when(
         (F.col("_qn") == 0) | (F.col("_cn") == 0), F.lit(0.0)
@@ -81,12 +76,12 @@ def _hyperplane(dim: int, plane_no: int) -> list[float]:
     return vals
 
 
-def rh_bucket(vec: Column, dim: int, n_planes: int = 8) -> Column:
+def rh_bucket(vec: Column, dim: int) -> Column:
     """Random-hyperplane signature: n_planes sign bits packed into a long.
     (r8: an unrolled element_at variant measured 3x SLOWER than this HOF
     fold — janino-hostile codegen; keep the fold.)"""
     out = F.lit(0).cast("long")
-    for p in range(n_planes):
+    for p in range(8):
         plane = F.array(*[F.lit(v) for v in _hyperplane(dim, p + 1)])
         dot = F.aggregate(
             F.zip_with(vec, plane, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v
@@ -101,11 +96,7 @@ def ivf_topk(
     n_cells: int = 16,
     n_probe: int = 4,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
     kmeans_iters: int = 1,
-    dim: int | None = None,
 ) -> DataFrame:
     """IVF ANN: corpus vectors assign to their nearest centroid cell; each
     query probes its n_probe nearest cells and rescores exactly inside
@@ -124,7 +115,7 @@ def ivf_topk(
 
     def nearest_cells(df, key, vcol, n, cents):
         scored = df.crossJoin(cents).withColumn(
-            "_sim", cosine(F.col(vcol), F.col("c_vec"), dim=dim)
+            "_sim", cosine(F.col(vcol), F.col("c_vec"))
         )
         from pyspark.sql import Window
 
@@ -136,7 +127,7 @@ def ivf_topk(
         )
 
     seed_rows = (
-        corpus.orderBy(id_col).limit(n_cells).select(F.col(vec_col)).collect()
+        corpus.orderBy("vec_id").limit(n_cells).select(F.col("embedding")).collect()
     )
     cent_data = [(i, [float(x) for x in r[0]]) for i, r in enumerate(seed_rows)]
 
@@ -147,7 +138,7 @@ def ivf_topk(
 
     for _ in range(max(0, kmeans_iters)):
         assigned = nearest_cells(
-            corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")),
+            corpus.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("v")),
             "vec_id", "v", 1, cents_df(cent_data),
         )
         means = (
@@ -168,15 +159,15 @@ def ivf_topk(
     cents = cents_df(cent_data)
 
     c_assigned = nearest_cells(
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec2")),
+        corpus.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("c_vec2")),
         "vec_id", "c_vec2", 1, cents,
     )
     q_assigned = nearest_cells(
-        queries.select(F.col(q_id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
+        queries.select(F.col("q_id").alias("q_id"), F.col("embedding").alias("q_vec")),
         "q_id", "q_vec", n_probe, cents,
     )
     scored = c_assigned.join(F.broadcast(q_assigned), "cell").select(
-        "q_id", "vec_id", cosine(F.col("q_vec"), F.col("c_vec2"), dim=dim).alias("score")
+        "q_id", "vec_id", cosine(F.col("q_vec"), F.col("c_vec2")).alias("score")
     ).distinct()
     from pyspark.sql import Window
 
@@ -189,28 +180,24 @@ def lsh_bucketed_topk(
     queries: DataFrame,
     dim: int,
     k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
 ) -> DataFrame:
-    """Approximate top-k: candidates share the query's hyperplane bucket;
-    exact cosine rescoring within the bucket. Output shape matches
+    """Approximate top-k: candidates share the query's 8-hyperplane
+    bucket; exact cosine rescoring within the bucket. Output shape matches
     brute_force_topk (ranks may hold < k rows when a bucket is small)."""
     c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("c_vec"),
-        rh_bucket(F.col(vec_col), dim, n_planes).alias("bucket"),
+        F.col("vec_id").alias("vec_id"),
+        F.col("embedding").alias("c_vec"),
+        rh_bucket(F.col("embedding"), dim).alias("bucket"),
         # norm once per row, not per candidate pair (it only depends on
         # the vector) — same value, hoisted out of the join
-        array_norm(F.col(vec_col)).alias("_cn"),
+        array_norm(F.col("embedding")).alias("_cn"),
     )
     q = F.broadcast(
         queries.select(
-            F.col(q_id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            rh_bucket(F.col(vec_col), dim, n_planes).alias("bucket"),
-            array_norm(F.col(vec_col)).alias("_qn"),
+            F.col("q_id").alias("q_id"),
+            F.col("embedding").alias("q_vec"),
+            rh_bucket(F.col("embedding"), dim).alias("bucket"),
+            array_norm(F.col("embedding")).alias("_qn"),
         )
     )
     score = F.when(

@@ -30,9 +30,9 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.size(F.filter(pieces, lambda p: F.length(p) > 0))
 
 
-def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
+def stopword_ratio(text: Column) -> Column:
     words = F.split(F.lower(text), r"\s+")
-    sw = F.array(*[F.lit(s) for s in (stopwords or EN_STOPWORDS)])
+    sw = F.array(*[F.lit(s) for s in EN_STOPWORDS])
     hits = F.size(F.filter(words, lambda x: F.array_contains(sw, x)))
     return F.when(F.size(words) == 0, F.lit(0.0)).otherwise(hits / F.size(words))
 
@@ -96,10 +96,10 @@ def ngram_lang_score(text: Column, lang: str) -> Column:
     return (total * 100.0 / F.greatest(F.length(s), F.lit(1))).cast("double")
 
 
-def detect_language_ngram(text: Column, min_score: float = 2.0) -> Column:
+def detect_language_ngram(text: Column) -> Column:
     """F.array_max over (score, lang) structs: highest score wins; exact
     ties resolve to the lexicographically larger language code
-    (deterministic). Below ``min_score`` (per 100 chars) → 'unknown'.
+    (deterministic). Below a score of 2.0 (per 100 chars) → 'unknown'.
 
     This is the brief's "language-ID (n-gram heuristic)" as pure column
     arithmetic — one pass, codegen'd, no UDF.
@@ -111,7 +111,7 @@ def detect_language_ngram(text: Column, min_score: float = 2.0) -> Column:
         for lang in sorted(LANG_TRIGRAM_PROFILES)
     ])
     best = F.array_max(scored)
-    return F.when(best["score"] >= min_score, best["lang"]).otherwise(F.lit("unknown"))
+    return F.when(best["score"] >= 2.0, best["lang"]).otherwise(F.lit("unknown"))
 
 
 def doc_fingerprint(text: Column) -> Column:
@@ -154,9 +154,7 @@ def word_ngrams(tokens: Column, n: int) -> Column:
     )
 
 
-def repetition_signals(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021, table A1)
     per document:
 
@@ -179,22 +177,22 @@ def repetition_signals(
     SinglePartition. The tokenized base feeds three consumers, so its
     lineage is cut once.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     base = df.select(
-        id_col,
+        "doc_id",
         F.greatest(F.length(t), F.lit(1)).alias("_len"),
         F.split(t, " ").alias("_toks"),
     ).localCheckpoint(eager=False)
-    out = base.select(id_col, "_len")
+    out = base.select("doc_id", "_len")
     for n, name in ((2, "top2gram_frac"), (3, "top3gram_frac")):
         cnt = (
-            base.select(id_col, F.explode(word_ngrams(F.col("_toks"), n)).alias("gram"))
-            .groupBy(id_col, "gram")
+            base.select("doc_id", F.explode(word_ngrams(F.col("_toks"), n)).alias("gram"))
+            .groupBy("doc_id", "gram")
             .agg(F.count("*").alias("c"))
         )
-        top = cnt.groupBy(id_col).agg(F.max(F.struct("c", "gram")).alias("_t"))
+        top = cnt.groupBy("doc_id").agg(F.max(F.struct("c", "gram")).alias("_t"))
         out = (
-            out.join(top, id_col, "left")
+            out.join(top, "doc_id", "left")
             .withColumn(
                 name,
                 F.coalesce(
@@ -205,15 +203,15 @@ def repetition_signals(
             .drop("_t")
         )
     dup = (
-        base.select(id_col, F.explode(word_ngrams(F.col("_toks"), 5)).alias("gram"))
-        .groupBy(id_col, "gram")
+        base.select("doc_id", F.explode(word_ngrams(F.col("_toks"), 5)).alias("gram"))
+        .groupBy("doc_id", "gram")
         .agg(F.count("*").alias("c"))
         .filter(F.col("c") >= 2)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum(F.col("c") * F.length("gram")).alias("_dup"))
     )
     return (
-        out.join(dup, id_col, "left")
+        out.join(dup, "doc_id", "left")
         .withColumn(
             "dup5gram_frac",
             F.least(

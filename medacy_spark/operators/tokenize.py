@@ -206,7 +206,7 @@ def tokenize_character(
 
 
 def train_sentence_boundary(
-    tagged: "list[tuple[list[str], list[str]]]", epochs: int = 5, window: int = 2
+    tagged: "list[tuple[list[str], list[str]]]", epochs: int = 5
 ):
     """Trainable upgrade path for W3 sentence boundaries: the reference
     reads its boundaries from spaCy's statistical parser
@@ -219,4 +219,4 @@ def train_sentence_boundary(
     segmentation: (words, ['B' if sentence-initial else 'I', ...])."""
     from medacy_spark.learners import PerceptronLearner
 
-    return PerceptronLearner(epochs=epochs, window=window).fit(tagged)
+    return PerceptronLearner(epochs=epochs, window=2).fit(tagged)

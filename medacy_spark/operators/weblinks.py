@@ -67,20 +67,15 @@ def resolve_href(href: Column, scheme: Column, host: Column) -> Column:
     return F.when(~skip, F.regexp_replace(resolved, "#.*$", ""))
 
 
-def extract_links(
-    df: DataFrame,
-    *,
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
+def extract_links(df: DataFrame,) -> DataFrame:
     """One row per navigational anchor: (url, src_host, href, link_url,
     dst_host).  Narrow generate + per-row resolution, zero shuffles."""
     base = df.select(
-        F.col(url_col).alias("url"),
-        F.parse_url(F.col(url_col), F.lit("PROTOCOL")).alias("_scheme"),
-        url_host(F.col(url_col)).alias("src_host"),
+        F.col("url").alias("url"),
+        F.parse_url(F.col("url"), F.lit("PROTOCOL")).alias("_scheme"),
+        url_host(F.col("url")).alias("src_host"),
         F.explode(
-            F.regexp_extract_all(F.col(html_col), F.lit(HREF_PATTERN), F.lit(1))
+            F.regexp_extract_all(F.col("html"), F.lit(HREF_PATTERN), F.lit(1))
         ).alias("href"),
     )
     out = base.withColumn(
@@ -106,24 +101,19 @@ def host_link_graph(links: DataFrame) -> DataFrame:
     ).withColumn("is_internal", F.col("src_host") == F.col("dst_host"))
 
 
-def extract_anchor_texts(
-    df: DataFrame,
-    *,
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
+def extract_anchor_texts(df: DataFrame,) -> DataFrame:
     """One row per navigational anchor WITH its text: (url, src_host,
     href, link_url, dst_host, anchor).  Anchor text is trimmed; same
     narrow zero-shuffle shape as :func:`extract_links`."""
-    html = F.col(html_col)
+    html = F.col("html")
     pairs = F.arrays_zip(
         F.regexp_extract_all(html, F.lit(ANCHOR_PATTERN), F.lit(1)).alias("href"),
         F.regexp_extract_all(html, F.lit(ANCHOR_PATTERN), F.lit(2)).alias("anchor"),
     )
     base = df.select(
-        F.col(url_col).alias("url"),
-        F.parse_url(F.col(url_col), F.lit("PROTOCOL")).alias("_scheme"),
-        url_host(F.col(url_col)).alias("src_host"),
+        F.col("url").alias("url"),
+        F.parse_url(F.col("url"), F.lit("PROTOCOL")).alias("_scheme"),
+        url_host(F.col("url")).alias("src_host"),
         F.explode(pairs).alias("p"),
     ).select(
         "url", "_scheme", "src_host",
@@ -176,12 +166,12 @@ def canonical_url(url: Column) -> Column:
     return F.regexp_replace(u, "/$", "")
 
 
-def url_variants(df: DataFrame, *, url_col: str = "url") -> DataFrame:
+def url_variants(df: DataFrame) -> DataFrame:
     """URL-level dedup rollup: (canonical_url, n_urls, n_distinct_raw).
     One narrow map + one two-level aggregate."""
     per_raw = df.select(
-        canonical_url(F.col(url_col)).alias("canonical_url"),
-        F.col(url_col).alias("_raw"),
+        canonical_url(F.col("url")).alias("canonical_url"),
+        F.col("url").alias("_raw"),
     ).groupBy("canonical_url", "_raw").agg(F.count("*").alias("_n"))
     return per_raw.groupBy("canonical_url").agg(
         F.sum("_n").alias("n_urls"),
@@ -189,12 +179,7 @@ def url_variants(df: DataFrame, *, url_col: str = "url") -> DataFrame:
     )
 
 
-def host_pagerank(
-    links: DataFrame,
-    *,
-    iterations: int = 6,
-    damping: float = 0.85,
-) -> DataFrame:
+def host_pagerank(links: DataFrame,) -> DataFrame:
     """PageRank over the external (cross-host) link graph, weighted by
     link count → (node, pagerank).  Delegates the iteration to
     :func:`medacy_spark.operators.graph.pagerank`."""
@@ -205,7 +190,4 @@ def host_pagerank(
         F.col("dst_host").alias("dst"),
         F.col("n_links").cast("double").alias("weight"),
     )
-    return pagerank(
-        edges, src="src", dst="dst", weight="weight",
-        iterations=iterations, damping=damping,
-    )
+    return pagerank(edges, weight="weight")

@@ -34,13 +34,7 @@ def url_host(url: Column) -> Column:
     return F.lower(F.parse_url(url, F.lit("HOST")))
 
 
-def host_profile(
-    df: DataFrame,
-    *,
-    url_col: str = "url",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def host_profile(df: DataFrame,) -> DataFrame:
     """Per-host rollup: doc count, char mass, mean token count, language
     breadth, exact-dup count, and corpus share.
 
@@ -49,11 +43,11 @@ def host_profile(
     boilerplate-rate a crawl filter thresholds on.
     """
     base = df.select(
-        url_host(F.col(url_col)).alias("host"),
-        F.length(F.col(text_col)).alias("_chars"),
-        F.size(F.split(F.col(text_col), " ")).alias("_toks"),
-        F.col(lang_col).alias("_lang"),
-        F.xxhash64(F.col(text_col)).alias("_th"),
+        url_host(F.col("url")).alias("host"),
+        F.length(F.col("text")).alias("_chars"),
+        F.size(F.split(F.col("text"), " ")).alias("_toks"),
+        F.col("lang").alias("_lang"),
+        F.xxhash64(F.col("text")).alias("_th"),
     )
     per_text = base.groupBy("host", "_th").agg(
         F.count("*").alias("_n"),

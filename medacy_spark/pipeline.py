@@ -150,7 +150,7 @@ class SparkPipeline:
             validate_entity_list(self.entities, gold_mentions)
 
 
-def json_to_pipeline(spec_or_path, entities: Sequence[str] = ()) -> SparkPipeline:
+def json_to_pipeline(spec_or_path) -> SparkPipeline:
     """Compile a reference-shaped JSON spec (path or dict) to a
     SparkPipeline, with the reference's validation behavior
     (json_to_pipeline.py:53-58, 65-79, 98-106)."""
@@ -167,10 +167,9 @@ def json_to_pipeline(spec_or_path, entities: Sequence[str] = ()) -> SparkPipelin
         raise ValueError(
             f"Required key(s) '{missing}' was/were not found in the json file."
         )
-    # an 'entities' key in the spec itself is the CLI-visible way to get
-    # P8 validation; an explicit argument overrides it
-    if not entities:
-        entities = spec.get("entities", ())
+    # an 'entities' key in the spec is the CLI-visible way to get P8
+    # validation
+    entities = spec.get("entities", ())
     if "tokenizer" in spec and spec["tokenizer"] not in TOKENIZERS:
         raise ValueError(
             f"Tokenizer selection '{spec['tokenizer']}' not an option"

@@ -40,10 +40,10 @@ def salted_repartition(
     return out.drop("_host", "_salt")
 
 
-def host_skew_profile(df: DataFrame, url_col: str = "url") -> DataFrame:
+def host_skew_profile(df: DataFrame) -> DataFrame:
     """Diagnostic: docs per host, descending — feed to the salting decision."""
     return (
-        df.select(host_of(url_col).alias("host"))
+        df.select(host_of("url").alias("host"))
         .groupBy("host")
         .agg(F.count("*").alias("docs"))
         .orderBy(F.col("docs").desc())

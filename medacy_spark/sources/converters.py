@@ -73,13 +73,13 @@ def line_word_index(documents: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def parse_con(lines: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def parse_con(lines: DataFrame) -> DataFrame:
     """con lines -> (id, text, start_line, start_word, end_line, end_word, tag).
     Invalid lines are dropped by the validation rlike (reference counts
     them; use an anti filter for the skipped-line metric)."""
     valid = lines.filter(F.col("line").rlike(CON_PATTERN))
     return valid.select(
-        id_col,
+        "doc_id",
         F.regexp_extract("line", r'c="(.+?)"', 1).alias("text"),
         F.regexp_extract("line", r'" (\d+):(\d+) \d+:\d+', 1).cast("int").alias("start_line"),
         F.regexp_extract("line", r'" (\d+):(\d+) \d+:\d+', 2).cast("int").alias("start_word"),
@@ -90,50 +90,50 @@ def parse_con(lines: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def con_to_mentions(
-    con: DataFrame, documents: DataFrame, id_col: str = "doc_id"
+    con: DataFrame, documents: DataFrame
 ) -> DataFrame:
     """con coordinate rows -> BRAT-style (id, tag, start, end, text) via two
     joins against the line/word index (start word's abs_start, end word's
     abs_end)."""
-    idx = line_word_index(documents, id_col)
+    idx = line_word_index(documents, "doc_id")
     s = idx.select(
-        F.col(id_col).alias("_id"), F.col("line_no").alias("_l"),
+        F.col("doc_id").alias("_id"), F.col("line_no").alias("_l"),
         F.col("word_no").alias("_w"), "abs_start",
     )
     e = idx.select(
-        F.col(id_col).alias("_id2"), F.col("line_no").alias("_l2"),
+        F.col("doc_id").alias("_id2"), F.col("line_no").alias("_l2"),
         F.col("word_no").alias("_w2"), "abs_end",
     )
     return (
-        con.join(s, (con[id_col] == s["_id"]) & (con["start_line"] == s["_l"])
+        con.join(s, (con["doc_id"] == s["_id"]) & (con["start_line"] == s["_l"])
                  & (con["start_word"] == s["_w"]))
-        .join(e, (con[id_col] == e["_id2"]) & (con["end_line"] == e["_l2"])
+        .join(e, (con["doc_id"] == e["_id2"]) & (con["end_line"] == e["_l2"])
               & (con["end_word"] == e["_w2"]))
-        .select(id_col, "tag", F.col("abs_start").alias("start"),
+        .select("doc_id", "tag", F.col("abs_start").alias("start"),
                 F.col("abs_end").alias("end"), "text")
     )
 
 
 def mentions_to_con(
-    mentions: DataFrame, documents: DataFrame, id_col: str = "doc_id"
+    mentions: DataFrame, documents: DataFrame
 ) -> DataFrame:
     """BRAT mentions -> con lines (brat_to_con.py direction): map char
     offsets back to line:word coordinates via the same index."""
-    idx = line_word_index(documents, id_col)
+    idx = line_word_index(documents, "doc_id")
     s = idx.select(
-        F.col(id_col).alias("_id"), F.col("abs_start").alias("_as"),
+        F.col("doc_id").alias("_id"), F.col("abs_start").alias("_as"),
         F.col("line_no").alias("sl"), F.col("word_no").alias("sw"),
     )
     e = idx.select(
-        F.col(id_col).alias("_id2"), F.col("abs_end").alias("_ae"),
+        F.col("doc_id").alias("_id2"), F.col("abs_end").alias("_ae"),
         F.col("line_no").alias("el"), F.col("word_no").alias("ew"),
     )
     j = (
-        mentions.join(s, (mentions[id_col] == s["_id"]) & (mentions["start"] == s["_as"]))
-        .join(e, (mentions[id_col] == e["_id2"]) & (mentions["end"] == e["_ae"]))
+        mentions.join(s, (mentions["doc_id"] == s["_id"]) & (mentions["start"] == s["_as"]))
+        .join(e, (mentions["doc_id"] == e["_id2"]) & (mentions["end"] == e["_ae"]))
     )
     return j.select(
-        id_col,
+        "doc_id",
         F.format_string(
             'c="%s" %d:%d %d:%d||t="%s"',
             F.lower("text"), F.col("sl"), F.col("sw"), F.col("el"), F.col("ew"),
@@ -142,11 +142,11 @@ def mentions_to_con(
     )
 
 
-def parse_rel(lines: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def parse_rel(lines: DataFrame) -> DataFrame:
     """rel lines -> (id, arg1_text, rel, arg2_text, + coordinate columns)."""
     valid = lines.filter(F.col("line").rlike(REL_PATTERN))
     return valid.select(
-        id_col,
+        "doc_id",
         F.regexp_extract("line", r'^c="([^"]*)"', 1).alias("arg1_text"),
         F.regexp_extract("line", r'^c="[^"]*" (\d+):(\d+)', 1).cast("int").alias("a1_line"),
         F.regexp_extract("line", r'^c="[^"]*" (\d+):(\d+)', 2).cast("int").alias("a1_word"),
@@ -157,11 +157,11 @@ def parse_rel(lines: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def parse_ast(lines: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def parse_ast(lines: DataFrame) -> DataFrame:
     """ast lines -> (id, text, tag, assertion, start_line, start_word)."""
     valid = lines.filter(F.col("line").rlike(AST_PATTERN))
     return valid.select(
-        id_col,
+        "doc_id",
         F.regexp_extract("line", r'^c="([^"]*)"', 1).alias("text"),
         F.regexp_extract("line", r'\|\|t="([^"]*)"', 1).alias("tag"),
         F.regexp_extract("line", r'\|\|a="([^"]*)"', 1).alias("assertion"),
@@ -170,9 +170,7 @@ def parse_ast(lines: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def ade_to_brat_lines(
-    rel_lines: DataFrame, id_col: str = "doc_id", file_col: str = "file_name"
-) -> DataFrame:
+def ade_to_brat_lines(rel_lines: DataFrame) -> DataFrame:
     """S9: ADE-corpus .rel → pseudo-BRAT T-lines (ade_to_brat.py:44-68).
 
     Byte-faithful replication of the reference loop, quirks included:
@@ -193,7 +191,7 @@ def ade_to_brat_lines(
     orders the two emitted lines per input line when the input carries a
     ``line_no`` column, else by emission pair index only.
     """
-    base = F.regexp_replace(F.element_at(F.split(file_col, "/"), -1), r"\.[^.]*$", "")
+    base = F.regexp_replace(F.element_at(F.split("file_name", "/"), -1), r"\.[^.]*$", "")
     types = F.split(base, "-")
     p = F.transform(F.split("line", r"\|"), lambda x: F.regexp_replace(x, r"\s+$", ""))
     line1 = F.concat(
@@ -210,11 +208,11 @@ def ade_to_brat_lines(
         (F.col("line_no") * 2 if "line_no" in rel_lines.columns else F.lit(0))
     )
     return rel_lines.select(
-        id_col,
+        "doc_id",
         F.posexplode(F.array(line1, line2)).alias("pair_idx", "out_line"),
         order.alias("_base"),
     ).select(
-        id_col,
+        "doc_id",
         (F.col("_base") + F.col("pair_idx")).cast("long").alias("out_no"),
         F.col("out_line").alias("line"),
     )

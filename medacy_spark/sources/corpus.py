@@ -24,7 +24,6 @@ def read_text_dir(spark: SparkSession, path: str, glob: str = "*.txt") -> DataFr
 def write_brat_dir(
     mentions: DataFrame,
     out_dir: str,
-    id_col: str = "doc_id",
     documents: DataFrame | None = None,
 ) -> None:
     """S4: reference-shaped directory sink (one OUT/<doc>.ann per doc,
@@ -51,17 +50,17 @@ def write_brat_dir(
     from medacy_spark.operators.annotations import to_ann_lines
 
     os.makedirs(out_dir, exist_ok=True)
-    lines = to_ann_lines(mentions, id_col)
+    lines = to_ann_lines(mentions, "doc_id")
     if documents is not None:
         # full outer: spine-only docs get an empty file AND mentions for
         # docs outside the spine still write (never silently dropped)
-        spine = documents.select(id_col).distinct()
-        lines = spine.join(lines, id_col, "full_outer").select(
-            id_col, F.coalesce(F.col("line"), F.lit("")).alias("line")
+        spine = documents.select("doc_id").distinct()
+        lines = spine.join(lines, "doc_id", "full_outer").select(
+            "doc_id", F.coalesce(F.col("line"), F.lit("")).alias("line")
         )
     t_num = F.regexp_extract("line", r"^T(\d+)\t", 1).cast("int")
-    arranged = lines.repartition(F.col(id_col)).sortWithinPartitions(
-        F.col(id_col), t_num
+    arranged = lines.repartition(F.col("doc_id")).sortWithinPartitions(
+        F.col("doc_id"), t_num
     )
 
     def write_partition(rows) -> None:
@@ -75,7 +74,7 @@ def write_brat_dir(
                     f.write(content)
 
         for r in rows:
-            key = str(r[id_col])
+            key = str(r["doc_id"])
             if key != cur:
                 flush()
                 cur, buf = key, []

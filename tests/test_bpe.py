@@ -69,9 +69,9 @@ def test_tie_break_lexicographic(spark):
     assert model.merges[0][1:3] == ("a", "b")
 
 
-def test_early_stop_and_min_count(spark):
-    model = learn_bpe(_docs(spark, ["ab ab ab xy"]), n_merges=5, min_pair_count=2)
-    assert [m[1:3] for m in model.merges] == [("a", "b")]  # xy only seen once
+def test_early_stop_when_no_pair_remains(spark):
+    model = learn_bpe(_docs(spark, ["ab ab ab"]), n_merges=5)
+    assert [m[1:3] for m in model.merges] == [("a", "b")]  # "ab" is one symbol
 
 
 def test_apply_bpe_with_oov_fallback(spark):

@@ -27,9 +27,9 @@ def test_gradient_parity_with_numpy(spark):
     y = (X[:, 0] + 0.5 * X[:, 1] > 0).astype(float)
     rows = [(float(y[i]), float(X[i, 0]), float(X[i, 1])) for i in range(200)]
     df = spark.createDataFrame(rows, "y double, f1 double, f2 double")
-    model = train_logreg(df, ["f1", "f2"], "y", iterations=8, lr=0.5)
+    model = train_logreg(df, ["f1", "f2"], "y", iterations=8)
     got = model.weights.collect()[0]
-    want = _ref_train(X, y, 8, 0.5)
+    want = _ref_train(X, y, 8, 1.0)
     assert abs(got["b"] - want[0]) < 1e-9
     assert abs(got["a_f1"] - want[1]) < 1e-9
     assert abs(got["a_f2"] - want[2]) < 1e-9
@@ -44,7 +44,7 @@ def test_learns_separable_quality(spark):
     df = spark.createDataFrame(rows, "y double, text string")
     feats = default_features(F.col("text"))
     d = df.select("y", *[c.alias(n) for n, c in feats.items()])
-    model = train_logreg(d, ["f1", "f2", "f3"], "y", iterations=30, lr=2.0)
+    model = train_logreg(d, ["f1", "f2", "f3"], "y", iterations=60)
     scored = score_logreg(d, model)
     acc = scored.filter(
         ((F.col("p") >= 0.5) & (F.col("y") == 1.0))

@@ -208,26 +208,6 @@ def test_hot_shingle_guard_default_on_boilerplate(spark, caplog):
     assert exact == 10  # all C(5,2) pairs share the boilerplate shingles
 
 
-def test_dedup_corpus_verify_threshold(spark):
-    """verify_threshold confirms sketch candidates by exact Jaccard before
-    clustering: a sketch-level collision below the exact threshold no
-    longer deletes a survivor."""
-    from medacy_spark.operators.dedup import dedup_corpus
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [
-        (0, base),
-        (1, base),  # true near-dup of 0 (identical shingles)
-        (2, "completely different words entirely unrelated content here now"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    kept = sorted(
-        r["doc_id"]
-        for r in dedup_corpus(d, min_bands=1, verify_threshold=0.8).collect()
-    )
-    assert kept == [0, 2]
-
-
 def test_hot_bucket_guard_star_topology_small(spark):
     """Topology unit check at a tiny cap: a 5-member identical cluster
     with max_bucket_size=3 emits star edges (hub = bucket min) instead of

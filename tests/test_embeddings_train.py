@@ -125,20 +125,16 @@ def test_train_word_vectors_reproduces_pmc_fixture(spark, tmp_path):
     assert out.read_bytes() == want
 
 
-def test_segmented_cooccurrence_bit_identical(spark):
-    """max_segment (mega-document skew hardening) must not change a
-    single count: segments carry ±window halos and only home rows emit,
-    so segmented == unsegmented == brute force — exercised across
-    segment boundaries (sequences much longer than max_segment), sparse
-    non-dense positions (filtered empties), and a window larger than
-    the leftover tail segment."""
+def test_cooccurrence_gappy_positions_match_brute_force(spark):
+    """Counts over long sequences with non-dense positions (filtered
+    empties, gaps of 3) equal brute force over the cleaned sequences."""
     import random
 
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(17)]
     sents = []
     for d in range(4):
-        n = rng.choice([3, 29, 161])  # shorter than / spanning many segments
+        n = rng.choice([3, 29, 161])
         words = [rng.choice(vocab + ["", " ", "\n"]) for _ in range(n)]
         sents.append((d, 0, words))
 
@@ -150,74 +146,8 @@ def test_segmented_cooccurrence_bit_identical(spark):
     toks = spark.createDataFrame(
         rows, "doc_id int, sent_id int, tok_id int, word string"
     )
-
     plain = {
         (r["word"], r["ctx"]): r["n"]
         for r in cooccurrence_pairs(toks, window=4).collect()
     }
-    seg = {
-        (r["word"], r["ctx"]): r["n"]
-        for r in cooccurrence_pairs(toks, window=4, max_segment=16).collect()
-    }
-    assert seg == plain
-
-    # brute force over the cleaned sequences for independent ground truth
     assert plain == _brute_counts(4, sents)
-
-    # guard: a segment shorter than the halo cannot be exact
-    with pytest.raises(ValueError):
-        cooccurrence_pairs(toks, window=4, max_segment=8)
-
-
-def test_segmented_dense_positions_fast_path(spark):
-    """dense_positions=True (rank == position, zero extra passes) must
-    equal both the general segmented path and the plain window on a
-    gapless corpus."""
-    rows = [
-        (d, 0, i, f"w{(i * 7 + d) % 11}")
-        for d in range(3)
-        for i in range(137)  # spans many 16-row segments
-    ]
-    toks = spark.createDataFrame(
-        rows, "doc_id int, sent_id int, tok_id int, word string"
-    )
-    plain = {
-        (r["word"], r["ctx"]): r["n"]
-        for r in cooccurrence_pairs(toks, window=4).collect()
-    }
-    dense = {
-        (r["word"], r["ctx"]): r["n"]
-        for r in cooccurrence_pairs(
-            toks, window=4, max_segment=16, dense_positions=True
-        ).collect()
-    }
-    general = {
-        (r["word"], r["ctx"]): r["n"]
-        for r in cooccurrence_pairs(toks, window=4, max_segment=16).collect()
-    }
-    assert dense == plain
-    assert general == plain
-
-
-def test_segmented_dense_guard_catches_gaps(spark):
-    """A FALSE dense_positions promise must fail loudly, not corrupt
-    counts: cleaning filters the '\\n' token below, leaving a rank gap
-    that the in-window contiguity assert catches."""
-    rows = [(0, 0, i, w) for i, w in enumerate(
-        ["a", "b", "\n", "c", "d", "e", "f", "g", "h", "i", "j", "k"]
-    )]
-    toks = spark.createDataFrame(
-        rows, "doc_id int, sent_id int, tok_id int, word string"
-    )
-    with pytest.raises(Exception, match="dense_positions"):
-        cooccurrence_pairs(
-            toks, window=2, max_segment=5, dense_positions=True
-        ).collect()
-    # the honest general path handles the same input exactly
-    got = {
-        (r["word"], r["ctx"]): r["n"]
-        for r in cooccurrence_pairs(toks, window=2, max_segment=5).collect()
-    }
-    assert got == _brute_counts(
-        2, [(0, 0, ["a", "b", "\n", "c", "d", "e", "f", "g", "h", "i", "j", "k"])]
-    )

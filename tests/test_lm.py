@@ -53,15 +53,6 @@ def test_short_docs_emit_nothing(spark):
     assert [r["doc_id"] for r in out.collect()] == [1]
 
 
-def test_min_count_prunes_but_keeps_floor(spark):
-    lm = train_ngram_lm(_docs(spark, ["a b a b a c"]), n=2, k=0.5, min_count=2)
-    gc = {(r["ctx"], r["w"]) for r in lm.gram_counts.collect()}
-    assert ("a", "c") not in gc and ("a", "b") in gc
-    # pruned gram scores via the smoothing floor, not a crash/null
-    out = score_perplexity(_docs(spark, ["a c"]), lm).collect()[0]
-    assert out["avg_logp"] is not None and out["perplexity"] > 0
-
-
 def test_in_domain_scores_lower_perplexity(spark):
     fluent = ["the cat sat on the mat"] * 20 + ["the dog sat on the rug"] * 20
     lm = train_ngram_lm(_docs(spark, fluent), n=2, k=0.1)

@@ -15,7 +15,7 @@ def _docs(spark, texts):
     return spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
 
 
-def _reference_pack(texts, seq_len, eos=True):
+def _reference_pack(texts, seq_len):
     """Driver-side oracle: walk the literal token stream."""
     rows = []
     offset = 0
@@ -28,7 +28,7 @@ def _reference_pack(texts, seq_len, eos=True):
             e = min(end, (seq_id + 1) * seq_len)
             rows.append((seq_id, doc_id, s - seq_id * seq_len, s - start, e - s))
             s = e
-        offset = end + (1 if eos else 0)
+        offset = end + 1
     return rows
 
 
@@ -40,26 +40,17 @@ def test_offsets_are_exclusive_prefix_sums(spark):
     }
     # with EOS: 3+1, 1+1, 4+1 → offsets 0, 4, 6, 11
     assert got == {0: (3, 0), 1: (1, 4), 2: (4, 6), 3: (2, 11)}
-    got = {
-        r["doc_id"]: r["offset"]
-        for r in doc_token_offsets(_docs(spark, texts), eos=False).collect()
-    }
-    assert got == {0: 0, 1: 3, 2: 4, 3: 8}
 
 
 def test_pack_matches_reference_walk(spark):
     texts = [f"w{i} " * (i % 7 + 1) for i in range(40)]
     texts = [t.strip() for t in texts]
     for seq_len in (4, 5, 16):
-        for eos in (True, False):
-            want = sorted(_reference_pack(texts, seq_len, eos))
-            got = sorted(
-                tuple(r)
-                for r in pack_sequences(
-                    _docs(spark, texts), seq_len, eos=eos
-                ).collect()
-            )
-            assert got == want, (seq_len, eos)
+        want = sorted(_reference_pack(texts, seq_len))
+        got = sorted(
+            tuple(r) for r in pack_sequences(_docs(spark, texts), seq_len).collect()
+        )
+        assert got == want, seq_len
 
 
 def test_bucket_width_invariance_and_sparse_ids(spark):

@@ -95,13 +95,13 @@ def test_spec_pipeline_end_to_end(spark):
         "doc_id long, tag string, start long, end long, text string",
     )
     pipe = json_to_pipeline(
-        {"learner": "CRF", "spacy_pipeline": "en", "window_size": 2},
-        entities=["Drug", "ADE"],
+        {"learner": "CRF", "spacy_pipeline": "en", "window_size": 2,
+         "entities": ["Drug", "ADE"]},
     )
     pipe.validate_entities(gold)
     with pytest.raises(ValueError, match="not present"):
         json_to_pipeline(
-            {"learner": "CRF", "spacy_pipeline": "en"}, entities=["Dose"]
+            {"learner": "CRF", "spacy_pipeline": "en", "entities": ["Dose"]}
         ).validate_entities(gold)
     m = pipe.make_model(spark).fit(docs, gold)
     pred = m.predict(docs)

@@ -178,17 +178,12 @@ def test_sketch_plans_no_cross_product_and_partial_agg(spark):
     assert "CartesianProduct" not in p_sh
     assert "ExistingRDD" in p_sh
 
-    # the uncut plan really does carry the aggregation on both branches —
-    # the measured fact the cut exists for (guard disabled too: an active
-    # hot-bucket guard FORCES the cut so its detection pass and the
-    # cold/star union never read an uncached lineage)
+    # the uncut all-pairs plan (guard off) really does carry the
+    # aggregation on both branches — the measured fact the cut exists for
     p_uncut = minhash_lsh_candidates(
-        d, cut_lineage=False, max_bucket_size=None
+        d, max_bucket_size=None
     )._jdf.queryExecution().executedPlan().toString()
     assert p_uncut.count("partial_min") >= 2
-    p_forced = minhash_lsh_candidates(d, cut_lineage=False)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in p_forced and "partial_min" not in p_forced
 
     p_ja = ngram_jaccard_pairs(d)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in p_ja

@@ -184,7 +184,7 @@ def test_embedding_near_dups_exact_path_bit_identical(spark):
     )
     got = sorted(
         (r["id_a"], r["id_b"], r["cosine"])
-        for r in embedding_near_dups(emb, threshold=0.2, n_planes=0).collect()
+        for r in embedding_near_dups(emb, threshold=0.2).collect()
     )
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))

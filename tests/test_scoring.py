@@ -45,7 +45,7 @@ def _load_ref(spark, dirname):
         F.xxhash64(F.regexp_extract("f", r"([^/]+)\.ann$", 1)).alias("doc_id"),
         F.col("value").alias("line"),
     )
-    return from_ann_lines(df, "doc_id")
+    return from_ann_lines(df)
 
 
 @pytest.mark.skipif(not os.path.isdir(REF), reason="reference fixtures unavailable")

@@ -209,7 +209,7 @@ def _key_value(arg: str) -> tuple[str, str]:
     return key, value
 
 
-def main(argv: list[str] | None = None) -> int:
+def main() -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--tag", required=True, help="names the default output file")
     p.add_argument("--cores", type=int, default=4)
@@ -220,7 +220,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--conf", action="append", default=[], type=_key_value, metavar="KEY=VALUE",
                    help="extra session conf (repeatable)")
     p.add_argument("--out", default=None, help="JSON file the run is appended to")
-    args = p.parse_args(argv)
+    args = p.parse_args()
     sys.path.insert(0, ROOT)
     from medacy_spark.session import get_spark
 
